@@ -34,12 +34,12 @@ def shingles_spark(text: Column, n: int = 3) -> Column:
     sub-array per shingle — measured 1.4-1.7x faster at both n=3 and
     n=8, output-identical including short/empty/null documents).
 
-    Empty when the document has fewer than n tokens (guarded — the
-    negative-length slices inside the branch are never evaluated for
-    such rows because CaseWhen only evaluates the taken branch).
+    Empty when the document has fewer than n tokens or is null: the
+    slice length is clamped at 0, so no row can reach a negative-length
+    slice whichever CaseWhen branch the engine evaluates.
     """
     toks = tokens_spark(text)
-    n_sh = F.size(toks) - (n - 1)
+    n_sh = F.greatest(F.size(toks) - (n - 1), F.lit(0))
     make = F.slice(toks, 1, n_sh)
     for j in range(1, n):
         make = F.zip_with(
@@ -64,14 +64,15 @@ def bigrams_spark(text: Column) -> Column:
     """Ordered token bigrams of ``text`` as array<struct<w1,w2>> —
     the token array zipped against itself shifted by one (narrow
     per-row expression, no positional self-join). Empty below 2
-    tokens (guarded: slice lengths must stay >= 0)."""
+    tokens; the slice length is clamped at 0, as in shingles_spark."""
     toks = tokens_spark(text)
     n = F.size(toks)
+    n_bi = F.greatest(n - 1, F.lit(0))
     return F.when(
         n >= 2,
         F.zip_with(
-            F.slice(toks, 1, n - 1),
-            F.slice(toks, 2, n - 1),
+            F.slice(toks, 1, n_bi),
+            F.slice(toks, 2, n_bi),
             lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
         ),
     ).otherwise(F.array())

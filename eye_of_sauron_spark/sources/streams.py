@@ -152,18 +152,6 @@ def kafka_stream(
     return reader.load()
 
 
-def rate_stream(
-    spark: SparkSession, rows_per_second: int = 100, num_partitions: int = 4
-) -> DataFrame:
-    """Wall-clock rate source — load/soak harness."""
-    return (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", rows_per_second)
-        .option("numPartitions", num_partitions)
-        .load()
-    )
-
-
 def rate_micro_batch_stream(
     spark: SparkSession, rows_per_batch: int = 100, num_partitions: int = 4
 ) -> DataFrame:

@@ -10,6 +10,10 @@ writers below control explicitly.
 
 Swap ``readStream.format("kafka")`` in for production; every
 transformation downstream is source-agnostic.
+
+Every stream start in the package enters :func:`ephemeral_checkpoint`,
+the one scope for the confs of a throwaway local checkpoint (why the
+checkpoint manager is swapped there: see its docstring).
 """
 
 from __future__ import annotations
@@ -21,37 +25,63 @@ import tempfile
 import time
 from collections.abc import Callable
 from contextlib import contextmanager
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 
 _CKPT_CHECKSUM_KEY = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
+_CKPT_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+_RENAME_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+_SHUFFLE_KEY = "spark.sql.shuffle.partitions"
 
 
 @contextmanager
-def ephemeral_checkpoint(spark: SparkSession):
-    """Scope-disable per-file checkpoint checksums (Spark 4.1 default:
-    every offset/commit/state-delta write also writes a checksum
-    companion file through a 2-thread handoff pool). The integrity
-    feature exists to detect corruption in LONG-LIVED checkpoints on
-    remote storage; the replay harness's checkpoints are per-invocation
-    temp dirs deleted seconds after the drain, so the companion writes
-    are pure fixed cost — ~10% of an 8-batch replay's wall, measured
-    (SCALE.md "Replay-family fixed-wall profile, round 15"). The
-    session default stays untouched for any long-lived stream a user
-    starts. Restored on exit; reads of mixed checkpoints remain valid
-    either way (skipCreationIfFileMissingChecksum defaults true).
+def ephemeral_checkpoint(
+    spark: SparkSession,
+    checkpoint_dir: str,
+    width: int | None = None,
+    conf: dict[str, str] | None = None,
+):
+    """Scope the confs of a stream whose checkpoint is a per-invocation
+    local temp dir, deleted seconds after the drain. Checksum
+    companions are off: they guard LONG-LIVED checkpoints on remote
+    storage and are pure fixed cost here (SCALE.md "Replay-family
+    fixed-wall profile"). The manager is Spark's rename-based
+    ``FileSystemBasedCheckpointFileManager``: without Hadoop native IO
+    the FileContext default forks a process for file permissions and
+    status on every checkpoint file (~2,000 forks per 8-batch stateful
+    replay, ~450 after the swap), and those spawns were the replay
+    commit floor (SCALE.md "Replay commit floor"). Rename is
+    atomic on local disk only, so a non-local ``checkpoint_dir`` is
+    rejected; streams outside the scope keep Spark's default manager.
+    ``width`` sets the stateful shuffle (state-store partition count)
+    to the replay's key scale; ``conf`` adds any per-stream confs.
 
-    SERIAL-ONLY, same contract as replay._scoped_shuffle: the conf is
-    session-wide while the drain runs."""
-    prev = spark.conf.get(_CKPT_CHECKSUM_KEY, None)
-    spark.conf.set(_CKPT_CHECKSUM_KEY, "false")
+    Every conf is restored to its prior value (or unset) on exit.
+    SERIAL-ONLY: the confs are session-wide while the drain runs; the
+    bench, perfbench and pytest harnesses all run queries serially."""
+    default_fs = spark.sparkContext._jsc.hadoopConfiguration().get("fs.defaultFS")
+    scheme = urlparse(checkpoint_dir).scheme or urlparse(default_fs).scheme
+    if scheme != "file":
+        raise ValueError(f"checkpoint {checkpoint_dir!r} is not local ({scheme}:)")
+    scoped = {_CKPT_CHECKSUM_KEY: "false", _CKPT_MANAGER_KEY: _RENAME_MANAGER}
+    if width is not None:
+        scoped[_SHUFFLE_KEY] = str(width)
+    scoped.update(conf or {})
+    prev = {k: spark.conf.get(k, None) for k in scoped}
+    for k, v in scoped.items():
+        spark.conf.set(k, v)
     try:
         yield
     finally:
-        if prev is not None:
-            spark.conf.set(_CKPT_CHECKSUM_KEY, prev)
-        else:
-            spark.conf.unset(_CKPT_CHECKSUM_KEY)
+        for k, v in prev.items():
+            if v is not None:
+                spark.conf.set(k, v)
+            else:
+                spark.conf.unset(k)
 
 
 def write_microbatch_files(
@@ -176,10 +206,16 @@ def run_to_memory(
     name: str,
     checkpoint_dir: str,
     output_mode: str = "append",
+    width: int | None = None,
+    conf: dict[str, str] | None = None,
 ) -> DataFrame:
     """Drain the stream with an availableNow trigger into a memory
-    sink and return the sink's contents as a DataFrame."""
-    with ephemeral_checkpoint(stream_df.sparkSession):
+    sink and return the sink's contents as a DataFrame. The drain runs
+    inside :func:`ephemeral_checkpoint` (``width`` and ``conf`` are
+    forwarded)."""
+    with ephemeral_checkpoint(
+        stream_df.sparkSession, checkpoint_dir, width, conf
+    ):
         q = (
             stream_df.writeStream.format("memory")
             .queryName(name)

@@ -74,7 +74,7 @@ def run_match_rebroadcast_stream(
             .parquet(out_dir)
         )
 
-    with ephemeral_checkpoint(events_stream.sparkSession):
+    with ephemeral_checkpoint(events_stream.sparkSession, checkpoint_dir):
         q = (
             events_stream.writeStream.trigger(availableNow=True)
             .option("checkpointLocation", checkpoint_dir)
@@ -100,7 +100,7 @@ def run_face_pipeline_stream(
     comes from its frame's single input row."""
     from ..ml.pipeline import face_pipeline
 
-    with ephemeral_checkpoint(frames_stream.sparkSession):
+    with ephemeral_checkpoint(frames_stream.sparkSession, checkpoint_dir):
         q = (
             frames_stream.writeStream.trigger(availableNow=True)
             .option("checkpointLocation", checkpoint_dir)
@@ -120,7 +120,7 @@ def run_routed_file_sink(
 ) -> None:
     """Checkpointed availableNow drain into a topic-partitioned file
     sink (the Kafka-sink stand-in: one directory per topic)."""
-    with ephemeral_checkpoint(routed.sparkSession):
+    with ephemeral_checkpoint(routed.sparkSession, checkpoint_dir):
         q = (
             routed.writeStream.trigger(availableNow=True)
             .option("checkpointLocation", checkpoint_dir)

@@ -18,7 +18,6 @@ import os
 import shutil
 import tempfile
 import uuid
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -118,16 +117,14 @@ def reorder_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scope the stateful shuffle to the replay's own scale: 64 cameras
     # over 8 state partitions, not the session's 32 — each micro-batch
     # pays per-partition state-store commit + Arrow worker round-trip,
-    # so 32 partitions x 8 batches is mostly fixed overhead here. The
-    # checkpoint is fresh per invocation, so the partitioning is
-    # per-run and nothing else sees the conf (restored immediately).
+    # so 32 partitions x 8 batches is mostly fixed overhead here.
     try:
-        with _scoped_shuffle(spark, _N_BATCHES):
-            emitted = run_to_memory(
-                reorder_stream(stream, buffer_size=_BUFFER_SIZE),
-                f"reorder_replay_{uuid.uuid4().hex[:8]}",
-                f"{work}/ckpt",
-            )
+        emitted = run_to_memory(
+            reorder_stream(stream, buffer_size=_BUFFER_SIZE),
+            f"reorder_replay_{uuid.uuid4().hex[:8]}",
+            f"{work}/ckpt",
+            width=_N_BATCHES,
+        )
     finally:
         # the memory sink holds the results; the input/checkpoint files
         # are dead weight that would otherwise accumulate per invocation
@@ -227,12 +224,12 @@ def stream_reorder_overflow_replay(spark: SparkSession, sf_dir: str) -> DataFram
         stream = file_stream(
             spark, in_dir, "camera INT, frame_num INT, payload STRING"
         )
-        with _scoped_shuffle(spark, _OV_CAMERAS):
-            emitted = run_to_memory(
-                reorder_stream(stream, buffer_size=_OV_BUFFER),
-                f"reorder_overflow_{uuid.uuid4().hex[:8]}",
-                f"{work}/ckpt",
-            )
+        emitted = run_to_memory(
+            reorder_stream(stream, buffer_size=_OV_BUFFER),
+            f"reorder_overflow_{uuid.uuid4().hex[:8]}",
+            f"{work}/ckpt",
+            width=_OV_CAMERAS,
+        )
     finally:
         shutil.rmtree(work, ignore_errors=True)
     return emitted.select(
@@ -347,9 +344,16 @@ def stream_change_detect_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n_batches = _CD_FRAMES // _CD_SPAN
     work = tempfile.mkdtemp(prefix="change_detect_replay_")
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    prev_cl = spark.conf.get(_CD_CHANGELOG_KEY, None)
+    # the tws path requires the RocksDB store (results are provider-
+    # independent), with per-batch changelog deltas instead of full
+    # snapshot sync, as session.py documents. Without protobuf the
+    # applyInPandasWithState fallback runs and this stays pytest-pinned.
+    tws_conf = {
+        "spark.sql.streaming.stateStore.providerClass":
+            "org.apache.spark.sql.execution.streaming.state."
+            "RocksDBStateStoreProvider",
+        _CD_CHANGELOG_KEY: "true",
+    } if _has_protobuf() else None
     try:
         in_dir = staged_microbatch_log(
             ("change_detect_frames", os.path.realpath(sf_dir), n_batches),
@@ -359,64 +363,19 @@ def stream_change_detect_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream = file_stream(
             spark, in_dir, "camera INT, frame_num INT, payload_hash STRING"
         )
-        if _has_protobuf():
-            # the tws path requires the RocksDB store; scoped to this
-            # run, restored below (results are provider-independent)
-            spark.conf.set(
-                key,
-                "org.apache.spark.sql.execution.streaming.state."
-                "RocksDBStateStoreProvider",
-            )
-            # per-batch deltas instead of full RocksDB snapshot sync —
-            # the same changelog setting session.py documents for the
-            # rocksdb state_store; O(changed keys) at scale. Only
-            # reached on the tws path (r15 note: protobuf left the
-            # sandbox between rounds, so the applyInPandasWithState
-            # fallback currently runs and this branch is pytest-pinned
-            # rather than driver-exercised).
-            spark.conf.set(_CD_CHANGELOG_KEY, "true")
-        with _scoped_shuffle(spark, _CD_CAMERAS):
-            emitted = run_to_memory(
-                drop_unchanged_frames(stream),
-                f"change_detect_{uuid.uuid4().hex[:8]}",
-                f"{work}/ckpt",
-            )
+        emitted = run_to_memory(
+            drop_unchanged_frames(stream),
+            f"change_detect_{uuid.uuid4().hex[:8]}",
+            f"{work}/ckpt",
+            width=_CD_CAMERAS,
+            conf=tws_conf,
+        )
     finally:
-        if prev is not None:
-            spark.conf.set(key, prev)
-        elif _has_protobuf():
-            spark.conf.unset(key)
-        if prev_cl is not None:
-            spark.conf.set(_CD_CHANGELOG_KEY, prev_cl)
-        elif _has_protobuf():
-            spark.conf.unset(_CD_CHANGELOG_KEY)
         shutil.rmtree(work, ignore_errors=True)
     return emitted.select("camera", "frame_num", "payload_hash")
 
 
 # ------------------------------------------------------- stream-stream
-
-@contextmanager
-def _scoped_shuffle(spark: SparkSession, n: int):
-    """Temporarily size the stateful shuffle for a replay's own scale
-    (fresh checkpoint per invocation, so the state partitioning is
-    per-run); restores the session conf on exit.
-
-    SERIAL-ONLY: this mutates the session-wide shuffle-partition conf
-    for the duration of the replay, so any query planned concurrently
-    in the same SparkSession would silently get the replay's tiny
-    partition count. The driver/bench/pytest harnesses all run
-    queries serially; if concurrent execution ever appears, scope the
-    setting per-query (session clone or stream-level option)
-    instead."""
-    conf = spark.conf
-    prev = conf.get("spark.sql.shuffle.partitions")
-    conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        conf.set("spark.sql.shuffle.partitions", prev)
-
 
 def _time_sliced(df: DataFrame, n: int) -> DataFrame:
     """Assign each row a micro-batch = its time octile — contiguous,
@@ -541,12 +500,12 @@ def stream_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     cs = file_stream(spark, clicks_dir, schema)
     es = file_stream(spark, errors_dir, schema)
     try:
-        with _scoped_shuffle(spark, _SS_BATCHES):
-            emitted = run_to_memory(
-                clicks_to_errors_stream_join(cs, es),
-                f"ss_join_replay_{uuid.uuid4().hex[:8]}",
-                f"{work}/ckpt",
-            )
+        emitted = run_to_memory(
+            clicks_to_errors_stream_join(cs, es),
+            f"ss_join_replay_{uuid.uuid4().hex[:8]}",
+            f"{work}/ckpt",
+            width=_SS_BATCHES,
+        )
     finally:
         shutil.rmtree(work, ignore_errors=True)
     return emitted.select(
@@ -606,12 +565,12 @@ def stream_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["event_id"]
     )
     try:
-        with _scoped_shuffle(spark, _N_BATCHES):
-            emitted = run_to_memory(
-                deduped,
-                f"stream_dedup_replay_{uuid.uuid4().hex[:8]}",
-                f"{work}/ckpt",
-            )
+        emitted = run_to_memory(
+            deduped,
+            f"stream_dedup_replay_{uuid.uuid4().hex[:8]}",
+            f"{work}/ckpt",
+            width=_N_BATCHES,
+        )
     finally:
         shutil.rmtree(work, ignore_errors=True)
     return emitted.select(
@@ -665,12 +624,12 @@ def stream_static_match_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id BIGINT, user_id BIGINT, event_type STRING, ts TIMESTAMP",
     )
     try:
-        with _scoped_shuffle(spark, _N_BATCHES):
-            emitted = run_to_memory(
-                match_stream(stream, targets),
-                f"stream_static_replay_{uuid.uuid4().hex[:8]}",
-                f"{work}/ckpt",
-            )
+        emitted = run_to_memory(
+            match_stream(stream, targets),
+            f"stream_static_replay_{uuid.uuid4().hex[:8]}",
+            f"{work}/ckpt",
+            width=_N_BATCHES,
+        )
     finally:
         shutil.rmtree(work, ignore_errors=True)
     return emitted.select("event_id", "user_id", "event_type", "topic")
@@ -977,7 +936,7 @@ def stream_restart_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withWatermark("ts", "90 days")
             .dropDuplicatesWithinWatermark(["event_id"])
         )
-        with ephemeral_checkpoint(spark):
+        with ephemeral_checkpoint(spark, ckpt, width=_RESTART_BATCHES):
             q = (
                 deduped.writeStream.format("parquet")
                 .option("path", out_dir)
@@ -989,25 +948,24 @@ def stream_restart_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             q.awaitTermination()
 
     try:
-        with _scoped_shuffle(spark, _RESTART_BATCHES):
-            # the full delivery log (original batches 0-7 plus the
-            # cross-restart redeliveries in batch 4) is staged once per
-            # session; each run hardlinks a tranche in at its phase
-            # point, so arrival still straddles the query stop
-            all_dir = staged_microbatch_log(
-                (
-                    "restart_deliveries",
-                    os.path.realpath(sf_dir),
-                    _RESTART_BATCHES,
-                ),
+        # the full delivery log (original batches 0-7 plus the
+        # cross-restart redeliveries in batch 4) is staged once per
+        # session; each run hardlinks a tranche in at its phase
+        # point, so arrival still straddles the query stop
+        all_dir = staged_microbatch_log(
+            (
+                "restart_deliveries",
+                os.path.realpath(sf_dir),
                 _RESTART_BATCHES,
-                lambda: phase1.unionByName(phase2),
-            )
-            _link_batch_files(all_dir, in_dir, 0, half)
-            _run_to_file_sink()  # batches 0-3, then the query STOPS
-            # batches 4-7 land while no query is running
-            _link_batch_files(all_dir, in_dir, half, _RESTART_BATCHES)
-            _run_to_file_sink()  # new query, same checkpoint: resumes
+            ),
+            _RESTART_BATCHES,
+            lambda: phase1.unionByName(phase2),
+        )
+        _link_batch_files(all_dir, in_dir, 0, half)
+        _run_to_file_sink()  # batches 0-3, then the query STOPS
+        # batches 4-7 land while no query is running
+        _link_batch_files(all_dir, in_dir, half, _RESTART_BATCHES)
+        _run_to_file_sink()  # new query, same checkpoint: resumes
         # manifest-aware batch read of the sink (only committed files),
         # materialized so the temp dir can be deleted before return
         emitted = (
@@ -1093,12 +1051,12 @@ def stream_left_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     cs = file_stream(spark, clicks_dir, schema)
     es = file_stream(spark, errors_dir, schema)
     try:
-        with _scoped_shuffle(spark, _SS_BATCHES):
-            emitted = run_to_memory(
-                clicks_to_errors_left_join(cs, es, delay=_LEFT_JOIN_DELAY),
-                f"ss_left_join_replay_{uuid.uuid4().hex[:8]}",
-                f"{work}/ckpt",
-            )
+        emitted = run_to_memory(
+            clicks_to_errors_left_join(cs, es, delay=_LEFT_JOIN_DELAY),
+            f"ss_left_join_replay_{uuid.uuid4().hex[:8]}",
+            f"{work}/ckpt",
+            width=_SS_BATCHES,
+        )
     finally:
         shutil.rmtree(work, ignore_errors=True)
     return emitted.select(
@@ -1110,6 +1068,11 @@ def stream_left_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _WAGG_BATCHES = 8
 _WAGG_DELAY = "2 hours"
+# State width of the window, late-drop and update-mode replays: their
+# state is a handful of (day, event_type) keys, and each extra state
+# partition only adds a commit per batch (A/B: SCALE.md "Replay
+# commit floor")
+_WAGG_STATE_WIDTH = 1
 
 # The append-mode emission rule in closed form: a (day, event_type)
 # window emits iff the FINAL watermark — max event time across the
@@ -1164,10 +1127,12 @@ def stream_window_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n_events"), F.sum(cents).cast("bigint").alias("cents"))
     )
     try:
-        with _scoped_shuffle(spark, _WAGG_BATCHES):
-            emitted = run_to_memory(
-                agg, f"wagg_replay_{uuid.uuid4().hex[:8]}", f"{work}/ckpt"
-            ).localCheckpoint(eager=True)
+        emitted = run_to_memory(
+            agg,
+            f"wagg_replay_{uuid.uuid4().hex[:8]}",
+            f"{work}/ckpt",
+            width=_WAGG_STATE_WIDTH,
+        ).localCheckpoint(eager=True)
     finally:
         shutil.rmtree(work, ignore_errors=True)
     return emitted.select(
@@ -1289,10 +1254,12 @@ def stream_late_drop_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     try:
-        with _scoped_shuffle(spark, _LATE_BATCHES):
-            emitted = run_to_memory(
-                agg, f"late_drop_replay_{uuid.uuid4().hex[:8]}", f"{work}/ckpt"
-            ).localCheckpoint(eager=True)
+        emitted = run_to_memory(
+            agg,
+            f"late_drop_replay_{uuid.uuid4().hex[:8]}",
+            f"{work}/ckpt",
+            width=_WAGG_STATE_WIDTH,
+        ).localCheckpoint(eager=True)
     finally:
         shutil.rmtree(work, ignore_errors=True)
     return emitted.select(
@@ -1341,13 +1308,13 @@ def stream_update_mode_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     agg = stream.groupBy("event_type").agg(F.count("*").alias("n"))
     try:
-        with _scoped_shuffle(spark, _UPD_BATCHES):
-            log = run_to_memory(
-                agg,
-                f"upd_replay_{uuid.uuid4().hex[:8]}",
-                f"{work}/ckpt",
-                output_mode="update",
-            ).localCheckpoint(eager=True)
+        log = run_to_memory(
+            agg,
+            f"upd_replay_{uuid.uuid4().hex[:8]}",
+            f"{work}/ckpt",
+            output_mode="update",
+            width=_WAGG_STATE_WIDTH,
+        ).localCheckpoint(eager=True)
     finally:
         shutil.rmtree(work, ignore_errors=True)
     return log.groupBy("event_type").agg(
@@ -1442,10 +1409,12 @@ def stream_session_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     try:
-        with _scoped_shuffle(spark, _SESS_BATCHES):
-            emitted = run_to_memory(
-                agg, f"sess_replay_{uuid.uuid4().hex[:8]}", f"{work}/ckpt"
-            ).localCheckpoint(eager=True)
+        emitted = run_to_memory(
+            agg,
+            f"sess_replay_{uuid.uuid4().hex[:8]}",
+            f"{work}/ckpt",
+            width=_SESS_BATCHES,
+        ).localCheckpoint(eager=True)
     finally:
         shutil.rmtree(work, ignore_errors=True)
     return emitted.select(
@@ -1665,7 +1634,7 @@ def stream_cdc_apply_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     _apply = make_cdc_apply(work, bucket_hist)
 
     try:
-        with _scoped_shuffle(spark, _CDC_BATCHES), ephemeral_checkpoint(spark):
+        with ephemeral_checkpoint(spark, f"{work}/ckpt", width=_CDC_BATCHES):
             q = (
                 stream.writeStream.foreachBatch(_apply)
                 .option("checkpointLocation", f"{work}/ckpt")
@@ -1777,12 +1746,12 @@ def stream_funnel_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id BIGINT, ts TIMESTAMP, event_id BIGINT, event_type STRING",
     )
     try:
-        with _scoped_shuffle(spark, _FUN_SHUFFLE):
-            emitted = run_to_memory(
-                funnel_stream(stream),
-                f"funnel_replay_{uuid.uuid4().hex[:8]}",
-                f"{work}/ckpt",
-            ).localCheckpoint(eager=True)
+        emitted = run_to_memory(
+            funnel_stream(stream),
+            f"funnel_replay_{uuid.uuid4().hex[:8]}",
+            f"{work}/ckpt",
+            width=_FUN_SHUFFLE,
+        ).localCheckpoint(eager=True)
     finally:
         shutil.rmtree(work, ignore_errors=True)
     stages = spark.createDataFrame(
@@ -1815,12 +1784,12 @@ def stream_funnel_bucketed_replay(spark: SparkSession, sf_dir: str) -> DataFrame
         "user_id BIGINT, ts TIMESTAMP, event_id BIGINT, event_type STRING",
     )
     try:
-        with _scoped_shuffle(spark, _FUN_BATCHES):
-            emitted = run_to_memory(
-                funnel_stream_bucketed(stream, n_buckets=64),
-                f"funnel_bucketed_replay_{uuid.uuid4().hex[:8]}",
-                f"{work}/ckpt",
-            ).localCheckpoint(eager=True)
+        emitted = run_to_memory(
+            funnel_stream_bucketed(stream, n_buckets=64),
+            f"funnel_bucketed_replay_{uuid.uuid4().hex[:8]}",
+            f"{work}/ckpt",
+            width=_FUN_BATCHES,
+        ).localCheckpoint(eager=True)
     finally:
         shutil.rmtree(work, ignore_errors=True)
     stages = spark.createDataFrame(
@@ -1899,7 +1868,7 @@ def stream_observe_metrics_replay(spark: SparkSession, sf_dir: str) -> DataFrame
     listener = MetricsListener(_OBS_NAME)
     spark.streams.addListener(listener)
     try:
-        with ephemeral_checkpoint(spark):
+        with ephemeral_checkpoint(spark, f"{work}/ckpt"):
             q = (
                 observed.writeStream.format("noop")
                 .option("checkpointLocation", f"{work}/ckpt")

@@ -12,7 +12,11 @@ from eye_of_sauron_spark.plans.curation import (
     text_repetition_score,
     tfidf_top_terms,
 )
-from eye_of_sauron_spark.functions.text import tokens_spark
+from eye_of_sauron_spark.functions.text import (
+    bigrams_spark,
+    shingles_spark,
+    tokens_spark,
+)
 from eye_of_sauron_spark.sources import load_table
 
 
@@ -85,3 +89,31 @@ def test_tfidf_topk_shape(spark, sf_dir):
         by_rank = sorted(rs, key=lambda r: r["rank"])
         scores = [r["tfidf"] for r in by_rank]
         assert all(a >= b for a, b in zip(scores, scores[1:])), doc_id
+
+
+def test_shingles_and_bigrams_total_on_short_empty_null(spark):
+    """Documents shorter than the window, empty or null yield an empty
+    array (never a runtime error from a negative slice length); longer
+    ones yield their distinct n-token windows in order."""
+    docs = spark.createDataFrame(
+        [(0, None), (1, ""), (2, "a"), (3, "a b"), (4, "a b c"),
+         (5, "a b c d a b c")],
+        "id INT, text STRING",
+    )
+    rows = {
+        r["id"]: r
+        for r in docs.select(
+            "id",
+            shingles_spark(F.col("text")).alias("sh3"),
+            shingles_spark(F.col("text"), 8).alias("sh8"),
+            bigrams_spark(F.col("text")).alias("bi"),
+        ).collect()
+    }
+    for i in (0, 1, 2, 3):
+        assert rows[i]["sh3"] == [], i
+    assert rows[4]["sh3"] == ["a b c"]
+    assert rows[5]["sh3"] == ["a b c", "b c d", "c d a", "d a b"]
+    assert all(rows[i]["sh8"] == [] for i in rows)
+    assert [r["bi"] for r in (rows[0], rows[1], rows[2])] == [[], [], []]
+    assert [tuple(b) for b in rows[3]["bi"]] == [("a", "b")]
+    assert len(rows[5]["bi"]) == 6

@@ -220,42 +220,152 @@ def test_memo_checkpoint_drops_stale_session_slots(spark):
         drain_session(spark)
 
 
-def test_ephemeral_checkpoint_scopes_and_restores(spark):
-    """The checksum-disable is a SCOPED conf: off inside the context,
-    restored to whatever held before on every exit path (set value,
-    default/unset, nesting, exception)."""
+def test_ephemeral_checkpoint_scopes_and_restores(spark, tmp_path):
+    """The throwaway-checkpoint confs are SCOPED: checksums off, the
+    rename-based file manager on and (when given) the state width and
+    extra confs set inside the context; each restored to whatever held before on every
+    exit path (set value, default/unset, nesting, exception)."""
     from eye_of_sauron_spark.streaming.harness import (
         _CKPT_CHECKSUM_KEY,
+        _CKPT_MANAGER_KEY,
+        _RENAME_MANAGER,
+        _SHUFFLE_KEY,
         ephemeral_checkpoint,
     )
 
-    default = spark.conf.get(_CKPT_CHECKSUM_KEY)  # 4.1 default: true
-    with ephemeral_checkpoint(spark):
-        assert spark.conf.get(_CKPT_CHECKSUM_KEY) == "false"
-        with ephemeral_checkpoint(spark):  # nested: still off
-            assert spark.conf.get(_CKPT_CHECKSUM_KEY) == "false"
-        assert spark.conf.get(_CKPT_CHECKSUM_KEY) == "false"
-    assert spark.conf.get(_CKPT_CHECKSUM_KEY) == default
+    ckpt = str(tmp_path / "ckpt")
+    keys = (_CKPT_CHECKSUM_KEY, _CKPT_MANAGER_KEY, _SHUFFLE_KEY)
 
-    spark.conf.set(_CKPT_CHECKSUM_KEY, "true")
+    def confs():
+        return {k: spark.conf.get(k, None) for k in keys}
+
+    default = confs()  # both keys unset: checksums on, Spark's manager
+    assert default[_CKPT_CHECKSUM_KEY] is None
+    assert default[_CKPT_MANAGER_KEY] is None
+    assert spark.conf.get(_CKPT_CHECKSUM_KEY) == "true"
+    inner = {_CKPT_CHECKSUM_KEY: "false", _CKPT_MANAGER_KEY: _RENAME_MANAGER}
+    with ephemeral_checkpoint(spark, ckpt, width=3):
+        assert confs() == {**inner, _SHUFFLE_KEY: "3"}
+        with ephemeral_checkpoint(spark, ckpt):  # nested, no width
+            assert confs() == {**inner, _SHUFFLE_KEY: "3"}
+        with ephemeral_checkpoint(spark, ckpt, width=1):  # nested width
+            assert confs() == {**inner, _SHUFFLE_KEY: "1"}
+        extra = "spark.sql.streaming.minBatchesToRetain"
+        with ephemeral_checkpoint(spark, ckpt, conf={extra: "7"}):
+            assert spark.conf.get(extra) == "7"
+        assert spark.conf.get(extra, None) is None
+        assert confs() == {**inner, _SHUFFLE_KEY: "3"}
+    assert confs() == default
+
+    preset = {
+        _CKPT_CHECKSUM_KEY: "true",
+        _CKPT_MANAGER_KEY: "org.example.PresetManager",
+        _SHUFFLE_KEY: "5",
+    }
+    for k, v in preset.items():
+        spark.conf.set(k, v)
     try:
         try:
-            with ephemeral_checkpoint(spark):
-                assert spark.conf.get(_CKPT_CHECKSUM_KEY) == "false"
+            with ephemeral_checkpoint(spark, ckpt, width=2):
+                assert confs() == {**inner, _SHUFFLE_KEY: "2"}
                 raise RuntimeError("boom")
         except RuntimeError:
             pass
-        assert spark.conf.get(_CKPT_CHECKSUM_KEY) == "true"
+        assert confs() == preset
     finally:
         spark.conf.unset(_CKPT_CHECKSUM_KEY)
+        spark.conf.unset(_CKPT_MANAGER_KEY)
+        spark.conf.set(_SHUFFLE_KEY, default[_SHUFFLE_KEY])
+    assert confs() == default
+
+    try:  # an exception with the keys at their unset defaults
+        with ephemeral_checkpoint(spark, ckpt, width=2):
+            raise RuntimeError("boom")
+    except RuntimeError:
+        pass
+    assert confs() == default
+
+
+def test_ephemeral_checkpoint_rejects_non_local_dir(spark):
+    """The rename-based manager is only atomic on local disk, so a
+    remote checkpoint dir fails loudly before any conf or stream is
+    touched — through the scope and through run_to_memory."""
+    import pytest
+
+    from eye_of_sauron_spark.streaming.harness import (
+        _CKPT_MANAGER_KEY,
+        ephemeral_checkpoint,
+        run_to_memory,
+    )
+
+    remote = "hdfs://namenode:8020/tmp/replay_ckpt"
+    with pytest.raises(ValueError, match="hdfs"):
+        with ephemeral_checkpoint(spark, remote):
+            pass
+    stream = spark.readStream.format("rate").load()
+    with pytest.raises(ValueError, match="hdfs"):
+        run_to_memory(stream, "rejected_remote_ckpt", remote)
+    assert spark.conf.get(_CKPT_MANAGER_KEY, None) is None
+    assert not spark.streams.active
+    # local spellings pass
+    with ephemeral_checkpoint(spark, "file:///tmp/replay_ckpt"):
+        pass
+
+
+def test_stream_outside_scope_keeps_default_manager(spark, tmp_path):
+    """A stream started after a scoped drain sees the manager key
+    unset, so its checkpoint goes through Spark's default
+    (FileContext-based) manager; the scoped drain itself ran on the
+    rename-based one."""
+    from eye_of_sauron_spark.streaming.harness import (
+        _CKPT_MANAGER_KEY,
+        ephemeral_checkpoint,
+        file_stream,
+        staged_microbatch_log,
+    )
+
+    log = staged_microbatch_log(
+        ("test_outside_scope", 2),
+        2,
+        lambda: spark.range(0, 8).select(
+            (F.col("id") % 2).cast("int").alias("batch"), F.col("id")
+        ),
+    )
+
+    def drain(name: str, ckpt: str):
+        q = (
+            file_stream(spark, log, "id BIGINT")
+            .writeStream.format("memory")
+            .queryName(name)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        return q._jsq.streamingQuery().offsetLog().fileManager()
+
+    try:
+        scoped_dir = str(tmp_path / "scoped")
+        with ephemeral_checkpoint(spark, scoped_dir, width=1):
+            scoped = drain("scoped_drain", scoped_dir)
+        assert spark.conf.get(_CKPT_MANAGER_KEY, None) is None
+        outside = drain("outside_scope", str(tmp_path / "outside"))
+        assert spark.conf.get(_CKPT_MANAGER_KEY, None) is None
+    finally:
+        spark.catalog.dropTempView("scoped_drain")
+        spark.catalog.dropTempView("outside_scope")
+    assert scoped.getClass().getSimpleName() == (
+        "FileSystemBasedCheckpointFileManager"
+    )
+    assert "FileSystemBased" not in outside.toString()
 
 
 def test_io_sentinel_probe_restores_session_state(spark):
     """The bench-window IO probe (tools/sentinel_probe.py::io_probe)
     drains a checkpointed micro-stream on the SHARED session, so it
     carries the same SERIAL-ONLY restore-on-exit contract as the
-    replay family (VERDICT r16 #6): shuffle-partition and
-    checkpoint-checksum confs restored, the memory-sink temp view
+    replay family (VERDICT r16 #6): shuffle-partition,
+    checkpoint-checksum and checkpoint-manager confs restored, the memory-sink temp view
     dropped, and the throwaway checkpoint dir gone — while the drain
     itself returns a positive wall."""
     import glob
@@ -268,6 +378,8 @@ def test_io_sentinel_probe_restores_session_state(spark):
     shuffle_before = spark.conf.get("spark.sql.shuffle.partitions")
     checksum_key = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
     checksum_before = spark.conf.get(checksum_key)
+    manager_key = "spark.sql.streaming.checkpointFileManagerClass"
+    manager_before = spark.conf.get(manager_key, None)
     views_before = {v.name for v in spark.catalog.listTables()}
     # snapshot, don't glob-assert-empty: the shared tempdir may hold
     # leftovers from a SIGKILLed probe process that are not this
@@ -280,6 +392,7 @@ def test_io_sentinel_probe_restores_session_state(spark):
 
     assert spark.conf.get("spark.sql.shuffle.partitions") == shuffle_before
     assert spark.conf.get(checksum_key) == checksum_before
+    assert spark.conf.get(manager_key, None) == manager_before
     views_after = {v.name for v in spark.catalog.listTables()}
     assert not {
         v for v in views_after - views_before if v.startswith("io_sentinel_")

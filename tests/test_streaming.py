@@ -443,6 +443,8 @@ def test_change_detector_drops_consecutive_duplicates(spark, tmp_path):
     finally:
         if prev is not None:
             spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
+        else:
+            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     got = sorted((r["camera"], r["frame_num"], r["payload_hash"]) for r in out)
     assert got == [(0, 0, "a"), (0, 2, "b"), (0, 4, "c"), (1, 0, "x"), (1, 2, "y")]
 

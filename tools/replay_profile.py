@@ -15,7 +15,13 @@ variant spelled out:
 
 Each query runs once cold (staging memo + codegen) then WARM_RUNS
 warm; the reported number is the warm minimum (the protocol's
-burst-noise guard). Prints one JSON line at the end.
+burst-noise guard). Prints one JSON line at the end; besides the
+walls it holds, per query and for that fastest warm run, the layer
+record the commit floor is read from: processes forked on the host
+(the ``processes`` counter of /proc/stat, null where it is absent)
+plus the benchmark's streaming totals (perfbench/tracing.py: batch
+count, per-phase ``durationMs`` sums, summed
+``stateOperators[*].commitTimeMs``, final state rows).
 """
 
 from __future__ import annotations
@@ -51,6 +57,18 @@ REPLAY_QUERIES = [
 ]
 
 
+def _forks() -> int | None:
+    """Processes forked on the host since boot (/proc/stat)."""
+    try:
+        with open("/proc/stat") as fh:
+            for line in fh:
+                if line.startswith("processes "):
+                    return int(line.split()[1])
+    except OSError:
+        pass
+    return None
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument(
@@ -62,7 +80,8 @@ def main() -> None:
         "effective when no JVM is already running)",
     )
     ap.add_argument("--shuffle-cap", type=int, default=0,
-                    help="cap _scoped_shuffle partition counts at N")
+                    help="cap the state width that ephemeral_checkpoint "
+                    "scopes (its width argument) at N")
     ap.add_argument("--queries", type=str, default="")
     ap.add_argument("--warm-runs", type=int, default=2)
     ap.add_argument("--sf", type=str,
@@ -113,30 +132,54 @@ def main() -> None:
 
     from eye_of_sauron_spark.session import get_spark
     from eye_of_sauron_spark import plans
+    from perfbench.tracing import BatchListener, stream_totals
 
     if args.shuffle_cap:
+        import eye_of_sauron_spark.streaming.harness as H
         import eye_of_sauron_spark.streaming.replay as R
-        orig = R._scoped_shuffle
+
+        orig = H.ephemeral_checkpoint
         cap = args.shuffle_cap
-        R._scoped_shuffle = lambda spark, n: orig(spark, min(n, cap))
+
+        def capped(spark, checkpoint_dir, width=None, conf=None):
+            return orig(spark, checkpoint_dir,
+                        None if width is None else min(width, cap), conf)
+
+        # run_to_memory resolves the scope in harness; the raw replay
+        # starts resolve the name replay.py imported
+        H.ephemeral_checkpoint = R.ephemeral_checkpoint = capped
 
     names = [n for n in args.queries.split(",") if n] or REPLAY_QUERIES
     spark = get_spark(extra_conf=shm_conf or None)
+    listener = BatchListener()
+    spark.streams.addListener(listener)
     try:
         q = plans.all_queries()
         rows: dict[str, float] = {}
         cold: dict[str, float] = {}
+        layers: dict[str, dict] = {}
         for name in names:
             t0 = time.time()
             q[name](spark, args.sf).count()
             cold[name] = round(time.time() - t0, 3)
             best = float("inf")
             for _ in range(args.warm_runs):
+                n_started = len(listener.started)
+                f0 = _forks()
                 t0 = time.time()
                 q[name](spark, args.sf).count()
-                best = min(best, time.time() - t0)
+                dt = time.time() - t0
+                f1 = _forks()
+                runs = listener.started[n_started:]
+                listener.settled(runs)
+                run = stream_totals(listener.batches_of(runs))
+                run["forks"] = None if f0 is None else f1 - f0
+                if dt < best:
+                    best, layers[name] = dt, run
             rows[name] = round(best, 3)
-            print(f"{name:40s} cold {cold[name]:7.2f}  warm {rows[name]:7.2f}",
+            print(f"{name:40s} cold {cold[name]:7.2f}  warm {rows[name]:7.2f}"
+                  f"  forks {layers[name]['forks']}"
+                  f"  state_commit {layers[name]['state_commit_ms']:.0f} ms",
                   flush=True)
         print(json.dumps({
             "variant": {"shm": args.shm, "shuffle_cap": args.shuffle_cap},
@@ -144,8 +187,10 @@ def main() -> None:
             "warm_sum": round(sum(rows.values()), 2),
             "cold_sum": round(sum(cold.values()), 2),
             "rows": rows,
+            "layers": layers,
         }))
     finally:
+        spark.streams.removeListener(listener)
         if args.shm:
             # RAM-backed tmpfs accumulates shuffle spill across
             # repeated profiling runs — reclaim it once the JVM is

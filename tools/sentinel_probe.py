@@ -51,7 +51,10 @@ BANDS = {
 # Checkpointed-write drain, warm, quiet-window band (pinned r17 —
 # see SCALE.md "IO sentinel" for the calibration evidence). The drain
 # is commit-protocol bound: ~2.5 s of it is 8 x (offset WAL + commit
-# file + 4 state-store delta commits) plus stream start/stop.
+# file + 4 state-store delta commits) plus stream start/stop. Pinned
+# under Spark's default checkpoint manager; the drain now runs on the
+# rename-based one (harness.ephemeral_checkpoint), so re-take the band
+# in a quiet window (SCALE.md "Replay commit floor").
 IO_BAND = (2.3, 3.1)
 
 _IO_BATCHES = 8
@@ -60,14 +63,13 @@ _IO_STATE_WIDTH = 4
 
 def io_probe(spark) -> float:
     """One timed checkpointed-write drain (seconds). SERIAL-ONLY like
-    the replay family itself: the drain scopes the session-wide
-    shuffle conf (_scoped_shuffle) and checkpoint-checksum conf
-    (ephemeral_checkpoint inside run_to_memory) while it runs."""
+    the replay family itself: run_to_memory's ephemeral_checkpoint
+    scope sets the session-wide shuffle width, checksum and
+    checkpoint-manager confs while it runs."""
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
     from eye_of_sauron_spark.streaming import harness
-    from eye_of_sauron_spark.streaming.replay import _scoped_shuffle
 
     log_dir = harness.staged_microbatch_log(
         ("io_sentinel", _IO_BATCHES),
@@ -88,15 +90,15 @@ def io_probe(spark) -> float:
     name = f"io_sentinel_{uuid.uuid4().hex[:8]}"
     t0 = time.perf_counter()
     try:
-        with _scoped_shuffle(spark, _IO_STATE_WIDTH):
-            harness.run_to_memory(
-                harness.file_stream(spark, log_dir, schema)
-                .groupBy("k")
-                .agg(F.count("*").alias("n")),
-                name,
-                ckpt,
-                output_mode="complete",
-            ).collect()
+        harness.run_to_memory(
+            harness.file_stream(spark, log_dir, schema)
+            .groupBy("k")
+            .agg(F.count("*").alias("n")),
+            name,
+            ckpt,
+            output_mode="complete",
+            width=_IO_STATE_WIDTH,
+        ).collect()
         return time.perf_counter() - t0
     finally:
         spark.catalog.dropTempView(name)
