@@ -121,21 +121,6 @@ def detect_series(images: pd.Series) -> pd.Series:
     return images.map(detect_faces_np)
 
 
-def embed_series(images: pd.Series, boxes: pd.Series) -> pd.Series:
-    """Per-frame multi-box embed (boxes is a list column). The seeds
-    are flattened across the whole batch and hashed in one numpy pass,
-    then regrouped per frame — no per-row PRNG."""
-    counts = [len(bx) if bx is not None else 0 for bx in boxes]
-    flat_imgs = [img for img, c in zip(images, counts) for _ in range(c)]
-    flat_boxes = [b for bx, c in zip(boxes, counts) if c for b in bx]
-    flat = embed_batch_np(flat_imgs, flat_boxes)
-    out, pos = [], 0
-    for c in counts:
-        out.append([flat[pos + k] for k in range(c)])
-        pos += c
-    return pd.Series(out, index=images.index)
-
-
 def make_embed_udf(weights_broadcast):
     """Factory for a weight-parameterized embed UDF — the production
     pattern for model parameters: the driver broadcasts them once

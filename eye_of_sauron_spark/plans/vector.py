@@ -77,10 +77,6 @@ def _spread(df: DataFrame, *keys: str) -> DataFrame:
     return df.repartition(n, *keys)
 
 
-def _plane_lit_spark(p: int):
-    return F.array(*[F.lit(float(v)) for v in _plane(p)])
-
-
 def _plane_lit_duck(p: int) -> str:
     return "[" + ", ".join(f"{v}.0" for v in _plane(p)) + "]"
 

@@ -11,7 +11,10 @@ semantics onto Structured Streaming:
   logic through a real file-source stream and assert equality.
 - ``harness``  : turn the parquet fixtures into a multi-micro-batch
   file-source stream (the local stand-in for the Kafka source) and
-  drive queries to memory sinks with availableNow triggers.
+  start every stream through ``drain_stream``, the one start (an
+  availableNow drain inside the ``ephemeral_checkpoint`` conf scope).
+  ``run_to_memory`` is its memory-sink form and owns the checkpoint
+  dir, the sink name and the sink's temp view.
 - ``reorder``  : the reference's per-camera ordered-reassembly buffer
   (src/utils.py:139-191) as a bounded stateful operator with
   state eviction (the reference's version leaks, utils.py:50,168).

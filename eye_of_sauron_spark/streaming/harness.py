@@ -11,9 +11,12 @@ writers below control explicitly.
 Swap ``readStream.format("kafka")`` in for production; every
 transformation downstream is source-agnostic.
 
-Every stream start in the package enters :func:`ephemeral_checkpoint`,
-the one scope for the confs of a throwaway local checkpoint (why the
-checkpoint manager is swapped there: see its docstring).
+:func:`drain_stream` is the package's one stream start: it enters
+:func:`ephemeral_checkpoint`, the one scope for the confs of a
+throwaway local checkpoint (why the checkpoint manager is swapped
+there: see its docstring), and drains with an availableNow trigger
+into the sink its caller picks. :func:`run_to_memory` is the memory-sink
+form; it owns its checkpoint dir, sink name and temp view.
 """
 
 from __future__ import annotations
@@ -23,11 +26,13 @@ import os
 import shutil
 import tempfile
 import time
+import uuid
 from collections.abc import Callable
 from contextlib import contextmanager
 from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import DataStreamWriter
 
 _CKPT_CHECKSUM_KEY = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
 _CKPT_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
@@ -191,6 +196,29 @@ def staged_microbatch_log(
     return path
 
 
+
+def link_batch_files(src_dir: str, dst_dir: str, lo: int, hi: int) -> None:
+    """Hardlink batch files [lo, hi) from a staged log into a per-run
+    input dir. The phased replays (restart, rebroadcast) deliver their
+    log in two tranches around a query stop; the file source discovers
+    a tranche when it is LINKED (arrival time), while the staged
+    files' own mtimes keep intra-tranche order. An absent file is an
+    empty micro-batch — skipped, same as the staging writer."""
+    os.makedirs(dst_dir, exist_ok=True)
+    for i in range(lo, hi):
+        name = f"batch_{i:04d}.parquet"
+        src = os.path.join(src_dir, name)
+        if os.path.exists(src):
+            try:
+                os.link(src, os.path.join(dst_dir, name))
+            except OSError:
+                # EXDEV: staged dir and per-run work dir on different
+                # filesystems (e.g. TMPDIR changed between staging and
+                # this run). copy2 preserves mtimes, so intra-tranche
+                # order survives (r14 ADVICE).
+                shutil.copy2(src, os.path.join(dst_dir, name))
+
+
 def file_stream(spark: SparkSession, src_dir: str, schema) -> DataFrame:
     """One file per micro-batch, in modification-time order."""
     return (
@@ -201,28 +229,59 @@ def file_stream(spark: SparkSession, src_dir: str, schema) -> DataFrame:
     )
 
 
-def run_to_memory(
+def drain_stream(
     stream_df: DataFrame,
-    name: str,
+    sink: Callable[[DataStreamWriter], DataStreamWriter],
     checkpoint_dir: str,
-    output_mode: str = "append",
+    *,
+    mode: str = "append",
     width: int | None = None,
     conf: dict[str, str] | None = None,
-) -> DataFrame:
-    """Drain the stream with an availableNow trigger into a memory
-    sink and return the sink's contents as a DataFrame. The drain runs
-    inside :func:`ephemeral_checkpoint` (``width`` and ``conf`` are
-    forwarded)."""
+) -> None:
+    """Start ``stream_df`` with an availableNow trigger and block until
+    it has drained. ``sink`` picks the sink on the writer (memory,
+    parquet, foreachBatch, noop); output mode and checkpoint location
+    are set here. The start runs inside :func:`ephemeral_checkpoint`
+    (``width`` and ``conf`` are forwarded), so ``checkpoint_dir`` must
+    be local and every scoped conf is restored when the drain ends."""
     with ephemeral_checkpoint(
         stream_df.sparkSession, checkpoint_dir, width, conf
     ):
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
+        writer = (
+            stream_df.writeStream.outputMode(mode)
             .option("checkpointLocation", checkpoint_dir)
             .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
-    return stream_df.sparkSession.table(name)
+        sink(writer).start().awaitTermination()
+
+
+def run_to_memory(
+    stream_df: DataFrame,
+    *,
+    mode: str = "append",
+    width: int | None = None,
+    conf: dict[str, str] | None = None,
+) -> DataFrame:
+    """Drain the stream into a memory sink (:func:`drain_stream`) and
+    return the sink's rows as a DataFrame. The checkpoint lives in a
+    temp dir deleted after the drain, and the sink name is unique per
+    call; its temp view is dropped before returning, so no call leaves
+    a view (and the driver-held rows behind it) in the session catalog.
+    The returned DataFrame keeps the sink's rows readable."""
+    spark = stream_df.sparkSession
+    name = f"memory_sink_{uuid.uuid4().hex[:8]}"
+    try:
+        with tempfile.TemporaryDirectory(
+            prefix="memory_sink_", ignore_cleanup_errors=True
+        ) as work:
+            drain_stream(
+                stream_df,
+                lambda w: w.format("memory").queryName(name),
+                f"{work}/ckpt",
+                mode=mode,
+                width=width,
+                conf=conf,
+            )
+        return spark.table(name)
+    finally:
+        spark.catalog.dropTempView(name)

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .harness import ephemeral_checkpoint
+from .harness import drain_stream
 
 TOPIC_PREFIX = "predicted_object_raw_frame_topic_"
 
@@ -74,14 +74,7 @@ def run_match_rebroadcast_stream(
             .parquet(out_dir)
         )
 
-    with ephemeral_checkpoint(events_stream.sparkSession, checkpoint_dir):
-        q = (
-            events_stream.writeStream.trigger(availableNow=True)
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(_match)
-            .start()
-        )
-        q.awaitTermination()
+    drain_stream(events_stream, lambda w: w.foreachBatch(_match), checkpoint_dir)
 
 
 def run_face_pipeline_stream(
@@ -100,19 +93,16 @@ def run_face_pipeline_stream(
     comes from its frame's single input row."""
     from ..ml.pipeline import face_pipeline
 
-    with ephemeral_checkpoint(frames_stream.sparkSession, checkpoint_dir):
-        q = (
-            frames_stream.writeStream.trigger(availableNow=True)
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(
-                lambda batch, _eid: face_pipeline(batch, targets)
-                .write.mode("append")
-                .partitionBy("camera")
-                .parquet(out_dir)
-            )
-            .start()
-        )
-        q.awaitTermination()
+    drain_stream(
+        frames_stream,
+        lambda w: w.foreachBatch(
+            lambda batch, _eid: face_pipeline(batch, targets)
+            .write.mode("append")
+            .partitionBy("camera")
+            .parquet(out_dir)
+        ),
+        checkpoint_dir,
+    )
 
 
 def run_routed_file_sink(
@@ -120,15 +110,12 @@ def run_routed_file_sink(
 ) -> None:
     """Checkpointed availableNow drain into a topic-partitioned file
     sink (the Kafka-sink stand-in: one directory per topic)."""
-    with ephemeral_checkpoint(routed.sparkSession, checkpoint_dir):
-        q = (
-            routed.writeStream.trigger(availableNow=True)
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(
-                lambda batch, _eid: batch.write.mode("append")
-                .partitionBy("topic")
-                .parquet(out_dir)
-            )
-            .start()
-        )
-        q.awaitTermination()
+    drain_stream(
+        routed,
+        lambda w: w.foreachBatch(
+            lambda batch, _eid: batch.write.mode("append")
+            .partitionBy("topic")
+            .parquet(out_dir)
+        ),
+        checkpoint_dir,
+    )

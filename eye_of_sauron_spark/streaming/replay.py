@@ -15,9 +15,8 @@ is covered by the property tests in tests/test_properties.py.
 from __future__ import annotations
 
 import os
-import shutil
+from collections.abc import Callable
 import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -28,8 +27,9 @@ from ..functions.money import cents_duck, cents_spark
 from ..plans.registry import query
 from ..sources import load_table
 from .harness import (
-    ephemeral_checkpoint,
+    drain_stream,
     file_stream,
+    link_batch_files,
     run_to_memory,
     staged_microbatch_log,
 )
@@ -47,14 +47,42 @@ _FRAMES_PER_CAMERA = 200
 _N_BATCHES = 8
 _BUFFER_SIZE = 256
 
-_REORDER_ORACLE = f"""
-    WITH frames AS (
-        SELECT CAST(event_id % {_N_CAMERAS} AS INT) AS camera,
+
+def _camera_frames(
+    spark: SparkSession, sf_dir: str, n_cameras: int, n_frames: int
+) -> DataFrame:
+    """(camera, frame_num, payload): the first ``n_frames`` frames of
+    each of ``n_cameras`` cameras, derived deterministically from the
+    events fixture — camera = event_id mod n_cameras, frames numbered
+    in event_id order. The frame source of the reorder, overflow and
+    change-detect replays."""
+    ev = load_table(spark, sf_dir, "events")
+    cam = (F.col("event_id") % n_cameras).cast("int")
+    return ev.select(
+        cam.alias("camera"),
+        (F.row_number().over(W.partitionBy(cam).orderBy(F.col("event_id"))) - 1)
+        .cast("int")
+        .alias("frame_num"),
+        F.col("event_type").alias("payload"),
+    ).filter(F.col("frame_num") < n_frames)
+
+
+def _camera_frames_duck(n_cameras: int) -> str:
+    """_camera_frames' (camera, frame_num) numbering restated in DuckDB
+    SQL, before the frame cap — the ONE oracle definition of the frame
+    derivation, changed in lockstep with _camera_frames (as
+    _batch_duck is with _time_sliced)."""
+    return f"""
+        SELECT CAST(event_id % {n_cameras} AS INT) AS camera,
                CAST(row_number() OVER (
-                   PARTITION BY event_id % {_N_CAMERAS} ORDER BY event_id
+                   PARTITION BY event_id % {n_cameras} ORDER BY event_id
                ) - 1 AS INT) AS frame_num
         FROM events
-    )
+    """
+
+
+_REORDER_ORACLE = f"""
+    WITH frames AS ({_camera_frames_duck(_N_CAMERAS)})
     SELECT camera, frame_num, frame_num + 1 AS emit_rank
     FROM frames WHERE frame_num < {_FRAMES_PER_CAMERA}
 """
@@ -65,20 +93,7 @@ def _scrambled_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     set with a deterministic md5-derived micro-batch assignment —
     adjacent frames land in different batches, so every camera sees
     out-of-order arrival."""
-    ev = load_table(spark, sf_dir, "events")
-    cam = (F.col("event_id") % _N_CAMERAS).cast("int")
-    frames = ev.select(
-        cam.alias("camera"),
-        (
-            F.row_number().over(
-                W.partitionBy(cam).orderBy(F.col("event_id"))
-            )
-            - 1
-        )
-        .cast("int")
-        .alias("frame_num"),
-        F.col("event_type").alias("payload"),
-    ).filter(F.col("frame_num") < _FRAMES_PER_CAMERA)
+    frames = _camera_frames(spark, sf_dir, _N_CAMERAS, _FRAMES_PER_CAMERA)
     batch = (
         F.conv(F.substring(F.md5(F.concat_ws(":", "camera", "frame_num")), 1, 4), 16, 10)
         .cast("bigint")
@@ -93,16 +108,15 @@ def reorder_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Runs a real Structured Streaming job (availableNow over 8 ordered
     file micro-batches, per-camera applyInPandasWithState) and returns
-    (camera, frame_num, emit_rank). Fresh temp input/checkpoint dirs
-    and a unique memory-sink name per invocation keep the query
-    idempotent and re-runnable within one session.
+    (camera, frame_num, emit_rank). A fresh checkpoint dir and a
+    unique memory-sink name per invocation (run_to_memory) keep the
+    query idempotent and re-runnable within one session.
 
     Scale shape: state is one small heap per camera, shuffled once on
     the camera key; eviction-on-emit bounds state by disorder, not
     stream length (the reference's heap leaks instead —
     src/utils.py:50,168).
     """
-    work = tempfile.mkdtemp(prefix="reorder_replay_")
     # one job for all 8 batch files (the per-batch filter+write form
     # re-ran the scramble window once per batch), staged once per
     # session (the scramble is a pure function of the fixture)
@@ -118,17 +132,9 @@ def reorder_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     # over 8 state partitions, not the session's 32 — each micro-batch
     # pays per-partition state-store commit + Arrow worker round-trip,
     # so 32 partitions x 8 batches is mostly fixed overhead here.
-    try:
-        emitted = run_to_memory(
-            reorder_stream(stream, buffer_size=_BUFFER_SIZE),
-            f"reorder_replay_{uuid.uuid4().hex[:8]}",
-            f"{work}/ckpt",
-            width=_N_BATCHES,
-        )
-    finally:
-        # the memory sink holds the results; the input/checkpoint files
-        # are dead weight that would otherwise accumulate per invocation
-        shutil.rmtree(work, ignore_errors=True)
+    emitted = run_to_memory(
+        reorder_stream(stream, buffer_size=_BUFFER_SIZE), width=_N_BATCHES
+    )
     return emitted.select(
         "camera",
         "frame_num",
@@ -152,13 +158,7 @@ _OV_LATE_BATCH = 5
 _OV_LOST_FRAME = 120   # never arrives -> gap -> overflow skip
 
 _REORDER_OVERFLOW_ORACLE = f"""
-    WITH frames AS (
-        SELECT CAST(event_id % {_OV_CAMERAS} AS INT) AS camera,
-               CAST(row_number() OVER (
-                   PARTITION BY event_id % {_OV_CAMERAS} ORDER BY event_id
-               ) - 1 AS INT) AS frame_num
-        FROM events
-    )
+    WITH frames AS ({_camera_frames_duck(_OV_CAMERAS)})
     SELECT camera, frame_num,
            CAST(row_number() OVER (
                PARTITION BY camera ORDER BY frame_num
@@ -189,23 +189,9 @@ def stream_reorder_overflow_replay(spark: SparkSession, sf_dir: str) -> DataFram
     exactly once, in per-camera order — a buffer that leaked state,
     resurrected a stale frame, double-emitted across a skip, or
     stalled forever on a gap changes the set and fails the hash."""
-    ev = load_table(spark, sf_dir, "events")
-    cam = (F.col("event_id") % _OV_CAMERAS).cast("int")
     frames = (
-        ev.select(
-            cam.alias("camera"),
-            (
-                F.row_number().over(W.partitionBy(cam).orderBy(F.col("event_id")))
-                - 1
-            )
-            .cast("int")
-            .alias("frame_num"),
-            F.col("event_type").alias("payload"),
-        )
-        .filter(
-            (F.col("frame_num") < _OV_FRAMES)
-            & (F.col("frame_num") != _OV_LOST_FRAME)
-        )
+        _camera_frames(spark, sf_dir, _OV_CAMERAS, _OV_FRAMES)
+        .filter(F.col("frame_num") != _OV_LOST_FRAME)
         .withColumn(
             "batch",
             F.when(F.col("frame_num") == _OV_LATE_FRAME, F.lit(_OV_LATE_BATCH))
@@ -214,24 +200,17 @@ def stream_reorder_overflow_replay(spark: SparkSession, sf_dir: str) -> DataFram
         )
     )
     n_batches = _OV_FRAMES // _OV_SPAN
-    work = tempfile.mkdtemp(prefix="reorder_overflow_")
-    try:
-        in_dir = staged_microbatch_log(
-            ("overflow_frames", os.path.realpath(sf_dir), n_batches),
-            n_batches,
-            lambda: frames,
-        )
-        stream = file_stream(
-            spark, in_dir, "camera INT, frame_num INT, payload STRING"
-        )
-        emitted = run_to_memory(
-            reorder_stream(stream, buffer_size=_OV_BUFFER),
-            f"reorder_overflow_{uuid.uuid4().hex[:8]}",
-            f"{work}/ckpt",
-            width=_OV_CAMERAS,
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    in_dir = staged_microbatch_log(
+        ("overflow_frames", os.path.realpath(sf_dir), n_batches),
+        n_batches,
+        lambda: frames,
+    )
+    stream = file_stream(
+        spark, in_dir, "camera INT, frame_num INT, payload STRING"
+    )
+    emitted = run_to_memory(
+        reorder_stream(stream, buffer_size=_OV_BUFFER), width=_OV_CAMERAS
+    )
     return emitted.select(
         "camera",
         "frame_num",
@@ -261,13 +240,7 @@ _CD_CHANGELOG_KEY = (
 )
 
 _CHANGE_DETECT_ORACLE = f"""
-    WITH frames AS (
-        SELECT CAST(event_id % {_CD_CAMERAS} AS INT) AS camera,
-               CAST(row_number() OVER (
-                   PARTITION BY event_id % {_CD_CAMERAS} ORDER BY event_id
-               ) - 1 AS INT) AS frame_num
-        FROM events
-    ),
+    WITH frames AS ({_camera_frames_duck(_CD_CAMERAS)}),
     flags AS (
         SELECT camera, frame_num,
                CASE WHEN frame_num = 0 OR ({hex32_duck(
@@ -316,17 +289,7 @@ def stream_change_detect_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     which serializes it per producer process."""
     from .change_detect import _has_protobuf, drop_unchanged_frames
 
-    ev = load_table(spark, sf_dir, "events")
-    cam = (F.col("event_id") % _CD_CAMERAS).cast("int")
-    frames = ev.select(
-        cam.alias("camera"),
-        (
-            F.row_number().over(W.partitionBy(cam).orderBy(F.col("event_id")))
-            - 1
-        )
-        .cast("int")
-        .alias("frame_num"),
-    ).filter(F.col("frame_num") < _CD_FRAMES)
+    frames = _camera_frames(spark, sf_dir, _CD_CAMERAS, _CD_FRAMES)
     chg = (F.col("frame_num") == 0) | (
         hex32_spark(F.concat_ws(":", F.lit("chg"), "camera", "frame_num")) % 3
         == 0
@@ -343,7 +306,6 @@ def stream_change_detect_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.col("frame_num") / _CD_SPAN).cast("int").alias("batch"),
     )
     n_batches = _CD_FRAMES // _CD_SPAN
-    work = tempfile.mkdtemp(prefix="change_detect_replay_")
     # the tws path requires the RocksDB store (results are provider-
     # independent), with per-batch changelog deltas instead of full
     # snapshot sync, as session.py documents. Without protobuf the
@@ -354,24 +316,17 @@ def stream_change_detect_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             "RocksDBStateStoreProvider",
         _CD_CHANGELOG_KEY: "true",
     } if _has_protobuf() else None
-    try:
-        in_dir = staged_microbatch_log(
-            ("change_detect_frames", os.path.realpath(sf_dir), n_batches),
-            n_batches,
-            lambda: staged,
-        )
-        stream = file_stream(
-            spark, in_dir, "camera INT, frame_num INT, payload_hash STRING"
-        )
-        emitted = run_to_memory(
-            drop_unchanged_frames(stream),
-            f"change_detect_{uuid.uuid4().hex[:8]}",
-            f"{work}/ckpt",
-            width=_CD_CAMERAS,
-            conf=tws_conf,
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    in_dir = staged_microbatch_log(
+        ("change_detect_frames", os.path.realpath(sf_dir), n_batches),
+        n_batches,
+        lambda: staged,
+    )
+    stream = file_stream(
+        spark, in_dir, "camera INT, frame_num INT, payload_hash STRING"
+    )
+    emitted = run_to_memory(
+        drop_unchanged_frames(stream), width=_CD_CAMERAS, conf=tws_conf
+    )
     return emitted.select("camera", "frame_num", "payload_hash")
 
 
@@ -416,37 +371,21 @@ def _staged_events_log(spark: SparkSession, sf_dir: str) -> str:
     )
 
 
-def _link_batch_files(src_dir: str, dst_dir: str, lo: int, hi: int) -> None:
-    """Hardlink batch files [lo, hi) from a staged log into a per-run
-    input dir. The phased replays (restart, rebroadcast) deliver their
-    log in two tranches around a query stop; the file source discovers
-    a tranche when it is LINKED (arrival time), while the staged
-    files' own mtimes keep intra-tranche order. An absent file is an
-    empty micro-batch — skipped, same as the staging writer."""
-    os.makedirs(dst_dir, exist_ok=True)
-    for i in range(lo, hi):
-        name = f"batch_{i:04d}.parquet"
-        src = os.path.join(src_dir, name)
-        if os.path.exists(src):
-            try:
-                os.link(src, os.path.join(dst_dir, name))
-            except OSError:
-                # EXDEV: staged dir and per-run work dir on different
-                # filesystems (e.g. TMPDIR changed between staging and
-                # this run). copy2 preserves mtimes, so intra-tranche
-                # order survives (r14 ADVICE).
-                shutil.copy2(src, os.path.join(dst_dir, name))
-
-
-def _staged_click_error_logs(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """The click/error side logs of the stream-stream join replays,
-    staged once per session (4 octile micro-batches each, sliced over
-    each side's own ts range — exactly what both join replays wrote
-    for themselves before). Shared by stream_join_replay and
-    stream_left_join_replay; read-only, removed at process exit."""
+def _click_error_replay(
+    spark: SparkSession,
+    sf_dir: str,
+    join: Callable[[DataFrame, DataFrame], DataFrame],
+) -> DataFrame:
+    """Drain ``join(clicks, errors)`` over the click/error side logs
+    and return its (user_id, click_id, error_id, click_ts, error_ts)
+    rows — the body both stream-stream join replays share. The side
+    logs are staged once per session (4 octile micro-batches each,
+    sliced over each side's own ts range — exactly what both join
+    replays wrote for themselves before); read-only, removed at
+    process exit."""
     sf = os.path.realpath(sf_dir)
 
-    def _side(tp: str) -> str:
+    def _side(tp: str) -> DataFrame:
         def _build() -> DataFrame:
             ev = load_table(spark, sf_dir, "events")
             return _time_sliced(
@@ -456,11 +395,24 @@ def _staged_click_error_logs(spark: SparkSession, sf_dir: str) -> tuple[str, str
                 _SS_BATCHES,
             )
 
-        return staged_microbatch_log(
-            (f"{tp}_sliced", sf, _SS_BATCHES), _SS_BATCHES, _build
+        return file_stream(
+            spark,
+            staged_microbatch_log(
+                (f"{tp}_sliced", sf, _SS_BATCHES), _SS_BATCHES, _build
+            ),
+            "user_id BIGINT, event_id BIGINT, ts TIMESTAMP",
         )
 
-    return _side("click"), _side("error")
+    # 4 micro-batches per side: a stream-stream join keeps FOUR state
+    # stores per partition per micro-batch, so batch count is the
+    # dominant fixed cost of the replay; 4 ordered slices exercise the
+    # same incremental semantics as 8 at half the wall time
+    emitted = run_to_memory(
+        join(_side("click"), _side("error")), width=_SS_BATCHES
+    )
+    return emitted.select(
+        "user_id", "click_id", "error_id", "click_ts", "error_ts"
+    )
 
 
 _SS_BATCHES = 4
@@ -490,27 +442,7 @@ def stream_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     pytest-pinned in tests/test_streaming.py. Scale shape: both sides
     shuffle once on user_id; watermark-bounded state is the fix for
     the reference's unbounded pairing dict (src/utils.py:50,168)."""
-    work = tempfile.mkdtemp(prefix="ss_join_replay_")
-    # 4 micro-batches per side: a stream-stream join keeps FOUR state
-    # stores per partition per micro-batch, so batch count is the
-    # dominant fixed cost of the replay; 4 ordered slices exercise the
-    # same incremental semantics as 8 at half the wall time
-    clicks_dir, errors_dir = _staged_click_error_logs(spark, sf_dir)
-    schema = "user_id BIGINT, event_id BIGINT, ts TIMESTAMP"
-    cs = file_stream(spark, clicks_dir, schema)
-    es = file_stream(spark, errors_dir, schema)
-    try:
-        emitted = run_to_memory(
-            clicks_to_errors_stream_join(cs, es),
-            f"ss_join_replay_{uuid.uuid4().hex[:8]}",
-            f"{work}/ckpt",
-            width=_SS_BATCHES,
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-    return emitted.select(
-        "user_id", "click_id", "error_id", "click_ts", "error_ts"
-    )
+    return _click_error_replay(spark, sf_dir, clicks_to_errors_stream_join)
 
 
 # ---------------------------------------------------- streaming dedup
@@ -550,7 +482,6 @@ def stream_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         "batch", F.least(F.col("batch") + 1, F.lit(_N_BATCHES - 1))
     )
     deliveries = first.unionByName(redelivery)
-    work = tempfile.mkdtemp(prefix="stream_dedup_replay_")
     in_dir = staged_microbatch_log(
         ("dedup_deliveries", os.path.realpath(sf_dir), _N_BATCHES),
         _N_BATCHES,
@@ -564,15 +495,7 @@ def stream_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduped = stream.withWatermark("ts", "90 days").dropDuplicatesWithinWatermark(
         ["event_id"]
     )
-    try:
-        emitted = run_to_memory(
-            deduped,
-            f"stream_dedup_replay_{uuid.uuid4().hex[:8]}",
-            f"{work}/ckpt",
-            width=_N_BATCHES,
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    emitted = run_to_memory(deduped, width=_N_BATCHES)
     return emitted.select(
         "event_id", "user_id", "event_type", F.round("value", 6).alias("value")
     )
@@ -617,21 +540,12 @@ def stream_static_match_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("user_id")
         .distinct()
     )
-    work = tempfile.mkdtemp(prefix="stream_static_replay_")
     stream = file_stream(
         spark,
         _staged_events_log(spark, sf_dir),
         "event_id BIGINT, user_id BIGINT, event_type STRING, ts TIMESTAMP",
     )
-    try:
-        emitted = run_to_memory(
-            match_stream(stream, targets),
-            f"stream_static_replay_{uuid.uuid4().hex[:8]}",
-            f"{work}/ckpt",
-            width=_N_BATCHES,
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    emitted = run_to_memory(match_stream(stream, targets), width=_N_BATCHES)
     return emitted.select("event_id", "user_id", "event_type", "topic")
 
 
@@ -709,8 +623,9 @@ def stream_rebroadcast_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     sliced = ev.select("event_id", "user_id", "event_type").withColumn(
         "batch", (F.col("event_id") % _REBROADCAST_BATCHES).cast("int")
     )
-    work = tempfile.mkdtemp(prefix="rebroadcast_replay_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="rebroadcast_replay_", ignore_cleanup_errors=True
+    ) as work:
         all_dir = staged_microbatch_log(
             (
                 "rebroadcast_sliced",
@@ -722,7 +637,7 @@ def stream_rebroadcast_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         schema = "event_id BIGINT, user_id BIGINT, event_type STRING"
         # phase A: only batches 0-3 exist; targets = initial upload
-        _link_batch_files(all_dir, f"{work}/in", 0, half)
+        link_batch_files(all_dir, f"{work}/in", 0, half)
         _write_targets(ev, _REBROADCAST_THRESH_A, 0, f"{work}/targets")
         run_match_rebroadcast_stream(
             file_stream(spark, f"{work}/in", schema),
@@ -733,7 +648,7 @@ def stream_rebroadcast_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the re-upload: swap the target table, then let the stream
         # resume from the SAME checkpoint over the remaining batches
         _write_targets(ev, _REBROADCAST_THRESH_B, 1, f"{work}/targets")
-        _link_batch_files(all_dir, f"{work}/in", half, _REBROADCAST_BATCHES)
+        link_batch_files(all_dir, f"{work}/in", half, _REBROADCAST_BATCHES)
         run_match_rebroadcast_stream(
             file_stream(spark, f"{work}/in", schema),
             f"{work}/targets",
@@ -746,8 +661,6 @@ def stream_rebroadcast_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the memory the sink parquet occupies is needed past the
         # tempdir's life — localCheckpoint pins the rows, not the files
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 # ------------------------------------------------ kafka wire path (A2)
@@ -812,25 +725,19 @@ def kafka_decode_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     wire = encode_frame_records(frames).withColumn(
         "batch", (F.col("offset") % _KAFKA_REPLAY_BATCHES).cast("int")
     )
-    work = tempfile.mkdtemp(prefix="kafka_decode_replay_")
-    try:
-        in_dir = staged_microbatch_log(
-            ("kafka_wire", os.path.realpath(sf_dir), _KAFKA_REPLAY_BATCHES),
-            _KAFKA_REPLAY_BATCHES,
-            lambda: wire,
-        )
-        stream = file_stream(
-            spark,
-            in_dir,
-            "key BINARY, value BINARY, topic STRING, partition INT, offset BIGINT",
-        )
-        decoded = run_to_memory(
-            decode_frame_messages(stream),
-            f"kafka_decode_replay_{uuid.uuid4().hex[:8]}",
-            f"{work}/ckpt",
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    in_dir = staged_microbatch_log(
+        ("kafka_wire", os.path.realpath(sf_dir), _KAFKA_REPLAY_BATCHES),
+        _KAFKA_REPLAY_BATCHES,
+        lambda: wire,
+    )
+    stream = file_stream(
+        spark,
+        in_dir,
+        "key BINARY, value BINARY, topic STRING, partition INT, offset BIGINT",
+    )
+    decoded = run_to_memory(decode_frame_messages(stream)).localCheckpoint(
+        eager=True
+    )
     pframes = decoded.select(
         "camera", "frame_num", F.unbase64("original_frame").alias("payload")
     )
@@ -923,31 +830,28 @@ def stream_restart_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     phase2 = sliced.filter(F.col("batch") >= half).unionByName(redelivered)
 
-    work = tempfile.mkdtemp(prefix="stream_restart_replay_")
-    in_dir, out_dir, ckpt = f"{work}/in", f"{work}/out", f"{work}/ckpt"
     schema = (
         "event_id BIGINT, user_id BIGINT, event_type STRING, "
         "value DOUBLE, ts TIMESTAMP"
     )
+    with tempfile.TemporaryDirectory(
+        prefix="stream_restart_replay_", ignore_cleanup_errors=True
+    ) as work:
+        in_dir, out_dir, ckpt = f"{work}/in", f"{work}/out", f"{work}/ckpt"
 
-    def _run_to_file_sink() -> None:
-        deduped = (
-            file_stream(spark, in_dir, schema)
-            .withWatermark("ts", "90 days")
-            .dropDuplicatesWithinWatermark(["event_id"])
-        )
-        with ephemeral_checkpoint(spark, ckpt, width=_RESTART_BATCHES):
-            q = (
-                deduped.writeStream.format("parquet")
-                .option("path", out_dir)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
+        def _run_to_file_sink() -> None:
+            deduped = (
+                file_stream(spark, in_dir, schema)
+                .withWatermark("ts", "90 days")
+                .dropDuplicatesWithinWatermark(["event_id"])
             )
-            q.awaitTermination()
+            drain_stream(
+                deduped,
+                lambda w: w.format("parquet").option("path", out_dir),
+                ckpt,
+                width=_RESTART_BATCHES,
+            )
 
-    try:
         # the full delivery log (original batches 0-7 plus the
         # cross-restart redeliveries in batch 4) is staged once per
         # session; each run hardlinks a tranche in at its phase
@@ -961,14 +865,14 @@ def stream_restart_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             _RESTART_BATCHES,
             lambda: phase1.unionByName(phase2),
         )
-        _link_batch_files(all_dir, in_dir, 0, half)
+        link_batch_files(all_dir, in_dir, 0, half)
         _run_to_file_sink()  # batches 0-3, then the query STOPS
         # batches 4-7 land while no query is running
-        _link_batch_files(all_dir, in_dir, half, _RESTART_BATCHES)
+        link_batch_files(all_dir, in_dir, half, _RESTART_BATCHES)
         _run_to_file_sink()  # new query, same checkpoint: resumes
         # manifest-aware batch read of the sink (only committed files),
         # materialized so the temp dir can be deleted before return
-        emitted = (
+        return (
             spark.read.parquet(out_dir)
             .select(
                 "event_id",
@@ -978,9 +882,6 @@ def stream_restart_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-    return emitted
 
 
 # --------------------------------------- left-outer stream-stream join
@@ -1045,22 +946,10 @@ def stream_left_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     by watermark, NULL emission adds no state of its own."""
     from .joins import clicks_to_errors_left_join
 
-    work = tempfile.mkdtemp(prefix="ss_left_join_replay_")
-    clicks_dir, errors_dir = _staged_click_error_logs(spark, sf_dir)
-    schema = "user_id BIGINT, event_id BIGINT, ts TIMESTAMP"
-    cs = file_stream(spark, clicks_dir, schema)
-    es = file_stream(spark, errors_dir, schema)
-    try:
-        emitted = run_to_memory(
-            clicks_to_errors_left_join(cs, es, delay=_LEFT_JOIN_DELAY),
-            f"ss_left_join_replay_{uuid.uuid4().hex[:8]}",
-            f"{work}/ckpt",
-            width=_SS_BATCHES,
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-    return emitted.select(
-        "user_id", "click_id", "error_id", "click_ts", "error_ts"
+    return _click_error_replay(
+        spark,
+        sf_dir,
+        lambda cs, es: clicks_to_errors_left_join(cs, es, delay=_LEFT_JOIN_DELAY),
     )
 
 
@@ -1073,6 +962,28 @@ _WAGG_DELAY = "2 hours"
 # partition only adds a commit per batch (A/B: SCALE.md "Replay
 # commit floor")
 _WAGG_STATE_WIDTH = 1
+
+
+def _daily_counts_replay(stream: DataFrame, delay: str) -> DataFrame:
+    """The daily window-count aggregate the window and late-drop
+    replays share: ``window('1 day') x event_type`` counts and
+    integer-cents sums under a ``delay`` watermark, drained in append
+    mode and returned as (ws, event_type, n_events, cents)."""
+    agg = (
+        stream.withWatermark("ts", delay)
+        .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
+        .agg(
+            F.count("*").alias("n_events"),
+            F.sum(cents_spark(F.col("value"))).cast("bigint").alias("cents"),
+        )
+    )
+    emitted = run_to_memory(agg, width=_WAGG_STATE_WIDTH).localCheckpoint(
+        eager=True
+    )
+    return emitted.select(
+        F.col("w.start").alias("ws"), "event_type", "n_events", "cents"
+    )
+
 
 # The append-mode emission rule in closed form: a (day, event_type)
 # window emits iff the FINAL watermark — max event time across the
@@ -1114,30 +1025,12 @@ def stream_window_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash. Scale shape: identical to any production streaming rollup —
     state is one row per open (window, type), eviction is by
     watermark, shuffle is one exchange on the group keys."""
-    work = tempfile.mkdtemp(prefix="wagg_replay_")
     stream = file_stream(
         spark,
         _staged_events_log(spark, sf_dir),
         "ts TIMESTAMP, event_type STRING, value DOUBLE",
     )
-    cents = cents_spark(F.col("value"))
-    agg = (
-        stream.withWatermark("ts", _WAGG_DELAY)
-        .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
-        .agg(F.count("*").alias("n_events"), F.sum(cents).cast("bigint").alias("cents"))
-    )
-    try:
-        emitted = run_to_memory(
-            agg,
-            f"wagg_replay_{uuid.uuid4().hex[:8]}",
-            f"{work}/ckpt",
-            width=_WAGG_STATE_WIDTH,
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-    return emitted.select(
-        F.col("w.start").alias("ws"), "event_type", "n_events", "cents"
-    )
+    return _daily_counts_replay(stream, _WAGG_DELAY)
 
 
 def _batch_duck(n_batches: int) -> str:
@@ -1232,7 +1125,6 @@ def stream_late_drop_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         "arrival",
         F.when(is_late, F.col("batch") + _LATE_SHIFT).otherwise(F.col("batch")),
     )
-    work = tempfile.mkdtemp(prefix="late_drop_replay_")
     # routed arrival order is a pure function of the fixture: the
     # staged log's batch column IS the arrival batch
     in_dir = staged_microbatch_log(
@@ -1245,26 +1137,7 @@ def stream_late_drop_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = file_stream(
         spark, in_dir, "ts TIMESTAMP, event_type STRING, value DOUBLE"
     )
-    agg = (
-        stream.withWatermark("ts", _LATE_DELAY)
-        .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum(cents_spark(F.col("value"))).cast("bigint").alias("cents"),
-        )
-    )
-    try:
-        emitted = run_to_memory(
-            agg,
-            f"late_drop_replay_{uuid.uuid4().hex[:8]}",
-            f"{work}/ckpt",
-            width=_WAGG_STATE_WIDTH,
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-    return emitted.select(
-        F.col("w.start").alias("ws"), "event_type", "n_events", "cents"
-    )
+    return _daily_counts_replay(stream, _LATE_DELAY)
 
 
 # ------------------------------------------- update-mode aggregation
@@ -1300,23 +1173,15 @@ def stream_update_mode_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the two columns. Complements the append-mode window replay
     (stream_window_replay): append checks WHEN rows may finally be
     emitted, update checks WHAT is emitted every intermediate batch."""
-    work = tempfile.mkdtemp(prefix="upd_replay_")
     stream = file_stream(
         spark,
         _staged_events_log(spark, sf_dir),
         "ts TIMESTAMP, event_type STRING",
     )
     agg = stream.groupBy("event_type").agg(F.count("*").alias("n"))
-    try:
-        log = run_to_memory(
-            agg,
-            f"upd_replay_{uuid.uuid4().hex[:8]}",
-            f"{work}/ckpt",
-            output_mode="update",
-            width=_WAGG_STATE_WIDTH,
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    log = run_to_memory(
+        agg, mode="update", width=_WAGG_STATE_WIDTH
+    ).localCheckpoint(eager=True)
     return log.groupBy("event_type").agg(
         F.max("n").alias("n_final"),
         F.count("*").cast("bigint").alias("n_updates"),
@@ -1390,7 +1255,6 @@ def stream_session_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     size tracks concurrent activity, not stream length. The summed
     measure is integer cents so incremental merge order can't perturb
     a float hash."""
-    work = tempfile.mkdtemp(prefix="sess_replay_")
     stream = file_stream(
         spark,
         _staged_events_log(spark, sf_dir),
@@ -1408,15 +1272,7 @@ def stream_session_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(cents).cast("bigint").alias("cents"),
         )
     )
-    try:
-        emitted = run_to_memory(
-            agg,
-            f"sess_replay_{uuid.uuid4().hex[:8]}",
-            f"{work}/ckpt",
-            width=_SESS_BATCHES,
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    emitted = run_to_memory(agg, width=_SESS_BATCHES).localCheckpoint(eager=True)
     return emitted.select(
         "user_id",
         F.col("w.start").alias("session_start"),
@@ -1620,7 +1476,6 @@ def stream_cdc_apply_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi full-outer join per touched slice). Tombstones stay in the
     snapshot as flagged rows so ordering against late re-inserts
     stays well-defined; the read side filters them."""
-    work = tempfile.mkdtemp(prefix="cdc_apply_")
     stream = file_stream(
         spark,
         _staged_events_log(spark, sf_dir),
@@ -1631,37 +1486,32 @@ def stream_cdc_apply_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     # latest-path pointer — so an at-least-once epoch re-delivery
     # re-reads the pre-epoch generation (see _cdc_read_gen)
     bucket_hist: dict[int, list[tuple[int, str]]] = {}
-    _apply = make_cdc_apply(work, bucket_hist)
-
-    try:
-        with ephemeral_checkpoint(spark, f"{work}/ckpt", width=_CDC_BATCHES):
-            q = (
-                stream.writeStream.foreachBatch(_apply)
-                .option("checkpointLocation", f"{work}/ckpt")
-                .trigger(availableNow=True)
-                .start()
+    with tempfile.TemporaryDirectory(
+        prefix="cdc_apply_", ignore_cleanup_errors=True
+    ) as work:
+        _apply = make_cdc_apply(work, bucket_hist)
+        drain_stream(
+            stream,
+            lambda w: w.foreachBatch(_apply),
+            f"{work}/ckpt",
+            width=_CDC_BATCHES,
+        )
+        final_slices = [
+            spark.read.parquet(hist[-1][1]) for hist in bucket_hist.values()
+        ]
+        snap = final_slices[0]
+        for sl in final_slices[1:]:
+            snap = sl.unionByName(snap)
+        return (
+            snap.filter(F.col("event_type") != _CDC_TOMBSTONE)
+            .select(
+                "user_id",
+                cents_spark(F.col("value")).alias("last_cents"),
+                F.col("ts").alias("last_ts"),
+                "n_ops",
             )
-            q.awaitTermination()
-            final_slices = [
-                spark.read.parquet(hist[-1][1])
-                for hist in bucket_hist.values()
-            ]
-            snap = final_slices[0]
-            for sl in final_slices[1:]:
-                snap = sl.unionByName(snap)
-            result = (
-                snap.filter(F.col("event_type") != _CDC_TOMBSTONE)
-                .select(
-                    "user_id",
-                    cents_spark(F.col("value")).alias("last_cents"),
-                    F.col("ts").alias("last_ts"),
-                    "n_ops",
-                )
-                .localCheckpoint(eager=True)
-            )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-    return result
+            .localCheckpoint(eager=True)
+        )
 
 
 # --------------------------------------------- stateful funnel
@@ -1676,6 +1526,33 @@ _FUN_BATCHES = 8
 # is already amortized, and 16 measured ~9% SLOWER than 8 there (more
 # state-store commits, no Python win).
 _FUN_SHUFFLE = 16
+
+
+def _funnel_replay(
+    spark: SparkSession,
+    sf_dir: str,
+    build: Callable[[DataFrame], DataFrame],
+    width: int,
+) -> DataFrame:
+    """Drain the shared events log through the funnel operator
+    ``build`` and count its (user_id, stage) completions per stage —
+    the body both funnel replays share. Every stage is listed, with 0
+    when no user reached it."""
+    stream = file_stream(
+        spark,
+        _staged_events_log(spark, sf_dir),
+        "user_id BIGINT, ts TIMESTAMP, event_id BIGINT, event_type STRING",
+    )
+    emitted = run_to_memory(build(stream), width=width).localCheckpoint(
+        eager=True
+    )
+    stages = spark.createDataFrame(
+        [("1_view",), ("2_click",), ("3_purchase",)], "stage STRING"
+    )
+    counts = emitted.groupBy("stage").agg(F.count("*").alias("n"))
+    return stages.join(counts, "stage", "left").select(
+        "stage", F.coalesce("n", F.lit(0)).cast("bigint").alias("n_users")
+    )
 
 # The batch funnel's ordered-reachability counts, reach-only (the
 # streaming operator emits each user's stage completions exactly
@@ -1739,28 +1616,7 @@ def stream_funnel_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     (src/prediction_producer.py:321-323)."""
     from .funnel import funnel_stream
 
-    work = tempfile.mkdtemp(prefix="funnel_replay_")
-    stream = file_stream(
-        spark,
-        _staged_events_log(spark, sf_dir),
-        "user_id BIGINT, ts TIMESTAMP, event_id BIGINT, event_type STRING",
-    )
-    try:
-        emitted = run_to_memory(
-            funnel_stream(stream),
-            f"funnel_replay_{uuid.uuid4().hex[:8]}",
-            f"{work}/ckpt",
-            width=_FUN_SHUFFLE,
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-    stages = spark.createDataFrame(
-        [("1_view",), ("2_click",), ("3_purchase",)], "stage STRING"
-    )
-    counts = emitted.groupBy("stage").agg(F.count("*").alias("n"))
-    return stages.join(counts, "stage", "left").select(
-        "stage", F.coalesce("n", F.lit(0)).cast("bigint").alias("n_users")
-    )
+    return _funnel_replay(spark, sf_dir, funnel_stream, _FUN_SHUFFLE)
 
 
 @query("stream_funnel_bucketed_replay", oracle=_FUNNEL_REPLAY_ORACLE)
@@ -1777,27 +1633,11 @@ def stream_funnel_bucketed_replay(spark: SparkSession, sf_dir: str) -> DataFrame
     "Bucketed-funnel probe")."""
     from .funnel import funnel_stream_bucketed
 
-    work = tempfile.mkdtemp(prefix="funnel_bucketed_replay_")
-    stream = file_stream(
+    return _funnel_replay(
         spark,
-        _staged_events_log(spark, sf_dir),
-        "user_id BIGINT, ts TIMESTAMP, event_id BIGINT, event_type STRING",
-    )
-    try:
-        emitted = run_to_memory(
-            funnel_stream_bucketed(stream, n_buckets=64),
-            f"funnel_bucketed_replay_{uuid.uuid4().hex[:8]}",
-            f"{work}/ckpt",
-            width=_FUN_BATCHES,
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-    stages = spark.createDataFrame(
-        [("1_view",), ("2_click",), ("3_purchase",)], "stage STRING"
-    )
-    counts = emitted.groupBy("stage").agg(F.count("*").alias("n"))
-    return stages.join(counts, "stage", "left").select(
-        "stage", F.coalesce("n", F.lit(0)).cast("bigint").alias("n_users")
+        sf_dir,
+        lambda stream: funnel_stream_bucketed(stream, n_buckets=64),
+        _FUN_BATCHES,
     )
 
 
@@ -1853,7 +1693,6 @@ def stream_observe_metrics_replay(spark: SparkSession, sf_dir: str) -> DataFrame
 
     ev = load_table(spark, sf_dir, "events").select("ts", "value")
     total = ev.count()  # control-plane scalar: drain target for the bus
-    work = tempfile.mkdtemp(prefix="obs_replay_")
     stream = file_stream(
         spark, _staged_events_log(spark, sf_dir), "ts TIMESTAMP, value DOUBLE"
     )
@@ -1868,14 +1707,10 @@ def stream_observe_metrics_replay(spark: SparkSession, sf_dir: str) -> DataFrame
     listener = MetricsListener(_OBS_NAME)
     spark.streams.addListener(listener)
     try:
-        with ephemeral_checkpoint(spark, f"{work}/ckpt"):
-            q = (
-                observed.writeStream.format("noop")
-                .option("checkpointLocation", f"{work}/ckpt")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        with tempfile.TemporaryDirectory(
+            prefix="obs_replay_", ignore_cleanup_errors=True
+        ) as work:
+            drain_stream(observed, lambda w: w.format("noop"), f"{work}/ckpt")
         # listener delivery is asynchronous to query termination:
         # drain the bus until every input row has been accounted for
         # a micro-batch re-executed after a checkpoint recovery/retry
@@ -1899,7 +1734,6 @@ def stream_observe_metrics_replay(spark: SparkSession, sf_dir: str) -> DataFrame
             )
     finally:
         spark.streams.removeListener(listener)
-        shutil.rmtree(work, ignore_errors=True)
     heard = [
         b
         for b in latest_by_batch(listener.batches)

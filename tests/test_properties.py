@@ -472,6 +472,62 @@ def test_band_sigs_spark_matches_python_replica(spark_global):
             assert got[i] == _band_sigs_py(a, n), (n, i)
 
 
+
+# Shingle hashes from a small pool (plus arbitrary 32-bit values) so
+# distinct documents often share some minhash values but not all:
+# partial band collisions are the interesting case.
+_HASH_POOL = [0, 1, 7, 10, 123456789, 2**31, 2**32 - 2, 2**32 - 1]
+
+
+@given(
+    docs=st.lists(
+        st.lists(
+            st.one_of(
+                st.sampled_from(_HASH_POOL),
+                st.integers(min_value=0, max_value=2**32 - 1),
+            ),
+            min_size=1,
+            max_size=4,
+        ),
+        min_size=200,
+        max_size=200,
+    )
+)
+@settings(max_examples=3, deadline=None)
+def test_band_sigs_coarse_equal_iff_covered_fine_equal(spark_global, docs):
+    """_band_sigs itself (the Spark Column), over every pair of band
+    counts where the coarse count divides the fine count: two
+    documents' coarse band b is equal exactly when every fine band it
+    covers is equal. Checked over all document pairs at once — for
+    each coarse band, grouping the documents by the coarse signature
+    and by the tuple of covered fine signatures must give the same
+    partition. One 200-row DataFrame per example."""
+    from pyspark.sql import functions as F
+
+    from eye_of_sauron_spark.plans.dedup import _MINHASH_K, _band_sigs
+
+    counts = [n for n in range(1, _MINHASH_K + 1) if _MINHASH_K % n == 0]
+    df = spark_global.createDataFrame(
+        list(enumerate(docs)), "i LONG, hs ARRAY<LONG>"
+    )
+    rows = sorted(
+        df.select(
+            "i", *[_band_sigs(F.col("hs"), n).alias(f"b{n}") for n in counts]
+        ).collect(),
+        key=lambda r: r["i"],
+    )
+    for n in counts:
+        for n2 in counts:
+            if n2 <= n or n2 % n:
+                continue
+            m = n2 // n
+            for b in range(n):
+                coarse = [r[f"b{n}"][b] for r in rows]
+                fine = [tuple(r[f"b{n2}"][b * m:(b + 1) * m]) for r in rows]
+                assert len(set(coarse)) == len(set(fine)) == len(
+                    set(zip(coarse, fine))
+                ), (n, n2, b)
+
 # ---------------------------------------------------------------------------
 # Hyperplane-signature prefix refinement (round 17) — the structural
 # fact the LSH plane-count ladder's monotonicity proof rides

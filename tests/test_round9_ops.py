@@ -55,7 +55,7 @@ def _run_funnel(spark, sf_dir, tmp_path, build, tag):
         f"{work}/in",
         "user_id BIGINT, ts TIMESTAMP, event_id BIGINT, event_type STRING",
     )
-    emitted = run_to_memory(build(stream), f"funnel_parity_{tag}", f"{work}/ckpt")
+    emitted = run_to_memory(build(stream))
     return sorted((r["user_id"], r["stage"]) for r in emitted.collect())
 
 

@@ -27,9 +27,9 @@ from eye_of_sauron_spark.functions.materialize import (
 )
 from eye_of_sauron_spark.streaming.harness import (
     _STAGED_LOGS,
+    link_batch_files,
     staged_microbatch_log,
 )
-from eye_of_sauron_spark.streaming.replay import _link_batch_files
 
 
 def test_staged_log_hit_returns_same_dir_and_files(spark):
@@ -119,9 +119,9 @@ def test_link_batch_files_delivers_tranches(spark, tmp_path):
     for i in (0, 1, 3):  # batch 2 absent = empty micro-batch
         with open(f"{src}/batch_{i:04d}.parquet", "wb") as f:
             f.write(b"x")
-    _link_batch_files(src, dst, 0, 2)
+    link_batch_files(src, dst, 0, 2)
     assert sorted(os.listdir(dst)) == ["batch_0000.parquet", "batch_0001.parquet"]
-    _link_batch_files(src, dst, 2, 4)
+    link_batch_files(src, dst, 2, 4)
     assert sorted(os.listdir(dst)) == [
         "batch_0000.parquet",
         "batch_0001.parquet",
@@ -289,13 +289,13 @@ def test_ephemeral_checkpoint_scopes_and_restores(spark, tmp_path):
 def test_ephemeral_checkpoint_rejects_non_local_dir(spark):
     """The rename-based manager is only atomic on local disk, so a
     remote checkpoint dir fails loudly before any conf or stream is
-    touched — through the scope and through run_to_memory."""
+    touched — through the scope and through drain_stream."""
     import pytest
 
     from eye_of_sauron_spark.streaming.harness import (
         _CKPT_MANAGER_KEY,
+        drain_stream,
         ephemeral_checkpoint,
-        run_to_memory,
     )
 
     remote = "hdfs://namenode:8020/tmp/replay_ckpt"
@@ -304,7 +304,7 @@ def test_ephemeral_checkpoint_rejects_non_local_dir(spark):
             pass
     stream = spark.readStream.format("rate").load()
     with pytest.raises(ValueError, match="hdfs"):
-        run_to_memory(stream, "rejected_remote_ckpt", remote)
+        drain_stream(stream, lambda w: w.format("noop"), remote)
     assert spark.conf.get(_CKPT_MANAGER_KEY, None) is None
     assert not spark.streams.active
     # local spellings pass
@@ -384,7 +384,7 @@ def test_io_sentinel_probe_restores_session_state(spark):
     # snapshot, don't glob-assert-empty: the shared tempdir may hold
     # leftovers from a SIGKILLed probe process that are not this
     # call's to clean (code-review r17)
-    ckpt_glob = os.path.join(tempfile.gettempdir(), "io_sentinel_ckpt_*")
+    ckpt_glob = os.path.join(tempfile.gettempdir(), "memory_sink_*")
     ckpts_before = set(glob.glob(ckpt_glob))
 
     dt = io_probe(spark)
@@ -394,9 +394,7 @@ def test_io_sentinel_probe_restores_session_state(spark):
     assert spark.conf.get(checksum_key) == checksum_before
     assert spark.conf.get(manager_key, None) == manager_before
     views_after = {v.name for v in spark.catalog.listTables()}
-    assert not {
-        v for v in views_after - views_before if v.startswith("io_sentinel_")
-    }, "memory-sink temp view leaked"
+    assert views_after == views_before, "memory-sink temp view leaked"
     assert not set(glob.glob(ckpt_glob)) - ckpts_before, (
         "throwaway checkpoint dir leaked"
     )

@@ -58,17 +58,12 @@ def event_schema(spark, sf_dir):
     )
 
 
-def test_stream_equals_batch_tumbling(spark, sf_dir, event_stream_dir, event_schema, tmp_path):
+def test_stream_equals_batch_tumbling(spark, sf_dir, event_stream_dir, event_schema):
     """The same tumbling-window aggregation over a 4-micro-batch
     stream (complete mode) must equal the batch result — the
     stream/batch unification contract."""
     stream = file_stream(spark, event_stream_dir, event_schema)
-    got = run_to_memory(
-        windows.tumbling_agg(stream),
-        "tumbling_sink",
-        str(tmp_path / "ckpt"),
-        output_mode="complete",
-    )
+    got = run_to_memory(windows.tumbling_agg(stream), mode="complete")
     want = windows.tumbling_agg(
         load_table(spark, sf_dir, "events")
     )
@@ -76,16 +71,11 @@ def test_stream_equals_batch_tumbling(spark, sf_dir, event_stream_dir, event_sch
     assert _sorted_rows(got, cols) == _sorted_rows(want, cols)
 
 
-def test_stream_equals_batch_session(spark, sf_dir, event_stream_dir, event_schema, tmp_path):
+def test_stream_equals_batch_session(spark, sf_dir, event_stream_dir, event_schema):
     """Session windows across micro-batch boundaries must merge into
     the same sessions the batch plan produces."""
     stream = file_stream(spark, event_stream_dir, event_schema)
-    got = run_to_memory(
-        windows.session_agg(stream),
-        "session_sink",
-        str(tmp_path / "ckpt"),
-        output_mode="complete",
-    )
+    got = run_to_memory(windows.session_agg(stream), mode="complete")
     want = windows.session_agg(load_table(spark, sf_dir, "events"))
     cols = ["user_id", "session_start", "session_end", "n_events"]
     assert _sorted_rows(got, cols) == _sorted_rows(want, cols)
@@ -126,7 +116,7 @@ def test_watermark_drops_late_rows(spark, tmp_path):
         .agg(F.count("*").alias("n"))
         .select(F.col("w.start").alias("w_start"), "n")
     )
-    got = run_to_memory(agg, "late_sink", str(tmp_path / "ckpt"), "append")
+    got = run_to_memory(agg, mode="append")
     counts = {r["w_start"]: r["n"] for r in got.collect()}
     # the first window must have finalized with 2 rows: event_id=4
     # (event time 00:03, watermark already past 01:05) was dropped
@@ -153,9 +143,7 @@ def test_reorder_buffer_restores_total_order(spark, tmp_path):
 
     out = run_to_memory(
         reorder_stream(file_stream(spark, src, schema), buffer_size=16),
-        "reorder_sink",
-        str(tmp_path / "ckpt"),
-        "append",
+        mode="append",
     ).collect()
     by_cam: dict[int, list[int]] = {}
     for r in out:
@@ -184,9 +172,7 @@ def test_reorder_buffer_overflow_skips_gap(spark, tmp_path):
     write_microbatch_files(spark, batches, src)
     out = run_to_memory(
         reorder_stream(file_stream(spark, src, schema), buffer_size=4),
-        "gap_sink",
-        str(tmp_path / "ckpt"),
-        "append",
+        mode="append",
     ).collect()
     assert sorted(r["frame_num"] for r in out) == [1, 2, 3, 4, 5, 6]
 
@@ -300,9 +286,7 @@ def test_stream_stream_join_matches_batch(spark, sf_dir, tmp_path):
     joined = clicks_to_errors_stream_join(
         as_stream(clicks_b, "clicks"), as_stream(errors_b, "errors")
     )
-    got = run_to_memory(
-        joined, "ss_join", str(tmp_path / "ss_ckpt"), output_mode="append"
-    )
+    got = run_to_memory(joined, mode="append")
 
     # batch reference: same condition on the static frames
     c = clicks_b.select(
@@ -359,7 +343,7 @@ def test_stream_drop_duplicates_within_watermark(spark, sf_dir, tmp_path):
         .withWatermark("ts", "24 hours")
         .dropDuplicatesWithinWatermark(["event_id"])
     )
-    got = run_to_memory(deduped, "dd_sink", str(tmp_path / "dd_ckpt"))
+    got = run_to_memory(deduped)
     assert got.count() == events.count()
     assert got.select("event_id").distinct().count() == events.count()
 
@@ -436,9 +420,7 @@ def test_change_detector_drops_consecutive_duplicates(spark, tmp_path):
     try:
         out = run_to_memory(
             drop_unchanged_frames(file_stream(spark, src, schema)),
-            "chg_sink",
-            str(tmp_path / "chg_ckpt"),
-            "append",
+            mode="append",
         ).collect()
     finally:
         if prev is not None:
@@ -462,3 +444,47 @@ def test_microbatch_writer_skips_empty_batches(spark, tmp_path):
     assert files == ["batch_0000.parquet", "batch_0003.parquet"]
     got = spark.read.parquet(out).collect()
     assert sorted(r["v"] for r in got) == [1, 2, 3]
+
+
+def test_replay_leaves_no_memory_sink_view(spark, sf_dir, tmp_path):
+    """run_to_memory drops its memory sink's temp view before it
+    returns, so a replay leaves the session's temp views as it found
+    them (a leaked view keeps the sink's rows on the driver), and the
+    DataFrame it returns still reads the sink's rows — also when the
+    caller does not pin them."""
+    from eye_of_sauron_spark.streaming.replay import stream_window_replay
+
+    def temp_views():
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    before = temp_views()
+    out = stream_window_replay(spark, sf_dir)
+    assert temp_views() == before
+    assert out.collect()
+
+    src = str(tmp_path / "src")
+    write_microbatch_files(
+        spark, [spark.range(i * 3, i * 3 + 3) for i in range(2)], src
+    )
+    got = run_to_memory(file_stream(spark, src, "id BIGINT"))
+    assert temp_views() == before
+    assert sorted(r["id"] for r in got.collect()) == list(range(6))
+
+
+def test_drain_stream_is_the_only_stream_start():
+    """Every stream start goes through harness.drain_stream, and so
+    enters the ephemeral_checkpoint conf scope: ``writeStream`` occurs
+    in the package exactly once, in streaming/harness.py."""
+    import eye_of_sauron_spark
+
+    root = os.path.dirname(eye_of_sauron_spark.__file__)
+    hits = []
+    for dirpath, _, files in os.walk(root):
+        for f in sorted(files):
+            if f.endswith(".py"):
+                path = os.path.join(dirpath, f)
+                with open(path, encoding="utf-8") as fh:
+                    n = fh.read().count("writeStream")
+                if n:
+                    hits.append((os.path.relpath(path, root), n))
+    assert hits == [(os.path.join("streaming", "harness.py"), 1)]

@@ -136,7 +136,6 @@ def main() -> None:
 
     if args.shuffle_cap:
         import eye_of_sauron_spark.streaming.harness as H
-        import eye_of_sauron_spark.streaming.replay as R
 
         orig = H.ephemeral_checkpoint
         cap = args.shuffle_cap
@@ -145,9 +144,9 @@ def main() -> None:
             return orig(spark, checkpoint_dir,
                         None if width is None else min(width, cap), conf)
 
-        # run_to_memory resolves the scope in harness; the raw replay
-        # starts resolve the name replay.py imported
-        H.ephemeral_checkpoint = R.ephemeral_checkpoint = capped
+        # every stream start (harness.drain_stream) resolves the scope
+        # in harness
+        H.ephemeral_checkpoint = capped
 
     names = [n for n in args.queries.split(",") if n] or REPLAY_QUERIES
     spark = get_spark(extra_conf=shm_conf or None)

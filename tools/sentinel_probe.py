@@ -30,12 +30,9 @@ from __future__ import annotations
 
 import argparse
 import os
-import shutil
 import statistics
 import sys
-import tempfile
 import time
-import uuid
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -65,7 +62,8 @@ def io_probe(spark) -> float:
     """One timed checkpointed-write drain (seconds). SERIAL-ONLY like
     the replay family itself: run_to_memory's ephemeral_checkpoint
     scope sets the session-wide shuffle width, checksum and
-    checkpoint-manager confs while it runs."""
+    checkpoint-manager confs while it runs. run_to_memory owns the
+    throwaway checkpoint dir and the memory-sink view."""
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
@@ -86,23 +84,15 @@ def io_probe(spark) -> float:
             T.StructField("v", T.LongType()),
         ]
     )
-    ckpt = tempfile.mkdtemp(prefix="io_sentinel_ckpt_")
-    name = f"io_sentinel_{uuid.uuid4().hex[:8]}"
     t0 = time.perf_counter()
-    try:
-        harness.run_to_memory(
-            harness.file_stream(spark, log_dir, schema)
-            .groupBy("k")
-            .agg(F.count("*").alias("n")),
-            name,
-            ckpt,
-            output_mode="complete",
-            width=_IO_STATE_WIDTH,
-        ).collect()
-        return time.perf_counter() - t0
-    finally:
-        spark.catalog.dropTempView(name)
-        shutil.rmtree(ckpt, ignore_errors=True)
+    harness.run_to_memory(
+        harness.file_stream(spark, log_dir, schema)
+        .groupBy("k")
+        .agg(F.count("*").alias("n")),
+        mode="complete",
+        width=_IO_STATE_WIDTH,
+    ).collect()
+    return time.perf_counter() - t0
 
 
 def probe(spark, queries, sf_dir: str) -> tuple[int, bool]:
