@@ -44,10 +44,19 @@ def l2_duck(a: str) -> str:
     )
 
 
-def cosine_spark(a: Column, b: Column) -> Column:
+def cosine_normed(a: Column, an: Column, b: Column, bn: Column) -> Column:
+    """Cosine of ``a`` and ``b`` given their l2 norms ``an`` and ``bn``.
+    Over norm columns projected once per row with :func:`l2_spark` it
+    is bitwise-identical to :func:`cosine_spark` (the same fold over
+    the same vector yields the same bits), so a scorer pays the norm
+    folds per row instead of per scored pair."""
     # try_divide: a zero-norm vector yields NULL instead of an ANSI
     # divide-by-zero error; identical to plain division otherwise
-    return F.try_divide(dot_spark(a, b), l2_spark(a) * l2_spark(b))
+    return F.try_divide(dot_spark(a, b), an * bn)
+
+
+def cosine_spark(a: Column, b: Column) -> Column:
+    return cosine_normed(a, l2_spark(a), b, l2_spark(b))
 
 
 def cosine_duck(a: str, b: str) -> str:

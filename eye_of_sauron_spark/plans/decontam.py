@@ -29,7 +29,7 @@ from pyspark.sql.window import Window as W
 
 from ..functions.hashing import hex32_duck, hex32_spark
 from ..functions.text import shingles_duck, shingles_spark, tokens_spark
-from ..functions.vector import cosine_duck, cosine_spark, dot_spark, l2_spark
+from ..functions.vector import cosine_duck, cosine_normed, l2_spark
 from ..sources import load_table
 from .dedup import _COSINE_NEARDUP, _DRIFT_DUCK, _EMB_COPY_OFFSET, _emb_corpus
 from .registry import query
@@ -668,7 +668,7 @@ def decontam_semantic_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     # each side's l2 norm is computed ONCE (eval norms ride the
     # broadcast structs, the train norm is a sibling projection) —
     # the same fold over the same vector yields the same bits, so
-    # try_divide(dot, tn*n) is bitwise-identical to cosine_spark while
+    # cosine_normed over them is bitwise-identical to cosine_spark while
     # dropping two 64-element norm folds from EVERY (train, eval)
     # element: ~60% of the per-pair interpreted higher-order-function
     # work (r18 optimization, guide §4/§2.3 — interleaved A/B 1.33 ->
@@ -693,8 +693,7 @@ def decontam_semantic_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("evs"),
             lambda s: F.struct(
                 F.coalesce(
-                    F.try_divide(dot_spark(vec, s["emb"]), F.col("tn") * s["n"]),
-                    F.lit(-2.0),
+                    cosine_normed(vec, F.col("tn"), s["emb"], s["n"]), F.lit(-2.0)
                 ).alias("cos"),
                 (-s["vec_id"]).alias("nev"),
                 s["vec_id"].alias("ev"),

@@ -32,9 +32,8 @@ from pyspark.sql.window import Window as W
 
 from ..functions.vector import (
     cosine_duck,
-    cosine_spark,
+    cosine_normed,
     dot_duck,
-    dot_spark,
     euclid_duck,
     euclid_spark,
     l2_duck,
@@ -75,6 +74,77 @@ def _spread(df: DataFrame, *keys: str) -> DataFrame:
     On a cluster the exchange is no-op-sized next to the scan."""
     n = df.sparkSession.sparkContext.defaultParallelism
     return df.repartition(n, *keys)
+
+
+# ------------------------------------------- the one retrieval tail
+#
+# Every top-k below is built from these: a query side and a corpus
+# side, each projected by _side with its l2 norm folded once per ROW
+# (cosine_normed then scores a pair with one dot fold, bitwise-equal
+# to cosine_spark); the broadcast-query join of _pairs; and one
+# ranking tail, _rank_topk. Two-stage tiers (SQ8, PQ, MRL) add an
+# approximate score ``acos`` to the pairs and end in _shortlist_rerank
+# (filter-and-refine: a cheap score over the corpus, exact refinement
+# of the shortlist only).
+
+
+def _side(df: DataFrame, p: str, *extra) -> DataFrame:
+    """``(p+"id", p+"e", p+"n")`` — vec_id, embedding and its l2 norm,
+    computed once per row — from a ``(vec_id, embedding)`` relation,
+    plus ``extra`` columns."""
+    return df.select(
+        F.col("vec_id").alias(p + "id"),
+        F.col("embedding").alias(p + "e"),
+        l2_spark(F.col("embedding")).alias(p + "n"),
+        *extra,
+    )
+
+
+def _pairs(c: DataFrame, q: DataFrame, *on: str) -> DataFrame:
+    """Corpus side ``c`` against the broadcast query side ``q`` — a
+    cross join, or an equi-join on the ``on`` columns — without
+    self-matches. The corpus streams; only the small query set is
+    broadcast."""
+    j = c.join(F.broadcast(q), list(on)) if on else c.crossJoin(F.broadcast(q))
+    return j.filter(F.col("cid") != F.col("qid"))
+
+
+def _rank_topk(pairs: DataFrame, k: int, *extra: str) -> DataFrame:
+    """The ranking tail of every top-k: exact cosine of each pair from
+    its per-row norms (``qe, qn, ce, cn``), a per-query ``row_number``
+    over ``(cos DESC, cid ASC)`` — the oracles' tie rule — then
+    ``(query_id, rank, cand_id, round(cos, 6))`` plus ``extra``."""
+    cos = cosine_normed(F.col("qe"), F.col("qn"), F.col("ce"), F.col("cn"))
+    w = W.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("cid").asc())
+    return (
+        pairs.select("qid", "cid", cos.alias("cos"), *extra)
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= k)
+        .select(
+            F.col("qid").alias("query_id"),
+            F.col("rn").cast("int").alias("rank"),
+            F.col("cid").alias("cand_id"),
+            F.round("cos", 6).alias("cosine"),
+            *extra,
+        )
+    )
+
+
+def _shortlist_rerank(pairs: DataFrame, depth: int, k: int) -> DataFrame:
+    """The second stage of every two-stage tier. ``pairs`` carry
+    ``qid, cid, acos, qe, qn, ce, cn``: keep the ``depth`` best per
+    query by ``(acos DESC, cid ASC)``, re-score only those with exact
+    cosine and emit the exact top-``k`` with ``approx_cosine`` beside
+    it. The candidate rows carry the full-precision vector and its
+    norm, so the exact folds run on O(queries x depth) rows and no
+    join re-fetches the shortlist from the corpus."""
+    wa = W.partitionBy("qid").orderBy(F.col("acos").desc(), F.col("cid").asc())
+    shortlist = pairs.withColumn("arn", F.row_number().over(wa)).filter(
+        F.col("arn") <= depth
+    )
+    return _rank_topk(
+        shortlist.withColumn("approx_cosine", F.round("acos", 6)), k, "approx_cosine"
+    )
 
 
 def _plane_lit_duck(p: int) -> str:
@@ -162,36 +232,8 @@ def similarity_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan, per-query ranking window. The corpus never shuffles until
     rows are already down to O(queries x k)."""
     emb = _t(spark, sf_dir, "embeddings")
-    # each side's l2 norm is computed once per ROW, not once per
-    # scored pair (r18, guide §2.3): the same fold over the same
-    # vector yields the same bits, so try_divide(dot, qn*cn) is
-    # bitwise-identical to cosine_spark while dropping two thirds of
-    # the per-pair interpreted fold work
-    q = emb.filter(F.expr(_QUERY_FILTER)).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("qe"),
-        l2_spark(F.col("embedding")).alias("qn"),
-    )
-    c = _spread(emb, "vec_id").select(
-        F.col("vec_id").alias("cid"),
-        F.col("embedding").alias("ce"),
-        l2_spark(F.col("embedding")).alias("cn"),
-    )
-    cos = F.try_divide(dot_spark(F.col("qe"), F.col("ce")), F.col("qn") * F.col("cn"))
-    w = W.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("cid").asc())
-    return (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("cid") != F.col("qid"))
-        .select("qid", "cid", cos.alias("cos"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _TOPK)
-        .select(
-            F.col("qid").alias("query_id"),
-            F.col("rn").cast("int").alias("rank"),
-            F.col("cid").alias("cand_id"),
-            F.round("cos", 6).alias("cosine"),
-        )
-    )
+    q = _side(emb.filter(F.expr(_QUERY_FILTER)), "q")
+    return _rank_topk(_pairs(_side(_spread(emb, "vec_id"), "c"), q), _TOPK)
 
 
 def _lsh_oracle_sql(planes: int) -> str:
@@ -265,35 +307,8 @@ def _lsh_topk_from(sigs: DataFrame) -> DataFrame:
     signature pass (rung sig = sig_max mod 2^planes, the prefix
     refinement pinned in tests/test_properties.py) while the
     registered single-rung path keeps its exact previous plan."""
-    # per-row norms instead of per-pair (r18, guide §2.3 — bitwise-
-    # identical to cosine_spark, see similarity_topk_cosine)
-    q = sigs.filter(F.expr(_QUERY_FILTER)).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("qe"),
-        l2_spark(F.col("embedding")).alias("qn"),
-        "sig",
-    )
-    c = sigs.select(
-        F.col("vec_id").alias("cid"),
-        F.col("embedding").alias("ce"),
-        l2_spark(F.col("embedding")).alias("cn"),
-        "sig",
-    )
-    cos = F.try_divide(dot_spark(F.col("qe"), F.col("ce")), F.col("qn") * F.col("cn"))
-    w = W.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("cid").asc())
-    return (
-        c.join(F.broadcast(q), ["sig"])
-        .filter(F.col("cid") != F.col("qid"))
-        .select("qid", "cid", cos.alias("cos"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _LSH_TOPK)
-        .select(
-            F.col("qid").alias("query_id"),
-            F.col("rn").cast("int").alias("rank"),
-            F.col("cid").alias("cand_id"),
-            F.round("cos", 6).alias("cosine"),
-        )
-    )
+    q = _side(sigs.filter(F.expr(_QUERY_FILTER)), "q", "sig")
+    return _rank_topk(_pairs(_side(sigs, "c", "sig"), q, "sig"), _LSH_TOPK)
 
 
 @query("similarity_topk_lsh", oracle=_LSH_ORACLE)
@@ -388,8 +403,9 @@ def _ivf_cell_order(left: F.Column, right: F.Column) -> F.Column:
 
 def _ivf_cent_row(emb: DataFrame) -> DataFrame:
     """The whole centroid set folded into ONE broadcast row of
-    (cid, ce) structs: cell assignment and probe selection then run
-    as NARROW higher-order-function passes (per-row argmax over the
+    (cid, ce, cn) structs, each centroid's norm folded once: cell
+    assignment and probe selection then run as NARROW
+    higher-order-function passes (per-row argmax over the
     array) — no corpus x cells explode, no shuffle, no per-vec_id
     ranking window. At 100 TB this is the difference between a
     map-side-only assignment and shuffling corpus x cells rows into a
@@ -400,85 +416,47 @@ def _ivf_cent_row(emb: DataFrame) -> DataFrame:
     cent = (
         emb.orderBy("vec_id")
         .limit(_IVF_CELLS)
-        .select(F.col("vec_id").alias("cid"), F.col("embedding").alias("ce"))
-    )
-    return cent.agg(
-        F.array_sort(F.collect_list(F.struct("cid", "ce"))).alias("cents")
-    )
-
-
-def _ivf_cell_scores(vec: F.Column) -> F.Column:
-    """(cos, cid) structs of ``vec`` against the broadcast ``cents``
-    array — the input of every IVF cell ranking."""
-    return F.transform(
-        F.col("cents"),
-        lambda c: F.struct(
-            cosine_spark(vec, c["ce"]).alias("cos"), c["cid"].alias("cid")
-        ),
-    )
-
-
-def _ivf_rank_tail(assigned: DataFrame, probes: DataFrame) -> DataFrame:
-    """The candidate equi-join + per-query ranking tail shared by the
-    registered IVF plan and every nprobe-ladder rung. ``assigned``
-    must carry a per-row corpus norm ``cn`` and ``probes`` a per-row
-    query norm ``qn`` (r18, guide §2.3 — norms once per row, not once
-    per scored pair; bitwise-identical to cosine_spark)."""
-    cos = F.try_divide(
-        dot_spark(F.col("qe"), F.col("embedding")), F.col("qn") * F.col("cn")
-    )
-    w_rank = W.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("cid_cand").asc())
-    return (
-        assigned.join(F.broadcast(probes), "cell")
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select("qid", F.col("vec_id").alias("cid_cand"), cos.alias("cos"))
-        .withColumn("rn", F.row_number().over(w_rank))
-        .filter(F.col("rn") <= _IVF_TOPK)
         .select(
-            F.col("qid").alias("query_id"),
-            F.col("rn").cast("int").alias("rank"),
-            F.col("cid_cand").alias("cand_id"),
-            F.round("cos", 6).alias("cosine"),
+            F.col("vec_id").alias("cid"),
+            F.col("embedding").alias("ce"),
+            l2_spark(F.col("embedding")).alias("cn"),
         )
     )
+    return cent.agg(
+        F.array_sort(F.collect_list(F.struct("cid", "ce", "cn"))).alias("cents")
+    )
+
+
+def _ivf_ranked_cells(p: str) -> F.Column:
+    """Cell ids of side ``p``'s vector (``p+"e"``, per-row norm
+    ``p+"n"``) against the broadcast ``cents`` array, ranked by
+    :func:`_ivf_cell_order` — the input of every IVF assignment and
+    probe set."""
+    scores = F.transform(
+        F.col("cents"),
+        lambda c: F.struct(
+            cosine_normed(F.col(p + "e"), F.col(p + "n"), c["ce"], c["cn"]).alias("cos"),
+            c["cid"].alias("cid"),
+        ),
+    )
+    return F.array_sort(scores, _ivf_cell_order)["cid"]
 
 
 def _ivf_topk(spark: SparkSession, sf_dir: str, nprobe: int) -> DataFrame:
     """The IVF plan parameterized by ``nprobe`` (see
     :func:`similarity_topk_ivf` for the full shape discussion)."""
     emb = _t(spark, sf_dir, "embeddings")
-    cent_row = _ivf_cent_row(emb)
-    assigned = (
-        _spread(emb, "vec_id")
-        .crossJoin(F.broadcast(cent_row))
-        .select(
-            "vec_id",
-            "embedding",
-            l2_spark(F.col("embedding")).alias("cn"),
-            F.array_sort(_ivf_cell_scores(F.col("embedding")), _ivf_cell_order)[
-                0
-            ]["cid"].alias("cell"),
-        )
+    cent_row = F.broadcast(_ivf_cent_row(emb))
+    c = _side(_spread(emb, "vec_id"), "c").crossJoin(cent_row)
+    q = _side(emb.filter(F.expr(_QUERY_FILTER)), "q").crossJoin(cent_row)
+    assigned = c.select("cid", "ce", "cn", _ivf_ranked_cells("c")[0].alias("cell"))
+    probes = q.select(
+        "qid",
+        "qe",
+        "qn",
+        F.explode(F.slice(_ivf_ranked_cells("q"), 1, nprobe)).alias("cell"),
     )
-    probes = (
-        emb.filter(F.expr(_QUERY_FILTER))
-        .crossJoin(F.broadcast(cent_row))
-        .select(
-            F.col("vec_id").alias("qid"),
-            F.col("embedding").alias("qe"),
-            l2_spark(F.col("embedding")).alias("qn"),
-            F.explode(
-                F.slice(
-                    F.array_sort(
-                        _ivf_cell_scores(F.col("embedding")), _ivf_cell_order
-                    ),
-                    1,
-                    nprobe,
-                )["cid"]
-            ).alias("cell"),
-        )
-    )
-    return _ivf_rank_tail(assigned, probes)
+    return _rank_topk(_pairs(assigned, probes, "cell"), _IVF_TOPK)
 
 
 @query("similarity_topk_ivf", oracle=_IVF_ORACLE)
@@ -532,39 +510,31 @@ def _recall_oracle(ann_oracle: str) -> str:
     """
 
 
-def _recall_of(spark: SparkSession, sf_dir: str, ann_fn) -> DataFrame:
-    """Per-query recall@k: |ANN top-k ∩ exact top-k| / k. The exact
-    side is the brute-force scan (the expensive audit baseline — at
+def _exact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The exact brute-force top-k ``(query_id, cand_id)`` pairs every
+    recall contract audits against (the expensive audit baseline — at
     100 TB this runs over a SAMPLED query set, which is exactly what
-    _QUERY_FILTER is); the join/agg sides are O(queries x k) rows, so
-    everything after the two scans is broadcast-sized by
-    construction. The exact side is IDENTICAL for every recall
-    contract over a given corpus, so it is memo-checkpointed once per
-    session (queries x k rows — broadcast-sized) instead of re-running
-    the brute-force scan once per audited tier."""
+    _QUERY_FILTER is). It is IDENTICAL for every recall contract over
+    a given corpus, so it is memo-checkpointed once per session
+    (queries x k rows — broadcast-sized) instead of re-running the
+    brute-force scan once per audited tier."""
     from ..functions.materialize import memo_checkpoint
 
-    exact = memo_checkpoint(
+    return memo_checkpoint(
         spark,
         ("recall_exact_topk", os.path.realpath(sf_dir), _RECALL_K),
         lambda: similarity_topk_cosine(spark, sf_dir)
         .filter(F.col("rank") <= _RECALL_K)
         .select("query_id", "cand_id"),
     )
-    ann = (
-        ann_fn(spark, sf_dir)
-        .filter(F.col("rank") <= _RECALL_K)
-        .select(F.col("query_id").alias("aq"), F.col("cand_id").alias("ac"))
-    )
-    joined = exact.join(
-        F.broadcast(ann),
-        (F.col("query_id") == F.col("aq")) & (F.col("cand_id") == F.col("ac")),
-        "left",
-    )
-    return joined.groupBy("query_id").agg(
-        F.count("ac").cast("int").alias("n_hits"),
-        F.round(F.count("ac") / F.lit(float(_RECALL_K)), 6).alias("recall"),
-    )
+
+
+def _recall_of(spark: SparkSession, sf_dir: str, ann_fn) -> DataFrame:
+    """Per-query recall@k: |ANN top-k ∩ exact top-k| / k — the
+    one-rung case of :func:`_ladder_of`, its dial column dropped. The
+    join/agg sides are O(queries x k) rows, so everything after the
+    two scans is broadcast-sized by construction."""
+    return _ladder_of(spark, sf_dir, "rung", [(1, ann_fn(spark, sf_dir))]).drop("rung")
 
 
 def _ladder_oracle(dial_col: str, rungs, oracle_sql_fn) -> str:
@@ -618,24 +588,17 @@ def _ladder_of(
     (tests/test_properties.py), so the middle-rung row-identity pins
     keep holding by construction.
 
-    r18 optimization (guide §2.4): the per-rung :func:`_recall_of`
-    calls planned one exact-side join + one aggregate PER RUNG, then
-    unioned three aggregate outputs — 3 joins, 3 shuffles, 3 codegen
-    units for what is one relation. The rung tag is now part of the
-    join key instead: the session-memoized exact top-k explodes to
+    r18 optimization (guide §2.4): one recall plan per rung meant one
+    exact-side join + one aggregate PER RUNG, then a union of three
+    aggregate outputs — 3 joins, 3 shuffles, 3 codegen units for what
+    is one relation. The rung tag is now part of the join key instead:
+    the session-memoized exact top-k (:func:`_exact_topk`) explodes to
     (rung, query, cand) — O(rungs x queries x k) rows, still
     broadcast-sized — the tagged rung ANN union joins once, and ONE
     (rung, query) aggregate emits every ladder row. Same rows, same
-    per-rung math, one exchange."""
-    from ..functions.materialize import memo_checkpoint
-
-    exact = memo_checkpoint(
-        spark,
-        ("recall_exact_topk", os.path.realpath(sf_dir), _RECALL_K),
-        lambda: similarity_topk_cosine(spark, sf_dir)
-        .filter(F.col("rank") <= _RECALL_K)
-        .select("query_id", "cand_id"),
-    )
+    per-rung math, one exchange; a single recall contract is the
+    one-rung case (:func:`_recall_of`)."""
+    exact = _exact_topk(spark, sf_dir)
     ann = None
     for r_, ann_df in rung_anns:
         t = ann_df.filter(F.col("rank") <= _RECALL_K).select(
@@ -715,7 +678,7 @@ def similarity_ivf_nprobe_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialized cell-ranking pass (r17 optimization): the broadcast
     centroid fold + argmax ranking used to run once per rung AND per
     side — six narrow corpus passes for one ladder; now
-    (vec_id, embedding, cells[1..max_nprobe]) is localCheckpointed
+    (cid, ce, cn, cells[1..max_nprobe]) is localCheckpointed
     once, every rung's assignment is cells[1] and its probe set is
     the nprobe-prefix of the SAME ranking (nested prefixes — exactly
     the total-order argument in _ivf_cell_order's contract, pinned in
@@ -728,37 +691,23 @@ def similarity_ivf_nprobe_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _t(spark, sf_dir, "embeddings")
     max_np = _IVF_LADDER_NPROBES[-1]
+    c = _side(_spread(emb, "vec_id"), "c").crossJoin(F.broadcast(_ivf_cent_row(emb)))
     shared, _shared_ids = checkpoint_tracked(
-        _spread(emb, "vec_id")
-        .crossJoin(F.broadcast(_ivf_cent_row(emb)))
-        .select(
-            "vec_id",
-            "embedding",
-            # per-row norm materialized with the ranking (r18, guide
-            # §2.3): every rung's scoring tail reads it instead of
-            # re-folding the norm per scored pair
-            l2_spark(F.col("embedding")).alias("n"),
-            F.slice(
-                F.array_sort(
-                    _ivf_cell_scores(F.col("embedding")), _ivf_cell_order
-                )["cid"],
-                1,
-                max_np,
-            ).alias("cells"),
+        c.select(
+            "cid", "ce", "cn", F.slice(_ivf_ranked_cells("c"), 1, max_np).alias("cells")
         )
     )
-    assigned = shared.select(
-        "vec_id", "embedding", F.col("n").alias("cn"), F.col("cells")[0].alias("cell")
-    )
+    assigned = shared.select("cid", "ce", "cn", F.col("cells")[0].alias("cell"))
     rung_anns = []
     for np_ in _IVF_LADDER_NPROBES:
-        probes = shared.filter(F.expr(_QUERY_FILTER)).select(
-            F.col("vec_id").alias("qid"),
-            F.col("embedding").alias("qe"),
-            F.col("n").alias("qn"),
+        probes = shared.filter(F.expr(_QUERY_FILTER.replace("vec_id", "cid"))).select(
+            F.col("cid").alias("qid"),
+            F.col("ce").alias("qe"),
+            F.col("cn").alias("qn"),
             F.explode(F.slice("cells", 1, np_)).alias("cell"),
         )
-        rung_anns.append((np_, _ivf_rank_tail(assigned, probes)))
+        ann = _rank_topk(_pairs(assigned, probes, "cell"), _IVF_TOPK)
+        rung_anns.append((np_, ann))
     return _ladder_of(spark, sf_dir, "nprobe", rung_anns)
 
 
@@ -831,6 +780,14 @@ def similarity_lsh_plane_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------- quantization
 
 _Q_LEVELS = 127  # symmetric int8: q in [-127, 127], 0 maps to 0 exactly
+
+
+def _micro(x: F.Column) -> F.Column:
+    """``x`` round-half-up to integer micro-units, floor(x*1e6 + 0.5)
+    as BIGINT: the per-row quantization behind every cross-row
+    integer aggregate here (spelled out because the engines' native
+    round() disagree on ties)."""
+    return F.floor(x.cast("double") * 1000000 + F.lit(0.5)).cast("bigint")
 
 
 @query(
@@ -977,12 +934,13 @@ def similarity_topk_sq8_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONLY the shortlist with exact fp32 cosine and emits the top-3.
 
     Plan shape: quantization is a narrow map fused into the corpus
-    scan; stage 1 is broadcast-queries x corpus codes scan (the full-
-    precision column is carried but never folded until the shortlist);
-    stage 2's exact fold runs on O(queries x 8) rows — the expensive
-    arithmetic moves from |corpus| to |shortlist|. Approximation
-    quality is visible in-row: approx_cosine sits beside the exact
-    cosine in the output."""
+    scan, and each row's code norm and fp32 norm are folded there
+    once; stage 1 is broadcast-queries x corpus codes scan (the full-
+    precision column and its norm are carried but never folded until
+    the shortlist); stage 2's exact fold runs on O(queries x 8) rows
+    — the expensive arithmetic moves from |corpus| to |shortlist|.
+    Approximation quality is visible in-row: approx_cosine sits
+    beside the exact cosine in the output."""
     emb = _t(spark, sf_dir, "embeddings")
     scale = (
         F.array_max(F.transform("embedding", lambda x: F.abs(x.cast("double"))))
@@ -996,16 +954,6 @@ def similarity_topk_sq8_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda x: F.floor(x.cast("double") / scale + 0.5).cast("bigint"),
         ).alias("qv"),
     )
-    q = codes.filter(F.expr(_QUERY_FILTER)).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("qe"),
-        F.col("qv").alias("qqv"),
-    )
-    idot = F.aggregate(
-        F.zip_with("qqv", "qv", lambda a, b: a * b),
-        F.lit(0).cast("bigint"),
-        lambda acc, v: acc + v,
-    )
 
     def inorm(col):
         return F.sqrt(
@@ -1016,33 +964,21 @@ def similarity_topk_sq8_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).cast("double")
         )
 
-    acos = idot.cast("double") / (inorm("qqv") * inorm("qv"))
-    wa = W.partitionBy("qid").orderBy(F.col("acos").desc(), F.col("cid").asc())
-    shortlist = (
-        codes.select(
-            F.col("vec_id").alias("cid"), F.col("embedding").alias("ce"), "qv"
-        )
-        .crossJoin(F.broadcast(q))
-        .filter(F.col("cid") != F.col("qid"))
-        .select("qid", "cid", "qe", "ce", acos.alias("acos"))
-        .withColumn("arn", F.row_number().over(wa))
-        .filter(F.col("arn") <= _SQ8_RERANK_M)
+    q = _side(
+        codes.filter(F.expr(_QUERY_FILTER)),
+        "q",
+        F.col("qv").alias("qqv"),
+        inorm("qv").alias("qqn"),
     )
-    cos = cosine_spark(F.col("qe"), F.col("ce"))
-    exact = shortlist.select(
-        "qid", "cid", F.round("acos", 6).alias("approx_cosine"), cos.alias("cos")
+    c = _side(codes, "c", "qv", inorm("qv").alias("cqn"))
+    idot = F.aggregate(
+        F.zip_with("qqv", "qv", lambda a, b: a * b),
+        F.lit(0).cast("bigint"),
+        lambda acc, v: acc + v,
     )
-    w = W.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("cid").asc())
-    return (
-        exact.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _SQ8_TOPK)
-        .select(
-            F.col("qid").alias("query_id"),
-            F.col("rn").cast("int").alias("rank"),
-            F.col("cid").alias("cand_id"),
-            F.round("cos", 6).alias("cosine"),
-            "approx_cosine",
-        )
+    acos = idot.cast("double") / (F.col("qqn") * F.col("cqn"))
+    return _shortlist_rerank(
+        _pairs(c, q).withColumn("acos", acos), _SQ8_RERANK_M, _SQ8_TOPK
     )
 
 
@@ -1224,8 +1160,9 @@ def similarity_topk_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     computation: exact query x decoded candidate — cosine over the
     concatenated nearest-codeword subvectors) and keeps a top-32
     shortlist (depth measured against recall — see _PQ_RERANK_M);
-    stage 2 fetches ONLY the shortlist's full-precision rows and
-    re-ranks with exact cosine, emitting the top-3.
+    stage 2 re-ranks the shortlist with exact cosine over the
+    full-precision vectors its candidate rows carry, emitting the
+    top-3.
 
     Determinism: codeword assignment quantizes each subspace distance
     to micro BIGINTs with the (dm, seed_id) tie rule
@@ -1239,73 +1176,59 @@ def similarity_topk_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the codebook folds into ONE broadcast row
     (collect_list aggregate, no driver collect); encoding is a NARROW
     per-row fold over it (8 subspaces x 16 codewords x 8-dim folds),
-    fused into the scan. Stage 1 is broadcast-queries x a scan that
-    at production width reads 8-byte codes, not embeddings — the
-    32x IO cut is the operator's reason to exist; stage 2 re-joins
-    the O(queries x 32) shortlist (broadcast) against the corpus for
-    full-precision rows, so the expensive fetch never exceeds
-    shortlist size. Codebooks here are seed-picked (deterministic);
-    production trains them with kmeans_lloyd_step per subspace —
-    same plan, better centroids. Reference tie: A6's tolerance match
-    generalized; the compressed-index shape FAISS IVFPQ runs at
-    billion scale."""
+    fused into the scan. Stage 1 is broadcast-queries x the encoded
+    scan; its rows carry the full-precision vector and its norm beside
+    the reconstruction (the carry shape of every two-stage tier, see
+    _shortlist_rerank), so stage 2 re-scores the O(queries x 32)
+    shortlist in place — no join re-fetches it from the corpus, and
+    the final window reuses the shortlist's query partitioning (2
+    exchanges and 2 jobs fewer than the re-fetch shape, SCALE.md "One
+    retrieval tail, round 19"). Here the codes are computed from the
+    embedding column in the same scan; a store that keeps only codes
+    on the scan path (the 32x IO cut at production width) would fetch
+    the shortlist's fp32 rows instead. Codebooks here are seed-picked
+    (deterministic); production trains them with kmeans_lloyd_step
+    per subspace — same plan, better centroids.
+    Reference tie: A6's tolerance match generalized; the
+    compressed-index shape FAISS IVFPQ runs at billion scale."""
     emb = _t(spark, sf_dir, "embeddings")
-    seeds_row = _pq_seeds_row(emb)
-    msel = F.transform(
-        F.sequence(F.lit(0), F.lit(_PQ_M - 1)),
-        lambda m: _pq_nearest(
-            F.col("sds"),
-            _pq_sub(F.col("embedding"), m),
-            lambda s: _pq_sub(s["se"], m),
+    return _pq_topk(
+        emb,
+        _pq_seeds_row(emb),
+        lambda v: F.transform(
+            F.sequence(F.lit(0), F.lit(_PQ_M - 1)),
+            lambda m: _pq_nearest(
+                F.col("sds"), _pq_sub(v, m), lambda s: _pq_sub(s["se"], m)
+            ),
         ),
     )
-    recon = (
-        _spread(emb, "vec_id")
-        .crossJoin(F.broadcast(seeds_row))
-        .select(
-            F.col("vec_id").alias("cid"),
-            F.flatten(F.transform(msel, lambda x: x["sub"])).alias("re"),
-        )
-    )
-    return _pq_adc_rerank(emb, recon)
 
 
-def _pq_adc_rerank(emb: DataFrame, recon: DataFrame) -> DataFrame:
-    """Shared tail of both PQ tiers: broadcast the query set against
-    the reconstructed-candidate scan (ADC), keep a depth-
-    ``_PQ_RERANK_M`` shortlist per query, then fetch ONLY the
-    shortlist's full-precision rows via a broadcast hash join and
-    re-rank with exact cosine. Mirrors ``_PQ_TAIL`` CTE-for-CTE."""
-    q = emb.filter(F.expr(_QUERY_FILTER)).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
-    )
-    wa = W.partitionBy("qid").orderBy(F.col("acos").desc(), F.col("cid").asc())
-    shortlist = (
-        recon.crossJoin(F.broadcast(q))
-        .filter(F.col("cid") != F.col("qid"))
-        .select("qid", "cid", "qe", cosine_spark(F.col("qe"), F.col("re")).alias("acos"))
-        .withColumn("arn", F.row_number().over(wa))
-        .filter(F.col("arn") <= _PQ_RERANK_M)
-    )
-    exact = emb.join(
-        F.broadcast(shortlist), emb.vec_id == shortlist.cid
-    ).select(
-        "qid",
-        "cid",
-        F.round("acos", 6).alias("approx_cosine"),
-        cosine_spark(F.col("qe"), F.col("embedding")).alias("cos"),
-    )
-    w = W.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("cid").asc())
-    return (
-        exact.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _PQ_TOPK)
+def _pq_topk(emb: DataFrame, codebook: DataFrame, encode) -> DataFrame:
+    """Shared plan of both PQ tiers, mirroring ``_PQ_TAIL``'s rows:
+    encode every corpus vector against the broadcast one-row
+    ``codebook`` (``encode(ce)`` returns the per-subspace
+    :func:`_pq_nearest` structs), reconstruct it, score the broadcast
+    query set against the reconstructions (ADC, the reconstruction's
+    norm folded once per row) and keep a depth-``_PQ_RERANK_M``
+    shortlist for the exact re-rank. The oracle re-fetches the
+    shortlist's rows by join; the candidate rows here carry them,
+    which yields the same rows."""
+    c = (
+        _side(_spread(emb, "vec_id"), "c")
+        .crossJoin(F.broadcast(codebook))
         .select(
-            F.col("qid").alias("query_id"),
-            F.col("rn").cast("int").alias("rank"),
-            F.col("cid").alias("cand_id"),
-            F.round("cos", 6).alias("cosine"),
-            "approx_cosine",
+            "cid",
+            "ce",
+            "cn",
+            F.flatten(F.transform(encode(F.col("ce")), lambda x: x["sub"])).alias("re"),
         )
+        .withColumn("rn", l2_spark(F.col("re")))
+    )
+    q = _side(emb.filter(F.expr(_QUERY_FILTER)), "q")
+    acos = cosine_normed(F.col("qe"), F.col("qn"), F.col("re"), F.col("rn"))
+    return _shortlist_rerank(
+        _pairs(c, q).withColumn("acos", acos), _PQ_RERANK_M, _PQ_TOPK
     )
 
 
@@ -1436,9 +1359,7 @@ def _pq_trained_codebook(emb: DataFrame) -> DataFrame:
             "m",
             "seed_id",
             "pos",
-            F.floor(F.col("v").cast("double") * 1000000 + F.lit(0.5))
-            .cast("bigint")
-            .alias("vm"),
+            _micro(F.col("v")).alias("vm"),
         )
     )
     upd = mem.groupBy("m", "seed_id", "pos").agg(
@@ -1450,9 +1371,7 @@ def _pq_trained_codebook(emb: DataFrame) -> DataFrame:
         F.expr(f"gpos div {_PQ_SUBDIM}").cast("int").alias("m"),
         "seed_id",
         F.expr(f"gpos % {_PQ_SUBDIM}").cast("int").alias("pos"),
-        F.floor(F.col("v").cast("double") * 1000000 + F.lit(0.5))
-        .cast("bigint")
-        .alias("svm"),
+        _micro(F.col("v")).alias("svm"),
     )
     cwords = (
         grid.join(upd, ["m", "seed_id", "pos"], "left")
@@ -1482,7 +1401,7 @@ def similarity_topk_pq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same (dm, seed_id)-tied encoder fold over the broadcast
     codebook (now carrying trained codewords), the same
     ADC -> depth-32 shortlist -> exact re-rank tail
-    (_pq_adc_rerank == _PQ_TAIL).
+    (_pq_topk, whose rows are _PQ_TAIL's).
 
     Why it exists: the quality ledger's weakest rung. On the
     worst-case isotropic fixture the seed codebooks hold recall@3
@@ -1510,23 +1429,14 @@ def similarity_topk_pq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("pq_trained_codebook", os.path.realpath(sf_dir)),
         lambda: _pq_trained_codebook(emb),
     )
-    msel = F.transform(
-        F.col("cbs"),
-        lambda mc: _pq_nearest(
-            mc["cws"],
-            _pq_sub(F.col("embedding"), mc["m"]),
-            lambda s: s["ce"],
+    return _pq_topk(
+        emb,
+        cb,
+        lambda v: F.transform(
+            F.col("cbs"),
+            lambda mc: _pq_nearest(mc["cws"], _pq_sub(v, mc["m"]), lambda s: s["ce"]),
         ),
     )
-    recon = (
-        _spread(emb, "vec_id")
-        .crossJoin(F.broadcast(cb))
-        .select(
-            F.col("vec_id").alias("cid"),
-            F.flatten(F.transform(msel, lambda x: x["sub"])).alias("re"),
-        )
-    )
-    return _pq_adc_rerank(emb, recon)
 
 
 @query(
@@ -1604,44 +1514,21 @@ def similarity_topk_mrl_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     No quantization step at all — the approx score is the same
     bitwise-portable cosine fold over a prefix slice, so cross-engine
     equality needs no fixed-point scaffolding. Plan shape is the SQ8
-    one: truncation is a narrow slice fused into the scan,
-    broadcast-queries x corpus scan, exact folds only on O(queries x
-    32) shortlist rows."""
+    one: truncation is a narrow slice fused into the scan, where each
+    row's prefix norm and full norm are folded once; broadcast-queries
+    x corpus scan whose rows carry the full vector into the shortlist;
+    exact folds only on O(queries x 32) shortlist rows."""
     emb = _t(spark, sf_dir, "embeddings")
-    c = _spread(emb, "vec_id").select(
-        F.col("vec_id").alias("cid"),
-        F.col("embedding").alias("ce"),
-        F.slice("embedding", 1, _MRL_DIM).alias("ct"),
-    )
-    q = emb.filter(F.expr(_QUERY_FILTER)).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("qe"),
-        F.slice("embedding", 1, _MRL_DIM).alias("qt"),
-    )
-    acos = cosine_spark(F.col("qt"), F.col("ct"))
-    wa = W.partitionBy("qid").orderBy(F.col("acos").desc(), F.col("cid").asc())
-    shortlist = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("cid") != F.col("qid"))
-        .select("qid", "cid", "qe", "ce", acos.alias("acos"))
-        .withColumn("arn", F.row_number().over(wa))
-        .filter(F.col("arn") <= _MRL_RERANK_M)
-    )
-    cos = cosine_spark(F.col("qe"), F.col("ce"))
-    w = W.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("cid").asc())
-    return (
-        shortlist.select(
-            "qid", "cid", F.round("acos", 6).alias("approx_cosine"), cos.alias("cos")
-        )
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _MRL_TOPK)
-        .select(
-            F.col("qid").alias("query_id"),
-            F.col("rn").cast("int").alias("rank"),
-            F.col("cid").alias("cand_id"),
-            F.round("cos", 6).alias("cosine"),
-            "approx_cosine",
-        )
+
+    def prefix(p):
+        t = F.slice("embedding", 1, _MRL_DIM)
+        return t.alias(p + "t"), l2_spark(t).alias(p + "tn")
+
+    c = _side(_spread(emb, "vec_id"), "c", *prefix("c"))
+    q = _side(emb.filter(F.expr(_QUERY_FILTER)), "q", *prefix("q"))
+    acos = cosine_normed(F.col("qt"), F.col("qtn"), F.col("ct"), F.col("ctn"))
+    return _shortlist_rerank(
+        _pairs(c, q).withColumn("acos", acos), _MRL_RERANK_M, _MRL_TOPK
     )
 
 
@@ -1737,7 +1624,8 @@ def _mine_hard_negatives(
 
     n = spark.sparkContext.defaultParallelism
     # the signature relation is materialized ONCE and both self-join
-    # sides derive from it: the repartition-for-ReusedExchange trick
+    # sides derive from it (each vector's norm rides along, so a
+    # pair's cosine folds no norm): the repartition-for-ReusedExchange trick
     # holds on the sort-merge path but not when AQE broadcasts a side
     # — there the broadcast side re-ran the scan + hyperplane fold a
     # second time (4 parquet scans in the executed plan; r17
@@ -1749,21 +1637,21 @@ def _mine_hard_negatives(
         _spread(emb, "vec_id").select(
             "vec_id",
             "embedding",
+            l2_spark(F.col("embedding")).alias("n"),
             hyperplane_sig_spark(F.col("embedding"), range(n_planes)).alias("sig"),
         )
     )
     sigs = sigs.repartition(n, "sig")
     a = sigs.select(
         F.col("vec_id").alias("va"), F.col("embedding").alias("ea"),
-        F.col("sig").alias("sa"),
+        F.col("n").alias("na"), F.col("sig").alias("sa"),
     )
     b = sigs.select(
         F.col("vec_id").alias("vb"), F.col("embedding").alias("eb"),
-        F.col("sig").alias("sb"),
+        F.col("n").alias("nb"), F.col("sig").alias("sb"),
     )
-    cm = F.floor(cosine_spark(F.col("ea"), F.col("eb")) * 1000000000).cast(
-        "bigint"
-    )
+    cos = cosine_normed(F.col("ea"), F.col("na"), F.col("eb"), F.col("nb"))
+    cm = F.floor(cos * 1000000000).cast("bigint")
     # 0-or-1-element thresholded array behind a Generate barrier — a
     # plain filter on a projected cm would merge into the join
     # condition and re-evaluate the cosine fold per candidate pair
@@ -1796,6 +1684,31 @@ def _mine_hard_negatives(
 
 
 # ------------------------------------------------ centroid statistics
+
+
+def _micro_centroid(rows: DataFrame, key: str) -> DataFrame:
+    """``(key, centroid_micro)``: the dimension-parallel integer-micro
+    mean of ``rows.embedding`` per ``key`` — posexplode, one
+    ``sum(vm) div count(*)`` per (key, pos), then the comma-joined
+    vector in pos order (a string, not array<bigint>: the result
+    canonicalizer's pandas sort/hash cannot order list cells)."""
+    comp = rows.select(key, F.posexplode("embedding").alias("pos", "v")).select(
+        key, "pos", _micro(F.col("v")).alias("vm")
+    )
+    return (
+        comp.groupBy(key, "pos")
+        .agg(F.expr("sum(vm) div count(*)").alias("m"))
+        .groupBy(key)
+        .agg(
+            F.concat_ws(
+                ",",
+                F.transform(
+                    F.sort_array(F.collect_list(F.struct("pos", "m"))),
+                    lambda s: s["m"].cast("string"),
+                ),
+            ).alias("centroid_micro")
+        )
+    )
 
 
 @query(
@@ -1854,34 +1767,8 @@ def embedding_centroid_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounding boundary would flake the value hash (~640 dice rolls
     per run)."""
     e = _t(spark, sf_dir, "embeddings")
-    comp = e.select(
-        "label", F.posexplode("embedding").alias("pos", "v")
-    ).select(
-        "label",
-        "pos",
-        F.floor(F.col("v").cast("double") * 1000000 + F.lit(0.5))
-        .cast("bigint")
-        .alias("vm"),
-    )
-    cent = (
-        comp.groupBy("label", "pos")
-        .agg(F.expr("sum(vm) div count(*)").alias("m"))
-        .groupBy("label")
-        .agg(
-            # comma-joined string, not array<bigint>: the driver's
-            # canonicalizer (pandas sort/hash) cannot order list cells
-            F.concat_ws(
-                ",",
-                F.transform(
-                    F.sort_array(F.collect_list(F.struct("pos", "m"))),
-                    lambda s: s["m"].cast("string"),
-                ),
-            ).alias("centroid_micro")
-        )
-    )
-    norm_micro = F.floor(
-        l2_spark(F.col("embedding")) * 1000000 + F.lit(0.5)
-    ).cast("bigint")
+    cent = _micro_centroid(e, "label")
+    norm_micro = _micro(l2_spark(F.col("embedding")))
     stats = (
         e.groupBy("label")
         .agg(
@@ -2002,31 +1889,7 @@ def kmeans_lloyd_step(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("m.embedding").alias("embedding"),
         )
     )
-    comp = members.select(
-        "seed_id", F.posexplode("embedding").alias("pos", "v")
-    ).select(
-        "seed_id",
-        "pos",
-        F.floor(F.col("v").cast("double") * 1000000 + F.lit(0.5))
-        .cast("bigint")
-        .alias("vm"),
-    )
-    cent = (
-        comp.groupBy("seed_id", "pos")
-        .agg(F.expr("sum(vm) div count(*)").alias("m"))
-        .groupBy("seed_id")
-        .agg(
-            # flattened to a string for the driver canonicalizer — see
-            # embedding_centroid_stats
-            F.concat_ws(
-                ",",
-                F.transform(
-                    F.sort_array(F.collect_list(F.struct("pos", "m"))),
-                    lambda s: s["m"].cast("string"),
-                ),
-            ).alias("centroid_micro")
-        )
-    )
+    cent = _micro_centroid(members, "seed_id")
     stats = members.groupBy("seed_id").agg(
         F.count("*").alias("n_members"),
         F.sum("dm").cast("bigint").alias("inertia_micro"),
@@ -2128,12 +1991,7 @@ def pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     base, base_ids = checkpoint_tracked(
         e.select(
             "vec_id",
-            F.transform(
-                "embedding",
-                lambda x: F.floor(x.cast("double") * 1000000 + F.lit(0.5)).cast(
-                    "bigint"
-                ),
-            ).alias("em"),
+            F.transform("embedding", _micro).alias("em"),
         )
     )
     # v as a 1-row array DF (micro units); start = uniform 0.125

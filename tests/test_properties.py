@@ -166,21 +166,47 @@ def test_stub_models_total_and_deterministic(payload):
 @settings(max_examples=5, deadline=None)
 def test_vector_folds_match_numpy(spark_global, vecs):
     """cosine_spark's left fold must agree with numpy within float
-    tolerance for arbitrary vectors (one DataFrame per example)."""
+    tolerance for arbitrary vectors (one DataFrame per example), and
+    cosine_normed over precomputed norm COLUMNS must equal it bit for
+    bit — the identity every per-row-norm scorer rests on — with both
+    NULL against an all-zero vector."""
     from pyspark.sql import Row
     from pyspark.sql import functions as F
 
-    from eye_of_sauron_spark.functions.vector import cosine_spark
+    from eye_of_sauron_spark.functions.vector import (
+        cosine_normed,
+        cosine_spark,
+        l2_spark,
+    )
 
     a = vecs[0]
-    rows = [Row(i=i, x=a, y=v) for i, v in enumerate(vecs[1:])]
-    df = spark_global.createDataFrame(rows)
-    got = {
-        r["i"]: r["c"]
-        for r in df.select(
-            "i", cosine_spark(F.col("x"), F.col("y")).alias("c")
+    ys = vecs[1:] + [[0.0] * len(a)]
+    base = spark_global.createDataFrame(
+        [Row(i=i, x=a, y=v) for i, v in enumerate(ys)]
+    )
+    # the norms come back as plain data columns, so the optimizer cannot
+    # fold the normed side back into the per-pair expression
+    norms = {
+        r["i"]: r
+        for r in base.select(
+            "i", l2_spark(F.col("x")).alias("xn"), l2_spark(F.col("y")).alias("yn")
         ).collect()
     }
+    df = spark_global.createDataFrame(
+        [
+            Row(i=i, x=a, y=v, xn=norms[i]["xn"], yn=norms[i]["yn"])
+            for i, v in enumerate(ys)
+        ]
+    )
+    got, normed = {}, {}
+    for r in df.select(
+        "i",
+        cosine_spark(F.col("x"), F.col("y")).alias("c"),
+        cosine_normed(F.col("x"), F.col("xn"), F.col("y"), F.col("yn")).alias("cn"),
+    ).collect():
+        got[r["i"]], normed[r["i"]] = r["c"], r["cn"]
+    assert normed == got
+    assert got[len(ys) - 1] is None
     for i, v in enumerate(vecs[1:]):
         na, nv = np.array(a, dtype=np.float64), np.array(v, dtype=np.float64)
         denom = float(np.linalg.norm(na) * np.linalg.norm(nv))

@@ -134,9 +134,10 @@ def test_mixture_token_budget_contract(spark, sf_dir):
 
 
 def test_pq_plan_no_unbroadcast_cartesian(spark, sf_dir):
-    """Stage 1 is broadcast-queries x encoded scan; stage 2 is a
-    broadcast of the shortlist against the corpus. Nothing in the plan
-    may be a non-broadcast cartesian/BNLJ — at 100 TB that would be a
+    """Stage 1 is broadcast-queries x encoded scan; stage 2 re-ranks
+    the shortlist rows in place, from the full-precision vectors they
+    carry, with no join back to the corpus. Nothing in the plan may be
+    a non-broadcast cartesian/BNLJ — at 100 TB that would be a
     corpus x corpus catastrophe."""
     from eye_of_sauron_spark.plans.vector import similarity_topk_pq_rerank
 
@@ -151,6 +152,25 @@ def test_pq_plan_no_unbroadcast_cartesian(spark, sf_dir):
     # vacuous: Spark prints a build side on every BNLJ line); one of the
     # deliberate broadcasts becoming a hash join would lower it
     assert plan.count("BroadcastNestedLoopJoin") == 2, plan
+
+
+def test_vector_plans_share_one_retrieval_tail():
+    """plans/vector.py builds every top-k from one ranking tail and
+    every two-stage tier from one shortlist-and-rerank, and scores
+    pairs from per-row norms only: no per-pair ``cosine_spark(``, one
+    ``cos`` ranking window, one ``acos`` shortlist window."""
+    import os
+
+    import eye_of_sauron_spark
+
+    path = os.path.join(
+        os.path.dirname(eye_of_sauron_spark.__file__), "plans", "vector.py"
+    )
+    with open(path, encoding="utf-8") as fh:
+        src = fh.read()
+    assert src.count("cosine_spark(") == 0
+    assert src.count('F.col("cos").desc()') == 1
+    assert src.count('F.col("acos").desc()') == 1
 
 
 def test_pq_shortlist_and_output_shape(spark, sf_dir):
