@@ -368,11 +368,9 @@ def ml_face_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     old per-action target re-detect hazard is gone with the pass that
     caused it. (first_faces_targets stays as the streaming path's
     batch-side builder, where frames arrive per-micro-batch.)"""
-    from ..functions.materialize import checkpoint_tracked
-
     frames = frames_from_events(load_table(spark, sf_dir, "events"))
     # pinned with the returned result (drain_session releases it)
-    faces, _face_ids = checkpoint_tracked(detect_embed(frames))
+    faces = detect_embed(frames).localCheckpoint(eager=True)
     # same derivation first_faces_targets runs, minus its post-limit
     # embed: the materialized rows already carry emb (the identical
     # pure function of (payload, box))

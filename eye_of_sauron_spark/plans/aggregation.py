@@ -471,16 +471,12 @@ def market_basket_part_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     basket aggregate is localCheckpointed (O(distinct order-part
     pairs) rows, 2 columns — far smaller than the fact table), and
     tot/singles/pairs all ride the materialized partitions."""
-    from ..functions.materialize import checkpoint_tracked
-
     li = _t(spark, sf_dir, "lineitem")
     # pinned with the returned result (drain_session releases it once
     # the result is consumed), like the ladder shared passes
-    baskets, _basket_ids = checkpoint_tracked(
-        li.groupBy("l_orderkey").agg(
-            F.array_sort(F.collect_set("l_partkey")).alias("parts")
-        )
-    )
+    baskets = li.groupBy("l_orderkey").agg(
+        F.array_sort(F.collect_set("l_partkey")).alias("parts")
+    ).localCheckpoint(eager=True)
     tot = baskets.agg(F.count("*").cast("bigint").alias("n_orders"))
     singles = baskets.select(F.explode("parts").alias("part")).groupBy(
         "part"

@@ -717,7 +717,7 @@ def dedup_minhash_band_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     not a corpus pass. At 100 TB the one-pass materialization is the
     standard time/space trade (MEMORY_AND_DISK blocks of O(corpus
     tokens) hashes) against re-scanning the corpus per rung."""
-    from ..functions.materialize import checkpoint_tracked, memo_checkpoint
+    from ..functions.materialize import memo_checkpoint
 
     exact = memo_checkpoint(
         spark,
@@ -726,11 +726,9 @@ def dedup_minhash_band_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_a", "doc_b", "jaccard"
         ),
     )
-    shared, _shared_ids = checkpoint_tracked(
-        _minhash_base(spark, sf_dir).select(
-            "doc_id", "sh", F.transform("sh", hex32_spark).alias("hs")
-        )
-    )
+    shared = _minhash_base(spark, sf_dir).select(
+        "doc_id", "sh", F.transform("sh", hex32_spark).alias("hs")
+    ).localCheckpoint(eager=True)
     # the returned plan reads the checkpoint, so it stays pinned with
     # the result (same lifecycle as textrank's final ranks checkpoint;
     # drain_session releases it once the result is consumed)
@@ -936,9 +934,7 @@ def simhash_pairs(docs: DataFrame) -> DataFrame:
     hash -> 64-vote aggregation (the query's dominant cost) a second
     time (r17 optimization, guide §1.2/§2.4). Pinned with the
     returned result; drain_session releases it."""
-    from ..functions.materialize import checkpoint_tracked
-
-    sims, _sim_ids = checkpoint_tracked(simhash_signatures(docs))
+    sims = simhash_signatures(docs).localCheckpoint(eager=True)
     n_bands = 2 * _SIMHASH_BANDS_PER_HALF
     banded = sims.select(
         "doc_id",
@@ -1115,8 +1111,6 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     match (src/prediction_producer.py:314-325), generalized to
     corpus-scale near-dup detection.
     """
-    from ..functions.materialize import checkpoint_tracked
-
     emb = _t(spark, sf_dir, "embeddings")
     # ONE parquet pass builds the widened+drifted corpus and every
     # consumer — both signature sides, both verify sides — reads the
@@ -1130,15 +1124,13 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # normalized corpus once (at 100 TB: written to parquet, not
     # recomputed per stage); the checkpoint is pinned with the
     # returned result and drain_session releases it.
-    corpus, _corpus_ids = checkpoint_tracked(_spread(_emb_corpus(emb), "vec_id"))
+    corpus = _spread(_emb_corpus(emb), "vec_id").localCheckpoint(eager=True)
     # the banded signature fold (8 bands x 8 literal-plane dot folds)
     # likewise runs ONCE: both self-join sides read this checkpoint
-    sigs, _sig_ids = checkpoint_tracked(
-        corpus.select(
-            "vec_id", "label",
-            F.explode(_emb_band_keys(F.col("emb"))).alias("bsig"),
-        )
-    )
+    sigs = corpus.select(
+        "vec_id", "label",
+        F.explode(_emb_band_keys(F.col("emb"))).alias("bsig"),
+    ).localCheckpoint(eager=True)
     # both sides rename EVERY column (ba/bb, not a shared "bsig"):
     # an ambiguous self-join reference resolves to a trivially-true
     # predicate that cannot serve as an equi key, silently demoting
@@ -1471,100 +1463,63 @@ def connected_components(sym: DataFrame, max_rounds: int = 50) -> DataFrame:
     measured 1.5-2x on the loop, and at scale it removes an
     O(edges) shuffle per round.
     """
-    from ..functions.materialize import checkpoint_tracked, unpersist_ids
+    from ..functions.materialize import iterate, transient
 
     spark = sym.sparkSession
     n_part = spark.sparkContext.defaultParallelism
-    sym, sym_ids = checkpoint_tracked(sym.repartition(n_part, "s"))
-    labels = sym.select(F.col("s").alias("node")).distinct().withColumn(
-        "comp", F.col("node")
-    )
-    prev_ids: list[int] = []
-    try:
-        labels = _cc_loop(spark, sym, labels, max_rounds, prev_ids)
-    except BaseException:
-        # a mid-loop failure (including the non-convergence raise)
-        # must not strand the working-state blocks the happy path
-        # frees — that would re-open the O(rounds) leak on retry
-        unpersist_ids(spark, prev_ids + sym_ids)
-        raise
     # the returned labels are themselves materialized, so the edge
-    # checkpoint has no remaining reader either
-    unpersist_ids(spark, sym_ids)
-    return labels
+    # checkpoint has no reader past the block
+    with transient(spark) as pin:
+        sym = pin(sym.repartition(n_part, "s"))
 
-
-def _cc_loop(
-    spark: SparkSession,
-    sym: DataFrame,
-    labels: DataFrame,
-    max_rounds: int,
-    prev_ids: list[int],
-) -> DataFrame:
-    """The propagation rounds of :func:`connected_components`.
-    ``prev_ids`` is mutated in place so the caller's failure handler
-    can free the last round's checkpoint."""
-    from ..functions.materialize import checkpoint_tracked, unpersist_ids
-
-    for _ in range(max_rounds):
-        neighbor_min = (
-            sym.join(labels, sym.s == labels.node)
-            .groupBy(F.col("d").alias("node2"))
-            .agg(F.min("comp").alias("ncomp"))
-        )
-        propagated = (
-            labels.join(neighbor_min, labels.node == neighbor_min.node2, "left")
-            .select(
+        def propagate(labels: DataFrame) -> DataFrame:
+            labels = labels.select("node", "comp")
+            neighbor_min = (
+                sym.join(labels, sym.s == labels.node)
+                .groupBy(F.col("d").alias("node2"))
+                .agg(F.min("comp").alias("ncomp"))
+            )
+            propagated = labels.join(
+                neighbor_min, labels.node == neighbor_min.node2, "left"
+            ).select(
                 "node",
                 F.least(
                     F.col("comp"), F.coalesce(F.col("ncomp"), F.col("comp"))
                 ).alias("comp"),
                 F.col("comp").alias("prev"),
             )
-        )
-        # pointer jumping (path halving): comp := comp[comp]. comp
-        # values are always node ids with comp[x] <= x, so following
-        # one hop through the label table itself halves the remaining
-        # distance to each component's minimum — neighbor-min alone
-        # moves labels a single edge-hop per round, which on a
-        # chain-shaped cluster needs diameter rounds and used to
-        # overrun the old fixed cap silently.
-        hop = propagated.select(
-            F.col("node").alias("jnode"), F.col("comp").alias("jcomp")
-        )
-        new_labels = (
-            propagated.join(hop, propagated.comp == hop.jnode, "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("comp"), F.coalesce(F.col("jcomp"), F.col("comp"))
-                ).alias("comp"),
-                # convergence flag rides along so the changed-count is
-                # a filter over the materialized checkpoint, not an
-                # extra per-round join against the previous labels
-                (
-                    F.least(
-                        F.col("comp"), F.coalesce(F.col("jcomp"), F.col("comp"))
-                    )
-                    != F.col("prev")
-                ).alias("changed"),
+            # pointer jumping (path halving): comp := comp[comp]. comp
+            # values are always node ids with comp[x] <= x, so following
+            # one hop through the label table itself halves the
+            # remaining distance to each component's minimum —
+            # neighbor-min alone moves labels a single edge-hop per
+            # round, which on a chain-shaped cluster needs diameter
+            # rounds and used to overrun the old fixed cap silently.
+            hop = propagated.select(
+                F.col("node").alias("jnode"), F.col("comp").alias("jcomp")
             )
+            jumped = F.least(
+                F.col("comp"), F.coalesce(F.col("jcomp"), F.col("comp"))
+            )
+            return propagated.join(hop, propagated.comp == hop.jnode, "left").select(
+                "node",
+                jumped.alias("comp"),
+                # convergence flag rides along so the changed-count is a
+                # filter over the materialized round, not an extra
+                # per-round join against the previous labels
+                (jumped != F.col("prev")).alias("changed"),
+            )
+
+        labels = sym.select(F.col("s").alias("node")).distinct().withColumn(
+            "comp", F.col("node")
         )
-        # cut lineage growth; the previous round's checkpoint is dead
-        # the moment this one materializes — free it, or a long
-        # session pins O(rounds) copies of the label table
-        new_labels, new_ids = checkpoint_tracked(new_labels)
-        unpersist_ids(spark, prev_ids)
-        prev_ids[:] = new_ids
-        changed = new_labels.filter("changed").count()
-        labels = new_labels.select("node", "comp")
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_rounds} rounds"
+        labels = iterate(
+            labels,
+            propagate,
+            max_rounds,
+            until=lambda r: r.filter("changed").count() == 0,
         )
-    return labels
+    return labels.select("node", "comp")
 
 
 _CC_MULTI_ORACLE = f"""
@@ -1746,8 +1701,6 @@ def dedup_incremental_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     all-pairs. The asymmetry also kills the self-join's da < db
     dedup-direction concern: pairs are (batch x corpus) by
     construction."""
-    from ..functions.materialize import checkpoint_tracked
-
     docs = _spread(
         _t(spark, sf_dir, "documents").select("doc_id", "text", "lang"), "doc_id"
     )
@@ -1771,7 +1724,7 @@ def dedup_incremental_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     # whole chain into _band_sigs duplicates the shingle split 51x and
     # the per-shingle md5 16x in the optimized plan (measured; same
     # rationale as _band_sigs' own docstring)
-    tagged, _tag_ids = checkpoint_tracked(
+    tagged = (
         docs.select(
             "doc_id",
             "lang",
@@ -1783,7 +1736,7 @@ def dedup_incremental_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id", "lang", "bkt", "h", "sh", _band_sigs(F.col("hs")).alias("bands")
         )
-    )
+    ).localCheckpoint(eager=True)
     corpus = tagged.filter(F.col("bkt") < _INC_CORPUS_BUCKETS)
     batch = tagged.filter(F.col("bkt") >= _INC_CORPUS_BUCKETS).select(
         "doc_id", "lang", "h", "sh", "bands"

@@ -26,7 +26,6 @@ results are materialized (localCheckpoint pins the rows).
 from __future__ import annotations
 
 import os
-import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -73,8 +72,9 @@ def jsonl_roundtrip_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     The aggregate itself is the usual partial/final pair.
     """
     d = _t(spark, sf_dir, "documents")
-    work = tempfile.mkdtemp(prefix="jsonl_ingest_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="jsonl_ingest_", ignore_cleanup_errors=True
+    ) as work:
         d.write.mode("overwrite").json(f"{work}/docs")
         back = spark.read.schema(
             "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT"
@@ -92,8 +92,6 @@ def jsonl_roundtrip_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
     return out
 
 
@@ -126,8 +124,9 @@ def csv_roundtrip_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     and quote characters themselves."""
     ev = _t(spark, sf_dir, "events")
     fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
-    work = tempfile.mkdtemp(prefix="csv_ingest_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="csv_ingest_", ignore_cleanup_errors=True
+    ) as work:
         ev.write.mode("overwrite").option("header", "true").option(
             "timestampFormat", fmt
         ).csv(f"{work}/events")
@@ -151,8 +150,6 @@ def csv_roundtrip_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
     return out
 
 
@@ -225,27 +222,28 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_orderkey", "l_extendedprice", "l_discount"
     )
     orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
-    work = tempfile.mkdtemp(prefix="bucketed_join_")
-    try:
-        write_bucketed(li, "li_bucketed", "l_orderkey", work)
-        write_bucketed(orders, "orders_bucketed", "o_orderkey", work)
-        lb = spark.table("li_bucketed")
-        ob = spark.table("orders_bucketed").hint("merge")
-        out = (
-            lb.join(ob, lb.l_orderkey == ob.o_orderkey)
-            .groupBy("o_orderpriority")
-            .agg(
-                F.count("*").alias("n_items"),
-                F.round(
-                    F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-                ).alias("revenue"),
+    with tempfile.TemporaryDirectory(
+        prefix="bucketed_join_", ignore_cleanup_errors=True
+    ) as work:
+        try:
+            write_bucketed(li, "li_bucketed", "l_orderkey", work)
+            write_bucketed(orders, "orders_bucketed", "o_orderkey", work)
+            lb = spark.table("li_bucketed")
+            ob = spark.table("orders_bucketed").hint("merge")
+            out = (
+                lb.join(ob, lb.l_orderkey == ob.o_orderkey)
+                .groupBy("o_orderpriority")
+                .agg(
+                    F.count("*").alias("n_items"),
+                    F.round(
+                        F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
+                    ).alias("revenue"),
+                )
+                .localCheckpoint(eager=True)
             )
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        spark.sql("DROP TABLE IF EXISTS li_bucketed")
-        spark.sql("DROP TABLE IF EXISTS orders_bucketed")
-        shutil.rmtree(work, ignore_errors=True)
+        finally:
+            spark.sql("DROP TABLE IF EXISTS li_bucketed")
+            spark.sql("DROP TABLE IF EXISTS orders_bucketed")
     return out
 
 
@@ -257,18 +255,19 @@ def bucketed_join_plan(spark: SparkSession, sf_dir: str) -> str:
         "l_orderkey", "l_extendedprice", "l_discount"
     )
     orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
-    work = tempfile.mkdtemp(prefix="bucketed_plan_")
-    try:
-        write_bucketed(li, "li_bucketed", "l_orderkey", work)
-        write_bucketed(orders, "orders_bucketed", "o_orderkey", work)
-        lb = spark.table("li_bucketed")
-        ob = spark.table("orders_bucketed").hint("merge")
-        joined = lb.join(ob, lb.l_orderkey == ob.o_orderkey)
-        return joined._jdf.queryExecution().executedPlan().toString()
-    finally:
-        spark.sql("DROP TABLE IF EXISTS li_bucketed")
-        spark.sql("DROP TABLE IF EXISTS orders_bucketed")
-        shutil.rmtree(work, ignore_errors=True)
+    with tempfile.TemporaryDirectory(
+        prefix="bucketed_plan_", ignore_cleanup_errors=True
+    ) as work:
+        try:
+            write_bucketed(li, "li_bucketed", "l_orderkey", work)
+            write_bucketed(orders, "orders_bucketed", "o_orderkey", work)
+            lb = spark.table("li_bucketed")
+            ob = spark.table("orders_bucketed").hint("merge")
+            joined = lb.join(ob, lb.l_orderkey == ob.o_orderkey)
+            return joined._jdf.queryExecution().executedPlan().toString()
+        finally:
+            spark.sql("DROP TABLE IF EXISTS li_bucketed")
+            spark.sql("DROP TABLE IF EXISTS orders_bucketed")
 
 
 # ------------------------------------------------------------- z-order
@@ -387,8 +386,9 @@ def compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     commits independently; the plan shape — scan, one round-robin
     exchange, write — is the same."""
     d = _t(spark, sf_dir, "documents")
-    work = tempfile.mkdtemp(prefix="compact_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="compact_", ignore_cleanup_errors=True
+    ) as work:
         d.repartition(_COMPACT_SMALL_FILES).write.mode("overwrite").parquet(
             f"{work}/small"
         )
@@ -420,8 +420,6 @@ def compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
     return out
 
 
@@ -459,8 +457,9 @@ def schema_evolution_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     catalog/manifest instead — the read semantics (NULL-fill, by-name
     resolution) are identical, which is what this checks."""
     d = _t(spark, sf_dir, "documents")
-    work = tempfile.mkdtemp(prefix="schema_evo_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="schema_evo_", ignore_cleanup_errors=True
+    ) as work:
         old = d.filter(F.col("doc_id") % _EVO_SPLIT_MOD != 0).select(
             "doc_id", "lang", "n_chars"
         )
@@ -488,8 +487,6 @@ def schema_evolution_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
     return out
 
 
@@ -534,8 +531,9 @@ def routed_sink_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events").withColumn(
         "camera", (F.col("user_id") % _ROUTE_CAMERAS).cast("bigint")
     )
-    work = tempfile.mkdtemp(prefix="routed_sink_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="routed_sink_", ignore_cleanup_errors=True
+    ) as work:
         write_partitioned(ev, f"{work}/routed", ["camera"])
         out = (
             spark.read.parquet(f"{work}/routed")
@@ -547,8 +545,6 @@ def routed_sink_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
     return out
 
 
@@ -592,8 +588,9 @@ def orc_roundtrip_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     (src/utils.py:248-264) — the batch-columnar counterpart of that
     serialization boundary, driver-checked."""
     emb = _t(spark, sf_dir, "embeddings")
-    work = tempfile.mkdtemp(prefix="orc_ingest_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="orc_ingest_", ignore_cleanup_errors=True
+    ) as work:
         emb.write.mode("overwrite").orc(f"{work}/embeddings")
         back = spark.read.orc(f"{work}/embeddings")
         checksum = F.aggregate(
@@ -618,6 +615,4 @@ def orc_roundtrip_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
     return out

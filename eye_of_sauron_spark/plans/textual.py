@@ -11,6 +11,8 @@ ones (term stats) shuffle O(tokens) rows but combine map-side first.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
@@ -619,54 +621,49 @@ def textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = d.select("lang", F.explode(bigrams).alias("p")).select(
         "lang", "p.w1", "p.w2"
     )
-    from ..functions.materialize import checkpoint_tracked, unpersist_ids
+    from ..functions.materialize import iterate, transient
 
-    edges, edge_ids = checkpoint_tracked(
-        pairs.groupBy("lang", "w1", "w2").agg(F.count("*").alias("wt"))
-    )
-    wsum = edges.groupBy("lang", "w1").agg(F.sum("wt").alias("wsum"))
-    # edges carrying the source's transition probability in ppm: the
-    # normalization join runs once, not once per iteration, and the
-    # bounded p_ppm <= 10^6 is what keeps every later multiply inside
-    # BIGINT (m * p_ppm <= 10^12 * 10^6 < 2^63) at ANY corpus scale —
-    # the raw (m * wt) form overflows once a stop-bigram's count
-    # exceeds ~9.2e6 against a hub node's mass
-    ew_ids: list[int] = []
-    try:
-        ew, ew_ids = checkpoint_tracked(
-            edges.join(wsum, ["lang", "w1"]).select(
-                "lang",
-                "w1",
-                "w2",
-                F.expr(f"(wt * {_TR_PPM}) div wsum").alias("p_ppm"),
+    # the returned ranking reads only the final ranks round; the graph
+    # materializations (ew, nodes) have no reader past the block
+    with transient(spark) as pin:
+        # ew and nodes are pinned before the inner block exits, so the
+        # raw edge checkpoint it frees has no remaining reader
+        with transient(spark) as pin_edges:
+            edges = pin_edges(
+                pairs.groupBy("lang", "w1", "w2").agg(F.count("*").alias("wt"))
             )
+            wsum = edges.groupBy("lang", "w1").agg(F.sum("wt").alias("wsum"))
+            # edges carrying the source's transition probability in
+            # ppm: the normalization join runs once, not once per
+            # iteration, and the bounded p_ppm <= 10^6 is what keeps
+            # every later multiply inside BIGINT (m * p_ppm <= 10^12 *
+            # 10^6 < 2^63) at ANY corpus scale — the raw (m * wt) form
+            # overflows once a stop-bigram's count exceeds ~9.2e6
+            # against a hub node's mass
+            ew = pin(
+                edges.join(wsum, ["lang", "w1"]).select(
+                    "lang",
+                    "w1",
+                    "w2",
+                    F.expr(f"(wt * {_TR_PPM}) div wsum").alias("p_ppm"),
+                )
+            )
+            nodes = pin(
+                edges.select("lang", F.col("w1").alias("token"))
+                .union(edges.select("lang", F.col("w2").alias("token")))
+                .distinct()
+            )
+        base = nodes.groupBy("lang").agg(
+            F.expr(f"{_TR_TOTAL} div count(*)").alias("m0"),
+            F.expr(f"(15 * ({_TR_TOTAL} div count(*))) div 100").alias("b"),
         )
-        nodes, node_ids = checkpoint_tracked(
-            edges.select("lang", F.col("w1").alias("token"))
-            .union(edges.select("lang", F.col("w2").alias("token")))
-            .distinct()
+        ranks = nodes.join(F.broadcast(base), "lang").select(
+            "lang", "token", F.col("m0").alias("m")
         )
-    except BaseException:
-        # a failed ew/nodes materialization must not strand the raw
-        # edge checkpoint (or ew, if it was the nodes step that blew)
-        unpersist_ids(spark, edge_ids + ew_ids)
-        raise
-    # ew/nodes are materialized — the raw edge checkpoint has no
-    # remaining reader
-    unpersist_ids(spark, edge_ids)
-    base = nodes.groupBy("lang").agg(
-        F.expr(f"{_TR_TOTAL} div count(*)").alias("m0"),
-        F.expr(f"(15 * ({_TR_TOTAL} div count(*))) div 100").alias("b"),
-    )
-    ranks = nodes.join(F.broadcast(base), "lang").select(
-        "lang", "token", F.col("m0").alias("m")
-    )
-    prev_ids: list[int] = []
-    try:
-        for _ in range(_TR_ITERS):
-            # explicit renames: nodes/ew share lineage (exprIds
-            # survive localCheckpoint), so qualified access would be
-            # ambiguous
+
+        def step(ranks: DataFrame) -> DataFrame:
+            # explicit renames: nodes/ew share lineage (exprIds survive
+            # localCheckpoint), so qualified access would be ambiguous
             r = ranks.select(
                 F.col("lang").alias("r_lang"),
                 F.col("token").alias("r_token"),
@@ -686,7 +683,7 @@ def textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .groupBy("lang", "token")
                 .agg(F.sum("c").alias("contrib"))
             )
-            ranks = (
+            return (
                 nodes.join(contrib, ["lang", "token"], "left")
                 .join(F.broadcast(base), "lang")
                 .select(
@@ -698,18 +695,8 @@ def textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
                     ).alias("m"),
                 )
             )
-            # lineage cut per round; the superseded round's checkpoint
-            # is freed immediately (same discipline as the CC loop)
-            ranks, new_ids = checkpoint_tracked(ranks)
-            unpersist_ids(spark, prev_ids)
-            prev_ids = new_ids
-    except BaseException:
-        # mid-loop failure must not strand the tracked blocks
-        unpersist_ids(spark, prev_ids + ew_ids + node_ids)
-        raise
-    # the returned ranking reads only the final ranks checkpoint; the
-    # graph materializations (ew, nodes) have no remaining reader
-    unpersist_ids(spark, ew_ids + node_ids)
+
+        ranks = iterate(ranks, step, _TR_ITERS)
     ranked = ranks.withColumn(
         "rank",
         F.row_number().over(
@@ -886,15 +873,13 @@ def graph_triangle_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = d.select("lang", F.explode(bigrams_spark(F.col("text"))).alias("p")).select(
         "lang", "p.w1", "p.w2"
     )
-    from ..functions.materialize import checkpoint_tracked
-
     # the canonical edge list feeds THREE consumers (both degree
     # branches and the cap join's probe side); materialize the
     # explode-bigrams -> distinct pass once so the cap-join
     # checkpoint job below reads it instead of re-deriving it per
     # consumer (r17 optimization, guide §1.2) — pinned with the
     # returned result, drain_session releases it
-    und, _und_ids = checkpoint_tracked(
+    und = (
         pairs.filter(F.col("w1") != F.col("w2"))
         .select(
             "lang",
@@ -902,7 +887,7 @@ def graph_triangle_census(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.greatest("w1", "w2").alias("b"),
         )
         .distinct()
-    )
+    ).localCheckpoint(eager=True)
     deg = (
         und.select("lang", F.col("a").alias("node"))
         .unionAll(und.select("lang", F.col("b").alias("node")))
@@ -1091,70 +1076,6 @@ _BM25_ORACLE = f"""
 """
 
 
-# One-slot cache for the checkpointed query-term postings, keyed by
-# (applicationId, sf_dir). localCheckpoint(eager=True) runs a job at
-# construction time and its blocks pin executor storage until
-# unpersisted — without the memo, a round running BOTH retrieval
-# queries (search_bm25_topk + search_hybrid_rrf call _bm25_per_doc
-# independently) materializes the postings twice and leaks the first
-# copy for the session lifetime (r10 ADVICE). The slot holds the
-# latest corpus only; switching sf_dir (or session) evicts and
-# unpersists the previous blocks. Contract boundaries (both match the
-# driver execution model — build a query, consume it, move on): (a)
-# eviction INVALIDATES any still-unconsumed DataFrame built for the
-# previous corpus (localCheckpoint cut its lineage, so the freed
-# blocks cannot be recomputed) — consume each corpus's retrieval
-# results before switching sf_dir; (b) the key is the path string, so
-# rewriting the parquet at the SAME path mid-session returns the old
-# corpus's postings. Not thread-safe.
-_BM25_POSTINGS_MEMO: dict[tuple[str, str], tuple[DataFrame, list[int]]] = {}
-
-
-def _drain_bm25_memo(spark) -> None:
-    """materialize.drain_session hook: drop every memo slot, freeing
-    current-session blocks (stale-session ids must NOT be unpersisted
-    — they can collide with live RDD ids; see _bm25_postings_shared).
-    The memo simply repopulates on the next retrieval query."""
-    from ..functions.materialize import unpersist_ids
-
-    app_id = spark.sparkContext.applicationId
-    for old_key, (_, old_ids) in list(_BM25_POSTINGS_MEMO.items()):
-        if old_key[0] == app_id:
-            unpersist_ids(spark, old_ids)
-        del _BM25_POSTINGS_MEMO[old_key]
-
-
-def _register_drain() -> None:
-    from ..functions.materialize import register_drain_hook
-
-    register_drain_hook(_drain_bm25_memo)
-
-
-_register_drain()
-
-
-def _bm25_postings_shared(
-    spark: SparkSession, postings: DataFrame, memo_key: tuple[str, str]
-) -> DataFrame:
-    from ..functions.materialize import checkpoint_tracked
-
-    hit = _BM25_POSTINGS_MEMO.get(memo_key)
-    if hit is not None:
-        return hit[0]
-    ck, new_ids = checkpoint_tracked(postings)
-    # evict the previous corpus's postings; _drain_bm25_memo frees its
-    # blocks ONLY if the entry belongs to THIS SparkContext. RDD ids
-    # restart at 0 per context, so a stale entry's ids from a previous
-    # session can collide with live persistent RDDs here (including
-    # the checkpoint just created) — unpersisting them would free
-    # lineage-cut blocks that cannot be recomputed. Stale-session
-    # entries died with their context; dropping the slot is the whole
-    # cleanup.
-    _drain_bm25_memo(spark)
-    _BM25_POSTINGS_MEMO[memo_key] = (ck, new_ids)
-    return ck
-
-
 def _bm25_per_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, score_e6, n_terms) for every document matching at
     least one query term — the relation both retrieval queries rank.
@@ -1171,14 +1092,17 @@ def _bm25_per_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n"),
         (F.sum(F.size("toks")).cast("double") / F.count("*")).alias("avgdl"),
     )
-    # materialize the query-term postings ONCE: both consumers below
-    # (df count + per-doc sum) AND both retrieval queries read this
-    # single checkpoint, instead of each recompiling the
-    # scan->explode->shuffle lineage
-    tf = _bm25_postings_shared(
+    # materialize the query-term postings ONCE per session: both
+    # consumers below (df count + per-doc sum) AND both retrieval
+    # queries read this single checkpoint, instead of each recompiling
+    # the scan->explode->shuffle lineage (and leaking a second copy of
+    # its blocks, r10 ADVICE)
+    from ..functions.materialize import memo_checkpoint
+
+    tf = memo_checkpoint(
         spark,
-        _bm25_postings(spark, d),
-        (spark.sparkContext.applicationId, sf_dir),
+        ("bm25_postings", os.path.realpath(sf_dir)),
+        lambda: _bm25_postings(spark, d),
     )
     dft = tf.groupBy("term").agg(F.count("*").alias("df"))
     contrib = (

@@ -687,16 +687,12 @@ def similarity_ivf_nprobe_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast-sized. At 100 TB the three rungs are three passes over
     the same cell-partitioned candidate layout, not three corpus
     shuffles — and now also ONE assignment pass, not six."""
-    from ..functions.materialize import checkpoint_tracked
-
     emb = _t(spark, sf_dir, "embeddings")
     max_np = _IVF_LADDER_NPROBES[-1]
     c = _side(_spread(emb, "vec_id"), "c").crossJoin(F.broadcast(_ivf_cent_row(emb)))
-    shared, _shared_ids = checkpoint_tracked(
-        c.select(
-            "cid", "ce", "cn", F.slice(_ivf_ranked_cells("c"), 1, max_np).alias("cells")
-        )
-    )
+    shared = c.select(
+        "cid", "ce", "cn", F.slice(_ivf_ranked_cells("c"), 1, max_np).alias("cells")
+    ).localCheckpoint(eager=True)
     assigned = shared.select("cid", "ce", "cn", F.col("cells")[0].alias("cell"))
     rung_anns = []
     for np_ in _IVF_LADDER_NPROBES:
@@ -760,12 +756,10 @@ def similarity_lsh_plane_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation); the 4-plane rung's buckets are corpus/16-sized, which
     is exactly the candidate-volume ceiling the dial exists to
     expose."""
-    from ..functions.materialize import checkpoint_tracked
-
     max_p = _LSH_LADDER_PLANES[-1]
-    shared, _shared_ids = checkpoint_tracked(
-        _lsh_sigs(spark, sf_dir, max_p).withColumnRenamed("sig", "sig_max")
-    )
+    shared = _lsh_sigs(spark, sf_dir, max_p).withColumnRenamed(
+        "sig", "sig_max"
+    ).localCheckpoint(eager=True)
     rung_anns = []
     for p in _LSH_LADDER_PLANES:
         sigs = shared.select(
@@ -1620,8 +1614,6 @@ def _mine_hard_negatives(
     with a parameterized plane count — split out so the 10x probe can
     scale the bucket count with the corpus (the production lever)
     without touching the registered query's fixed-plane contract."""
-    from ..functions.materialize import checkpoint_tracked
-
     n = spark.sparkContext.defaultParallelism
     # the signature relation is materialized ONCE and both self-join
     # sides derive from it (each vector's norm rides along, so a
@@ -1633,14 +1625,12 @@ def _mine_hard_negatives(
     # stays, so the at-scale sort-merge path still shares its one
     # exchange; pinned with the returned result, drain_session
     # releases it.
-    sigs, _sig_ids = checkpoint_tracked(
-        _spread(emb, "vec_id").select(
-            "vec_id",
-            "embedding",
-            l2_spark(F.col("embedding")).alias("n"),
-            hyperplane_sig_spark(F.col("embedding"), range(n_planes)).alias("sig"),
-        )
-    )
+    sigs = _spread(emb, "vec_id").select(
+        "vec_id",
+        "embedding",
+        l2_spark(F.col("embedding")).alias("n"),
+        hyperplane_sig_spark(F.col("embedding"), range(n_planes)).alias("sig"),
+    ).localCheckpoint(eager=True)
     sigs = sigs.repartition(n, "sig")
     a = sigs.select(
         F.col("vec_id").alias("va"), F.col("embedding").alias("ea"),
@@ -1985,22 +1975,20 @@ def pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-normalization. Nothing is ever driver-collected; v rides a
     1-row broadcast DataFrame, localCheckpointed per round like the
     CC and TextRank loops."""
-    from ..functions.materialize import checkpoint_tracked, unpersist_ids
+    from ..functions.materialize import iterate, transient
 
     e = _t(spark, sf_dir, "embeddings")
-    base, base_ids = checkpoint_tracked(
-        e.select(
-            "vec_id",
-            F.transform("embedding", _micro).alias("em"),
+    # the returned relation reads only the final v round; the quantized
+    # corpus has no reader past the block
+    with transient(spark) as pin:
+        base = pin(
+            e.select(
+                "vec_id",
+                F.transform("embedding", _micro).alias("em"),
+            )
         )
-    )
-    # v as a 1-row array DF (micro units); start = uniform 0.125
-    v_df = spark.range(1).select(
-        F.array(*[F.lit(125000).cast("bigint") for _ in range(_DIM)]).alias("varr")
-    )
-    prev_ids: list[int] = []
-    try:
-        for _ in range(_PCA_ITERS):
+
+        def step(v_df: DataFrame) -> DataFrame:
             scored = base.crossJoin(F.broadcast(v_df)).select(
                 "em",
                 F.aggregate(
@@ -2031,7 +2019,7 @@ def pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
                     lambda acc, t: acc + t,
                 )
             )
-            v_df = uarr.select(
+            return uarr.select(
                 F.transform(
                     "uarr",
                     lambda z: F.floor(
@@ -2039,18 +2027,10 @@ def pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
                     ).cast("bigint"),
                 ).alias("varr")
             )
-            # lineage cut per round; free the superseded round's 1-row
-            # checkpoint (same discipline as the CC/TextRank loops)
-            v_df, new_ids = checkpoint_tracked(v_df)
-            unpersist_ids(spark, prev_ids)
-            prev_ids = new_ids
-    except BaseException:
-        # mid-loop failure must not strand the tracked blocks
-        unpersist_ids(spark, prev_ids + base_ids)
-        raise
-    # the returned relation reads only the final v checkpoint; the
-    # quantized corpus has no remaining reader
-    unpersist_ids(spark, base_ids)
+
+        # v as a 1-row array DF (micro units); start = uniform 0.125
+        v0 = F.array(*[F.lit(125000).cast("bigint") for _ in range(_DIM)])
+        v_df = iterate(spark.range(1).select(v0.alias("varr")), step, _PCA_ITERS)
     return v_df.select(
         F.posexplode("varr").alias("pos0", "loading_micro")
     ).select((F.col("pos0") + 1).cast("int").alias("pos"), "loading_micro")

@@ -229,24 +229,47 @@ def test_iterative_loops_free_superseded_checkpoints(spark, sf_dir):
         )
 
 
-def test_checkpoint_tracked_roundtrip(spark):
-    """materialize.py contract: checkpoint_tracked returns the ids of
-    exactly the blocks the checkpoint pinned; unpersist_ids frees them
-    and is safe to call twice (double free / session-restart ids are
-    skipped, never an error)."""
+def test_transient_and_iterate_free_their_blocks(spark):
+    """materialize.py contract: a ``transient`` pin's blocks are freed
+    when its block exits, normally or by an exception; ``iterate``
+    leaves exactly its last round pinned; unpersist_ids is safe to
+    call twice (double free / session-restart ids are skipped, never
+    an error)."""
+    from pyspark.sql import functions as F
+
     from eye_of_sauron_spark.functions.materialize import (
         _persistent_ids,
-        checkpoint_tracked,
+        iterate,
+        transient,
         unpersist_ids,
     )
 
     before = _persistent_ids(spark)
-    ck, ids = checkpoint_tracked(spark.range(100))
-    assert ids and set(ids) <= _persistent_ids(spark) - before
-    assert ck.count() == 100  # readable after tracking
-    unpersist_ids(spark, ids)
-    assert not (set(ids) & _persistent_ids(spark))
-    unpersist_ids(spark, ids)  # idempotent
+    with transient(spark) as pin:
+        ck = pin(spark.range(100))
+        ids = _persistent_ids(spark) - before
+        assert ids, "pin should register persistent RDD blocks"
+        assert ck.count() == 100  # readable inside the block
+    assert _persistent_ids(spark) == before, "normal exit must free the pin"
+
+    with pytest.raises(RuntimeError, match="planted"):
+        with transient(spark) as pin:
+            pin(spark.range(10))
+            pin(spark.range(20))
+            raise RuntimeError("planted")
+    assert _persistent_ids(spark) == before, "exception exit must free pins"
+
+    last = iterate(
+        spark.range(5).select(F.col("id").alias("x")),
+        lambda df: df.select((F.col("x") + 1).alias("x")),
+        3,
+    )
+    live = _persistent_ids(spark) - before
+    assert len(live) == 1, f"iterate pinned {len(live)} rounds, expected 1"
+    assert sorted(r["x"] for r in last.collect()) == [3, 4, 5, 6, 7]
+    unpersist_ids(spark, sorted(live))
+    assert not (live & _persistent_ids(spark))
+    unpersist_ids(spark, sorted(live))  # idempotent
     unpersist_ids(spark, [10**9])  # unknown id: skipped
 
 
@@ -281,26 +304,36 @@ def test_bm25_postings_memo_shares_and_evicts(spark, sf_dir):
     retrieval queries the SAME materialization for a given corpus and
     (b) unpersist the previous corpus's blocks on eviction
     (r10 ADVICE, textual.py)."""
+    import os
+
+    from eye_of_sauron_spark.functions.materialize import (
+        _CK_MEMO,
+        drain_session,
+        memo_checkpoint,
+    )
     from eye_of_sauron_spark.plans import textual
 
-    textual._BM25_POSTINGS_MEMO.clear()
+    def slots() -> list:
+        return [v for k, v in _CK_MEMO.items() if k[1] == "bm25_postings"]
+
+    drain_session(spark)
     df1 = textual._bm25_per_doc(spark, sf_dir)
-    assert len(textual._BM25_POSTINGS_MEMO) == 1
-    (ck1, ids1) = next(iter(textual._BM25_POSTINGS_MEMO.values()))
+    assert len(slots()) == 1
+    (ck1, ids1) = slots()[0]
     assert ids1, "checkpoint should register persistent RDD blocks"
     df2 = textual._bm25_per_doc(spark, sf_dir)
     # same corpus -> same checkpointed relation object, no second job
-    assert next(iter(textual._BM25_POSTINGS_MEMO.values()))[0] is ck1
+    assert slots()[0][0] is ck1
     assert sorted(map(tuple, df1.collect())) == sorted(map(tuple, df2.collect()))
     # different memo key -> previous blocks evicted + unpersisted
-    textual._bm25_postings_shared(
+    memo_checkpoint(
         spark,
-        ck1.limit(1),
-        (spark.sparkContext.applicationId, sf_dir + "#other"),
+        ("bm25_postings", os.path.realpath(sf_dir) + "#other"),
+        lambda: ck1.limit(1),
     )
     live = {
         int(i)
         for i in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
     }
     assert not (live & set(ids1)), "evicted postings blocks still persisted"
-    textual._BM25_POSTINGS_MEMO.clear()
+    drain_session(spark)

@@ -4,9 +4,9 @@ Covers
 - plans/textual.py: BM25 memo eviction must NOT unpersist a stale
   entry from a previous SparkContext — RDD ids restart at 0 per
   context, so stale ids can collide with live blocks (r11 ADVICE).
-- plans/dedup.py / plans/textual.py: the checkpoint call SITES free
-  their tracked blocks when a downstream step raises (the loop-body
-  failure discipline, extended to the call sites; r11 ADVICE).
+- plans/dedup.py / plans/textual.py / plans/vector.py: the
+  checkpoints of an iterative query are freed when a downstream step
+  raises (r11 ADVICE), by functions/materialize.py alone.
 """
 
 from __future__ import annotations
@@ -28,17 +28,20 @@ def test_bm25_memo_stale_session_entry_not_unpersisted(spark):
     from pyspark.sql import functions as F
 
     from eye_of_sauron_spark.functions.materialize import (
+        _CK_MEMO,
         _persistent_ids,
-        checkpoint_tracked,
+        drain_session,
+        memo_checkpoint,
         unpersist_ids,
     )
-    from eye_of_sauron_spark.plans import textual
 
+    drain_session(spark)
     # victim: a live checkpoint whose ids we plant in a stale slot
-    victim, victim_ids = checkpoint_tracked(spark.range(50))
+    before = _persistent_ids(spark)
+    victim = spark.range(50).localCheckpoint(eager=True)
+    victim_ids = sorted(_persistent_ids(spark) - before)
     try:
-        textual._BM25_POSTINGS_MEMO.clear()
-        textual._BM25_POSTINGS_MEMO[("dead-app-id", "old_dir")] = (
+        _CK_MEMO[("dead-app-id", "bm25_postings", "old_dir")] = (
             victim,
             victim_ids,
         )
@@ -47,10 +50,10 @@ def test_bm25_memo_stale_session_entry_not_unpersisted(spark):
             F.lit("t").alias("term"),
             F.lit(1).alias("tf"),
         )
-        key = (spark.sparkContext.applicationId, "new_dir")
-        ck = textual._bm25_postings_shared(spark, postings, key)
+        key = (spark.sparkContext.applicationId, "bm25_postings", "new_dir")
+        ck = memo_checkpoint(spark, key[1:], lambda: postings)
         # stale slot evicted, new entry installed
-        assert list(textual._BM25_POSTINGS_MEMO) == [key]
+        assert list(_CK_MEMO) == [key]
         # the victim's blocks must STILL be persisted — the stale
         # entry's ids belong to another context and must not be freed
         assert set(victim_ids) <= _persistent_ids(spark), (
@@ -59,9 +62,9 @@ def test_bm25_memo_stale_session_entry_not_unpersisted(spark):
         assert ck.count() == 10  # new checkpoint is readable
     finally:
         unpersist_ids(spark, victim_ids)
-        for _, ids in textual._BM25_POSTINGS_MEMO.values():
+        for _, ids in _CK_MEMO.values():
             unpersist_ids(spark, ids)
-        textual._BM25_POSTINGS_MEMO.clear()
+        _CK_MEMO.clear()
 
 
 def test_same_session_memo_eviction_still_frees(spark):
@@ -70,12 +73,14 @@ def test_same_session_memo_eviction_still_frees(spark):
     from pyspark.sql import functions as F
 
     from eye_of_sauron_spark.functions.materialize import (
+        _CK_MEMO,
         _persistent_ids,
+        drain_session,
+        memo_checkpoint,
         unpersist_ids,
     )
-    from eye_of_sauron_spark.plans import textual
 
-    textual._BM25_POSTINGS_MEMO.clear()
+    drain_session(spark)
     app = spark.sparkContext.applicationId
     p1 = spark.range(5).select(
         F.col("id").alias("doc_id"), F.lit("a").alias("term"), F.lit(1).alias("tf")
@@ -84,17 +89,17 @@ def test_same_session_memo_eviction_still_frees(spark):
         F.col("id").alias("doc_id"), F.lit("b").alias("term"), F.lit(1).alias("tf")
     )
     try:
-        textual._bm25_postings_shared(spark, p1, (app, "dir1"))
-        (_, ids1) = textual._BM25_POSTINGS_MEMO[(app, "dir1")]
-        textual._bm25_postings_shared(spark, p2, (app, "dir2"))
+        memo_checkpoint(spark, ("bm25_postings", "dir1"), lambda: p1)
+        (_, ids1) = _CK_MEMO[(app, "bm25_postings", "dir1")]
+        memo_checkpoint(spark, ("bm25_postings", "dir2"), lambda: p2)
         assert not (set(ids1) & _persistent_ids(spark)), (
             "same-session eviction no longer frees the old corpus"
         )
-        assert list(textual._BM25_POSTINGS_MEMO) == [(app, "dir2")]
+        assert list(_CK_MEMO) == [(app, "bm25_postings", "dir2")]
     finally:
-        for _, ids in textual._BM25_POSTINGS_MEMO.values():
+        for _, ids in _CK_MEMO.values():
             unpersist_ids(spark, ids)
-        textual._BM25_POSTINGS_MEMO.clear()
+        _CK_MEMO.clear()
 
 
 def test_cluster_components_call_site_failure_frees_edges(
@@ -152,7 +157,7 @@ def test_drain_session_releases_result_pins(spark, sf_dir):
     RDDs — and the memoized queries must still work afterwards (the
     memo repopulates instead of handing out a freed lineage-cut
     plan)."""
-    from eye_of_sauron_spark.functions.materialize import drain_session
+    from eye_of_sauron_spark.functions.materialize import _CK_MEMO, drain_session
     from eye_of_sauron_spark.plans import textual
     from eye_of_sauron_spark.plans.dedup import dedup_cluster_components
 
@@ -164,7 +169,7 @@ def test_drain_session_releases_result_pins(spark, sf_dir):
     assert _n_persist(spark) >= 2  # CC result + postings memo
     drain_session(spark)
     assert _n_persist(spark) == 0
-    assert textual._BM25_POSTINGS_MEMO == {}
+    assert _CK_MEMO == {}
     # memoized query repopulates and returns the same result
     assert textual.search_bm25_topk(spark, sf_dir).count() == n1
     drain_session(spark)
@@ -312,29 +317,69 @@ def test_tokenizer_fidelity_probe(spark, sf_dir):
     assert packed == totals
 
 
-@pytest.mark.parametrize("fail_at", [2, 3])
+@pytest.mark.parametrize(
+    "query, fail_at",
+    [
+        pytest.param("textrank_keywords", 2, id="2"),
+        pytest.param("textrank_keywords", 3, id="3"),
+        pytest.param("textrank_keywords", 5, id="textrank-round-2"),
+        pytest.param("pca_power_iteration", 2, id="pca-round-1"),
+        pytest.param("pca_power_iteration", 3, id="pca-round-2"),
+    ],
+)
 def test_textrank_graph_checkpoint_failure_frees_prior(
-    spark, sf_dir, monkeypatch, fail_at
+    spark, sf_dir, monkeypatch, query, fail_at
 ):
-    """If the ew (2nd) or nodes (3rd) checkpoint fails, the already-
-    materialized graph checkpoints before it must be freed before the
-    raise propagates (r11 ADVICE, textual.py)."""
-    import eye_of_sauron_spark.functions.materialize as mat
-    from eye_of_sauron_spark.plans import textual
+    """If any checkpoint of an iterative query fails — TextRank's ew
+    (2nd) or nodes (3rd), a loop round of TextRank or PCA — every
+    checkpoint materialized before it must be freed before the raise
+    propagates (r11 ADVICE, textual.py). The fault is planted in
+    localCheckpoint itself, below materialize.py's primitives."""
+    from eye_of_sauron_spark import plans
 
-    real = mat.checkpoint_tracked
+    df_cls = type(spark.range(1))
+    real = df_cls.localCheckpoint
     calls = {"n": 0}
 
-    def flaky(df):
+    def flaky(df, *args, **kwargs):
         calls["n"] += 1
         if calls["n"] == fail_at:
             raise RuntimeError("planted checkpoint failure")
-        return real(df)
+        return real(df, *args, **kwargs)
 
-    monkeypatch.setattr(mat, "checkpoint_tracked", flaky)
+    monkeypatch.setattr(df_cls, "localCheckpoint", flaky)
     before = _n_persist(spark)
     with pytest.raises(RuntimeError, match="planted checkpoint failure"):
-        textual.textrank_keywords(spark, sf_dir)
+        plans.all_queries()[query](spark, sf_dir)
     assert _n_persist(spark) == before, (
-        f"graph checkpoint leaked when checkpoint #{fail_at} failed"
+        f"{query} leaked checkpoints when checkpoint #{fail_at} failed"
     )
+
+
+def test_checkpoint_lifetimes_have_one_owner():
+    """functions/materialize.py is the only code that frees checkpoint
+    blocks: no plan tracks ids, frees them, or hand-writes a failure
+    path of its own."""
+    import os
+
+    import eye_of_sauron_spark
+
+    root = os.path.dirname(eye_of_sauron_spark.__file__)
+    owner = os.path.join(root, "functions", "materialize.py")
+    hits = []
+    for dirpath, _, files in os.walk(root):
+        for f in sorted(files):
+            path = os.path.join(dirpath, f)
+            if not f.endswith(".py") or path == owner:
+                continue
+            with open(path, encoding="utf-8") as fh:
+                text = fh.read()
+            for needle in (
+                "checkpoint_tracked",
+                "unpersist_ids(",
+                "except BaseException",
+                "register_drain_hook",
+            ):
+                if needle in text:
+                    hits.append((os.path.relpath(path, root), needle))
+    assert hits == []

@@ -204,7 +204,7 @@ def test_memo_checkpoint_hit_and_drain_eviction(spark):
 def test_memo_checkpoint_drops_stale_session_slots(spark):
     """A slot keyed to a dead SparkContext must be dropped WITHOUT
     unpersisting its ids (id collision with live blocks — see
-    _bm25_postings_shared), and must not satisfy lookups."""
+    memo_checkpoint), and must not satisfy lookups."""
     stale_key = ("dead-app-id", "test_memo_stale", "unit")
     _CK_MEMO[stale_key] = (None, [999999])
     try:

@@ -10,9 +10,10 @@ for each named query (default: all). Plans are captured at
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) — plan SHAPE
 (join strategy, Exchange count, PushedFilters) is what the files pin.
 The final action is never run, but queries built on a materialized
-shared pass (checkpoint_tracked/memo_checkpoint) DO execute that
-pass at plan-construction time, so the session is drained after each
-query to keep a full sweep's executor storage flat.
+shared pass (an eager localCheckpoint, a memo_checkpoint slot or an
+iterate loop) DO execute that pass at plan-construction time, so the
+session is drained after each query to keep a full sweep's executor
+storage flat.
 """
 
 from __future__ import annotations

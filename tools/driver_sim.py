@@ -48,11 +48,12 @@ def main() -> int:
             # legitimately pin, so the session's executor storage is
             # flat across the registry instead of accumulating one
             # block set per iterative query. (Deliberate trade: the
-            # drain also evicts the BM25 postings memo, so a later
-            # retrieval query rebuilds it — cross-query memo warmth
-            # is sacrificed for a flat-storage guarantee the gate
+            # drain also clears every memo_checkpoint slot — the BM25
+            # postings, the shared pair lists — so a later consumer
+            # rebuilds its slot; cross-query memo warmth is
+            # sacrificed for a flat-storage guarantee the gate
             # certifies; the rebuild cost is already inside each
-            # retrieval query's own bench row.)
+            # consumer's own bench row.)
             #
             # OUTSIDE the compare try: the oracle verdict is already
             # printed, and a transient drain error must not relabel a
