@@ -119,32 +119,3 @@ def annotate_np(payload: bytes, boxes: list[list[int]], names: list[str]) -> byt
 
 def detect_series(images: pd.Series) -> pd.Series:
     return images.map(detect_faces_np)
-
-
-def make_embed_udf(weights_broadcast):
-    """Factory for a weight-parameterized embed UDF — the production
-    pattern for model parameters: the driver broadcasts them once
-    (``spark.sparkContext.broadcast``), every executor deserializes
-    once, and the Arrow-batched UDF reads ``.value`` per batch — vs
-    the reference shipping the model implicitly via process fork
-    (run_consumers.py) and the query faces via a Kafka topic
-    (prediction_producer.py:222-228).
-
-    ``weights_broadcast.value`` must be a dict with ``scale`` (float)
-    and ``bias`` (float) applied element-wise to the stub embedding.
-    """
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, FloatType
-
-    @pandas_udf(ArrayType(FloatType()))
-    def embed_with_weights(images: pd.Series, boxes: pd.Series) -> pd.Series:
-        w = weights_broadcast.value  # deserialized once per executor
-        s, b = float(w["scale"]), float(w["bias"])
-        embs = embed_batch_np(list(images), list(boxes))
-        return pd.Series(
-            [[v * s + b for v in e] if e is not None else None for e in embs],
-            index=images.index,
-        )
-
-    return embed_with_weights

@@ -39,40 +39,6 @@ _FRAME_STEP = 3
 _VIDEO_FILTER = "event_id % 50 = 0"
 
 
-def has_pil() -> bool:
-    """True when PIL is importable — the feature gate for the real
-    image codec. The sandbox container ships no imaging library, so
-    there the IMG1 fake codec is the only decode path; any
-    environment with Pillow installed decodes real bytes through the
-    identical mapInPandas plumbing."""
-    try:
-        import PIL.Image  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def decode_image_real(payload: bytes) -> tuple[int, int, int, bytes]:
-    """Real image decode (PNG/JPEG/... via PIL): returns (width,
-    height, channels, raw RGB bytes) — the same tuple shape the IMG1
-    header parse yields, so the two codecs are drop-in swaps inside
-    ``image_stats``. Raises NotImplementedError ONLY where PIL is
-    genuinely absent (reference decodes with cv2,
-    src/utils.py:196-209)."""
-    try:
-        import PIL.Image
-    except ImportError as e:
-        raise NotImplementedError(
-            "real image decode needs PIL/cv2; use the IMG1 fake codec "
-            "(encode_images/image_stats) in this environment"
-        ) from e
-    import io
-
-    img = PIL.Image.open(io.BytesIO(payload)).convert("RGB")
-    return img.width, img.height, 3, img.tobytes()
-
-
 def _be16(col: Column) -> Column:
     return F.unhex(F.lpad(F.hex(col), 4, "0"))
 
@@ -100,35 +66,22 @@ def encode_images(docs: DataFrame) -> DataFrame:
     )
 
 
-def image_stats(images: DataFrame, codec: str = "img1") -> DataFrame:
-    """Decode the image column batch-wise and emit per-image stats.
-    1->1 ``mapInPandas``: decode + payload measurements happen in
-    Python over Arrow batches, never per-row over the wire.
-
-    ``codec="img1"`` parses the fake container header (sandbox path);
-    ``codec="real"`` decodes genuine PNG/JPEG bytes via PIL
-    (decode_image_real) — identical schema, identical plan shape, so
-    environments with Pillow swap codecs without touching the Spark
-    side."""
-    if codec not in ("img1", "real"):
-        raise ValueError(f"unknown codec {codec!r}")
+def image_stats(images: DataFrame) -> DataFrame:
+    """Decode the IMG1 image column batch-wise and emit per-image
+    stats. 1->1 ``mapInPandas``: header parse + payload measurements
+    happen in Python over Arrow batches, never per-row over the wire.
+    A real decoder (cv2/PIL) would replace the header parse and keep
+    the schema and plan shape."""
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
             for doc_id, blob in zip(pdf["doc_id"], pdf["image"]):
                 b = bytes(blob)
-                if codec == "real":
-                    w, h, ch, raw = decode_image_real(b)
-                    payload = raw
-                else:
-                    assert b[:4] == _MAGIC, "bad magic"
-                    w, h = struct.unpack(">HH", b[4:8])
-                    ch = b[8]
-                    payload = b[9:]
-                rows.append(
-                    (int(doc_id), w, h, ch, w * h * ch, len(payload))
-                )
+                assert b[:4] == _MAGIC, "bad magic"
+                w, h = struct.unpack(">HH", b[4:8])
+                ch = b[8]
+                rows.append((int(doc_id), w, h, ch, w * h * ch, len(b) - 9))
             yield pd.DataFrame(
                 rows,
                 columns=[
@@ -517,8 +470,8 @@ def multimodal_audio_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audio-modality plumbing, round-trip checked: documents encode
     to AUD1 PCM16 containers with JVM expressions (WAV-style header +
     little-endian samples), then a 1->N mapInPandas pass parses the
-    REAL bytes — PCM decode is exact reinterpretation, so unlike the
-    image codec nothing here is feature-gated — and windows them
+    REAL bytes — PCM decode is exact reinterpretation, so no media
+    library is needed — and windows them
     (size {_AUD_WIN}, stride {_AUD_STRIDE}, short remainders kept:
     lengths are chosen indivisible by the stride) with integer
     energy stats per window. The oracle re-derives every window from

@@ -1,11 +1,12 @@
-"""Batch sinks: partitioned and per-key-routed parquet writers.
+"""Batch sinks: key-partitioned and bucketed parquet writers.
 
 The reference's sinks are Kafka topics — one per camera for results
 (``predicted_..._{cam}``, src/params.py:17, prediction_producer.py:
 269-271) — plus Flask-served image blobs. This container has no
-broker, so the batch sinks materialize the same layouts on files;
-the streaming analogs (foreachBatch, memory, checkpointed routed
-sink) live in streaming/pipeline.py and streaming/harness.py.
+broker, so the batch sinks materialize the same layouts on files,
+read back with plain ``spark.read.parquet``; every streaming sink
+(foreachBatch, memory, parquet, noop) starts through
+``streaming.harness.drain_stream``.
 
 Scale notes: ``partitionBy`` writes one directory per key value and
 enables partition pruning on read-back — the file-side equivalent of
@@ -16,7 +17,7 @@ partition's file (the small-files explosion at 1000 executors).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_partitioned(
@@ -26,10 +27,6 @@ def write_partitioned(
     pre-shuffle on the keys so each output partition is written by
     one task — bounded file counts at any executor count."""
     df.repartition(*keys).write.mode(mode).partitionBy(*keys).parquet(path)
-
-
-def read_partitioned(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
 
 
 def write_bucketed(

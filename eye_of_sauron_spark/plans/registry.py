@@ -32,108 +32,6 @@ class Query:
 
 _REGISTRY: dict[str, Query] = {}
 
-# The driver's correctness harness checks at most ~50 registry entries
-# per round, in iteration order. Names listed here are emitted FIRST by
-# all_queries()/all_oracles() so queries with the OLDEST driver
-# evidence re-green before already-fresh ones rotate back in. Unlisted
-# names follow in registration order. Rotate this list each round to
-# whatever CORRECTNESS_r*.json shows as longest-unchecked — r03 and r04
-# pinned the same 50 names and starved the other 21 (VERDICT r04 #4).
-_VERIFY_FIRST: tuple[str, ...] = (
-    # --- r17 rotation (50 entries = the driver's measured per-round
-    # budget) ---
-    # BASIS (permanent rule, VERDICT r13 #1): generated from
-    # `python tools/evidence_ledger.py` over the CORRECTNESS_r*.json
-    # files PRESENT AT ROUND START (r01..r11, r13..r16; r12 externally
-    # lost). Ledger at r17 start: 50 r16 / 50 r15 / 50 r14 / 20 r13 —
-    # every registered query has a driver row, so the head is purely
-    # the freshness tail: 1 + 20 + 29 = 50 (VERDICT r16 #2).
-    # 0) the round's one new registration (cap <= 2, VERDICT r16 #3:
-    # the MinHash band-count ladder, the judge-named symmetric
-    # candidate mirroring the two ANN dial ladders) — new queries
-    # enter the head so they never sit in the "no driver row yet"
-    # class. It displaces the alphabetically-LAST of the 30 oldest
-    # r14 rows (similarity_topk_pq_trained), r14's convention.
-    "dedup_minhash_band_ladder",
-    # 1) the 20 rows whose latest driver evidence is r13.
-    "schema_evolution_ingest",
-    "search_bm25_topk",
-    "similarity_mrl_recall",
-    "similarity_pq_recall",
-    "similarity_topk_lsh",
-    "similarity_topk_mrl_rerank",
-    "similarity_topk_pq_rerank",
-    "similarity_topk_sq8_rerank",
-    "sketch_countmin_freq",
-    "split_group_routed",
-    "stream_funnel_replay",
-    "stream_observe_metrics_replay",
-    "stream_reorder_overflow_replay",
-    "stream_session_window",
-    "text_char_diversity",
-    "text_chunking",
-    "text_pii_scrub",
-    "timeseries_ohlc_resample",
-    "window_first_match_semantics",
-    "window_time_range_rolling",
-    # 2) 29 of the 50 rows whose latest driver evidence is r14 (30
-    # slots minus the one the new registration above took). All 50
-    # tie on freshness, so the tiebreak is the ledger's own listing
-    # order (alphabetical) — mechanical, reproducible from the
-    # artifacts, no per-name judgement calls.
-    "anomaly_zscore_events",
-    "cdc_latest_snapshot",
-    "cohort_retention_orders",
-    "cube_quantity",
-    "curation_pipeline_e2e",
-    "dataset_diff_snapshots",
-    "decontam_source_overlap_matrix",
-    "dedup_cluster_components",
-    "dedup_edit_distance",
-    "dedup_embedding_cosine",
-    "dedup_incremental_corpus",
-    "dedup_minhash_lsh",
-    "dedup_minhash_recall",
-    "dedup_span_coverage",
-    "event_sequence_trigrams",
-    "graph_triangle_census",
-    "histogram_equi_depth_value",
-    "join_salted_skew",
-    "json_map_explode",
-    "market_basket_part_pairs",
-    "mixture_temperature_sample",
-    "pca_power_iteration",
-    "profile_events_columns",
-    "range_join_time_buckets",
-    "scd2_merge_customers",
-    "setop_intersect_nations",
-    "setop_union_nations",
-    "similarity_ivf_recall",
-    "similarity_pq_trained_recall",
-    # --- deferred to r18: the remaining 21 r14 rows (alphabetically
-    # from similarity_topk_pq_trained, which this round's new
-    # registration displaced: similarity_topk_pq_trained,
-    # sketch_quantiles_value, skyline_pareto_orders,
-    # stream_cdc_apply_replay, stream_change_detect_replay,
-    # stream_funnel_bucketed_replay, stream_late_drop_replay,
-    # stream_left_join_replay, stream_rebroadcast_replay,
-    # stream_restart_replay, stream_session_replay,
-    # stream_update_mode_replay, stream_window_replay, text_bigram_lm,
-    # text_lm_score, textrank_keywords, timeseries_gap_fill,
-    # topk_orders_by_price, validate_events_expectations,
-    # window_percent_rank_acctbal, winsorize_values_by_type). After
-    # r17 lands the ledger reads 50 r17 / 50 r16 / 50 r15 / 21 r14 —
-    # nothing older than r14, holding the 3.4-round refresh cycle.
-    # All deferred rows re-green locally in every pytest run
-    # (tests/test_queries_oracle.py).
-)
-
-
-def _ordered() -> list[Query]:
-    first = [_REGISTRY[n] for n in _VERIFY_FIRST if n in _REGISTRY]
-    rest = [q for q in _REGISTRY.values() if q.name not in _VERIFY_FIRST]
-    return first + rest
-
 
 def query(name: str, oracle: str | None) -> Callable[[QueryFn], QueryFn]:
     """Register ``fn`` under ``name`` with its DuckDB oracle SQL."""
@@ -148,11 +46,13 @@ def query(name: str, oracle: str | None) -> Callable[[QueryFn], QueryFn]:
 
 
 def all_queries() -> dict[str, QueryFn]:
-    return {q.name: q.fn for q in _ordered()}
+    """Every registered query, in registration order."""
+    return {q.name: q.fn for q in _REGISTRY.values()}
 
 
 def all_oracles() -> dict[str, str]:
-    return {q.name: q.oracle for q in _ordered() if q.oracle is not None}
+    """Every oracle SQL string, in registration order."""
+    return {q.name: q.oracle for q in _REGISTRY.values() if q.oracle is not None}
 
 
 def get(name: str) -> Query:

@@ -23,36 +23,21 @@ from pyspark.sql import SparkSession
 _DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
-_ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
-
-
 def get_spark(
     app_name: str = "eye_of_sauron_spark",
     master: str | None = None,
     extra_conf: dict[str, str] | None = None,
-    state_store: str = "hdfs",
 ) -> SparkSession:
     """Build (or fetch) the session with scale-aware defaults.
 
-    ``state_store``: ``"hdfs"`` (default — executor-heap
-    HDFSBackedStateStoreProvider) or ``"rocksdb"`` (off-heap local
-    RocksDB + changelog). The default heap provider holds EVERY
-    stateful operator's keys in executor memory — fine at test scale,
-    but the 10x stream-dedup probe already measures 348 MB of heap
-    state (SCALE.md), which at 100x is multi-GB per executor and
-    evicts the working set. RocksDB keeps state on local SSD with a
-    block-cache, so state capacity scales with disk, not heap — the
-    standard choice for large-state production streams. Results are
-    provider-independent (pinned by tests/test_round9_ops.py); it is
-    a runtime SQL conf, so it can also be flipped per-query before
-    ``start()`` on an existing session.
-
-    StateStore conf ownership is per-call: every ``get_spark`` call
-    (re)applies ``state_store`` + ``extra_conf`` to the live session,
-    so a plain call resets any custom provider an earlier call wired
-    through ``extra_conf`` — re-pass it on each call to keep it."""
+    The streaming state store stays Spark's default executor-heap
+    provider, which holds every stateful key in executor memory (342 MB
+    at the 10x stream-dedup probe, SCALE.md 'RocksDB state-store
+    probe'). A large-state stream picks RocksDB for itself
+    (``run_to_memory(..., conf=...)`` / ``drain_stream(..., conf=...)``,
+    scoped and restored by ``harness.ephemeral_checkpoint``); a whole
+    session picks it through ``extra_conf``. Results are
+    provider-independent (pinned by tests/test_round9_ops.py)."""
     cpus = _DEFAULT_CPUS
     builder = (
         SparkSession.builder.appName(app_name)
@@ -89,51 +74,8 @@ def get_spark(
         builder = builder.config(
             "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
         )
-    if state_store == "rocksdb":
-        builder = builder.config(
-            "spark.sql.streaming.stateStore.providerClass", _ROCKSDB_PROVIDER
-        ).config(
-            # changelog checkpointing ships per-batch deltas instead of
-            # full RocksDB snapshots — the commit path stays O(changed
-            # keys) as total state grows
-            "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-            "true",
-        )
-    elif state_store != "hdfs":
-        raise ValueError(f"state_store must be 'hdfs' or 'rocksdb', got {state_store!r}")
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
-    # getOrCreate silently ignores builder configs when a session
-    # already exists in the JVM, which would leave a caller that
-    # flipped state_store mid-process on the other provider with no
-    # error — in EITHER direction (heap session + rocksdb request, or
-    # rocksdb session + default-heap request). Both stateStore confs
-    # are runtime SQL confs read at stream start, so setting/unsetting
-    # them on the live session is always honored (and idempotent on a
-    # fresh one).
-    if state_store == "rocksdb":
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass", _ROCKSDB_PROVIDER
-        )
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-            "true",
-        )
-    else:
-        for key in (
-            "spark.sql.streaming.stateStore.providerClass",
-            "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        ):
-            # provider ownership is PER-CALL: each get_spark call fully
-            # determines the stateStore confs for the session it
-            # returns. THIS call's extra_conf may pin the keys; a later
-            # plain get_spark() on the live session deliberately resets
-            # them to the default heap provider — callers who want a
-            # custom provider to persist across get_spark calls must
-            # pass it in extra_conf on every call (or set it directly
-            # on spark.conf after the last get_spark).
-            if not (extra_conf and key in extra_conf):
-                spark.conf.unset(key)
     spark.sparkContext.setLogLevel("WARN")
     return spark

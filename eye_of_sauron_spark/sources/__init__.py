@@ -1,10 +1,8 @@
-from .tables import TABLES, load_table, load_tables, register_views
+from .tables import TABLES, load_table, register_views
 
 __all__ = [
     "TABLES",
-    "catalog",
     "load_table",
-    "load_tables",
     "register_views",
     "streams",
 ]
@@ -13,7 +11,7 @@ __all__ = [
 def __getattr__(name):
     # lazy: streams pulls in the streaming package, which imports back
     # into sources — deferring breaks the cycle without import-order tricks
-    if name in ("streams", "catalog"):
+    if name == "streams":
         import importlib
 
         mod = importlib.import_module(f".{name}", __name__)

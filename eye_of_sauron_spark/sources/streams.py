@@ -1,4 +1,4 @@
-"""Streaming source builders: kafka / rate / file.
+"""Streaming sources: kafka / file.
 
 The reference consumes Kafka topics partition-by-partition with
 manual assignors (src/prediction_producer.py:64-66, 94-118); in
@@ -6,7 +6,7 @@ Structured Streaming the same ingestion is one ``readStream`` whose
 partition->task mapping, offset tracking, and rebalance are handled
 by the engine. No broker ships in this container, so ``kafka_stream``
 is a configuration builder (exercised in production, not here); the
-rate and file sources drive every local test through the identical
+file source drives every local test through the identical
 micro-batch machinery.
 """
 
@@ -150,17 +150,3 @@ def kafka_stream(
     ).items():
         reader = reader.option(k, v)
     return reader.load()
-
-
-def rate_micro_batch_stream(
-    spark: SparkSession, rows_per_batch: int = 100, num_partitions: int = 4
-) -> DataFrame:
-    """Deterministic rate source: exactly ``rows_per_batch`` rows per
-    micro-batch — reproducible streaming tests without wall-clock
-    dependence."""
-    return (
-        spark.readStream.format("rate-micro-batch")
-        .option("rowsPerBatch", rows_per_batch)
-        .option("numPartitions", num_partitions)
-        .load()
-    )

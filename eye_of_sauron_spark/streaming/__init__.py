@@ -14,12 +14,16 @@ semantics onto Structured Streaming:
   start every stream through ``drain_stream``, the one start (an
   availableNow drain inside the ``ephemeral_checkpoint`` conf scope).
   ``run_to_memory`` is its memory-sink form and owns the checkpoint
-  dir, the sink name and the sink's temp view.
+  dir, the sink name and the sink's temp view. Per-stream confs
+  (e.g. the RocksDB state-store provider) ride ``conf=`` and are
+  restored when the drain ends.
 - ``reorder``  : the reference's per-camera ordered-reassembly buffer
   (src/utils.py:139-191) as a bounded stateful operator with
   state eviction (the reference's version leaks, utils.py:50,168).
+- ``change_detect`` : the reference's "smart" frame skip as a keyed
+  ``applyInPandasWithState`` operator (last emitted hash per camera).
 - ``pipeline`` : the face-pipeline analog — stream-static broadcast
-  join (A5), per-key sink routing (A9), checkpointed exactly-once
+  join (A5), per-key topic routing (A9), checkpointed exactly-once
   file sink (A10).
 """
 

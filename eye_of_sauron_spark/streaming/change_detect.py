@@ -1,38 +1,25 @@
-"""Per-camera consecutive-duplicate frame suppression on the
-``transformWithStateInPandas`` API (Spark 4 stateful processors).
+"""Per-camera consecutive-duplicate frame suppression as a keyed
+``applyInPandasWithState`` operator.
 
 The reference's "smart" capture mode drops frames identical to the
 previous one at the SOURCE (imutils path, frame_producer.py:100-119)
 — a per-camera stateful filter. Here it is a keyed stateful streaming
 operator: state is one value per camera (the last emitted payload
 hash), rows stream through in frame order, and only change points
-survive. Compare reorder.py, which uses the older
-``applyInPandasWithState``; this module exercises the newer
-StatefulProcessor API (named state variables, timers, TTL support).
+survive. Compare reorder.py, the other per-camera state machine on
+the same API.
 
 Scale notes: one shuffle on camera; state is O(1) per key (a single
-hash), read/updated once per batch per key.
-
-DEPENDENCY NOTE: transformWithStateInPandas speaks protobuf
-between the JVM and the Python state server, and ``google.protobuf``
-is not installed in this container. ``drop_unchanged_frames``
-therefore carries BOTH implementations of the identical semantics —
-the StatefulProcessor above where protobuf is importable, and an
-``applyInPandasWithState`` port (no extra dependency) otherwise — and
-dispatches on availability, so the operator has executed test
-evidence in every environment (VERDICT r05 #4).
+hash), read/updated once per batch per key. The operator is
+provider-independent: a large-state stream passes the RocksDB
+provider per stream (``run_to_memory(..., conf=...)``).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.stateful_processor import (
-    StatefulProcessor,
-    StatefulProcessorHandle,
-)
+from pyspark.sql.streaming.state import GroupStateTimeout
 from pyspark.sql.types import (
     IntegerType,
     StringType,
@@ -48,53 +35,12 @@ OUTPUT_SCHEMA = StructType(
     ]
 )
 
-
-class ChangeDetectProcessor(StatefulProcessor):
-    """Emit a frame only when its payload hash differs from the last
-    EMITTED frame of the same camera (state survives micro-batches)."""
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._last = handle.getValueState(
-            "last_hash", StructType([StructField("h", StringType())])
-        )
-
-    def handleInputRows(
-        self, key, rows: Iterator[pd.DataFrame], timerValues
-    ) -> Iterator[pd.DataFrame]:
-        last = self._last.get()[0] if self._last.exists() else None
-        cams, fns, hs = [], [], []
-        pdf = pd.concat(list(rows)).sort_values("frame_num")
-        for fn, h in zip(pdf["frame_num"], pdf["payload_hash"]):
-            if h != last:
-                cams.append(int(key[0]))
-                fns.append(int(fn))
-                hs.append(h)
-                last = h
-        self._last.update((last,))
-        if cams:
-            yield pd.DataFrame(
-                {"camera": cams, "frame_num": fns, "payload_hash": hs}
-            )
-
-    def close(self) -> None:
-        pass
-
-
-def _has_protobuf() -> bool:
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
 _STATE_SCHEMA = StructType([StructField("h", StringType())])
 
 
 def _detect_changes(key, pdfs, state):
-    """applyInPandasWithState port of ChangeDetectProcessor: same
-    state (last emitted hash per camera), same emit rule."""
+    """Emit a frame only when its payload hash differs from the last
+    EMITTED frame of the same camera (state survives micro-batches)."""
     last = state.get[0] if state.exists else None
     cams, fns, hs = [], [], []
     pdf = pd.concat(list(pdfs)).sort_values("frame_num")
@@ -109,31 +55,9 @@ def _detect_changes(key, pdfs, state):
         yield pd.DataFrame({"camera": cams, "frame_num": fns, "payload_hash": hs})
 
 
-def drop_unchanged_frames(
-    frames: DataFrame, use_tws: bool | None = None
-) -> DataFrame:
+def drop_unchanged_frames(frames: DataFrame) -> DataFrame:
     """Apply the change detector to a streaming DataFrame with
-    columns (camera INT, frame_num INT, payload_hash STRING).
-
-    ``use_tws=None`` auto-selects: the StatefulProcessor path where
-    ``google.protobuf`` is importable, the applyInPandasWithState
-    path otherwise. Both carry identical per-camera semantics.
-
-    transformWithStateInPandas additionally requires the RocksDB
-    state store — set ``spark.sql.streaming.stateStore.providerClass``
-    to ``...state.RocksDBStateStoreProvider`` on the session (the
-    HDFS provider does not implement the new state API)."""
-    if use_tws is None:
-        use_tws = _has_protobuf()
-    if use_tws:
-        return frames.groupBy("camera").transformWithStateInPandas(
-            ChangeDetectProcessor(),
-            outputStructType=OUTPUT_SCHEMA,
-            outputMode="Append",
-            timeMode="None",
-        )
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
+    columns (camera INT, frame_num INT, payload_hash STRING)."""
     return frames.groupBy("camera").applyInPandasWithState(
         _detect_changes,
         outputStructType=OUTPUT_SCHEMA,

@@ -89,40 +89,18 @@ def ephemeral_checkpoint(
                 spark.conf.unset(k)
 
 
-def write_microbatch_files(
-    spark: SparkSession, batches: list[DataFrame], out_dir: str
-) -> None:
-    """Write each DataFrame as one parquet file in ``out_dir``, with
-    strictly increasing modification times so the file source replays
-    them as ordered micro-batches."""
-    os.makedirs(out_dir, exist_ok=True)
-    base = time.time() - 3600
-    for i, df in enumerate(batches):
-        part_dir = os.path.join(out_dir, f"_stage_{i}")
-        df.coalesce(1).write.mode("overwrite").parquet(part_dir)
-        src = next(
-            f for f in os.listdir(part_dir) if f.endswith(".parquet")
-        )
-        dst = os.path.join(out_dir, f"batch_{i:04d}.parquet")
-        os.replace(os.path.join(part_dir, src), dst)
-        os.utime(dst, (base + i, base + i))
-        # clean the staging dir
-        for f in os.listdir(part_dir):
-            os.remove(os.path.join(part_dir, f))
-        os.rmdir(part_dir)
-
-
 def write_microbatch_files_partitioned(
     df: DataFrame, batch_col: str, n_batches: int, out_dir: str
 ) -> None:
-    """Same contract as ``write_microbatch_files`` — one parquet file
-    per micro-batch, modification times increasing in batch order —
-    but written in ONE Spark job: the source DataFrame is hash-
-    partitioned on the batch column and written with ``partitionBy``,
-    then the per-batch files are moved into place. ``n_batches``
-    separate filter+write jobs re-run the upstream plan once per
-    batch (the replay's scramble window made that 8x a full window
-    over events)."""
+    """Write ``df`` as one parquet file per micro-batch in ``out_dir``
+    (file ``batch_{i:04d}`` holds the rows whose ``batch_col`` is i),
+    with modification times increasing in batch order, so the file
+    source replays them as ordered micro-batches. ONE Spark job: the
+    source DataFrame is hash-partitioned on the batch column and
+    written with ``partitionBy``, then the per-batch files are moved
+    into place. ``n_batches`` separate filter+write jobs would re-run
+    the upstream plan once per batch (the replay's scramble window
+    made that 8x a full window over events)."""
     os.makedirs(out_dir, exist_ok=True)
     stage = os.path.join(out_dir, "_stage")
     (

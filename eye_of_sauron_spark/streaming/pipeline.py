@@ -9,8 +9,9 @@ Reference mapping:
   than blocking.
 - A9  per-camera result topics (``predicted_..._{cam}``,
   src/params.py:17, prediction_producer.py:269-271): a computed
-  ``topic`` column; the Kafka sink routes per-row on it, and the file
-  sink below materializes the identical layout with partitionBy.
+  ``topic`` column (``match_stream``, the one owner of the routing);
+  the Kafka sink routes per-row on it. The face-pipeline stream below
+  materializes the per-camera layout on files with partitionBy.
 - A10 manual per-message offset commits (prediction_producer.py:
   109-111): replaced by the checkpoint location — re-running a
   drained stream emits nothing new (verified in tests).
@@ -62,17 +63,7 @@ def run_match_rebroadcast_stream(
 
     def _match(batch: DataFrame, _epoch_id: int) -> None:
         targets = batch.sparkSession.read.parquet(targets_path)
-        (
-            batch.join(F.broadcast(targets), "user_id")
-            .withColumn(
-                "topic",
-                F.concat(
-                    F.lit(TOPIC_PREFIX), (F.col("user_id") % 4).cast("string")
-                ),
-            )
-            .write.mode("append")
-            .parquet(out_dir)
-        )
+        match_stream(batch, targets).write.mode("append").parquet(out_dir)
 
     drain_stream(events_stream, lambda w: w.foreachBatch(_match), checkpoint_dir)
 
@@ -104,18 +95,3 @@ def run_face_pipeline_stream(
         checkpoint_dir,
     )
 
-
-def run_routed_file_sink(
-    routed: DataFrame, out_dir: str, checkpoint_dir: str
-) -> None:
-    """Checkpointed availableNow drain into a topic-partitioned file
-    sink (the Kafka-sink stand-in: one directory per topic)."""
-    drain_stream(
-        routed,
-        lambda w: w.foreachBatch(
-            lambda batch, _eid: batch.write.mode("append")
-            .partitionBy("topic")
-            .parquet(out_dir)
-        ),
-        checkpoint_dir,
-    )

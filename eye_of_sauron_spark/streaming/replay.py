@@ -235,9 +235,6 @@ def stream_reorder_overflow_replay(spark: SparkSession, sf_dir: str) -> DataFram
 _CD_CAMERAS = 16
 _CD_FRAMES = 200
 _CD_SPAN = 25
-_CD_CHANGELOG_KEY = (
-    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-)
 
 _CHANGE_DETECT_ORACLE = f"""
     WITH frames AS ({_camera_frames_duck(_CD_CAMERAS)}),
@@ -276,18 +273,13 @@ def stream_change_detect_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     in batch k and continues into batch k+1 must stay suppressed, so
     a detector whose last-emitted-hash state is lost between batches
     (or whose checkpoint recovery resurrects it stale) changes the
-    emitted set and fails the hash compare. ``drop_unchanged_frames``
-    auto-dispatches transformWithStateInPandas (protobuf available;
-    needs the RocksDB store, scoped-set here) vs
-    applyInPandasWithState, so the replay drives whichever stateful
-    API the environment supports — the same dual-path contract the
-    unit test pins (tests/test_streaming.py).
+    emitted set and fails the hash compare.
 
     Scale shape: one shuffle on camera; state is O(1) per key (one
     hash string), read/updated once per batch per key — the filter
     runs where the data is, unlike the reference's source-side skip
     which serializes it per producer process."""
-    from .change_detect import _has_protobuf, drop_unchanged_frames
+    from .change_detect import drop_unchanged_frames
 
     frames = _camera_frames(spark, sf_dir, _CD_CAMERAS, _CD_FRAMES)
     chg = (F.col("frame_num") == 0) | (
@@ -306,16 +298,6 @@ def stream_change_detect_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.col("frame_num") / _CD_SPAN).cast("int").alias("batch"),
     )
     n_batches = _CD_FRAMES // _CD_SPAN
-    # the tws path requires the RocksDB store (results are provider-
-    # independent), with per-batch changelog deltas instead of full
-    # snapshot sync, as session.py documents. Without protobuf the
-    # applyInPandasWithState fallback runs and this stays pytest-pinned.
-    tws_conf = {
-        "spark.sql.streaming.stateStore.providerClass":
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        _CD_CHANGELOG_KEY: "true",
-    } if _has_protobuf() else None
     in_dir = staged_microbatch_log(
         ("change_detect_frames", os.path.realpath(sf_dir), n_batches),
         n_batches,
@@ -324,9 +306,7 @@ def stream_change_detect_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = file_stream(
         spark, in_dir, "camera INT, frame_num INT, payload_hash STRING"
     )
-    emitted = run_to_memory(
-        drop_unchanged_frames(stream), width=_CD_CAMERAS, conf=tws_conf
-    )
+    emitted = run_to_memory(drop_unchanged_frames(stream), width=_CD_CAMERAS)
     return emitted.select("camera", "frame_num", "payload_hash")
 
 

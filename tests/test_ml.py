@@ -120,21 +120,3 @@ def test_face_pipeline_end_to_end(spark, sf_dir):
         assert out.filter("NOT annot_ok").count() == 0
     finally:
         out.unpersist()
-
-
-def test_broadcast_weights_udf(spark, sf_dir):
-    """Model parameters ship via broadcast variable and are read
-    inside the Arrow UDF — the scaled embedding must equal the stub
-    embedding transformed by the broadcast weights."""
-    from eye_of_sauron_spark.ml.models import make_embed_udf
-
-    bw = spark.sparkContext.broadcast({"scale": 2.0, "bias": 1.0})
-    frames = frames_from_events(load_table(spark, sf_dir, "events")).limit(50)
-    detected = detect_embed(frames).filter(F.col("box").isNotNull()).limit(20)
-    weighted = detected.withColumn(
-        "wemb", make_embed_udf(bw)("payload", "box")
-    ).select("emb", "wemb").collect()
-    assert len(weighted) > 0
-    for r in weighted:
-        for e, w in zip(r["emb"], r["wemb"]):
-            assert abs(w - (e * 2.0 + 1.0)) < 1e-5

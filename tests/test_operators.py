@@ -1,13 +1,11 @@
 """Multimodal codec and batch-sink tests: IMG1 round-trip fidelity,
-1->N frame sampling, NotImplementedError gate for real decode, and
-partition-pruned read-back of the routed parquet sink."""
+1->N frame sampling, and partition-pruned read-back of the routed
+parquet sink."""
 
 from __future__ import annotations
 
-import base64
 import struct
 
-import pytest
 from pyspark.sql import functions as F
 
 from eye_of_sauron_spark.operators.multimodal import (
@@ -16,7 +14,7 @@ from eye_of_sauron_spark.operators.multimodal import (
     image_stats,
     sample_frames,
 )
-from eye_of_sauron_spark.operators.sinks import read_partitioned, write_partitioned
+from eye_of_sauron_spark.operators.sinks import write_partitioned
 from eye_of_sauron_spark.sources import load_table
 
 
@@ -62,7 +60,7 @@ def test_partitioned_sink_prunes(spark, sf_dir, tmp_path):
     events = load_table(spark, sf_dir, "events")
     out = str(tmp_path / "routed")
     write_partitioned(events, out, ["event_type"])
-    back = read_partitioned(spark, out)
+    back = spark.read.parquet(out)
     assert back.count() == events.count()
     one = back.filter(F.col("event_type") == "click")
     assert one.count() == events.filter("event_type = 'click'").count()
@@ -98,39 +96,3 @@ def test_bucketed_tables_join_without_shuffle(spark, sf_dir, tmp_path):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
         spark.sql("DROP TABLE IF EXISTS b_orders")
         spark.sql("DROP TABLE IF EXISTS b_lineitem")
-
-
-# A tiny valid 1x1 PNG (red pixel) for the real-codec branch.
-_PNG_1PX = base64.b64decode(
-    "iVBORw0KGgoAAAANSUhEUgAAAAEAAAABCAYAAAAfFcSJAAAADUlEQVR4"
-    "2mP8z8BQDwAEhQGAhKmMIQAAAABJRU5ErkJggg=="
-)
-
-
-def test_real_image_codec_branch(spark):
-    """Both branches of the PIL feature gate execute meaningfully: with
-    Pillow installed the REAL bytes decode through the same
-    mapInPandas plumbing as IMG1; without it the gate raises
-    NotImplementedError — and is the ONLY place that error lives."""
-    from eye_of_sauron_spark.operators import multimodal as mm
-
-    if mm.has_pil():
-        w, h, ch, raw = mm.decode_image_real(_PNG_1PX)
-        assert (w, h, ch) == (1, 1, 3) and len(raw) == 3
-        df = spark.createDataFrame(
-            [(1, bytearray(_PNG_1PX))], "doc_id LONG, image BINARY"
-        )
-        row = mm.image_stats(df, codec="real").collect()[0]
-        assert (row["width"], row["height"], row["channels"]) == (1, 1, 3)
-        assert row["n_pixels"] == 3 and row["payload_len"] == 3
-    else:
-        with pytest.raises(NotImplementedError, match="real image decode"):
-            mm.decode_image_real(_PNG_1PX)
-
-
-def test_image_stats_rejects_unknown_codec(spark):
-    from eye_of_sauron_spark.operators import multimodal as mm
-
-    df = spark.createDataFrame([(1, b"x")], "doc_id LONG, image BINARY")
-    with pytest.raises(ValueError, match="unknown codec"):
-        mm.image_stats(df, codec="tiff")

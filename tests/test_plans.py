@@ -319,18 +319,32 @@ def test_embedding_dedup_banding_has_full_recall(spark, sf_dir):
     assert len(banded) > 0
 
 
-def test_verify_first_names_are_registered():
-    # every name the driver-priority list emits first must be a real
-    # registered query — ghost entries starve the rotation silently
-    # (VERDICT r03/r04); and priority names must be unique
-    from eye_of_sauron_spark.plans.registry import _REGISTRY, _VERIFY_FIRST
+def test_rotation_leads_with_oldest_evidence(tmp_path):
+    """Each round's correctness check covers about 50 entries in
+    iteration order, so __spark_entry__ orders them by (latest checked
+    round, name), computed from the CORRECTNESS_r*.json ledgers:
+    unchecked names first, and the newest ledger's names never in the
+    head."""
+    import json
 
-    ghosts = [n for n in _VERIFY_FIRST if n not in _REGISTRY]
-    assert not ghosts, f"ghost _VERIFY_FIRST entries: {ghosts}"
-    assert len(set(_VERIFY_FIRST)) == len(_VERIFY_FIRST)
-    # ordering contract: all_queries() leads with the priority names
-    first = list(plans.all_queries())[: len(_VERIFY_FIRST)]
-    assert first == list(_VERIFY_FIRST)
+    import __spark_entry__ as entry_mod
+
+    # planted ledgers: r03 is the pre-r08 nested shape, r05 is flat
+    (tmp_path / "CORRECTNESS_r03.json").write_text(
+        json.dumps({"queries": {"b": {}, "c": {}, "e": {}}})
+    )
+    (tmp_path / "CORRECTNESS_r05.json").write_text(json.dumps({"c": {}, "f": {}}))
+    got = entry_mod.rotation(["f", "e", "d", "c", "b", "a"], str(tmp_path))
+    assert got == ["a", "d", "b", "e", "c", "f"]
+    assert entry_mod.rotation(["b", "a"], str(tmp_path / "none")) == ["a", "b"]
+
+    # the newest ledger in the repo (CORRECTNESS_r18.json today)
+    latest = entry_mod.latest_rows()
+    last_round = {n for n, r in latest.items() if r == max(latest.values())}
+    qs, sql = entry_mod.queries(), plans.all_oracles()
+    assert set(qs) == set(plans.all_queries())
+    assert list(entry_mod.oracle_sql()) == [n for n in qs if n in sql]
+    assert not set(list(qs)[:50]) & last_round
 
 
 def test_tfidf_vocab_join_degrades_to_shuffle(spark, sf_dir):

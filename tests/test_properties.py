@@ -106,8 +106,7 @@ def test_reorder_with_gaps_never_reorders_or_duplicates(present, buffer_size):
 @settings(max_examples=200, deadline=None)
 def test_change_detector_collapses_runs(hs, splits, seed):
     """A1 smart-mode state machine (streaming/change_detect.py
-    _detect_changes — the same per-key semantics as the
-    StatefulProcessor variant): for ANY hash sequence, ANY micro-batch
+    _detect_changes): for ANY hash sequence, ANY micro-batch
     split, and ANY within-batch arrival shuffle, the emitted frames
     are exactly the change points (frame 0 + every frame whose hash
     differs from its predecessor) — runs collapse across batch

@@ -1,7 +1,6 @@
 """Round-10 additions: the all-NULL-group sketch-contract
-short-circuit and the live-session RocksDB conf fix (both r09 ADVICE
-items), plus the BM25 evidence package and the observe()-metrics
-replay."""
+short-circuit (r09 ADVICE), plus the BM25 evidence package and the
+observe()-metrics replay."""
 
 from __future__ import annotations
 
@@ -45,30 +44,6 @@ def test_sketch_contract_all_null_group(spark, tmp_path):
     assert set(oracle) == set(rows)
     for et in oracle:
         assert oracle[et][1] == rows[et]["n_events"]
-
-
-def test_get_spark_rocksdb_applies_to_existing_session(spark):
-    """getOrCreate ignores builder configs when the JVM session
-    already exists — get_spark(state_store='rocksdb') must still
-    flip the provider (it is a runtime SQL conf read at stream
-    start), not silently keep the heap provider (r09 ADVICE,
-    session.py)."""
-    from eye_of_sauron_spark.session import _ROCKSDB_PROVIDER, get_spark
-
-    key = "spark.sql.streaming.stateStore.providerClass"
-    changelog = (
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    )
-    default = spark.conf.get(key)
-    assert "RocksDB" not in default
-    try:
-        same = get_spark(state_store="rocksdb")
-        assert same is spark  # session reuse is the scenario under test
-        assert spark.conf.get(key) == _ROCKSDB_PROVIDER
-        assert spark.conf.get(changelog) == "true"
-    finally:
-        spark.conf.set(key, default)
-        spark.conf.unset(changelog)
 
 
 def test_observe_metrics_replay_dense_batches(spark, sf_dir):

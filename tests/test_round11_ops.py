@@ -1,8 +1,6 @@
 """Round-11 additions: ADVICE fixes + the two new operators.
 
 Covers
-- session.py: default/heap request now unsets a live session's
-  RocksDB provider (the reverse direction of the r10 fix).
 - streaming/replay.py: listener drain dedupes re-executed batches.
 - plans/dedup.py: `dedup_semantic_cells` (SemDeDup-style
   cluster-then-prune) — plan pins zero cross-cell pairs.
@@ -13,35 +11,6 @@ Covers
 from __future__ import annotations
 
 import pytest
-
-
-def test_get_spark_heap_unsets_rocksdb_on_existing_session(spark):
-    """The r10 fix was one-directional: a rocksdb request overrides a
-    live heap session, but a default/heap request on a process whose
-    session was created with rocksdb silently kept the RocksDB
-    provider (r10 ADVICE, session.py). Both directions must now be
-    honored on the live session."""
-    from eye_of_sauron_spark.session import _ROCKSDB_PROVIDER, get_spark
-
-    key = "spark.sql.streaming.stateStore.providerClass"
-    changelog = (
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    )
-    default = spark.conf.get(key)
-    assert "RocksDB" not in default
-    try:
-        same = get_spark(state_store="rocksdb")
-        assert same is spark
-        assert spark.conf.get(key) == _ROCKSDB_PROVIDER
-        # now the reverse direction: a default-store request must not
-        # silently keep the RocksDB provider
-        same = get_spark()  # state_store="hdfs" default
-        assert same is spark
-        assert spark.conf.get(key) == default
-        assert spark.conf.get(changelog, None) in (None, "false")
-    finally:
-        spark.conf.set(key, default)
-        spark.conf.unset(changelog)
 
 
 def test_metrics_listener_dedupes_retried_batches():

@@ -356,30 +356,55 @@ def test_textrank_graph_checkpoint_failure_frees_prior(
     )
 
 
+def _package_hits(needles, skip=()):
+    """(module, needle) for every needle found in a package source
+    file, the files named in ``skip`` (package-relative) excepted."""
+    import os
+
+    import eye_of_sauron_spark
+
+    root = os.path.dirname(eye_of_sauron_spark.__file__)
+    hits = []
+    for dirpath, _, files in os.walk(root):
+        for f in sorted(files):
+            rel = os.path.relpath(os.path.join(dirpath, f), root)
+            if not f.endswith(".py") or rel in skip:
+                continue
+            with open(os.path.join(dirpath, f), encoding="utf-8") as fh:
+                text = fh.read()
+            hits += [(rel, n) for n in needles if n in text]
+    return hits
+
+
 def test_checkpoint_lifetimes_have_one_owner():
     """functions/materialize.py is the only code that frees checkpoint
     blocks: no plan tracks ids, frees them, or hand-writes a failure
     path of its own."""
     import os
 
-    import eye_of_sauron_spark
+    needles = (
+        "checkpoint_tracked",
+        "unpersist_ids(",
+        "except BaseException",
+        "register_drain_hook",
+    )
+    owner = os.path.join("functions", "materialize.py")
+    assert _package_hits(needles, skip={owner}) == []
 
-    root = os.path.dirname(eye_of_sauron_spark.__file__)
-    owner = os.path.join(root, "functions", "materialize.py")
-    hits = []
-    for dirpath, _, files in os.walk(root):
-        for f in sorted(files):
-            path = os.path.join(dirpath, f)
-            if not f.endswith(".py") or path == owner:
-                continue
-            with open(path, encoding="utf-8") as fh:
-                text = fh.read()
-            for needle in (
-                "checkpoint_tracked",
-                "unpersist_ids(",
-                "except BaseException",
-                "register_drain_hook",
-            ):
-                if needle in text:
-                    hits.append((os.path.relpath(path, root), needle))
-    assert hits == []
+
+def test_no_dormant_forks_or_test_only_helpers():
+    """The package carries no code path that no registered query runs:
+    no transformWithState or PIL fork, no session state-store knob, no
+    rate source, no hand-rotated verification list and no per-batch
+    micro-batch writer."""
+    needles = (
+        "transformWithStateInPandas",
+        "_has_protobuf",
+        "state_store",
+        "has_pil",
+        "decode_image_real",
+        "rate-micro-batch",
+        "_VERIFY_FIRST",
+        "write_microbatch_files(",
+    )
+    assert _package_hits(needles) == []

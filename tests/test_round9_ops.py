@@ -1,5 +1,5 @@
 """Round-9 additions: small-group sketch-contract clamp, bucketed
-stateful funnel parity, and the RocksDB state-store option."""
+stateful funnel parity, and per-stream RocksDB state-store parity."""
 
 from __future__ import annotations
 
@@ -34,9 +34,10 @@ def test_sketch_contract_survives_tiny_groups(spark, tmp_path):
         assert r["p50_ok"] and r["p90_ok"] and r["p99_ok"], r
 
 
-def _run_funnel(spark, sf_dir, tmp_path, build, tag):
+def _run_funnel(spark, sf_dir, tmp_path, build, tag, conf=None):
     """Replay sf events as 8 micro-batches through a funnel operator
-    and return the full emitted (user_id, stage) row set."""
+    (``conf``: per-stream confs for the drain) and return the full
+    emitted (user_id, stage) row set."""
     from eye_of_sauron_spark.sources.tables import load_table
     from eye_of_sauron_spark.streaming.harness import (
         file_stream,
@@ -55,7 +56,7 @@ def _run_funnel(spark, sf_dir, tmp_path, build, tag):
         f"{work}/in",
         "user_id BIGINT, ts TIMESTAMP, event_id BIGINT, event_type STRING",
     )
-    emitted = run_to_memory(build(stream))
+    emitted = run_to_memory(build(stream), conf=conf)
     return sorted((r["user_id"], r["stage"]) for r in emitted.collect())
 
 
@@ -85,30 +86,21 @@ def test_stateful_replay_identical_under_rocksdb_state_store(
     row set under the default heap provider and RocksDB (the 100x
     choice — state on local SSD, not executor heap; SCALE.md
     'RocksDB state-store probe'). providerClass is a runtime SQL conf
-    read at stream start, so it flips per-query on a live session."""
-    from eye_of_sauron_spark.session import _ROCKSDB_PROVIDER
+    read at stream start, so one stream picks it through the drain's
+    ``conf=``, and the session's provider is restored afterwards."""
     from eye_of_sauron_spark.streaming.funnel import funnel_stream
 
     key = "spark.sql.streaming.stateStore.providerClass"
+    rocksdb = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
     default = spark.conf.get(key)
     assert "RocksDB" not in default
     heap = _run_funnel(spark, sf_dir, tmp_path, funnel_stream, "heap")
-    spark.conf.set(key, _ROCKSDB_PROVIDER)
-    try:
-        rocks = _run_funnel(spark, sf_dir, tmp_path, funnel_stream, "rocks")
-    finally:
-        spark.conf.set(key, default)
+    rocks = _run_funnel(
+        spark, sf_dir, tmp_path, funnel_stream, "rocks", conf={key: rocksdb}
+    )
+    assert spark.conf.get(key) == default
     assert heap == rocks
     assert len(heap) > 0
-
-
-def test_get_spark_rejects_unknown_state_store():
-    import pytest
-
-    from eye_of_sauron_spark.session import get_spark
-
-    with pytest.raises(ValueError, match="state_store"):
-        get_spark(state_store="leveldb")
 
 
 def test_span_coverage_interval_merge(spark, tmp_path):

@@ -1,17 +1,14 @@
 """Source-contract tests: the Kafka reader surface (pinned against a
 golden fixture — no broker ships in this container, so a typo in the
-option dict or value schema would otherwise ship silently) and the
-A15 catalog/checkpoint lifecycle."""
+option dict or value schema would otherwise ship silently)."""
 
 from __future__ import annotations
 
 import json
-import os
 
 import pytest
 from pyspark.sql import functions as F
 
-from eye_of_sauron_spark.sources import catalog
 from eye_of_sauron_spark.sources.streams import (
     FRAME_MESSAGE_SCHEMA,
     decode_frame_messages,
@@ -85,35 +82,6 @@ def test_frame_message_roundtrip(spark):
     assert row["original_dtype"] == "|u1"
     assert row["original_shape"] == [2, 2, 1]
     assert row["timestamp"] == pytest.approx(1723500000.25)
-
-
-# -------------------------------------------------------------- catalog
-
-def test_catalog_view_lifecycle(spark, sf_dir):
-    names = ("region", "nation")
-    created = catalog.create_fixture_views(spark, sf_dir, names)
-    assert created == ["region", "nation"]
-    assert set(names) <= set(catalog.list_views(spark))
-    assert spark.sql("SELECT count(*) AS n FROM region").collect()[0]["n"] == 5
-    dropped = catalog.drop_views(spark, names)
-    assert sorted(dropped) == ["nation", "region"]
-    assert not set(names) & set(catalog.list_views(spark))
-    # idempotent: dropping again drops nothing and does not raise
-    assert catalog.drop_views(spark, names) == []
-
-
-def test_checkpoint_lifecycle(tmp_path):
-    root = str(tmp_path)
-    path = catalog.checkpoint_dir(root, "camera_7")
-    os.makedirs(os.path.join(path, "offsets"))
-    assert catalog.clear_checkpoint(root, "camera_7") is True
-    assert not os.path.exists(path)
-    assert catalog.clear_checkpoint(root, "camera_7") is False  # already gone
-
-
-def test_checkpoint_refuses_escape(tmp_path):
-    with pytest.raises(ValueError, match="escapes root"):
-        catalog.clear_checkpoint(str(tmp_path), "../outside")
 
 
 def test_decode_passes_kafka_metadata_through(spark):

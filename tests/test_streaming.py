@@ -19,12 +19,12 @@ from pyspark.sql import functions as F
 from eye_of_sauron_spark.sources import load_table
 from eye_of_sauron_spark.streaming import windows
 from eye_of_sauron_spark.streaming.harness import (
+    drain_stream,
     file_stream,
     run_to_memory,
-    write_microbatch_files,
     write_microbatch_files_partitioned,
 )
-from eye_of_sauron_spark.streaming.pipeline import match_stream, run_routed_file_sink
+from eye_of_sauron_spark.streaming.pipeline import match_stream
 from eye_of_sauron_spark.streaming.reorder import reorder_stream
 
 
@@ -40,12 +40,10 @@ def event_stream_dir(spark, sf_dir, tmp_path_factory):
         "event_id", "ts", "user_id", "event_type", "value"
     )
     quarters = events.withColumn(
-        "b", F.ntile(4).over(__import__("pyspark").sql.window.Window.orderBy("ts"))
+        "batch",
+        F.ntile(4).over(__import__("pyspark").sql.window.Window.orderBy("ts")) - 1,
     )
-    batches = [
-        quarters.filter(F.col("b") == i).drop("b") for i in range(1, 5)
-    ]
-    write_microbatch_files(spark, batches, out)
+    write_microbatch_files_partitioned(quarters, "batch", 4, out)
     return out
 
 
@@ -105,8 +103,14 @@ def test_watermark_drops_late_rows(spark, tmp_path):
         [ev(280, 7)],  # flush
     ]
     src = str(tmp_path / "late_src")
-    write_microbatch_files(
-        spark, [spark.createDataFrame(b, schema) for b in batches], src
+    write_microbatch_files_partitioned(
+        spark.createDataFrame(
+            [(*r, i) for i, b in enumerate(batches) for r in b],
+            schema + ", batch INT",
+        ),
+        "batch",
+        len(batches),
+        src,
     )
 
     stream = file_stream(spark, src, schema)
@@ -132,14 +136,12 @@ def test_reorder_buffer_restores_total_order(spark, tmp_path):
         2: [(0, 2), (1, 3), (0, 5), (1, 4)],
     }
     schema = "camera INT, frame_num INT, payload STRING"
-    batches = [
-        spark.createDataFrame(
-            [Row(camera=c, frame_num=f, payload=f"{c}:{f}") for c, f in rs], schema
-        )
-        for rs in rows.values()
-    ]
+    batches = spark.createDataFrame(
+        [(c, f, f"{c}:{f}", i) for i, rs in rows.items() for c, f in rs],
+        schema + ", batch INT",
+    )
     src = str(tmp_path / "frames_src")
-    write_microbatch_files(spark, batches, src)
+    write_microbatch_files_partitioned(batches, "batch", len(rows), src)
 
     out = run_to_memory(
         reorder_stream(file_stream(spark, src, schema), buffer_size=16),
@@ -162,14 +164,16 @@ def test_reorder_buffer_overflow_skips_gap(spark, tmp_path):
     # frame 0 never arrives; frames 1..6 buffer up, buffer_size=4
     batches_rows = [[(0, f) for f in (3, 1, 2)], [(0, f) for f in (6, 4, 5)]]
     schema = "camera INT, frame_num INT, payload STRING"
-    batches = [
-        spark.createDataFrame(
-            [Row(camera=c, frame_num=f, payload=f"{c}:{f}") for c, f in rs], schema
-        )
-        for rs in batches_rows
-    ]
+    batches = spark.createDataFrame(
+        [
+            (c, f, f"{c}:{f}", i)
+            for i, rs in enumerate(batches_rows)
+            for c, f in rs
+        ],
+        schema + ", batch INT",
+    )
     src = str(tmp_path / "gap_src")
-    write_microbatch_files(spark, batches, src)
+    write_microbatch_files_partitioned(batches, "batch", len(batches_rows), src)
     out = run_to_memory(
         reorder_stream(file_stream(spark, src, schema), buffer_size=4),
         mode="append",
@@ -188,7 +192,13 @@ def test_stream_static_join_and_routing_checkpoint(spark, sf_dir, event_stream_d
 
     def run():
         stream = file_stream(spark, event_stream_dir, event_schema)
-        run_routed_file_sink(match_stream(stream, targets), out_dir, ckpt)
+        drain_stream(
+            match_stream(stream, targets),
+            lambda w: w.format("parquet")
+            .partitionBy("topic")
+            .option("path", out_dir),
+            ckpt,
+        )
 
     run()
     first = spark.read.parquet(out_dir)
@@ -207,25 +217,6 @@ def test_stream_static_join_and_routing_checkpoint(spark, sf_dir, event_stream_d
     assert spark.read.parquet(out_dir).count() == n_first
 
 
-def test_rate_micro_batch_source(spark, tmp_path):
-    """Deterministic rate source: availableNow drains exactly one
-    batch of rowsPerBatch rows through the memory sink."""
-    from eye_of_sauron_spark.sources.streams import rate_micro_batch_stream
-
-    stream = rate_micro_batch_stream(spark, rows_per_batch=25, num_partitions=2)
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("rate_probe")
-        .option("checkpointLocation", str(tmp_path / "rate_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.table("rate_probe")
-    assert got.count() == 25
-    assert {r.value for r in got.collect()} == set(range(25))
-
-
 def test_streaming_face_pipeline_matches_batch(spark, sf_dir, tmp_path):
     """A4->A7 under readStream: frames replayed as 3 micro-batches
     through foreachBatch produce exactly the batch pipeline's rows
@@ -239,11 +230,13 @@ def test_streaming_face_pipeline_matches_batch(spark, sf_dir, tmp_path):
     frames = frames_from_events(load_table(spark, sf_dir, "events"))
     targets = first_faces_targets(frames)
 
-    batches = [
-        frames.filter(F.col("frame_num") % 3 == i).coalesce(1) for i in range(3)
-    ]
     src = str(tmp_path / "frames_src")
-    write_microbatch_files(spark, batches, src)
+    write_microbatch_files_partitioned(
+        frames.withColumn("batch", (F.col("frame_num") % 3).cast("int")),
+        "batch",
+        3,
+        src,
+    )
     stream = file_stream(spark, src, frames.schema)
     out, ckpt = str(tmp_path / "predicted"), str(tmp_path / "face_ckpt")
     from eye_of_sauron_spark.streaming.pipeline import run_face_pipeline_stream
@@ -276,9 +269,10 @@ def test_stream_stream_join_matches_batch(spark, sf_dir, tmp_path):
         src = str(tmp_path / name)
         # two time-ordered micro-batches (watermark advances between)
         mid = df.approxQuantile("event_id", [0.5], 0.0)[0]
-        write_microbatch_files(
-            spark,
-            [df.filter(F.col("event_id") <= mid), df.filter(F.col("event_id") > mid)],
+        write_microbatch_files_partitioned(
+            df.withColumn("batch", (F.col("event_id") > mid).cast("int")),
+            "batch",
+            2,
             src,
         )
         return file_stream(spark, src, df.schema)
@@ -336,7 +330,14 @@ def test_stream_drop_duplicates_within_watermark(spark, sf_dir, tmp_path):
     ).drop("rn")
     b2 = redelivered.unionAll(ranked.filter(F.col("rn") > half).drop("rn"))
     src = str(tmp_path / "dupes_src")
-    write_microbatch_files(spark, [b1.coalesce(1), b2.coalesce(1)], src)
+    write_microbatch_files_partitioned(
+        b1.withColumn("batch", F.lit(0)).unionByName(
+            b2.withColumn("batch", F.lit(1))
+        ),
+        "batch",
+        2,
+        src,
+    )
 
     deduped = (
         file_stream(spark, src, events.schema)
@@ -395,38 +396,22 @@ def test_change_detector_drops_consecutive_duplicates(spark, tmp_path):
     """A1 'smart mode' as a keyed stateful operator: per camera, only
     frames whose payload differs from the last EMITTED frame survive;
     state carries across micro-batches (the batch-2 repeat of
-    batch-1's final hash is dropped). ``drop_unchanged_frames``
-    auto-dispatches transformWithStateInPandas vs
-    applyInPandasWithState on protobuf availability, so this test
-    executes the real stateful path in EVERY environment — no skip."""
+    batch-1's final hash is dropped)."""
     from eye_of_sauron_spark.streaming.change_detect import drop_unchanged_frames
 
     schema = "camera INT, frame_num INT, payload_hash STRING"
     b1 = [(0, 0, "a"), (0, 1, "a"), (0, 2, "b"), (1, 0, "x")]
     b2 = [(0, 3, "b"), (0, 4, "c"), (1, 1, "x"), (1, 2, "y")]
-    batches = [
-        spark.createDataFrame(
-            [Row(camera=c, frame_num=f, payload_hash=h) for c, f, h in rs], schema
-        )
-        for rs in (b1, b2)
-    ]
-    src = str(tmp_path / "chg_src")
-    write_microbatch_files(spark, batches, src)
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    batches = spark.createDataFrame(
+        [(*r, i) for i, rs in enumerate((b1, b2)) for r in rs],
+        schema + ", batch INT",
     )
-    try:
-        out = run_to_memory(
-            drop_unchanged_frames(file_stream(spark, src, schema)),
-            mode="append",
-        ).collect()
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    src = str(tmp_path / "chg_src")
+    write_microbatch_files_partitioned(batches, "batch", 2, src)
+    out = run_to_memory(
+        drop_unchanged_frames(file_stream(spark, src, schema)),
+        mode="append",
+    ).collect()
     got = sorted((r["camera"], r["frame_num"], r["payload_hash"]) for r in out)
     assert got == [(0, 0, "a"), (0, 2, "b"), (0, 4, "c"), (1, 0, "x"), (1, 2, "y")]
 
@@ -463,8 +448,11 @@ def test_replay_leaves_no_memory_sink_view(spark, sf_dir, tmp_path):
     assert out.collect()
 
     src = str(tmp_path / "src")
-    write_microbatch_files(
-        spark, [spark.range(i * 3, i * 3 + 3) for i in range(2)], src
+    write_microbatch_files_partitioned(
+        spark.range(6).withColumn("batch", (F.col("id") / 3).cast("int")),
+        "batch",
+        2,
+        src,
     )
     got = run_to_memory(file_stream(spark, src, "id BIGINT"))
     assert temp_views() == before

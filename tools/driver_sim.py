@@ -2,11 +2,12 @@
 """Simulate the external driver's correctness gate locally.
 
 Runs the first N (default 50 — the driver's measured per-round budget)
-entries of ``__spark_entry__.queries()`` in registry iteration order
-against their DuckDB oracles at the given scale factor, using the same
-order-insensitive compare the pytest suite uses. Run this after the
-round's last code change so ``CORRECTNESS_r{N}.json`` holds no
-surprises.
+entries of ``__spark_entry__.queries()`` in the order it returns them
+(oldest evidence first, computed from the CORRECTNESS_r*.json
+ledgers) against their DuckDB oracles at the given scale factor,
+using the same order-insensitive compare the pytest suite uses. Run
+this after the round's last code change so ``CORRECTNESS_r{N}.json``
+holds no surprises.
 
     python tools/driver_sim.py [sf_dir] [n_queries]
 """

@@ -1,9 +1,10 @@
 #!/usr/bin/env python
 """Generate the SURVEY.md §8.1 evidence-ledger bullet lists.
 
-Reads every CORRECTNESS_r*.json (pre-r08 files may nest rows under
-"queries"; r08+ are flat), keeps each query's LATEST driver row, and
-groups the full registry by that freshness. Output is the markdown
+Reads each query's LATEST checked round from the CORRECTNESS_r*.json
+files through ``__spark_entry__.latest_rows`` (the same read that
+orders ``queries()``) and groups the full registry by that
+freshness. Output is the markdown
 bullet list §8.1 embeds — queries with no driver row yet are listed
 separately so the ledger never claims evidence that does not exist.
 
@@ -12,26 +13,13 @@ separately so the ledger never claims evidence that does not exist.
 
 from __future__ import annotations
 
-import glob
-import json
 import os
-import re
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-
-def latest_rows() -> dict[str, int]:
-    latest: dict[str, int] = {}
-    for f in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
-        rnd = int(re.search(r"r(\d+)", os.path.basename(f)).group(1))
-        d = json.load(open(f))
-        if "queries" in d and isinstance(d["queries"], dict):
-            d = d["queries"]
-        for name in d:
-            latest[name] = max(rnd, latest.get(name, 0))
-    return latest
+from __spark_entry__ import latest_rows  # noqa: E402
 
 
 def main() -> None:
