@@ -28,7 +28,7 @@ from pyspark.sql.window import Window as W
 
 from ..functions.hashing import hex32_duck, hex32_spark
 from ..functions.text import tokens_duck, tokens_spark
-from ..sources import load_table
+from ..sources import load_table, spread
 from .registry import query
 
 
@@ -262,9 +262,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     back to shuffle-hash otherwise (VERDICT r05 #2)."""
     d = _t(spark, sf_dir, "documents").filter(F.col("n_chars") > 0)
     toks = d.select("doc_id", F.explode(tokens_spark(F.col("text"))).alias("term"))
-    toks = toks.repartition(
-        spark.sparkContext.defaultParallelism, "doc_id"
-    )
+    toks = spread(toks, "doc_id")
     tf = toks.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
     df = toks.groupBy("term").agg(F.countDistinct("doc_id").alias("df"))
     n = toks.agg(F.countDistinct("doc_id").alias("n"))
@@ -562,7 +560,7 @@ def quality_classifier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # one exchange purely for scan parallelism (local fixtures scan as
     # a single split; md5-per-token is the CPU hot spot)
-    d = d.repartition(spark.sparkContext.defaultParallelism, "doc_id")
+    d = spread(d, "doc_id")
     weights = spark.range(1).select(
         F.transform(
             F.sequence(F.lit(0), F.lit(_QC_BUCKETS - 1)),

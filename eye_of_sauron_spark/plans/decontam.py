@@ -30,25 +30,13 @@ from pyspark.sql.window import Window as W
 from ..functions.hashing import hex32_duck, hex32_spark
 from ..functions.text import shingles_duck, shingles_spark, tokens_spark
 from ..functions.vector import cosine_duck, cosine_normed, l2_spark
-from ..sources import load_table
+from ..sources import load_table, spread
 from .dedup import _COSINE_NEARDUP, _DRIFT_DUCK, _EMB_COPY_OFFSET, _emb_corpus
 from .registry import query
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
-
-
-def _spread(df: DataFrame, *keys: str) -> DataFrame:
-    """Repartition to defaultParallelism before CPU-heavy narrow work
-    (8-token shingling + per-shingle md5): the local fixture scans as
-    ONE parquet split, which would serialize span extraction on a
-    single core, and AQE's byte-based coalescer would undo an
-    uncounted repartition (tiny bytes, huge per-row CPU). Same
-    rationale as plans/dedup.py::_spread; at 100 TB the scan has
-    thousands of natural splits and this exchange is noise."""
-    n = df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(n, *keys)
 
 
 # ------------------------------------------------------ decontamination
@@ -108,7 +96,7 @@ def decontaminate_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc count's partial aggregation all fuse into the scan stage,
     and the only exchange is on doc_id for the final count merge.
     """
-    d = _spread(_t(spark, sf_dir, "documents"), "doc_id")
+    d = spread(_t(spark, sf_dir, "documents"), "doc_id")
     spans = d.select(
         "doc_id",
         "lang",
@@ -188,7 +176,7 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     emitted — per-span cost is O(df), not O(df^2) — so stop-spans are
     merely hot keys, handled by AQE skew splitting, not a blowup.
     """
-    d = _spread(_t(spark, sf_dir, "documents"), "doc_id")
+    d = spread(_t(spark, sf_dir, "documents"), "doc_id")
     # explode_outer + isnotnull: see decontaminate_ngram_overlap — keeps
     # the inferred size/notnull constraint (and with it the whole
     # shingle expression) from being pushed below the spread exchange
@@ -250,7 +238,7 @@ def decontam_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFram
     with 20 sources the cap never binds on the fixture, and at real
     scale it turns boilerplate spans into a bounded cost instead of a
     quadratic one."""
-    d = _spread(_t(spark, sf_dir, "documents"), "doc_id")
+    d = spread(_t(spark, sf_dir, "documents"), "doc_id")
     sp = (
         d.select(
             "source",
@@ -368,7 +356,7 @@ def dedup_span_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine- and partitioning-identical. Measured 10x worst-case probe
     (50k docs, 100% dup density, 1x-comparable wall): SCALE.md
     "Span-coverage probe"."""
-    d = _spread(_t(spark, sf_dir, "documents"), "doc_id")
+    d = spread(_t(spark, sf_dir, "documents"), "doc_id")
     d_occ = _dup_span_occurrences(d).select("doc_id", "pos")
     cov = _merged_islands(d_occ).groupBy("doc_id").agg(
         F.sum("n").alias("covered")
@@ -547,7 +535,7 @@ def dedup_span_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB the cleaned corpus is a straight partitioned write of this
     frame. Measured 10x worst-case probe (90% removal density,
     closed-form removal count): SCALE.md "Span-coverage probe"."""
-    d = _spread(_t(spark, sf_dir, "documents"), "doc_id")
+    d = spread(_t(spark, sf_dir, "documents"), "doc_id")
     rem_occ = (
         _dup_span_occurrences(d)
         .filter(F.col("doc_id") != F.col("keeper"))
@@ -648,7 +636,7 @@ def decontam_semantic_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(E) per train row (the r10-ADVICE fold; the original array_sort
     was O(E log E), a 17x constant at a 100k-item eval suite) —
     identical shape to similarity_topk_ivf's cell assignment. The
-    train branch carries exactly one exchange (the _spread
+    train branch carries exactly one exchange (the spread
     parallelism repartition, key-free) and the plan has no window, no
     shuffle join, no corpus x eval row explosion — at 100 TB this is
     a map-side-only scan whose cost is linear in the corpus with a
@@ -714,7 +702,7 @@ def decontam_semantic_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a size()>0 pre-filter that would re-inline it.
     hit = F.filter(F.array(best), lambda b: b["cos"] >= _COSINE_NEARDUP)
     return (
-        _spread(corpus.filter(~is_eval), "vec_id")
+        spread(corpus.filter(~is_eval), "vec_id")
         .withColumn("tn", l2_spark(F.col("emb")))
         .crossJoin(F.broadcast(ev_row))
         .select(

@@ -19,7 +19,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
@@ -28,17 +28,18 @@ from ..functions.hashing import (
     hex32_at_spark,
     hex32_duck,
     hex32_spark,
-    minhash_u_duck,
     minhash_u_spark,
 )
+from ..functions import materialize
 from ..functions.text import shingles_duck, shingles_spark, tokens_duck, tokens_spark
 from ..functions.vector import (
     cosine_duck,
-    cosine_spark,
+    cosine_normed,
     euclid_duck,
     euclid_spark,
+    l2_spark,
 )
-from ..sources import load_table
+from ..sources import load_table, spread
 from .registry import query
 from .vector import hyperplane_sig_duck, hyperplane_sig_spark
 
@@ -84,31 +85,93 @@ _EMB_DRIFT = 0.005
 _EMB_COPY_OFFSET = 1_000_000
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
+# ------------------------------------- the one candidate-pair pipeline
+#
+# Every banded pass below is candidate-then-verify: an equi-join on a
+# derived key (band signature, simhash band, hyperplane band, cell,
+# character band) finds candidate pairs, and a verify step joins the
+# candidates back to their rows. These helpers are the only places
+# those joins are written.
 
 
-def _spread(df: DataFrame, *keys: str) -> DataFrame:
-    """Repartition on ``keys`` with an EXPLICIT partition count before
-    CPU-heavy narrow work. The local fixtures scan as a single parquet
-    split, which would serialize shingling/hashing on one core — and
-    the byte-based AQE coalescer would undo a bare ``repartition(key)``
-    (tiny bytes, huge per-row CPU), so the count is pinned to
-    defaultParallelism, which AQE respects. At 100 TB the exchange is
-    no-op-sized relative to the scan and also evens out skewed input
-    file sizes."""
-    n = df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(n, *keys)
+def _bucket_pairs(
+    a: DataFrame, b: DataFrame, on: list[str], lt: str | None = None
+) -> DataFrame:
+    """Candidate pairs: ``a`` equi-joined to ``b`` on the ``on``
+    columns, with every column of each side renamed ``<c>_a`` /
+    ``<c>_b``. With ``lt``, only pairs whose ``a``-side ``lt`` is the
+    smaller survive (each unordered self-join pair once, no self-pair).
+
+    EVERY column is renamed because an unrenamed column of a self-join
+    resolves to the same attribute on both sides: the predicate on it
+    is trivially true and cannot serve as an equi key, so the hash join
+    silently falls back to the remaining keys plus a post-filter
+    (measured 4.7x slower at sf0.1 on the embedding bands; all-pairs
+    at scale)."""
+    a = a.select(*[F.col(c).alias(f"{c}_a") for c in a.columns])
+    b = b.select(*[F.col(c).alias(f"{c}_b") for c in b.columns])
+    cond = [F.col(f"{c}_a") == F.col(f"{c}_b") for c in on]
+    if lt is not None:
+        cond.append(F.col(f"{lt}_a") < F.col(f"{lt}_b"))
+    return a.join(b, cond)
+
+
+def _fetch(
+    pairs: DataFrame,
+    key: str,
+    cols: list[str],
+    a: DataFrame,
+    b: DataFrame | None = None,
+) -> DataFrame:
+    """Attach ``<c>_a`` / ``<c>_b`` for each of ``cols`` to candidate
+    ``pairs`` by joining ``<key>_a`` to ``a`` and ``<key>_b`` to ``b``
+    (default ``a``) — the verify join, which touches only the (few)
+    candidate rows. When both sides read the same relation, the two
+    join branches are byte-identical up to its exchange, so the
+    physical planner reuses it (ReusedExchange)."""
+    for side, df in (("a", a), ("b", a if b is None else b)):
+        k = f"{key}_{side}"
+        pairs = pairs.join(
+            df.select(
+                F.col(key).alias(k), *[F.col(c).alias(f"{c}_{side}") for c in cols]
+            ),
+            k,
+        )
+    return pairs
+
+
+def _jaccard_verified(
+    pairs: DataFrame, keep: list[str], a: DataFrame, b: DataFrame | None = None
+) -> DataFrame:
+    """The exact-Jaccard verify of the MinHash passes: ``pairs``
+    (``doc_id_a``, ``doc_id_b``, ...) with both documents' ``sh``
+    shingle arrays fetched from ``a`` / ``b``, projected to ``keep``
+    plus ``jac`` and kept where jac >= _JACCARD_THRESHOLD."""
+    v = _fetch(pairs, "doc_id", ["sh"], a, b)
+    i = F.size(F.array_intersect("sh_a", "sh_b"))
+    jac = i / (F.size("sh_a") + F.size("sh_b") - i)
+    return v.select(*keep, jac.alias("jac")).filter(
+        F.col("jac") >= _JACCARD_THRESHOLD
+    )
+
+
+# every 7th document re-ingested, simulating a re-crawl
+_RECRAWL_CTE = """corpus AS (
+        SELECT * FROM documents
+        UNION ALL
+        SELECT * FROM documents WHERE doc_id % 7 = 0
+    )"""
+
+
+def _recrawl(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = load_table(spark, sf_dir, "documents")
+    return docs.unionAll(docs.filter(F.col("doc_id") % 7 == 0))
 
 
 @query(
     "dedup_exact",
-    oracle="""
-    WITH corpus AS (
-        SELECT * FROM documents
-        UNION ALL
-        SELECT * FROM documents WHERE doc_id % 7 = 0
-    )
+    oracle=f"""
+    WITH {_RECRAWL_CTE}
     SELECT lang,
            count(*) AS n_rows,
            count(DISTINCT md5(text)) AS n_unique,
@@ -125,9 +188,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     volume O(distinct docs); with doc bodies large, hash first and
     shuffle only (hash, doc_id), never the text.
     """
-    docs = _t(spark, sf_dir, "documents")
-    corpus = docs.unionAll(docs.filter(F.col("doc_id") % 7 == 0))
-    return corpus.groupBy("lang").agg(
+    return _recrawl(spark, sf_dir).groupBy("lang").agg(
         F.count("*").alias("n_rows"),
         F.countDistinct(F.md5("text")).alias("n_unique"),
         (F.count("*") - F.countDistinct(F.md5("text")))
@@ -150,12 +211,8 @@ _A_LIST, _B_LIST = _affine_lists()
 
 @query(
     "dedup_exact_keep_first",
-    oracle="""
-    WITH corpus AS (
-        SELECT * FROM documents
-        UNION ALL
-        SELECT * FROM documents WHERE doc_id % 7 = 0
-    )
+    oracle=f"""
+    WITH {_RECRAWL_CTE}
     SELECT min(doc_id) AS doc_id,
            arg_min(lang, doc_id) AS lang,
            arg_min(source, doc_id) AS source,
@@ -174,11 +231,10 @@ def dedup_exact_keep_first(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep-columns shuffle (never the text body). min(struct(...))
     selects the keeper without a second ranking pass.
     """
-    docs = _t(spark, sf_dir, "documents")
-    corpus = docs.unionAll(docs.filter(F.col("doc_id") % 7 == 0))
     keeper = F.min(F.struct("doc_id", "lang", "source", "n_chars")).alias("m")
     return (
-        corpus.groupBy(F.md5("text").alias("h"))
+        _recrawl(spark, sf_dir)
+        .groupBy(F.md5("text").alias("h"))
         .agg(keeper, F.count("*").alias("n_copies"))
         .select(
             F.col("m.doc_id").alias("doc_id"),
@@ -272,7 +328,9 @@ def _minhash_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The narrow shingling prefix shared by every MinHash path:
     (doc_id, sh) for non-empty-shingle documents, spread across
     cores."""
-    docs = _spread(_t(spark, sf_dir, "documents").select("doc_id", "text"), "doc_id")
+    docs = spread(
+        load_table(spark, sf_dir, "documents").select("doc_id", "text"), "doc_id"
+    )
     # the non-empty-shingles gate is stated on the TOKEN count (tokens
     # >= shingle width <=> shingles non-empty): pushdown clones scan-
     # side filters below the spread exchange, and this form costs one
@@ -280,79 +338,6 @@ def _minhash_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     # size(sh)>0 filter would inline (see plans/decontam.py)
     return docs.filter(F.size(tokens_spark(F.col("text"))) >= 3).select(
         "doc_id", shingles_spark(F.col("text")).alias("sh")
-    )
-
-
-def _minhash_lsh_pairs(
-    spark: SparkSession, sf_dir: str, n_bands: int = _MINHASH_BANDS
-) -> DataFrame:
-    """The MinHash-LSH pipeline at a given band count (fixed
-    _MINHASH_K hashes) — the registered query below is this at
-    _MINHASH_BANDS; the band-count ladder runs the same rung pipeline
-    per rung over a shared materialized prefix (r17 optimization)."""
-    # NOT checkpointed (r17 optimization round, measured negative):
-    # unlike the self-join pipelines above, AQE's runtime exchange
-    # reuse already dedupes this shape's repeated subtrees (5 jobs
-    # executed), and an eager shared-pass checkpoint — the band
-    # ladder's trick, profitable there because THREE rungs consume it
-    # — added a synchronous materialization barrier for a single rung:
-    # interleaved A/B read 1.26x WORSE (jobs 5 -> 8).
-    base = _minhash_base(spark, sf_dir)
-    hashed = base.select(
-        "doc_id", F.transform("sh", hex32_spark).alias("hs")
-    )
-    return _lsh_pairs_from(spark, base, hashed, n_bands)
-
-
-def _lsh_pairs_from(
-    spark: SparkSession, base: DataFrame, hashed: DataFrame, n_bands: int
-) -> DataFrame:
-    """The banded rung pipeline over a (doc_id, sh) base relation and
-    its (doc_id, hs) pre-hashed view: band signatures -> (band, sig)
-    bucket self-join -> exact-jaccard verification. Factored out of
-    :func:`_minhash_lsh_pairs` (identical math, plan unchanged for
-    the single-rung callers) so the band-count ladder can feed every
-    rung from ONE materialized shingle+hash pass instead of repeating
-    the scan->shingle->md5->minhash prefix per rung (guide §1.2: the
-    distributed algorithm first — don't compute things three times)."""
-    # posexplode_OUTER: exempt from InferFiltersFromGenerate, whose
-    # size/notnull constraint would re-evaluate all 8 band signatures
-    # below the exchange (the band array is never empty — 8 literals)
-    bands = hashed.select(
-        "doc_id",
-        F.posexplode_outer(_band_sigs(F.col("hs"), n_bands)).alias("band", "sig"),
-    )
-    a = bands.select(
-        F.col("doc_id").alias("da"), F.col("band").alias("b1"), F.col("sig").alias("s1")
-    )
-    b = bands.select(
-        F.col("doc_id").alias("db"), F.col("band").alias("b2"), F.col("sig").alias("s2")
-    )
-    cand = (
-        a.join(b, (a.b1 == b.b2) & (a.s1 == b.s2) & (a.da < b.db))
-        .select("da", "db")
-        .distinct()
-    )
-    # one shuffled copy of the shingle arrays feeds BOTH verify joins:
-    # the two join branches have byte-identical subplans up to this
-    # exchange, so the physical planner reuses it (ReusedExchange) —
-    # shingling runs once for verification instead of once per side
-    verify = base.repartition(
-        spark.sparkContext.defaultParallelism, "doc_id"
-    )
-    pairs = cand.join(
-        verify.select(F.col("doc_id").alias("da"), F.col("sh").alias("sha")), "da"
-    ).join(verify.select(F.col("doc_id").alias("db"), F.col("sh").alias("shb")), "db")
-    i = F.size(F.array_intersect("sha", "shb"))
-    jac = i / (F.size("sha") + F.size("shb") - i)
-    return (
-        pairs.select("da", "db", jac.alias("jac"))
-        .filter(F.col("jac") >= _JACCARD_THRESHOLD)
-        .select(
-            F.col("da").alias("doc_a"),
-            F.col("db").alias("doc_b"),
-            F.round("jac", 6).alias("jaccard"),
-        )
     )
 
 
@@ -371,7 +356,33 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     nearest analog is 'smart' frame skipping
     (frame_producer.py:110-119), exact-dup dropping at the source.
     """
-    return _minhash_lsh_pairs(spark, sf_dir, _MINHASH_BANDS)
+    # NOT checkpointed (r17 optimization round, measured negative):
+    # AQE's runtime exchange reuse already dedupes this shape's
+    # repeated subtrees (5 jobs executed), and an eager checkpoint of
+    # the shingle+hash pass — the band ladder's trick — added a
+    # synchronous materialization barrier for a single consumer:
+    # interleaved A/B read 1.26x WORSE (jobs 5 -> 8).
+    base = _minhash_base(spark, sf_dir)
+    hashed = base.select("doc_id", F.transform("sh", hex32_spark).alias("hs"))
+    # posexplode_OUTER: exempt from InferFiltersFromGenerate, whose
+    # size/notnull constraint would re-evaluate all 8 band signatures
+    # below the exchange (the band array is never empty — 8 literals)
+    bands = hashed.select(
+        "doc_id", F.posexplode_outer(_band_sigs(F.col("hs"))).alias("band", "sig")
+    )
+    cand = (
+        _bucket_pairs(bands, bands, ["band", "sig"], lt="doc_id")
+        .select("doc_id_a", "doc_id_b")
+        .distinct()
+    )
+    # one shuffled copy of the shingle arrays feeds BOTH verify joins
+    return _jaccard_verified(
+        cand, ["doc_id_a", "doc_id_b"], spread(base, "doc_id")
+    ).select(
+        F.col("doc_id_a").alias("doc_a"),
+        F.col("doc_id_b").alias("doc_b"),
+        F.round("jac", 6).alias("jaccard"),
+    )
 
 
 def _minhash_pairs_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -387,9 +398,7 @@ def _minhash_pairs_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     computing the full pipeline — it IS the measurement of the banded
     pass — and drain_session releases the slot, so every
     driver/oracle invocation still computes from the parquet inputs."""
-    from ..functions.materialize import memo_checkpoint
-
-    return memo_checkpoint(
+    return materialize.memo_checkpoint(
         spark,
         ("minhash_lsh_pairs", os.path.realpath(sf_dir)),
         lambda: dedup_minhash_lsh(spark, sf_dir),
@@ -443,7 +452,7 @@ _NGRAM_ORACLE = f"""
 """
 
 
-def ngram_jaccard_pairs(docs: DataFrame, df_cap: int = _NGRAM_DF_CAP) -> DataFrame:
+def ngram_jaccard_pairs(docs: DataFrame) -> DataFrame:
     """(doc_a, doc_b, n_shingles_a, n_shingles_b, jaccard) for pairs at
     Jaccard >= _JACCARD_THRESHOLD over 3-word shingles, via an
     inverted-index (postings) join with a document-frequency cutoff."""
@@ -473,7 +482,7 @@ def ngram_jaccard_pairs(docs: DataFrame, df_cap: int = _NGRAM_DF_CAP) -> DataFra
     postings = (
         sh.groupBy("shingle")
         .agg(F.array_sort(F.collect_list(F.struct("doc_id", "n"))).alias("ds"))
-        .filter(F.size("ds").between(2, df_cap))
+        .filter(F.size("ds").between(2, _NGRAM_DF_CAP))
     )
     pairs = postings.select(
         "ds", F.posexplode("ds").alias("i", "a")
@@ -499,7 +508,7 @@ def ngram_jaccard_pairs(docs: DataFrame, df_cap: int = _NGRAM_DF_CAP) -> DataFra
     )
 
 
-def ngram_dropped_shingle_count(docs: DataFrame, df_cap: int = _NGRAM_DF_CAP) -> DataFrame:
+def ngram_dropped_shingle_count(docs: DataFrame) -> DataFrame:
     """Single-row (dropped_shingles, max_df) diagnostic: how many
     distinct shingles the df-cutoff removed from the postings index.
     Log this alongside production runs — silent truncation reads as
@@ -509,7 +518,9 @@ def ngram_dropped_shingle_count(docs: DataFrame, df_cap: int = _NGRAM_DF_CAP) ->
     )
     dfs = sh.groupBy("shingle").agg(F.count("*").alias("df"))
     return dfs.agg(
-        F.sum(F.when(F.col("df") > df_cap, 1).otherwise(0)).alias("dropped_shingles"),
+        F.sum(F.when(F.col("df") > _NGRAM_DF_CAP, 1).otherwise(0)).alias(
+            "dropped_shingles"
+        ),
         F.max("df").alias("max_df"),
     )
 
@@ -526,7 +537,9 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     work is thereby bounded at cap^2 regardless of corpus size. Use
     ngram_dropped_shingle_count for the dropped-postings diagnostic.
     """
-    docs = _spread(_t(spark, sf_dir, "documents").select("doc_id", "text"), "doc_id")
+    docs = spread(
+        load_table(spark, sf_dir, "documents").select("doc_id", "text"), "doc_id"
+    )
     return ngram_jaccard_pairs(docs)
 
 
@@ -540,23 +553,19 @@ _MINHASH_RECALL_ORACLE = f"""
 """
 
 
-def _candidate_flags(exact: DataFrame, lsh: DataFrame) -> DataFrame:
-    """One row per ground-truth pair with an ``in_candidates`` flag:
-    ``exact`` (doc_a, doc_b, jaccard) left-joined against the LSH
-    candidate pairs (aliased la/lb). Shared by the registered recall
-    contract and every rung of the band-count ladder — middle-rung
-    row-identity holds by construction, the vector.py ladder pattern
-    (code-review r17). The (doc_a, doc_b) equi join is left unhinted
-    so AQE broadcasts the LSH side when it is audit-sized."""
-    return exact.join(
-        lsh,
-        (F.col("doc_a") == F.col("la")) & (F.col("doc_b") == F.col("lb")),
-        "left",
-    ).select(
-        "doc_a",
-        "doc_b",
-        "jaccard",
-        F.col("la").isNotNull().alias("in_candidates"),
+def _exact_pairs_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Session-memoized (doc_a, doc_b, jaccard) exact ground truth of
+    :func:`dedup_ngram_jaccard`, read by both text-dedup audit rows
+    (the recall contract and the band ladder). The relation is
+    O(near-dup pairs) rows — broadcast-sized — so a second
+    inverted-index pass per audit bought nothing (r17 optimization,
+    guide §1.2)."""
+    return materialize.memo_checkpoint(
+        spark,
+        ("minhash_exact_pairs", os.path.realpath(sf_dir)),
+        lambda: dedup_ngram_jaccard(spark, sf_dir).select(
+            "doc_a", "doc_b", "jaccard"
+        ),
     )
 
 
@@ -594,32 +603,23 @@ def dedup_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     error discipline its text restatement was missing (r11 verdict
     item 4).
 
-    The exact side is the SAME session memo the band ladder reads
-    (``minhash_exact_pairs`` — r17 optimization, guide §1.2): two
-    registered audit rows consumed one inverted-index exact pass
-    each, and the relation is O(near-dup pairs) rows — broadcast-
-    sized — so the second computation bought nothing. The r17
-    build-phase note deferred this share until "more text-dedup audit
-    rows appear"; the ladder made it two consumers, and the
-    optimization round is the re-certification point the note was
-    waiting for. The LSH candidate side is likewise the session-
-    memoized pipeline OUTPUT (``_minhash_pairs_shared``): the audit
-    consumes the same pair relation the pipeline emits — exactly what
-    a production recall audit joins against — instead of re-running
-    the banded pass a second time inside the same session."""
-    from ..functions.materialize import memo_checkpoint
-
-    exact = memo_checkpoint(
-        spark,
-        ("minhash_exact_pairs", os.path.realpath(sf_dir)),
-        lambda: dedup_ngram_jaccard(spark, sf_dir).select(
-            "doc_a", "doc_b", "jaccard"
-        ),
-    )
+    The exact side is the session memo the band ladder also reads
+    (:func:`_exact_pairs_shared`). The LSH candidate side is likewise
+    the session-memoized pipeline OUTPUT (``_minhash_pairs_shared``):
+    the audit consumes the same pair relation the pipeline emits —
+    exactly what a production recall audit joins against — instead of
+    re-running the banded pass a second time inside the same
+    session."""
     lsh = _minhash_pairs_shared(spark, sf_dir).select(
         F.col("doc_a").alias("la"), F.col("doc_b").alias("lb")
     )
-    return _candidate_flags(exact, lsh)
+    return _exact_pairs_shared(spark, sf_dir).join(
+        lsh,
+        (F.col("doc_a") == F.col("la")) & (F.col("doc_b") == F.col("lb")),
+        "left",
+    ).select(
+        "doc_a", "doc_b", "jaccard", F.col("la").isNotNull().alias("in_candidates")
+    )
 
 
 # Band-count dial at fixed _MINHASH_K hashes: rungs sweep rows-per-band
@@ -697,83 +697,57 @@ def dedup_minhash_band_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the exact side is the inverted-index audit baseline
     (dedup_ngram_jaccard), session-memoized once for the ladder —
     O(near-dup pairs) rows, broadcast-sized, sampled-slice at 100 TB
-    exactly like dedup_minhash_recall documents; the rungs share ONE
-    materialized shingle+hash pass (r17 optimization, guide §1.2) AND
-    — r18 optimization, same guide section — ONE banded pass: because
+    exactly like dedup_minhash_recall documents. The rungs share ONE
+    materialized shingle+hash pass and ONE banded pass: because
     coarse-band signatures decompose into their single-minhash fine
     bands ('|'-joined integers, unique decomposition), a pair's
     candidacy at EVERY rung is a function of which of the K fine
     bands match. So the ladder runs the bucket self-join once at the
-    finest layout (K single-minhash bands — exactly the old rung-K
-    join, the candidate-volume ceiling the dial exists to expose),
-    folds each colliding pair's matched band indices into a K-bit
-    mask (bit_or of 1<<band), verifies jaccard >= 0.8 once on that
-    superset, and derives rung b's flag as "some aligned window of
-    K/b consecutive mask bits is all-ones" — the same coarse-band
-    membership the per-rung join used to recompute. The previous
-    shape ran 3 bucket self-joins + 3 two-sided verification joins +
-    3 audit joins; this shape runs 1 + 1 + 1 with a per-rung bitmask
-    test, i.e. the marginal cost of a rung is a constant expression,
-    not a corpus pass. At 100 TB the one-pass materialization is the
+    finest layout (K single-minhash bands, the candidate-volume
+    ceiling the dial exists to expose), folds each colliding pair's
+    matched band indices into a K-bit mask (bit_or of 1<<band),
+    verifies jaccard >= 0.8 once on that superset, and derives rung
+    b's flag as "some aligned window of K/b consecutive mask bits is
+    all-ones": one bucket join, one verify join and one audit join,
+    so the marginal cost of a rung is a constant expression, not a
+    corpus pass. At 100 TB the one-pass materialization is the
     standard time/space trade (MEMORY_AND_DISK blocks of O(corpus
     tokens) hashes) against re-scanning the corpus per rung."""
-    from ..functions.materialize import memo_checkpoint
-
-    exact = memo_checkpoint(
-        spark,
-        ("minhash_exact_pairs", os.path.realpath(sf_dir)),
-        lambda: dedup_ngram_jaccard(spark, sf_dir).select(
-            "doc_a", "doc_b", "jaccard"
-        ),
-    )
+    exact = _exact_pairs_shared(spark, sf_dir)
     shared = _minhash_base(spark, sf_dir).select(
         "doc_id", "sh", F.transform("sh", hex32_spark).alias("hs")
     ).localCheckpoint(eager=True)
     # the returned plan reads the checkpoint, so it stays pinned with
     # the result (same lifecycle as textrank's final ranks checkpoint;
     # drain_session releases it once the result is consumed)
-    base = shared.select("doc_id", "sh")
-    hashed = shared.select("doc_id", "hs")
 
     # ONE bucket self-join at the finest (single-minhash) layout; the
     # matched fine-band set per pair, as a K-bit mask
-    fine = hashed.select(
+    fine = shared.select(
         "doc_id",
         F.posexplode_outer(_band_sigs(F.col("hs"), _MINHASH_K)).alias(
             "band", "sig"
         ),
     )
-    a = fine.select(
-        F.col("doc_id").alias("da"), F.col("band").alias("b1"), F.col("sig").alias("s1")
-    )
-    b = fine.select(
-        F.col("doc_id").alias("db"), F.col("band").alias("b2"), F.col("sig").alias("s2")
-    )
     matched = (
-        a.join(b, (a.b1 == b.b2) & (a.s1 == b.s2) & (a.da < b.db))
-        .groupBy("da", "db")
+        _bucket_pairs(fine, fine, ["band", "sig"], lt="doc_id")
+        .groupBy("doc_id_a", "doc_id_b")
         .agg(
             # pyspark's shiftleft only takes a literal shift; the SQL
             # form accepts a column
             F.bit_or(
-                F.expr("shiftleft(CAST(1 AS BIGINT), CAST(b1 AS INT))")
+                F.expr("shiftleft(CAST(1 AS BIGINT), CAST(band_a AS INT))")
             ).alias("mask")
         )
     )
     # ONE candidate-only jaccard verification on the rung-K superset
     # (verified sets nest exactly like candidate sets, so rung flags
     # below stay the per-rung pipeline's verified output)
-    verify = base.repartition(spark.sparkContext.defaultParallelism, "doc_id")
-    vpairs = matched.join(
-        verify.select(F.col("doc_id").alias("da"), F.col("sh").alias("sha")), "da"
-    ).join(verify.select(F.col("doc_id").alias("db"), F.col("sh").alias("shb")), "db")
-    i = F.size(F.array_intersect("sha", "shb"))
-    jac = i / (F.size("sha") + F.size("shb") - i)
-    verified = (
-        vpairs.select("da", "db", "mask", jac.alias("vjac"))
-        .filter(F.col("vjac") >= _JACCARD_THRESHOLD)
-        .select(F.col("da").alias("la"), F.col("db").alias("lb"), "mask")
-    )
+    verified = _jaccard_verified(
+        matched,
+        ["doc_id_a", "doc_id_b", "mask"],
+        spread(shared.select("doc_id", "sh"), "doc_id"),
+    ).select(F.col("doc_id_a").alias("la"), F.col("doc_id_b").alias("lb"), "mask")
 
     # ONE audit join; per-rung candidacy is a bitmask expression
     flags = exact.join(
@@ -927,12 +901,11 @@ def simhash_pairs(docs: DataFrame) -> DataFrame:
     (pigeonhole-complete for hamming <= 7).
 
     The signature relation (O(docs) rows, three BIGINTs) is
-    materialized ONCE and both self-join sides read it: the previous
-    shape relied on the repartition-for-ReusedExchange trick, which
-    holds on the sort-merge path but not when AQE broadcasts a side —
-    there the broadcast side re-ran the whole explode-tokens ->
-    hash -> 64-vote aggregation (the query's dominant cost) a second
-    time (r17 optimization, guide §1.2/§2.4). Pinned with the
+    materialized ONCE and both self-join sides read it: the
+    repartition-for-ReusedExchange trick holds on the sort-merge path
+    but not when AQE broadcasts a side, where the broadcast side would
+    re-run the whole explode-tokens -> hash -> 64-vote aggregation
+    (the query's dominant cost) a second time. Pinned with the
     returned result; drain_session releases it."""
     sims = simhash_signatures(docs).localCheckpoint(eager=True)
     n_bands = 2 * _SIMHASH_BANDS_PER_HALF
@@ -957,33 +930,18 @@ def simhash_pairs(docs: DataFrame) -> DataFrame:
     # materialized rows, so no repartition-for-reuse is needed and
     # the join shuffles (or broadcasts, at fixture scale) narrow
     # already-computed rows on either path
-    a = banded.select(
-        F.col("doc_id").alias("da"),
-        F.col("slo").alias("la"),
-        F.col("shi").alias("ha"),
-        F.col("b").alias("b1"),
-        F.col("bandval").alias("v1"),
-    )
-    b = banded.select(
-        F.col("doc_id").alias("db"),
-        F.col("slo").alias("lb"),
-        F.col("shi").alias("hb"),
-        F.col("b").alias("b2"),
-        F.col("bandval").alias("v2"),
-    )
     cand = (
-        a.join(b, (a.b1 == b.b2) & (a.v1 == b.v2) & (a.da < b.db))
-        .select("da", "la", "ha", "db", "lb", "hb")
+        _bucket_pairs(banded, banded, ["b", "bandval"], lt="doc_id")
+        .select("doc_id_a", "slo_a", "shi_a", "doc_id_b", "slo_b", "shi_b")
         .distinct()
     )
-    hamming = F.bit_count(F.expr("la ^ lb")) + F.bit_count(F.expr("ha ^ hb"))
-    return (
-        cand.filter(hamming <= _HAMMING_MAX)
-        .select(
-            F.col("da").alias("doc_a"),
-            F.col("db").alias("doc_b"),
-            hamming.cast("int").alias("hamming"),
-        )
+    hamming = F.bit_count(F.expr("slo_a ^ slo_b")) + F.bit_count(
+        F.expr("shi_a ^ shi_b")
+    )
+    return cand.filter(hamming <= _HAMMING_MAX).select(
+        F.col("doc_id_a").alias("doc_a"),
+        F.col("doc_id_b").alias("doc_b"),
+        hamming.cast("int").alias("hamming"),
     )
 
 
@@ -1001,7 +959,9 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     edited near-dups. Reference analog: 'smart' frame change detection
     (src/frame_producer.py:110-119) as fuzzy content identity.
     """
-    docs = _spread(_t(spark, sf_dir, "documents").select("doc_id", "text"), "doc_id")
+    docs = spread(
+        load_table(spark, sf_dir, "documents").select("doc_id", "text"), "doc_id"
+    )
     return simhash_pairs(docs)
 
 
@@ -1111,58 +1071,45 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     match (src/prediction_producer.py:314-325), generalized to
     corpus-scale near-dup detection.
     """
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     # ONE parquet pass builds the widened+drifted corpus and every
     # consumer — both signature sides, both verify sides — reads the
-    # materialized partitions (r17 optimization, guide §1.2/§2.4).
-    # The previous shape relied on ReusedExchange to dedupe the four
-    # byte-identical corpus subtrees, but the reuse never fired: at
-    # fixture scale AQE broadcasts the tiny sides, and the
-    # broadcast-vs-shuffle asymmetry defeats canonical subtree
-    # identity — the executed plan carried 8 parquet scans and 4
-    # widen/drift folds for one query. Production materializes the
-    # normalized corpus once (at 100 TB: written to parquet, not
-    # recomputed per stage); the checkpoint is pinned with the
-    # returned result and drain_session releases it.
-    corpus = _spread(_emb_corpus(emb), "vec_id").localCheckpoint(eager=True)
+    # materialized partitions. ReusedExchange cannot dedupe the four
+    # corpus subtrees: at fixture scale AQE broadcasts the tiny sides,
+    # and the broadcast-vs-shuffle asymmetry defeats canonical subtree
+    # identity (measured: 8 parquet scans and 4 widen/drift folds for
+    # one query). Production materializes the normalized corpus once
+    # (at 100 TB: written to parquet, not recomputed per stage); the
+    # checkpoint is pinned with the returned result and drain_session
+    # releases it. Each vector's l2 norm is folded once here, so a
+    # pair's cosine folds no norm.
+    corpus = (
+        spread(_emb_corpus(emb), "vec_id")
+        .withColumn("n", l2_spark(F.col("emb")))
+        .localCheckpoint(eager=True)
+    )
     # the banded signature fold (8 bands x 8 literal-plane dot folds)
     # likewise runs ONCE: both self-join sides read this checkpoint
     sigs = corpus.select(
         "vec_id", "label",
         F.explode(_emb_band_keys(F.col("emb"))).alias("bsig"),
     ).localCheckpoint(eager=True)
-    # both sides rename EVERY column (ba/bb, not a shared "bsig"):
-    # an ambiguous self-join reference resolves to a trivially-true
-    # predicate that cannot serve as an equi key, silently demoting
-    # the hash join to label-only all-pairs + post-filter (measured
-    # 4.7x slower at sf0.1; arbitrarily worse at scale)
-    a = sigs.select(
-        F.col("vec_id").alias("va"), F.col("label").alias("la"),
-        F.col("bsig").alias("ba"),
-    )
-    b = sigs.select(
-        F.col("vec_id").alias("vb"), F.col("label").alias("lb"),
-        F.col("bsig").alias("bb"),
-    )
     cand = (
-        a.join(b, (a.la == b.lb) & (a.ba == b.bb) & (a.va < b.vb))
-        .select("va", "vb", "la")
+        _bucket_pairs(sigs, sigs, ["label", "bsig"], lt="vec_id")
+        .select("vec_id_a", "vec_id_b", "label_a")
         .distinct()
     )
     # verify joins read the corpus checkpoint directly — no
     # per-side recompute regardless of the join strategy AQE picks
-    ver = corpus
-    pairs = cand.join(
-        ver.select(F.col("vec_id").alias("va"), F.col("emb").alias("ea")), "va"
-    ).join(ver.select(F.col("vec_id").alias("vb"), F.col("emb").alias("eb")), "vb")
-    cos = cosine_spark(F.col("ea"), F.col("eb"))
+    pairs = _fetch(cand, "vec_id", ["emb", "n"], corpus)
+    cos = cosine_normed(F.col("emb_a"), F.col("n_a"), F.col("emb_b"), F.col("n_b"))
     return (
-        pairs.select("va", "vb", "la", cos.alias("cos"))
+        pairs.select("vec_id_a", "vec_id_b", "label_a", cos.alias("cos"))
         .filter(F.col("cos") >= _COSINE_NEARDUP)
         .select(
-            F.col("va").alias("vec_a"),
-            F.col("vb").alias("vec_b"),
-            F.col("la").cast("int").alias("label"),
+            F.col("vec_id_a").alias("vec_a"),
+            F.col("vec_id_b").alias("vec_b"),
+            F.col("label_a").cast("int").alias("label"),
             F.round("cos", 6).alias("cosine"),
         )
     )
@@ -1177,9 +1124,7 @@ def _emb_pairs_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``dedup_embedding_cosine`` row keeps computing the full banded
     pipeline, and drain_session releases the slot so every
     driver/oracle invocation computes from the parquet inputs."""
-    from ..functions.materialize import memo_checkpoint
-
-    return memo_checkpoint(
+    return materialize.memo_checkpoint(
         spark,
         ("emb_cosine_pairs", os.path.realpath(sf_dir)),
         lambda: dedup_embedding_cosine(spark, sf_dir),
@@ -1254,7 +1199,7 @@ def dedup_semantic_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: centroids fold into ONE broadcast row (collect_list
     aggregate, never a driver collect) and assignment is a NARROW
-    per-row argmin over that array — no exchange beyond the _spread.
+    per-row argmin over that array — no exchange beyond the spread.
     The assigned relation is hash-partitioned on cell ONCE and reused
     by BOTH self-join sides (byte-identical subplans ->
     ReusedExchange, as in dedup_embedding_cosine's banded verify), so
@@ -1270,31 +1215,18 @@ def dedup_semantic_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     (src/prediction_producer.py:314-325) generalized from
     target-vs-stream to corpus-vs-itself, routed through A4's
     embedding space."""
-    emb = _t(spark, sf_dir, "embeddings")
-    corpus = _emb_corpus(emb).select("vec_id", "emb")
-    seeds = emb.filter(F.col("vec_id") < _SEMDEDUP_K).select(
-        F.col("vec_id").alias("seed_id"),
-        F.transform("embedding", lambda x: x.cast("double")).alias("se"),
-    )
-    return _semantic_cells_prune(spark, corpus, seeds)
-
-
-def _semantic_cells_prune(
-    spark: SparkSession, corpus: DataFrame, seeds: DataFrame
-) -> DataFrame:
-    """The SemDeDup core over an arbitrary (vec_id, emb) corpus and
-    (seed_id, se) centroid set — split out so the 10x probe can scale
-    K with the corpus (the production lever) without touching the
-    registered query's fixed-K contract."""
+    emb = load_table(spark, sf_dir, "embeddings")
     seeds_row = (
-        seeds
-        .agg(
-            # array_sort on (seed_id, se) structs orders by seed_id
-            # asc, so the fold's first-strict-win tie rule below
-            # resolves equal distances to the SMALLEST seed_id —
-            # the oracle's ORDER BY dm, seed_id
-            F.array_sort(F.collect_list(F.struct("seed_id", "se"))).alias("sds")
+        emb.filter(F.col("vec_id") < _SEMDEDUP_K)
+        .select(
+            F.col("vec_id").alias("seed_id"),
+            F.transform("embedding", lambda x: x.cast("double")).alias("se"),
         )
+        # array_sort on (seed_id, se) structs orders by seed_id asc, so
+        # the fold's first-strict-win tie rule below resolves equal
+        # distances to the SMALLEST seed_id — the oracle's ORDER BY
+        # dm, seed_id
+        .agg(F.array_sort(F.collect_list(F.struct("seed_id", "se"))).alias("sds"))
     )
     _no_cell = F.struct(
         F.lit(None).cast("bigint").alias("sid"),
@@ -1311,31 +1243,21 @@ def _semantic_cells_prune(
             F.struct(s["seed_id"].alias("sid"), d.alias("dm")),
         ).otherwise(acc)
 
-    n = spark.sparkContext.defaultParallelism
     assigned = (
-        _spread(corpus, "vec_id")
+        spread(_emb_corpus(emb).select("vec_id", "emb"), "vec_id")
         .crossJoin(F.broadcast(seeds_row))
         .select(
             "vec_id",
             "emb",
+            l2_spark(F.col("emb")).alias("n"),
             F.aggregate(F.col("sds"), _no_cell, _closer)["sid"].alias("cell"),
         )
-        # ONE exchange hash-partitioned on cell: both self-join sides
-        # are byte-identical up to it (ReusedExchange), so assignment
-        # computes once and the pair join reads it co-partitioned
-        .repartition(n, "cell")
     )
-    # rename EVERY column on both sides — the ambiguous-self-join trap
-    # documented at dedup_embedding_cosine's candidate join
-    a = assigned.select(
-        F.col("vec_id").alias("va"), F.col("emb").alias("ea"),
-        F.col("cell").alias("ca"),
-    )
-    b = assigned.select(
-        F.col("vec_id").alias("vb"), F.col("emb").alias("eb"),
-        F.col("cell").alias("cb"),
-    )
-    cos = cosine_spark(F.col("ea"), F.col("eb"))
+    # ONE exchange hash-partitioned on cell: both self-join sides are
+    # byte-identical up to it (ReusedExchange), so assignment and the
+    # per-row norm compute once and the pair join reads it co-partitioned
+    assigned = spread(assigned, "cell")
+    cos = cosine_normed(F.col("emb_a"), F.col("n_a"), F.col("emb_b"), F.col("n_b"))
     # explode_outer of the 0-or-1-element thresholded array, NOT a
     # plain filter on a projected cos: Catalyst would merge that
     # filter into the join condition and re-evaluate the cosine fold
@@ -1348,45 +1270,53 @@ def _semantic_cells_prune(
         lambda c: c["cos"] >= _COSINE_NEARDUP,
     )
     dropped = (
-        a.join(b, (a.ca == b.cb) & (a.va < b.vb))
-        .select("vb", "cb", "va", F.explode_outer(hit).alias("h"))
+        _bucket_pairs(assigned, assigned, ["cell"], lt="vec_id")
+        .select("vec_id_b", "cell_b", "vec_id_a", F.explode_outer(hit).alias("h"))
         .filter(F.col("h").isNotNull())
-        .select("vb", "cb", "va", F.col("h.cos").alias("cos"))
+        .select("vec_id_b", "cell_b", "vec_id_a", F.col("h.cos").alias("cos"))
     )
     return (
-        dropped.groupBy("vb", "cb")
+        dropped.groupBy("vec_id_b", "cell_b")
         .agg(
-            F.min("va").alias("keeper"),
-            F.min_by("cos", "va").alias("kcos"),
+            F.min("vec_id_a").alias("keeper"),
+            F.min_by("cos", "vec_id_a").alias("kcos"),
         )
         .select(
-            F.col("vb").alias("vec_id"),
-            F.col("cb").cast("int").alias("cell"),
+            F.col("vec_id_b").alias("vec_id"),
+            F.col("cell_b").cast("int").alias("cell"),
             "keeper",
             F.round("kcos", 6).alias("cosine"),
         )
     )
 
 
+# The MinHash near-dup pairs as an edge list (the jaccard column is
+# not needed, only the pairs), and the recursive min-label closure of
+# a symmetric ``sym(s, d)`` edge CTE — the oracle twins of the
+# connected_components keeper election.
+_MINHASH_EDGES_SQL = _MINHASH_ORACLE.replace(
+    "round(i.i / (sa.n + sb.n - i.i), 6) AS jaccard", "i.i AS dummy_i"
+)
+_CLOSURE_CTES = """nodes AS (SELECT DISTINCT s AS node FROM sym),
+    cc AS (
+        SELECT node, node AS comp FROM nodes
+        UNION
+        SELECT sym.d AS node, cc.comp FROM cc JOIN sym ON sym.s = cc.node
+    )"""
+
 # The recursive-CTE closure of the MinHash near-dup pair graph,
 # exposed as a reusable CTE list so downstream audits (e.g.
 # curation.py::split_leakage_neardup) can build on the identical
 # component definition without restating it.
 _CC_CTES = f"""pairs AS (
-        {_MINHASH_ORACLE.replace('round(i.i / (sa.n + sb.n - i.i), 6) AS jaccard',
-                                 'i.i AS dummy_i')}
+        {_MINHASH_EDGES_SQL}
     ),
     sym AS (
         SELECT doc_a AS s, doc_b AS d FROM pairs
         UNION ALL
         SELECT doc_b AS s, doc_a AS d FROM pairs
     ),
-    nodes AS (SELECT DISTINCT s AS node FROM sym),
-    cc AS (
-        SELECT node, node AS comp FROM nodes
-        UNION
-        SELECT sym.d AS node, cc.comp FROM cc JOIN sym ON sym.s = cc.node
-    )"""
+    {_CLOSURE_CTES}"""
 
 _CC_ORACLE = f"""
     WITH RECURSIVE {_CC_CTES}
@@ -1421,30 +1351,35 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     split_group_routed), and the component relation is tiny (one row
     per CLUSTERED doc), so re-running the minhash + propagation loop
     per consumer bought nothing."""
-    from ..functions.materialize import memo_checkpoint
+    # the directed edge list is the session-memoized pipeline OUTPUT
+    # (r17 optimization) — already materialized, so the symmetrizing
+    # swap is a projection over checkpointed partitions and every
+    # propagation round joins cheap materialized data; the memo (not
+    # this builder) owns the blocks, so no call-site free is needed on
+    # a CC failure
+    return materialize.memo_checkpoint(
+        spark,
+        ("cc_components", os.path.realpath(sf_dir)),
+        lambda: _keepers(
+            _minhash_pairs_shared(spark, sf_dir).select(
+                F.col("doc_a").alias("s"), F.col("doc_b").alias("d")
+            ),
+            "doc_id",
+        ),
+    )
 
-    def _build() -> DataFrame:
-        # the directed edge list is the session-memoized pipeline
-        # OUTPUT (r17 optimization) — already materialized, so the
-        # symmetrizing swap is a projection over checkpointed
-        # partitions and every propagation round joins cheap
-        # materialized data; the memo (not this builder) owns the
-        # blocks, so no call-site free is needed on a CC failure
-        edges = _minhash_pairs_shared(spark, sf_dir).select(
-            F.col("doc_a").alias("s"), F.col("doc_b").alias("d")
-        )
-        sym = edges.unionAll(
-            edges.select(F.col("d").alias("s"), F.col("s").alias("d"))
-        )
-        labels = connected_components(sym)
-        return labels.select(
-            F.col("node").alias("doc_id"),
-            F.col("comp").alias("component"),
-            (F.col("comp") == F.col("node")).alias("is_keeper"),
-        )
 
-    return memo_checkpoint(
-        spark, ("cc_components", os.path.realpath(sf_dir)), _build
+def _keepers(edges: DataFrame, id_name: str) -> DataFrame:
+    """Keeper election over a directed (s, d) near-dup edge list:
+    symmetrize it, close it with :func:`connected_components` and mark
+    each component's minimum id as its keeper — (``id_name``,
+    component, is_keeper)."""
+    sym = edges.unionAll(edges.select(F.col("d").alias("s"), F.col("s").alias("d")))
+    labels = connected_components(sym)
+    return labels.select(
+        F.col("node").alias(id_name),
+        F.col("comp").alias("component"),
+        (F.col("comp") == F.col("node")).alias("is_keeper"),
     )
 
 
@@ -1463,14 +1398,10 @@ def connected_components(sym: DataFrame, max_rounds: int = 50) -> DataFrame:
     measured 1.5-2x on the loop, and at scale it removes an
     O(edges) shuffle per round.
     """
-    from ..functions.materialize import iterate, transient
-
-    spark = sym.sparkSession
-    n_part = spark.sparkContext.defaultParallelism
     # the returned labels are themselves materialized, so the edge
     # checkpoint has no reader past the block
-    with transient(spark) as pin:
-        sym = pin(sym.repartition(n_part, "s"))
+    with materialize.transient(sym.sparkSession) as pin:
+        sym = pin(spread(sym, "s"))
 
         def propagate(labels: DataFrame) -> DataFrame:
             labels = labels.select("node", "comp")
@@ -1494,7 +1425,7 @@ def connected_components(sym: DataFrame, max_rounds: int = 50) -> DataFrame:
             # remaining distance to each component's minimum —
             # neighbor-min alone moves labels a single edge-hop per
             # round, which on a chain-shaped cluster needs diameter
-            # rounds and used to overrun the old fixed cap silently.
+            # rounds.
             hop = propagated.select(
                 F.col("node").alias("jnode"), F.col("comp").alias("jcomp")
             )
@@ -1513,7 +1444,7 @@ def connected_components(sym: DataFrame, max_rounds: int = 50) -> DataFrame:
         labels = sym.select(F.col("s").alias("node")).distinct().withColumn(
             "comp", F.col("node")
         )
-        labels = iterate(
+        labels = materialize.iterate(
             labels,
             propagate,
             max_rounds,
@@ -1524,8 +1455,7 @@ def connected_components(sym: DataFrame, max_rounds: int = 50) -> DataFrame:
 
 _CC_MULTI_ORACLE = f"""
     WITH RECURSIVE tpairs AS (
-        {_MINHASH_ORACLE.replace('round(i.i / (sa.n + sb.n - i.i), 6) AS jaccard',
-                                 'i.i AS dummy_i')}
+        {_MINHASH_EDGES_SQL}
     ),
     epairs AS (
         {_EMB_NEARDUP_ORACLE}
@@ -1540,12 +1470,7 @@ _CC_MULTI_ORACLE = f"""
         UNION ALL
         SELECT b AS s, a AS d FROM edges
     ),
-    nodes AS (SELECT DISTINCT s AS node FROM sym),
-    cc AS (
-        SELECT node, node AS comp FROM nodes
-        UNION
-        SELECT sym.d AS node, cc.comp FROM cc JOIN sym ON sym.s = cc.node
-    )
+    {_CLOSURE_CTES}
     SELECT node AS item_id,
            min(comp) AS component,
            (min(comp) = node) AS is_keeper
@@ -1586,14 +1511,7 @@ def dedup_cluster_multimodal(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb_edges = _emb_pairs_shared(spark, sf_dir).select(
         F.col("vec_a").alias("s"), F.col("vec_b").alias("d")
     )
-    sym = text_edges.unionAll(emb_edges)
-    sym = sym.unionAll(sym.select(F.col("d").alias("s"), F.col("s").alias("d")))
-    labels = connected_components(sym)
-    return labels.select(
-        F.col("node").alias("item_id"),
-        F.col("comp").alias("component"),
-        (F.col("comp") == F.col("node")).alias("is_keeper"),
-    )
+    return _keepers(text_edges.unionAll(emb_edges), "item_id")
 
 
 # ------------------------------------------------- incremental (batch-vs-corpus)
@@ -1701,24 +1619,23 @@ def dedup_incremental_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     all-pairs. The asymmetry also kills the self-join's da < db
     dedup-direction concern: pairs are (batch x corpus) by
     construction."""
-    docs = _spread(
-        _t(spark, sf_dir, "documents").select("doc_id", "text", "lang"), "doc_id"
+    docs = spread(
+        load_table(spark, sf_dir, "documents").select("doc_id", "text", "lang"),
+        "doc_id",
     )
     bkt = (
         hex32_spark(F.concat(F.lit("inc:"), F.col("doc_id").cast("string"))) % 10
     )
     # ONE parquet pass materializes the bucket-tagged corpus WITH its
     # derived index columns — content hash, shingle array and banded
-    # MinHash signatures (r17 materialized only the raw text; r18,
-    # guide §1.2/§2.4: every downstream consumer re-derived md5/
-    # shingles/minhash from the text per branch). The checkpoint now
-    # IS the (hash, band-sig, shingles) index a production deployment
-    # keeps materialized in parquet; the exact probe, both banded
-    # sides, the verification shingle sides and the final projection
-    # are pure filters/projections/joins over it. The recrawl rows
-    # re-key their originals, so their index columns are reused, not
-    # recomputed. Pinned with the returned result; drain_session
-    # releases it.
+    # MinHash signatures, so no consumer re-derives them from the text
+    # per branch. The checkpoint IS the (hash, band-sig, shingles)
+    # index a production deployment keeps materialized in parquet;
+    # the exact probe, both banded sides, the verification shingle
+    # sides and the final projection are pure filters/projections/
+    # joins over it. The recrawl rows re-key their originals, so their
+    # index columns are reused, not recomputed. Pinned with the
+    # returned result; drain_session releases it.
     # STAGED projections: sh and hs must be their own projection steps
     # so CollapseProject keeps them single-evaluation — inlining the
     # whole chain into _band_sigs duplicates the shingle split 51x and
@@ -1762,26 +1679,21 @@ def dedup_incremental_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # near probe: both sides' banded signatures are index reads; the
-    # non-empty-shingles gate (= the old token-count gate) keeps short
-    # docs out of banding exactly as before
-    def bands_of(side: DataFrame, alias: str) -> DataFrame:
+    # non-empty-shingles gate keeps short docs out of banding
+    def bands_of(side: DataFrame) -> DataFrame:
         return side.filter(F.size("sh") > 0).select(
-            F.col("doc_id").alias(alias),
-            F.posexplode_outer("bands").alias("band", "sig"),
+            "doc_id", F.posexplode_outer("bands").alias("band", "sig")
         )
 
-    cbands = bands_of(corpus, "dc")
-    bbands = bands_of(batch, "db")
-    cand = bbands.join(cbands, ["band", "sig"]).select("db", "dc").distinct()
-    pairs = cand.join(
-        batch.select(F.col("doc_id").alias("db"), F.col("sh").alias("shb")), "db"
-    ).join(corpus.select(F.col("doc_id").alias("dc"), F.col("sh").alias("shc")), "dc")
-    i = F.size(F.array_intersect("shb", "shc"))
-    jac = i * F.lit(1.0) / (F.size("shb") + F.size("shc") - i)
+    # a = the batch doc, b = the corpus doc
+    cand = (
+        _bucket_pairs(bands_of(batch), bands_of(corpus), ["band", "sig"])
+        .select("doc_id_a", "doc_id_b")
+        .distinct()
+    )
     near = (
-        pairs.select("db", jac.alias("jac"))
-        .filter(F.col("jac") >= _JACCARD_THRESHOLD)
-        .select(F.col("db").alias("doc_id"))
+        _jaccard_verified(cand, ["doc_id_a"], batch, corpus)
+        .select(F.col("doc_id_a").alias("doc_id"))
         .distinct()
         .withColumn("is_near", F.lit(True))
     )
@@ -1869,28 +1781,19 @@ def dedup_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("bn") <= _EDIT_BAND_CAP)
         .drop("bn")
     )
-    left = capped.select(
-        F.col("doc_id").alias("a_id"), "lang", "bt", "band",
-        F.col("text").alias("a_text"),
-    )
-    right = capped.select(
-        F.col("doc_id").alias("b_id"), "lang", "bt", "band",
-        F.col("text").alias("b_text"),
-    )
     # the DP runs INSIDE the aggregate's result projection: a filter on
     # `edit_dist` cannot push below an Aggregate, so each pair is
     # verified exactly once (phrased as select-then-filter, pushdown
     # would clone the levenshtein into the predicate — the SCALE.md
     # double-evaluation trap)
     cand = (
-        left.join(right, ["lang", "bt", "band"])
-        .filter(F.col("a_id") < F.col("b_id"))
-        .groupBy("a_id", "b_id")
+        _bucket_pairs(capped, capped, ["lang", "bt", "band"], lt="doc_id")
+        .groupBy(F.col("doc_id_a").alias("a_id"), F.col("doc_id_b").alias("b_id"))
         .agg(
-            F.levenshtein(F.max("a_text"), F.max("b_text"))
+            F.levenshtein(F.max("text_a"), F.max("text_b"))
             .cast("bigint")
             .alias("edit_dist"),
-            F.greatest(F.length(F.max("a_text")), F.length(F.max("b_text")))
+            F.greatest(F.length(F.max("text_a")), F.length(F.max("text_b")))
             .cast("bigint")
             .alias("max_len"),
         )

@@ -24,7 +24,7 @@ from ..functions.text import (
     tokens_spark,
 )
 from ..functions.vector import cosine_duck, cosine_spark
-from ..sources import load_table
+from ..sources import load_table, spread
 from .registry import query
 
 # Disjoint marker-token sets per language for the n-gram-frequency
@@ -1015,14 +1015,13 @@ def _bm25_postings(spark: SparkSession, d: DataFrame) -> DataFrame:
     query-term occurrences crosses the exchange), cluster by doc_id
     once, and reduce to (doc_id, dl, term, tf). Plan shape pinned by
     tests/test_round10_ops.py::test_bm25_postings_plan."""
+    occ = d.select(
+        "doc_id",
+        F.size("toks").alias("dl"),
+        F.explode("toks").alias("term"),
+    ).filter(F.col("term").isin(*_BM25_TERMS))
     return (
-        d.select(
-            "doc_id",
-            F.size("toks").alias("dl"),
-            F.explode("toks").alias("term"),
-        )
-        .filter(F.col("term").isin(*_BM25_TERMS))
-        .repartition(spark.sparkContext.defaultParallelism, "doc_id")
+        spread(occ, "doc_id")
         .groupBy("doc_id", "dl", "term")
         .agg(F.count("*").alias("tf"))
     )

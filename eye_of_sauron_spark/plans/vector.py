@@ -39,7 +39,7 @@ from ..functions.vector import (
     l2_duck,
     l2_spark,
 )
-from ..sources import load_table
+from ..sources import load_table, spread
 from .registry import query
 
 _TOPK = 5
@@ -63,17 +63,6 @@ def _plane(p: int) -> list[int]:
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
-
-
-def _spread(df: DataFrame, *keys: str) -> DataFrame:
-    """Repartition with an explicit count before CPU-heavy narrow
-    work (same rationale as plans/dedup.py::_spread): the local
-    fixture scans as ONE parquet split, which serializes the
-    per-vector cosine folds on a single core — measured at the 10x
-    probe, the brute-force scorer ran as one 149 s task without this.
-    On a cluster the exchange is no-op-sized next to the scan."""
-    n = df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(n, *keys)
 
 
 # ------------------------------------------- the one retrieval tail
@@ -233,7 +222,7 @@ def similarity_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows are already down to O(queries x k)."""
     emb = _t(spark, sf_dir, "embeddings")
     q = _side(emb.filter(F.expr(_QUERY_FILTER)), "q")
-    return _rank_topk(_pairs(_side(_spread(emb, "vec_id"), "c"), q), _TOPK)
+    return _rank_topk(_pairs(_side(spread(emb, "vec_id"), "c"), q), _TOPK)
 
 
 def _lsh_oracle_sql(planes: int) -> str:
@@ -284,7 +273,7 @@ def _lsh_sigs(spark: SparkSession, sf_dir: str, planes: int) -> DataFrame:
     # constraint constant-folds away; the sentinel is unreachable
     # because null embeddings are filtered at the scan (a cheap,
     # parquet-pushable predicate).
-    return _spread(emb, "vec_id").select(
+    return spread(emb, "vec_id").select(
         "vec_id",
         "embedding",
         F.coalesce(
@@ -447,7 +436,7 @@ def _ivf_topk(spark: SparkSession, sf_dir: str, nprobe: int) -> DataFrame:
     :func:`similarity_topk_ivf` for the full shape discussion)."""
     emb = _t(spark, sf_dir, "embeddings")
     cent_row = F.broadcast(_ivf_cent_row(emb))
-    c = _side(_spread(emb, "vec_id"), "c").crossJoin(cent_row)
+    c = _side(spread(emb, "vec_id"), "c").crossJoin(cent_row)
     q = _side(emb.filter(F.expr(_QUERY_FILTER)), "q").crossJoin(cent_row)
     assigned = c.select("cid", "ce", "cn", _ivf_ranked_cells("c")[0].alias("cell"))
     probes = q.select(
@@ -689,7 +678,7 @@ def similarity_ivf_nprobe_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles — and now also ONE assignment pass, not six."""
     emb = _t(spark, sf_dir, "embeddings")
     max_np = _IVF_LADDER_NPROBES[-1]
-    c = _side(_spread(emb, "vec_id"), "c").crossJoin(F.broadcast(_ivf_cent_row(emb)))
+    c = _side(spread(emb, "vec_id"), "c").crossJoin(F.broadcast(_ivf_cent_row(emb)))
     shared = c.select(
         "cid", "ce", "cn", F.slice(_ivf_ranked_cells("c"), 1, max_np).alias("cells")
     ).localCheckpoint(eager=True)
@@ -940,7 +929,7 @@ def similarity_topk_sq8_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.array_max(F.transform("embedding", lambda x: F.abs(x.cast("double"))))
         / _Q_LEVELS
     )
-    codes = _spread(emb, "vec_id").select(
+    codes = spread(emb, "vec_id").select(
         "vec_id",
         "embedding",
         F.transform(
@@ -1209,7 +1198,7 @@ def _pq_topk(emb: DataFrame, codebook: DataFrame, encode) -> DataFrame:
     shortlist's rows by join; the candidate rows here carry them,
     which yields the same rows."""
     c = (
-        _side(_spread(emb, "vec_id"), "c")
+        _side(spread(emb, "vec_id"), "c")
         .crossJoin(F.broadcast(codebook))
         .select(
             "cid",
@@ -1518,7 +1507,7 @@ def similarity_topk_mrl_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         t = F.slice("embedding", 1, _MRL_DIM)
         return t.alias(p + "t"), l2_spark(t).alias(p + "tn")
 
-    c = _side(_spread(emb, "vec_id"), "c", *prefix("c"))
+    c = _side(spread(emb, "vec_id"), "c", *prefix("c"))
     q = _side(emb.filter(F.expr(_QUERY_FILTER)), "q", *prefix("q"))
     acos = cosine_normed(F.col("qt"), F.col("qtn"), F.col("ct"), F.col("ctn"))
     return _shortlist_rerank(
@@ -1614,7 +1603,6 @@ def _mine_hard_negatives(
     with a parameterized plane count — split out so the 10x probe can
     scale the bucket count with the corpus (the production lever)
     without touching the registered query's fixed-plane contract."""
-    n = spark.sparkContext.defaultParallelism
     # the signature relation is materialized ONCE and both self-join
     # sides derive from it (each vector's norm rides along, so a
     # pair's cosine folds no norm): the repartition-for-ReusedExchange trick
@@ -1625,13 +1613,13 @@ def _mine_hard_negatives(
     # stays, so the at-scale sort-merge path still shares its one
     # exchange; pinned with the returned result, drain_session
     # releases it.
-    sigs = _spread(emb, "vec_id").select(
+    sigs = spread(emb, "vec_id").select(
         "vec_id",
         "embedding",
         l2_spark(F.col("embedding")).alias("n"),
         hyperplane_sig_spark(F.col("embedding"), range(n_planes)).alias("sig"),
     ).localCheckpoint(eager=True)
-    sigs = sigs.repartition(n, "sig")
+    sigs = spread(sigs, "sig")
     a = sigs.select(
         F.col("vec_id").alias("va"), F.col("embedding").alias("ea"),
         F.col("n").alias("na"), F.col("sig").alias("sa"),

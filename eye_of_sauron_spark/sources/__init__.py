@@ -1,9 +1,10 @@
-from .tables import TABLES, load_table, register_views
+from .tables import TABLES, load_table, register_views, spread
 
 __all__ = [
     "TABLES",
     "load_table",
     "register_views",
+    "spread",
     "streams",
 ]
 

@@ -65,6 +65,20 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
+def spread(df: DataFrame, *keys: str) -> DataFrame:
+    """Repartition on ``keys`` with an EXPLICIT partition count before
+    CPU-heavy narrow work (shingling, hashing, per-vector folds). The
+    local fixtures scan as a single parquet split, which would
+    serialize that work on one core (at the 10x probe the brute-force
+    cosine scorer ran as one 149 s task), and the byte-based AQE coalescer
+    would undo a bare ``repartition(key)`` (tiny bytes, huge per-row
+    CPU), so the count is pinned to defaultParallelism, which AQE
+    respects. At 100 TB the exchange is no-op-sized relative to the
+    scan and also evens out skewed input file sizes."""
+    n = df.sparkSession.sparkContext.defaultParallelism
+    return df.repartition(n, *keys)
+
+
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every fixture table as a temp view for ``spark.sql``."""
     for name in TABLES:

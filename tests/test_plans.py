@@ -155,8 +155,8 @@ def test_embedding_dedup_joins_on_band_signature(spark, sf_dir):
     # as a post-join condition — the string "bsig" still shows up on
     # the join line while the hashed keys silently shrink to label
     # alone (measured 4.7x slower at sf0.1; O(n^2/labels) at scale).
-    # The aliased ba/bb columns are the fix; require them as paired
-    # equi keys.
+    # The aliased bsig_a/bsig_b columns are the fix; require them as
+    # paired equi keys.
     p = _plan(spark, sf_dir, "dedup_embedding_cosine")
     joins = [
         ln
@@ -164,7 +164,9 @@ def test_embedding_dedup_joins_on_band_signature(spark, sf_dir):
         if "SortMergeJoin" in ln or "ShuffledHashJoin" in ln or "BroadcastHashJoin" in ln
     ]
     assert any(
-        re.search(r"\[[^\]]*\bba#\d+[^\]]*\], \[[^\]]*\bbb#\d+[^\]]*\]", ln)
+        re.search(
+            r"\[[^\]]*\bbsig_a#\d+[^\]]*\], \[[^\]]*\bbsig_b#\d+[^\]]*\]", ln
+        )
         for ln in joins
     ), joins
 
@@ -581,7 +583,7 @@ class _no_broadcast:
 def test_ivf_assignment_is_narrow_no_window_shuffle(spark, sf_dir):
     # r09: cell assignment / probe selection fold the broadcast
     # centroid array per-row (argmax via array_sort comparator) — the
-    # corpus side must touch exactly TWO exchanges (_spread + the
+    # corpus side must touch exactly TWO exchanges (spread + the
     # final ranking window) and ONE Window (the final per-query
     # top-k, with its map-side WindowGroupLimit). A regression to the
     # crossJoin+window assignment shape doubles both counts and

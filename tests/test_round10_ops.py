@@ -302,7 +302,7 @@ def test_semantic_decontam_plan_shape(spark, sf_dir):
     """The verdict must be a map-side-only scan: ONE broadcast
     nested-loop join against the single-row eval array (no cartesian
     product, no shuffle join, no window), exactly one corpus-side
-    hashpartitioning exchange (the key-free _spread), and the argmax
+    hashpartitioning exchange (the key-free spread), and the argmax
     fold evaluated ONCE — behind the Generate barrier, never inlined
     into the join condition."""
     from eye_of_sauron_spark.plans.decontam import decontam_semantic_embedding

@@ -176,22 +176,28 @@ def test_iterative_loops_free_superseded_checkpoints(spark, sf_dir):
     rounds' blocks must be unpersisted as the loop advances, or a long
     session pins O(rounds) dead copies of working state (the r10
     BM25-ADVICE leak class, generalized). Contract: one query leaves
-    at most ONE new persistent RDD (its final materialization)."""
+    at most ONE new persistent RDD (its final materialization) besides
+    its session-memo slots, which live until drain_session by design.
+    The session is drained first, so the count does not depend on which
+    memos earlier tests left populated."""
     from eye_of_sauron_spark import plans
+    from eye_of_sauron_spark.functions.materialize import (
+        _CK_MEMO,
+        _persistent_ids,
+        drain_session,
+    )
 
-    def n_persist() -> int:
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        return len(list(jmap.keySet().toArray()))
-
+    drain_session(spark)
     qs = plans.all_queries()
     for name in (
         "dedup_cluster_components",
         "textrank_keywords",
         "pca_power_iteration",
     ):
-        before = n_persist()
+        before = _persistent_ids(spark)
         qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        grew = n_persist() - before
+        memo = {i for _, ids in _CK_MEMO.values() for i in ids}
+        grew = len(_persistent_ids(spark) - before - memo)
         assert grew <= 1, (
             f"{name} pinned {grew} new RDDs — superseded round "
             "checkpoints are leaking again"

@@ -154,23 +154,45 @@ def test_pq_plan_no_unbroadcast_cartesian(spark, sf_dir):
     assert plan.count("BroadcastNestedLoopJoin") == 2, plan
 
 
+def _plans_source(name: str) -> str:
+    import os
+
+    import eye_of_sauron_spark
+
+    path = os.path.join(os.path.dirname(eye_of_sauron_spark.__file__), "plans", name)
+    with open(path, encoding="utf-8") as fh:
+        return fh.read()
+
+
 def test_vector_plans_share_one_retrieval_tail():
     """plans/vector.py builds every top-k from one ranking tail and
     every two-stage tier from one shortlist-and-rerank, and scores
     pairs from per-row norms only: no per-pair ``cosine_spark(``, one
     ``cos`` ranking window, one ``acos`` shortlist window."""
-    import os
-
-    import eye_of_sauron_spark
-
-    path = os.path.join(
-        os.path.dirname(eye_of_sauron_spark.__file__), "plans", "vector.py"
-    )
-    with open(path, encoding="utf-8") as fh:
-        src = fh.read()
+    src = _plans_source("vector.py")
     assert src.count("cosine_spark(") == 0
     assert src.count('F.col("cos").desc()') == 1
     assert src.count('F.col("acos").desc()') == 1
+
+
+def test_dedup_plans_share_one_candidate_pipeline():
+    """plans/dedup.py builds every banded pass from one bucket join,
+    one verify join and one Jaccard verify, scores cosines from
+    per-row norms only, and keeps one exact-pairs memo: one
+    ``array_intersect(``, one ``"minhash_exact_pairs"`` key, no
+    per-pair ``cosine_spark(``, and none of the folded-away helpers
+    or the unused ``df_cap`` parameter."""
+    src = _plans_source("dedup.py")
+    assert src.count("array_intersect(") == 1
+    assert src.count('"minhash_exact_pairs"') == 1
+    assert src.count("cosine_spark(") == 0
+    for gone in (
+        "_lsh_pairs_from",
+        "_minhash_lsh_pairs",
+        "_semantic_cells_prune",
+        "df_cap",
+    ):
+        assert gone not in src, gone
 
 
 def test_pq_shortlist_and_output_shape(spark, sf_dir):
