@@ -11,7 +11,9 @@ Layout
 - ``session``    : SparkSession factory tuned for local[32] testing and
                    cluster-scale defaults (AQE, Arrow, shuffle partitions).
 - ``sources``    : table registry over the driver parquet fixtures and
-                   streaming source builders (rate / file / kafka-shaped).
+                   the Kafka source contract (reader options, frame
+                   codec); the file-source replay feed is in
+                   ``streaming.harness``.
 - ``functions``  : column-level function library — vector math over
                    array<float>, text analysis, tensor codec (the
                    reference's base64 triple), JSON helpers.

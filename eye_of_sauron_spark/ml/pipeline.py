@@ -37,7 +37,7 @@ from pyspark.sql.window import Window as W
 
 from ..functions.vector import euclid_duck, euclid_spark
 from ..plans.registry import query
-from ..sources import load_table
+from ..sources import load_table, spread
 from .models import detect_series, embed_batch_np
 
 _N_TARGETS = 8
@@ -157,8 +157,7 @@ def frames_from_events(events: DataFrame) -> DataFrame:
     # pin the partition count: the local fixture is one parquet split,
     # and the byte-based AQE coalescer would serialize the pandas-UDF
     # stages over it (tiny bytes, model-inference CPU per row)
-    n = events.sparkSession.sparkContext.defaultParallelism
-    return frames.repartition(n, "camera", "frame_num")
+    return spread(frames, "camera", "frame_num")
 
 
 def detect_embed(frames: DataFrame) -> DataFrame:

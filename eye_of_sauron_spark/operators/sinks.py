@@ -1,4 +1,4 @@
-"""Batch sinks: key-partitioned and bucketed parquet writers.
+"""Batch sinks: the key-partitioned parquet writer.
 
 The reference's sinks are Kafka topics — one per camera for results
 (``predicted_..._{cam}``, src/params.py:17, prediction_producer.py:
@@ -28,21 +28,3 @@ def write_partitioned(
     one task — bounded file counts at any executor count."""
     df.repartition(*keys).write.mode(mode).partitionBy(*keys).parquet(path)
 
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_col: str,
-    n_buckets: int = 8,
-    sort_col: str | None = None,
-) -> None:
-    """Bucketed managed table: rows are hash-bucketed (and optionally
-    sorted) on the join key at WRITE time, so equi-joins and
-    aggregations on that key later run with NO exchange — the
-    pay-once co-location strategy for fact tables that are joined on
-    the same key by every query. Verified in tests: a join of two
-    same-bucketed tables plans without a shuffle."""
-    w = df.write.mode("overwrite").bucketBy(n_buckets, bucket_col)
-    if sort_col:
-        w = w.sortBy(sort_col)
-    w.saveAsTable(table)

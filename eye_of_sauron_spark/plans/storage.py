@@ -27,6 +27,7 @@ from __future__ import annotations
 
 import os
 import tempfile
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -197,6 +198,31 @@ def write_bucketed(
     )
 
 
+@contextmanager
+def _bucketed_tables(spark: SparkSession, sf_dir: str):
+    """Yield ``(lb, ob)``: lineitem and orders written as bucketed
+    tables on the order key (:func:`write_bucketed`) into a temp
+    warehouse path, orders hinted to a merge join. Both tables are
+    dropped from the catalog and their files deleted when the block
+    exits, also on an exception."""
+    li = _t(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_extendedprice", "l_discount"
+    )
+    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
+    with tempfile.TemporaryDirectory(
+        prefix="bucketed_join_", ignore_cleanup_errors=True
+    ) as work:
+        try:
+            write_bucketed(li, "li_bucketed", "l_orderkey", work)
+            write_bucketed(orders, "orders_bucketed", "o_orderkey", work)
+            yield spark.table("li_bucketed"), spark.table("orders_bucketed").hint(
+                "merge"
+            )
+        finally:
+            spark.sql("DROP TABLE IF EXISTS li_bucketed")
+            spark.sql("DROP TABLE IF EXISTS orders_bucketed")
+
+
 @query("join_bucketed_colocated", oracle=_BUCKETED_ORACLE)
 def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fact-fact join with the shuffle paid at WRITE time: lineitem
@@ -218,56 +244,27 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     warehouse path (this is a correctness query, not a benchmark of
     the cached layout); results are pinned before the temp dir is
     dropped, and the catalog entries are removed."""
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_extendedprice", "l_discount"
-    )
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
-    with tempfile.TemporaryDirectory(
-        prefix="bucketed_join_", ignore_cleanup_errors=True
-    ) as work:
-        try:
-            write_bucketed(li, "li_bucketed", "l_orderkey", work)
-            write_bucketed(orders, "orders_bucketed", "o_orderkey", work)
-            lb = spark.table("li_bucketed")
-            ob = spark.table("orders_bucketed").hint("merge")
-            out = (
-                lb.join(ob, lb.l_orderkey == ob.o_orderkey)
-                .groupBy("o_orderpriority")
-                .agg(
-                    F.count("*").alias("n_items"),
-                    F.round(
-                        F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-                    ).alias("revenue"),
-                )
-                .localCheckpoint(eager=True)
+    with _bucketed_tables(spark, sf_dir) as (lb, ob):
+        return (
+            lb.join(ob, lb.l_orderkey == ob.o_orderkey)
+            .groupBy("o_orderpriority")
+            .agg(
+                F.count("*").alias("n_items"),
+                F.round(
+                    F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
+                ).alias("revenue"),
             )
-        finally:
-            spark.sql("DROP TABLE IF EXISTS li_bucketed")
-            spark.sql("DROP TABLE IF EXISTS orders_bucketed")
-    return out
+            .localCheckpoint(eager=True)
+        )
 
 
 def bucketed_join_plan(spark: SparkSession, sf_dir: str) -> str:
     """The executed join plan BEFORE aggregation, for the plan-shape
     test: builds the same bucketed tables, returns the join's plan
     string, cleans up."""
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_extendedprice", "l_discount"
-    )
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
-    with tempfile.TemporaryDirectory(
-        prefix="bucketed_plan_", ignore_cleanup_errors=True
-    ) as work:
-        try:
-            write_bucketed(li, "li_bucketed", "l_orderkey", work)
-            write_bucketed(orders, "orders_bucketed", "o_orderkey", work)
-            lb = spark.table("li_bucketed")
-            ob = spark.table("orders_bucketed").hint("merge")
-            joined = lb.join(ob, lb.l_orderkey == ob.o_orderkey)
-            return joined._jdf.queryExecution().executedPlan().toString()
-        finally:
-            spark.sql("DROP TABLE IF EXISTS li_bucketed")
-            spark.sql("DROP TABLE IF EXISTS orders_bucketed")
+    with _bucketed_tables(spark, sf_dir) as (lb, ob):
+        joined = lb.join(ob, lb.l_orderkey == ob.o_orderkey)
+        return joined._jdf.queryExecution().executedPlan().toString()
 
 
 # ------------------------------------------------------------- z-order

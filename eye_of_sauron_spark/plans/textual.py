@@ -17,6 +17,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from ..functions.hashing import hex32_duck, hex32_spark
 from ..functions.text import (
     bigrams_duck_from,
     bigrams_spark,
@@ -247,12 +248,6 @@ def text_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_H32_TOK = (
-    "list_reduce(list_transform(string_split(substr(md5(t), 1, 8), ''), "
-    "c -> CAST(instr('0123456789abcdef', c) - 1 AS BIGINT)), (a, b) -> a * 16 + b)"
-)
-
-
 @query(
     "doc_fingerprint",
     oracle=f"""
@@ -261,7 +256,7 @@ _H32_TOK = (
                len({tokens_duck('text')}) AS n_tokens,
                list_reduce(
                    list_prepend(CAST(0 AS BIGINT),
-                       list_transform({tokens_duck('text')}, t -> {_H32_TOK})),
+                       list_transform({tokens_duck('text')}, t -> {hex32_duck('t')})),
                    (acc, h) -> (acc * 31 + h) % {_FP_MOD}) AS fingerprint
         FROM documents
     )
@@ -282,11 +277,8 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     One 8-byte state per doc regardless of doc length."""
     docs = _t(spark, sf_dir, "documents")
     toks = tokens_spark(F.col("text"))
-    tok_hash = lambda t: F.conv(F.substring(F.md5(t), 1, 8), 16, 10).cast(  # noqa: E731
-        "bigint"
-    )
     fp = F.aggregate(
-        F.transform(toks, tok_hash),
+        F.transform(toks, hex32_spark),
         F.lit(0).cast("bigint"),
         lambda acc, h: (acc * 31 + h) % _FP_MOD,
     )
@@ -336,14 +328,11 @@ def text_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "deterministic_sample_documents",
-    oracle="""
+    oracle=f"""
     WITH rated AS (
         SELECT *,
                CASE WHEN lang IN ('en', 'de') THEN 20 ELSE 5 END AS pct,
-               list_reduce(list_transform(
-                   string_split(substr(md5('smpl:' || CAST(doc_id AS VARCHAR)), 1, 8), ''),
-                   c -> CAST(instr('0123456789abcdef', c) - 1 AS BIGINT)),
-                   (a, b) -> a * 16 + b) % 100 AS bucket
+               {hex32_duck("'smpl:' || CAST(doc_id AS VARCHAR)")} % 100 AS bucket
         FROM documents
     )
     SELECT doc_id, lang, source, CAST(n_chars AS BIGINT) AS n_chars
@@ -357,8 +346,6 @@ def deterministic_sample_documents(spark: SparkSession, sf_dir: str) -> DataFram
     against a per-stratum rate: 20% for en/de, 5% otherwise). A pure
     filter: pushes down, shuffles nothing, and composes with any
     downstream operator."""
-    from ..functions.hashing import hex32_spark
-
     d = load_table(spark, sf_dir, "documents")
     pct = F.when(F.col("lang").isin("en", "de"), 20).otherwise(5)
     bucket = hex32_spark(F.concat(F.lit("smpl:"), F.col("doc_id").cast("string"))) % 100
@@ -1009,7 +996,7 @@ _BM25_TOPK = 10
 
 _BM25_TERMS_SQL = ", ".join(f"'{t}'" for t in _BM25_TERMS)
 
-def _bm25_postings(spark: SparkSession, d: DataFrame) -> DataFrame:
+def _bm25_postings(d: DataFrame) -> DataFrame:
     """The postings seek: explode tokens, keep ONLY query-term rows
     (the filter sits between explode and aggregation, so nothing but
     query-term occurrences crosses the exchange), cluster by doc_id
@@ -1101,7 +1088,7 @@ def _bm25_per_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
     tf = memo_checkpoint(
         spark,
         ("bm25_postings", os.path.realpath(sf_dir)),
-        lambda: _bm25_postings(spark, d),
+        lambda: _bm25_postings(d),
     )
     dft = tf.groupBy("term").agg(F.count("*").alias("df"))
     contrib = (

@@ -1593,12 +1593,10 @@ def mine_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-bucket quadratic stays capped, and the output is O(corpus) —
     one training pair per anchor."""
     emb = _t(spark, sf_dir, "embeddings")
-    return _mine_hard_negatives(spark, emb, _HN_PLANES)
+    return _mine_hard_negatives(emb, _HN_PLANES)
 
 
-def _mine_hard_negatives(
-    spark: SparkSession, emb: DataFrame, n_planes: int
-) -> DataFrame:
+def _mine_hard_negatives(emb: DataFrame, n_planes: int) -> DataFrame:
     """The mining core over an arbitrary (vec_id, embedding) relation
     with a parameterized plane count — split out so the 10x probe can
     scale the bucket count with the corpus (the production lever)

@@ -1,4 +1,4 @@
-"""Streaming sources: kafka / file.
+"""Streaming sources: the Kafka reader contract and frame codec.
 
 The reference consumes Kafka topics partition-by-partition with
 manual assignors (src/prediction_producer.py:64-66, 94-118); in
@@ -6,16 +6,14 @@ Structured Streaming the same ingestion is one ``readStream`` whose
 partition->task mapping, offset tracking, and rebalance are handled
 by the engine. No broker ships in this container, so ``kafka_stream``
 is a configuration builder (exercised in production, not here); the
-file source drives every local test through the identical
-micro-batch machinery.
+file source (``streaming.harness.file_stream``) drives every local
+test through the identical micro-batch machinery.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from ..streaming.harness import file_stream  # noqa: F401  (re-export)
 
 # The frame-message value contract: JSON produced by the reference's
 # FrameProducer.transform + np_to_json (src/frame_producer.py:154-176,

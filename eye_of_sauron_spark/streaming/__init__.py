@@ -17,6 +17,10 @@ semantics onto Structured Streaming:
   dir, the sink name and the sink's temp view. Per-stream confs
   (e.g. the RocksDB state-store provider) ride ``conf=`` and are
   restored when the drain ends.
+- ``replay``   : the 18 driver-checked replays. Each opens its staged
+  micro-batch log through ``_log_stream`` (the events-log consumers
+  through its ``_events_stream`` form); the restart and re-broadcast
+  replays share the stop-and-resume driver ``_stop_and_resume``.
 - ``reorder``  : the reference's per-camera ordered-reassembly buffer
   (src/utils.py:139-191) as a bounded stateful operator with
   state eviction (the reference's version leaks, utils.py:50,168).

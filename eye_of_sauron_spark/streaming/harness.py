@@ -17,6 +17,13 @@ throwaway local checkpoint (why the checkpoint manager is swapped
 there: see its docstring), and drains with an availableNow trigger
 into the sink its caller picks. :func:`run_to_memory` is the memory-sink
 form; it owns its checkpoint dir, sink name and temp view.
+
+The replays (``streaming/replay.py``) stage their logs with
+:func:`staged_microbatch_log` and open them with :func:`file_stream`
+in exactly two places: ``replay._log_stream`` (stage once per
+session, open as one stream) and ``replay._stop_and_resume`` (stage
+once, deliver in two tranches with :func:`link_batch_files`, drain
+each from one checkpoint).
 """
 
 from __future__ import annotations

@@ -15,17 +15,18 @@ is covered by the property tests in tests/test_properties.py.
 from __future__ import annotations
 
 import os
-from collections.abc import Callable
 import tempfile
+from collections.abc import Callable
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..functions.hashing import hex32_duck, hex32_spark
 from ..functions.money import cents_duck, cents_spark
 from ..plans.registry import query
-from ..sources import load_table
+from ..sources import load_table, spread
 from .harness import (
     drain_stream,
     file_stream,
@@ -46,6 +47,24 @@ _N_CAMERAS = 64
 _FRAMES_PER_CAMERA = 200
 _N_BATCHES = 8
 _BUFFER_SIZE = 256
+_FRAME_SCHEMA = "camera INT, frame_num INT, payload STRING"
+
+
+def _log_stream(
+    spark: SparkSession,
+    sf_dir: str,
+    name: str,
+    n: int,
+    schema: str,
+    build: Callable[[], DataFrame],
+) -> DataFrame:
+    """The replay feed: stage ``build()``'s rows as an ``n``-batch
+    micro-batch log (once per session, keyed on ``name``, the real
+    fixture path and ``n``; ``build`` runs only on a miss) and open it
+    as a file stream projecting ``schema``. The production analogue
+    is a consumer subscribing to a broker log that already exists."""
+    key = (name, os.path.realpath(sf_dir), n)
+    return file_stream(spark, staged_microbatch_log(key, n, build), schema)
 
 
 def _camera_frames(
@@ -120,21 +139,25 @@ def reorder_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one job for all 8 batch files (the per-batch filter+write form
     # re-ran the scramble window once per batch), staged once per
     # session (the scramble is a pure function of the fixture)
-    in_dir = staged_microbatch_log(
-        ("reorder_frames", os.path.realpath(sf_dir), _N_BATCHES),
-        _N_BATCHES,
+    stream = _log_stream(
+        spark, sf_dir, "reorder_frames", _N_BATCHES, _FRAME_SCHEMA,
         lambda: _scrambled_frames(spark, sf_dir),
-    )
-    stream = file_stream(
-        spark, in_dir, "camera INT, frame_num INT, payload STRING"
     )
     # scope the stateful shuffle to the replay's own scale: 64 cameras
     # over 8 state partitions, not the session's 32 — each micro-batch
     # pays per-partition state-store commit + Arrow worker round-trip,
     # so 32 partitions x 8 batches is mostly fixed overhead here.
-    emitted = run_to_memory(
-        reorder_stream(stream, buffer_size=_BUFFER_SIZE), width=_N_BATCHES
+    return _ranked(
+        run_to_memory(
+            reorder_stream(stream, buffer_size=_BUFFER_SIZE), width=_N_BATCHES
+        )
     )
+
+
+def _ranked(emitted: DataFrame) -> DataFrame:
+    """(camera, frame_num, emit_rank) of a reorder replay's emitted
+    frames: the per-camera 1-based rank in frame order, the tail both
+    reorder replays share."""
     return emitted.select(
         "camera",
         "frame_num",
@@ -189,35 +212,21 @@ def stream_reorder_overflow_replay(spark: SparkSession, sf_dir: str) -> DataFram
     exactly once, in per-camera order — a buffer that leaked state,
     resurrected a stale frame, double-emitted across a skip, or
     stalled forever on a gap changes the set and fails the hash."""
-    frames = (
-        _camera_frames(spark, sf_dir, _OV_CAMERAS, _OV_FRAMES)
+    stream = _log_stream(
+        spark, sf_dir, "overflow_frames", _OV_FRAMES // _OV_SPAN, _FRAME_SCHEMA,
+        lambda: _camera_frames(spark, sf_dir, _OV_CAMERAS, _OV_FRAMES)
         .filter(F.col("frame_num") != _OV_LOST_FRAME)
         .withColumn(
             "batch",
             F.when(F.col("frame_num") == _OV_LATE_FRAME, F.lit(_OV_LATE_BATCH))
             .otherwise(F.floor(F.col("frame_num") / _OV_SPAN))
             .cast("int"),
+        ),
+    )
+    return _ranked(
+        run_to_memory(
+            reorder_stream(stream, buffer_size=_OV_BUFFER), width=_OV_CAMERAS
         )
-    )
-    n_batches = _OV_FRAMES // _OV_SPAN
-    in_dir = staged_microbatch_log(
-        ("overflow_frames", os.path.realpath(sf_dir), n_batches),
-        n_batches,
-        lambda: frames,
-    )
-    stream = file_stream(
-        spark, in_dir, "camera INT, frame_num INT, payload STRING"
-    )
-    emitted = run_to_memory(
-        reorder_stream(stream, buffer_size=_OV_BUFFER), width=_OV_CAMERAS
-    )
-    return emitted.select(
-        "camera",
-        "frame_num",
-        F.row_number()
-        .over(W.partitionBy("camera").orderBy("frame_num"))
-        .cast("int")
-        .alias("emit_rank"),
     )
 
 
@@ -281,30 +290,27 @@ def stream_change_detect_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     which serializes it per producer process."""
     from .change_detect import drop_unchanged_frames
 
-    frames = _camera_frames(spark, sf_dir, _CD_CAMERAS, _CD_FRAMES)
-    chg = (F.col("frame_num") == 0) | (
-        hex32_spark(F.concat_ws(":", F.lit("chg"), "camera", "frame_num")) % 3
-        == 0
-    )
-    runs = frames.withColumn("chg", chg.cast("int")).withColumn(
-        "run_id", F.sum("chg").over(W.partitionBy("camera").orderBy("frame_num"))
-    )
-    staged = runs.select(
-        "camera",
-        "frame_num",
-        F.md5(F.concat_ws(":", F.lit("run"), "camera", "run_id")).alias(
-            "payload_hash"
-        ),
-        F.floor(F.col("frame_num") / _CD_SPAN).cast("int").alias("batch"),
-    )
-    n_batches = _CD_FRAMES // _CD_SPAN
-    in_dir = staged_microbatch_log(
-        ("change_detect_frames", os.path.realpath(sf_dir), n_batches),
-        n_batches,
-        lambda: staged,
-    )
-    stream = file_stream(
-        spark, in_dir, "camera INT, frame_num INT, payload_hash STRING"
+    def _runs() -> DataFrame:
+        frames = _camera_frames(spark, sf_dir, _CD_CAMERAS, _CD_FRAMES)
+        chg = (F.col("frame_num") == 0) | (
+            hex32_spark(F.concat_ws(":", F.lit("chg"), "camera", "frame_num")) % 3
+            == 0
+        )
+        runs = frames.withColumn("chg", chg.cast("int")).withColumn(
+            "run_id", F.sum("chg").over(W.partitionBy("camera").orderBy("frame_num"))
+        )
+        return runs.select(
+            "camera",
+            "frame_num",
+            F.md5(F.concat_ws(":", F.lit("run"), "camera", "run_id")).alias(
+                "payload_hash"
+            ),
+            F.floor(F.col("frame_num") / _CD_SPAN).cast("int").alias("batch"),
+        )
+
+    stream = _log_stream(
+        spark, sf_dir, "change_detect_frames", _CD_FRAMES // _CD_SPAN,
+        "camera INT, frame_num INT, payload_hash STRING", _runs,
     )
     emitted = run_to_memory(drop_unchanged_frames(stream), width=_CD_CAMERAS)
     return emitted.select("camera", "frame_num", "payload_hash")
@@ -328,20 +334,18 @@ def _time_sliced(df: DataFrame, n: int) -> DataFrame:
     )
 
 
-def _staged_events_log(spark: SparkSession, sf_dir: str) -> str:
-    """The time-sliced events change log, staged ONCE per session: all
-    five event columns, ``_N_BATCHES`` octile micro-batches. Eight
-    replay consumers (window/update/session/cdc/funnel x2/observe/
-    static-match) read this one log — the production analogue is the
-    broker's log existing once for every consumer group, and the batch
-    octile is a pure function of ``ts``, so the shared slicing is
-    byte-identical to what each consumer wrote for itself before. Each
-    consumer's ``file_stream`` schema projects its own column subset
-    (parquet prunes by name). Read-only for callers; removed at
-    process exit."""
-    return staged_microbatch_log(
-        ("events_sliced", os.path.realpath(sf_dir), _N_BATCHES),
-        _N_BATCHES,
+def _events_stream(spark: SparkSession, sf_dir: str, schema: str) -> DataFrame:
+    """A stream over the time-sliced events change log, staged ONCE per
+    session: all five event columns, ``_N_BATCHES`` octile
+    micro-batches. Eight replay consumers (window/update/session/cdc/
+    funnel x2/observe/static-match) read this one log — the production
+    analogue is the broker's log existing once for every consumer
+    group, and the batch octile is a pure function of ``ts``, so the
+    shared slicing is byte-identical to what each consumer wrote for
+    itself before. ``schema`` projects the consumer's own column
+    subset (parquet prunes by name)."""
+    return _log_stream(
+        spark, sf_dir, "events_sliced", _N_BATCHES, schema,
         lambda: _time_sliced(
             load_table(spark, sf_dir, "events").select(
                 "user_id", "event_type", "value", "ts", "event_id"
@@ -361,26 +365,18 @@ def _click_error_replay(
     rows — the body both stream-stream join replays share. The side
     logs are staged once per session (4 octile micro-batches each,
     sliced over each side's own ts range — exactly what both join
-    replays wrote for themselves before); read-only, removed at
-    process exit."""
-    sf = os.path.realpath(sf_dir)
+    replays wrote for themselves before)."""
 
     def _side(tp: str) -> DataFrame:
-        def _build() -> DataFrame:
-            ev = load_table(spark, sf_dir, "events")
-            return _time_sliced(
-                ev.filter(F.col("event_type") == tp).select(
-                    "user_id", "event_id", "ts"
-                ),
-                _SS_BATCHES,
-            )
-
-        return file_stream(
-            spark,
-            staged_microbatch_log(
-                (f"{tp}_sliced", sf, _SS_BATCHES), _SS_BATCHES, _build
-            ),
+        return _log_stream(
+            spark, sf_dir, f"{tp}_sliced", _SS_BATCHES,
             "user_id BIGINT, event_id BIGINT, ts TIMESTAMP",
+            lambda: _time_sliced(
+                load_table(spark, sf_dir, "events")
+                .filter(F.col("event_type") == tp)
+                .select("user_id", "event_id", "ts"),
+                _SS_BATCHES,
+            ),
         )
 
     # 4 micro-batches per side: a stream-stream join keeps FOUR state
@@ -428,6 +424,11 @@ def stream_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------- streaming dedup
 
 _DEDUP_SAMPLE_MOD = 3  # replay every 3rd event, each delivered twice
+# the delivery log of the dedup and restart replays
+_DELIVERY_SCHEMA = (
+    "event_id BIGINT, user_id BIGINT, event_type STRING, value DOUBLE, "
+    "ts TIMESTAMP"
+)
 
 
 _STREAM_DEDUP_ORACLE = f"""
@@ -452,25 +453,22 @@ def stream_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine's answer to the reference's Kafka at-least-once consumer,
     which simply re-processes on redelivery (src/
     prediction_producer.py consumer loop)."""
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("event_id") % _DEDUP_SAMPLE_MOD == 0
-    )
-    first = _time_sliced(
-        ev.select("event_id", "user_id", "event_type", "value", "ts"), _N_BATCHES
-    )
-    redelivery = first.withColumn(
-        "batch", F.least(F.col("batch") + 1, F.lit(_N_BATCHES - 1))
-    )
-    deliveries = first.unionByName(redelivery)
-    in_dir = staged_microbatch_log(
-        ("dedup_deliveries", os.path.realpath(sf_dir), _N_BATCHES),
-        _N_BATCHES,
-        lambda: deliveries,
-    )
-    stream = file_stream(
-        spark,
-        in_dir,
-        "event_id BIGINT, user_id BIGINT, event_type STRING, value DOUBLE, ts TIMESTAMP",
+    def _deliveries() -> DataFrame:
+        ev = load_table(spark, sf_dir, "events").filter(
+            F.col("event_id") % _DEDUP_SAMPLE_MOD == 0
+        )
+        first = _time_sliced(
+            ev.select("event_id", "user_id", "event_type", "value", "ts"),
+            _N_BATCHES,
+        )
+        redelivery = first.withColumn(
+            "batch", F.least(F.col("batch") + 1, F.lit(_N_BATCHES - 1))
+        )
+        return first.unionByName(redelivery)
+
+    stream = _log_stream(
+        spark, sf_dir, "dedup_deliveries", _N_BATCHES, _DELIVERY_SCHEMA,
+        _deliveries,
     )
     deduped = stream.withWatermark("ts", "90 days").dropDuplicatesWithinWatermark(
         ["event_id"]
@@ -520,9 +518,9 @@ def stream_static_match_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("user_id")
         .distinct()
     )
-    stream = file_stream(
+    stream = _events_stream(
         spark,
-        _staged_events_log(spark, sf_dir),
+        sf_dir,
         "event_id BIGINT, user_id BIGINT, event_type STRING, ts TIMESTAMP",
     )
     emitted = run_to_memory(match_stream(stream, targets), width=_N_BATCHES)
@@ -562,6 +560,37 @@ _REBROADCAST_ORACLE = f"""
 """
 
 
+def _stop_and_resume(
+    spark: SparkSession,
+    sf_dir: str,
+    name: str,
+    n: int,
+    schema: str,
+    build: Callable[[], DataFrame],
+    run: Callable[[DataFrame, str, int], None],
+    *cols: str | Column,
+) -> DataFrame:
+    """Deliver a staged ``n``-batch log (keyed like :func:`_log_stream`)
+    in two tranches around a query stop: batches ``[0, n/2)`` are
+    linked into a per-run input dir and drained by ``run(stream, work,
+    0)``; batches ``[n/2, n)`` land while no query is running, and
+    ``run(stream, work, 1)`` drains them from the same checkpoint. Each
+    phase's ``run`` writes its parquet sink to ``{work}/out`` under the
+    checkpoint ``{work}/ckpt``. Returns the sink's rows projected to
+    ``cols``, read through the sink's commit manifest and pinned with
+    ``localCheckpoint`` so they outlive the work dir."""
+    half = n // 2
+    log = staged_microbatch_log((name, os.path.realpath(sf_dir), n), n, build)
+    with tempfile.TemporaryDirectory(
+        prefix=f"{name}_", ignore_cleanup_errors=True
+    ) as work:
+        for phase, (lo, hi) in enumerate(((0, half), (half, n))):
+            link_batch_files(log, f"{work}/in", lo, hi)
+            run(file_stream(spark, f"{work}/in", schema), work, phase)
+        out = spark.read.parquet(f"{work}/out").select(*cols)
+        return out.localCheckpoint(eager=True)
+
+
 def _write_targets(ev: DataFrame, thresh: float, version: int, path: str) -> None:
     """The 'upload': (re)write the whole target table with a version
     stamp — reference web/views.py:165-169 re-broadcasts the full
@@ -599,48 +628,26 @@ def stream_rebroadcast_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark state, so arrival order is irrelevant and the phase
     boundary is exactly SQL-expressible."""
     ev = load_table(spark, sf_dir, "events")
-    half = _REBROADCAST_BATCHES // 2
-    sliced = ev.select("event_id", "user_id", "event_type").withColumn(
-        "batch", (F.col("event_id") % _REBROADCAST_BATCHES).cast("int")
+
+    def _match(stream: DataFrame, work: str, phase: int) -> None:
+        # phase 0 matches the initial upload; before phase 1 the
+        # re-upload swaps the target table, and the stream resumes from
+        # the SAME checkpoint over the remaining batches
+        thresh = (_REBROADCAST_THRESH_A, _REBROADCAST_THRESH_B)[phase]
+        _write_targets(ev, thresh, phase, f"{work}/targets")
+        run_match_rebroadcast_stream(
+            stream, f"{work}/targets", f"{work}/out", f"{work}/ckpt"
+        )
+
+    return _stop_and_resume(
+        spark, sf_dir, "rebroadcast_sliced", _REBROADCAST_BATCHES,
+        "event_id BIGINT, user_id BIGINT, event_type STRING",
+        lambda: ev.select("event_id", "user_id", "event_type").withColumn(
+            "batch", (F.col("event_id") % _REBROADCAST_BATCHES).cast("int")
+        ),
+        _match,
+        "event_id", "user_id", "event_type", "topic", "target_version",
     )
-    with tempfile.TemporaryDirectory(
-        prefix="rebroadcast_replay_", ignore_cleanup_errors=True
-    ) as work:
-        all_dir = staged_microbatch_log(
-            (
-                "rebroadcast_sliced",
-                os.path.realpath(sf_dir),
-                _REBROADCAST_BATCHES,
-            ),
-            _REBROADCAST_BATCHES,
-            lambda: sliced,
-        )
-        schema = "event_id BIGINT, user_id BIGINT, event_type STRING"
-        # phase A: only batches 0-3 exist; targets = initial upload
-        link_batch_files(all_dir, f"{work}/in", 0, half)
-        _write_targets(ev, _REBROADCAST_THRESH_A, 0, f"{work}/targets")
-        run_match_rebroadcast_stream(
-            file_stream(spark, f"{work}/in", schema),
-            f"{work}/targets",
-            f"{work}/out",
-            f"{work}/ckpt",
-        )
-        # the re-upload: swap the target table, then let the stream
-        # resume from the SAME checkpoint over the remaining batches
-        _write_targets(ev, _REBROADCAST_THRESH_B, 1, f"{work}/targets")
-        link_batch_files(all_dir, f"{work}/in", half, _REBROADCAST_BATCHES)
-        run_match_rebroadcast_stream(
-            file_stream(spark, f"{work}/in", schema),
-            f"{work}/targets",
-            f"{work}/out",
-            f"{work}/ckpt",
-        )
-        out = spark.read.parquet(f"{work}/out").select(
-            "event_id", "user_id", "event_type", "topic", "target_version"
-        )
-        # the memory the sink parquet occupies is needed past the
-        # tempdir's life — localCheckpoint pins the rows, not the files
-        return out.localCheckpoint(eager=True)
 
 
 # ------------------------------------------------ kafka wire path (A2)
@@ -701,28 +708,24 @@ def kafka_decode_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..ml.pipeline import face_pipeline, first_faces_targets, frames_from_events
     from ..sources.streams import decode_frame_messages, encode_frame_records
 
-    frames = frames_from_events(load_table(spark, sf_dir, "events"))
-    wire = encode_frame_records(frames).withColumn(
-        "batch", (F.col("offset") % _KAFKA_REPLAY_BATCHES).cast("int")
-    )
-    in_dir = staged_microbatch_log(
-        ("kafka_wire", os.path.realpath(sf_dir), _KAFKA_REPLAY_BATCHES),
-        _KAFKA_REPLAY_BATCHES,
-        lambda: wire,
-    )
-    stream = file_stream(
-        spark,
-        in_dir,
+    stream = _log_stream(
+        spark, sf_dir, "kafka_wire", _KAFKA_REPLAY_BATCHES,
         "key BINARY, value BINARY, topic STRING, partition INT, offset BIGINT",
+        lambda: encode_frame_records(
+            frames_from_events(load_table(spark, sf_dir, "events"))
+        ).withColumn(
+            "batch", (F.col("offset") % _KAFKA_REPLAY_BATCHES).cast("int")
+        ),
     )
     decoded = run_to_memory(decode_frame_messages(stream)).localCheckpoint(
         eager=True
     )
-    pframes = decoded.select(
-        "camera", "frame_num", F.unbase64("original_frame").alias("payload")
-    )
-    pframes = pframes.repartition(
-        spark.sparkContext.defaultParallelism, "camera", "frame_num"
+    pframes = spread(
+        decoded.select(
+            "camera", "frame_num", F.unbase64("original_frame").alias("payload")
+        ),
+        "camera",
+        "frame_num",
     )
     # pin the tiny target set so the full detect pass behind it runs
     # once per invocation, not once per action
@@ -794,74 +797,43 @@ def stream_restart_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     event_id, watermark-bounded); the restart machinery itself is
     O(batch log), independent of data volume.
     """
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("event_id") % _RESTART_SAMPLE_MOD == 0
-    )
-    sliced = _time_sliced(
-        ev.select("event_id", "user_id", "event_type", "value", "ts"),
-        _RESTART_BATCHES,
-    )
     half = _RESTART_BATCHES // 2
-    phase1 = sliced.filter(F.col("batch") < half)
-    # cross-restart redelivery: every batch-3 row arrives AGAIN in
-    # batch 4, on the far side of the query restart
-    redelivered = sliced.filter(F.col("batch") == half - 1).withColumn(
-        "batch", F.lit(half)
-    )
-    phase2 = sliced.filter(F.col("batch") >= half).unionByName(redelivered)
 
-    schema = (
-        "event_id BIGINT, user_id BIGINT, event_type STRING, "
-        "value DOUBLE, ts TIMESTAMP"
-    )
-    with tempfile.TemporaryDirectory(
-        prefix="stream_restart_replay_", ignore_cleanup_errors=True
-    ) as work:
-        in_dir, out_dir, ckpt = f"{work}/in", f"{work}/out", f"{work}/ckpt"
-
-        def _run_to_file_sink() -> None:
-            deduped = (
-                file_stream(spark, in_dir, schema)
-                .withWatermark("ts", "90 days")
-                .dropDuplicatesWithinWatermark(["event_id"])
-            )
-            drain_stream(
-                deduped,
-                lambda w: w.format("parquet").option("path", out_dir),
-                ckpt,
-                width=_RESTART_BATCHES,
-            )
-
-        # the full delivery log (original batches 0-7 plus the
-        # cross-restart redeliveries in batch 4) is staged once per
-        # session; each run hardlinks a tranche in at its phase
-        # point, so arrival still straddles the query stop
-        all_dir = staged_microbatch_log(
-            (
-                "restart_deliveries",
-                os.path.realpath(sf_dir),
-                _RESTART_BATCHES,
-            ),
+    def _deliveries() -> DataFrame:
+        # the full delivery log: original batches 0-7 plus the
+        # cross-restart redeliveries in batch 4
+        ev = load_table(spark, sf_dir, "events").filter(
+            F.col("event_id") % _RESTART_SAMPLE_MOD == 0
+        )
+        sliced = _time_sliced(
+            ev.select("event_id", "user_id", "event_type", "value", "ts"),
             _RESTART_BATCHES,
-            lambda: phase1.unionByName(phase2),
         )
-        link_batch_files(all_dir, in_dir, 0, half)
-        _run_to_file_sink()  # batches 0-3, then the query STOPS
-        # batches 4-7 land while no query is running
-        link_batch_files(all_dir, in_dir, half, _RESTART_BATCHES)
-        _run_to_file_sink()  # new query, same checkpoint: resumes
-        # manifest-aware batch read of the sink (only committed files),
-        # materialized so the temp dir can be deleted before return
-        return (
-            spark.read.parquet(out_dir)
-            .select(
-                "event_id",
-                "user_id",
-                "event_type",
-                F.round("value", 6).alias("value"),
-            )
-            .localCheckpoint(eager=True)
+        phase1 = sliced.filter(F.col("batch") < half)
+        # cross-restart redelivery: every batch-3 row arrives AGAIN in
+        # batch 4, on the far side of the query restart
+        redelivered = sliced.filter(F.col("batch") == half - 1).withColumn(
+            "batch", F.lit(half)
         )
+        phase2 = sliced.filter(F.col("batch") >= half).unionByName(redelivered)
+        return phase1.unionByName(phase2)
+
+    def _dedup_to_file_sink(stream: DataFrame, work: str, _phase: int) -> None:
+        drain_stream(
+            stream.withWatermark("ts", "90 days").dropDuplicatesWithinWatermark(
+                ["event_id"]
+            ),
+            lambda w: w.format("parquet").option("path", f"{work}/out"),
+            f"{work}/ckpt",
+            width=_RESTART_BATCHES,
+        )
+
+    return _stop_and_resume(
+        spark, sf_dir, "restart_deliveries", _RESTART_BATCHES, _DELIVERY_SCHEMA,
+        _deliveries,
+        _dedup_to_file_sink,
+        "event_id", "user_id", "event_type", F.round("value", 6).alias("value"),
+    )
 
 
 # --------------------------------------- left-outer stream-stream join
@@ -1005,10 +977,8 @@ def stream_window_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash. Scale shape: identical to any production streaming rollup —
     state is one row per open (window, type), eviction is by
     watermark, shuffle is one exchange on the group keys."""
-    stream = file_stream(
-        spark,
-        _staged_events_log(spark, sf_dir),
-        "ts TIMESTAMP, event_type STRING, value DOUBLE",
+    stream = _events_stream(
+        spark, sf_dir, "ts TIMESTAMP, event_type STRING, value DOUBLE"
     )
     return _daily_counts_replay(stream, _WAGG_DELAY)
 
@@ -1092,30 +1062,29 @@ def stream_late_drop_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     the window group keys, state = open windows x types, eviction by
     watermark; the late-routing column is a narrow md5 expression on
     the replay writer side only."""
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "ts", "event_type", "value"
-    )
-    sliced = _time_sliced(ev, _LATE_BATCHES)
-    is_late = (
-        hex32_spark(F.concat(F.lit("late:"), F.col("event_id").cast("string")))
-        % _LATE_MOD
-        == 0
-    ) & (F.col("batch") <= _LATE_MAX_ORIGIN)
-    routed = sliced.withColumn(
-        "arrival",
-        F.when(is_late, F.col("batch") + _LATE_SHIFT).otherwise(F.col("batch")),
-    )
-    # routed arrival order is a pure function of the fixture: the
-    # staged log's batch column IS the arrival batch
-    in_dir = staged_microbatch_log(
-        ("late_drop_arrivals", os.path.realpath(sf_dir), _LATE_BATCHES),
-        _LATE_BATCHES,
-        lambda: routed.select(
+    def _arrivals() -> DataFrame:
+        ev = load_table(spark, sf_dir, "events").select(
+            "event_id", "ts", "event_type", "value"
+        )
+        sliced = _time_sliced(ev, _LATE_BATCHES)
+        is_late = (
+            hex32_spark(F.concat(F.lit("late:"), F.col("event_id").cast("string")))
+            % _LATE_MOD
+            == 0
+        ) & (F.col("batch") <= _LATE_MAX_ORIGIN)
+        routed = sliced.withColumn(
+            "arrival",
+            F.when(is_late, F.col("batch") + _LATE_SHIFT).otherwise(F.col("batch")),
+        )
+        # routed arrival order is a pure function of the fixture: the
+        # staged log's batch column IS the arrival batch
+        return routed.select(
             F.col("arrival").alias("batch"), "ts", "event_type", "value"
-        ),
-    )
-    stream = file_stream(
-        spark, in_dir, "ts TIMESTAMP, event_type STRING, value DOUBLE"
+        )
+
+    stream = _log_stream(
+        spark, sf_dir, "late_drop_arrivals", _LATE_BATCHES,
+        "ts TIMESTAMP, event_type STRING, value DOUBLE", _arrivals,
     )
     return _daily_counts_replay(stream, _LATE_DELAY)
 
@@ -1153,11 +1122,7 @@ def stream_update_mode_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the two columns. Complements the append-mode window replay
     (stream_window_replay): append checks WHEN rows may finally be
     emitted, update checks WHAT is emitted every intermediate batch."""
-    stream = file_stream(
-        spark,
-        _staged_events_log(spark, sf_dir),
-        "ts TIMESTAMP, event_type STRING",
-    )
+    stream = _events_stream(spark, sf_dir, "ts TIMESTAMP, event_type STRING")
     agg = stream.groupBy("event_type").agg(F.count("*").alias("n"))
     log = run_to_memory(
         agg, mode="update", width=_WAGG_STATE_WIDTH
@@ -1235,11 +1200,7 @@ def stream_session_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     size tracks concurrent activity, not stream length. The summed
     measure is integer cents so incremental merge order can't perturb
     a float hash."""
-    stream = file_stream(
-        spark,
-        _staged_events_log(spark, sf_dir),
-        "user_id BIGINT, ts TIMESTAMP, value DOUBLE",
-    )
+    stream = _events_stream(spark, sf_dir, "user_id BIGINT, ts TIMESTAMP, value DOUBLE")
     cents = cents_spark(F.col("value"))
     agg = (
         stream.withWatermark("ts", _SESS_DELAY)
@@ -1407,13 +1368,13 @@ def make_cdc_apply(
                 for b, p in cur_paths
                 if p is not None
             ]
-            cur = slices[0] if slices else None
-            for sl in slices[1:]:
-                cur = cur.unionByName(sl)
             # touched IS compacted's distinct bucket set — no filter
             # needed
-            inc = compacted
-            merged = _cdc_merge(cur, inc) if cur is not None else inc
+            merged = (
+                _cdc_merge(reduce(DataFrame.unionByName, slices), compacted)
+                if slices
+                else compacted
+            )
             gen_dir = f"{work}/snap/gen={epoch_id}"
             # cluster by bucket before the partitioned write: one file
             # per bucket generation instead of shuffle_partitions x
@@ -1456,9 +1417,9 @@ def stream_cdc_apply_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi full-outer join per touched slice). Tombstones stay in the
     snapshot as flagged rows so ordering against late re-inserts
     stays well-defined; the read side filters them."""
-    stream = file_stream(
+    stream = _events_stream(
         spark,
-        _staged_events_log(spark, sf_dir),
+        sf_dir,
         "user_id BIGINT, event_type STRING, value DOUBLE, ts TIMESTAMP,"
         " event_id BIGINT",
     )
@@ -1476,12 +1437,10 @@ def stream_cdc_apply_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"{work}/ckpt",
             width=_CDC_BATCHES,
         )
-        final_slices = [
-            spark.read.parquet(hist[-1][1]) for hist in bucket_hist.values()
-        ]
-        snap = final_slices[0]
-        for sl in final_slices[1:]:
-            snap = sl.unionByName(snap)
+        snap = reduce(
+            DataFrame.unionByName,
+            [spark.read.parquet(hist[-1][1]) for hist in bucket_hist.values()],
+        )
         return (
             snap.filter(F.col("event_type") != _CDC_TOMBSTONE)
             .select(
@@ -1518,9 +1477,9 @@ def _funnel_replay(
     ``build`` and count its (user_id, stage) completions per stage —
     the body both funnel replays share. Every stage is listed, with 0
     when no user reached it."""
-    stream = file_stream(
+    stream = _events_stream(
         spark,
-        _staged_events_log(spark, sf_dir),
+        sf_dir,
         "user_id BIGINT, ts TIMESTAMP, event_id BIGINT, event_type STRING",
     )
     emitted = run_to_memory(build(stream), width=width).localCheckpoint(
@@ -1673,9 +1632,7 @@ def stream_observe_metrics_replay(spark: SparkSession, sf_dir: str) -> DataFrame
 
     ev = load_table(spark, sf_dir, "events").select("ts", "value")
     total = ev.count()  # control-plane scalar: drain target for the bus
-    stream = file_stream(
-        spark, _staged_events_log(spark, sf_dir), "ts TIMESTAMP, value DOUBLE"
-    )
+    stream = _events_stream(spark, sf_dir, "ts TIMESTAMP, value DOUBLE")
     observed = with_latency(stream).observe(
         _OBS_NAME,
         F.count(F.lit(1)).alias("n_rows"),

@@ -71,14 +71,14 @@ def test_partitioned_sink_prunes(spark, sf_dir, tmp_path):
 def test_bucketed_tables_join_without_shuffle(spark, sf_dir, tmp_path):
     """Two tables bucketed on the same key join with NO exchange —
     the co-located join the brief's 100 TB story depends on."""
-    from eye_of_sauron_spark.operators.sinks import write_bucketed
+    from eye_of_sauron_spark.plans.storage import write_bucketed
 
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     lineitem = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_quantity"
     )
-    write_bucketed(orders, "b_orders", "o_orderkey", 8)
-    write_bucketed(lineitem, "b_lineitem", "l_orderkey", 8)
+    write_bucketed(orders, "b_orders", "o_orderkey", str(tmp_path), 8)
+    write_bucketed(lineitem, "b_lineitem", "l_orderkey", str(tmp_path), 8)
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         # disable broadcast so the planner must pick the shuffle-join

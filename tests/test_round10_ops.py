@@ -99,7 +99,7 @@ def test_bm25_postings_plan(spark, sf_dir):
         .filter(F.col("n_chars") > 0)
         .select("doc_id", tokens_spark(F.col("text")).alias("toks"))
     )
-    plan = _bm25_postings(spark, d)._jdf.queryExecution().executedPlan().toString()
+    plan = _bm25_postings(d)._jdf.queryExecution().executedPlan().toString()
     assert len(re.findall(r"Exchange hashpartitioning\(doc_id", plan)) == 1
     assert "Exchange hashpartitioning(term" not in plan
     # filter sits above the Generate(explode) and below the exchange

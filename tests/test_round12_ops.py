@@ -395,8 +395,10 @@ def test_checkpoint_lifetimes_have_one_owner():
 def test_no_dormant_forks_or_test_only_helpers():
     """The package carries no code path that no registered query runs:
     no transformWithState or PIL fork, no session state-store knob, no
-    rate source, no hand-rotated verification list and no per-batch
-    micro-batch writer."""
+    rate source, no hand-rotated verification list, no per-batch
+    micro-batch writer and no second bucketed-table writer."""
+    import os
+
     needles = (
         "transformWithStateInPandas",
         "_has_protobuf",
@@ -408,3 +410,5 @@ def test_no_dormant_forks_or_test_only_helpers():
         "write_microbatch_files(",
     )
     assert _package_hits(needles) == []
+    storage = os.path.join("plans", "storage.py")
+    assert _package_hits(("def write_bucketed",), skip={storage}) == []

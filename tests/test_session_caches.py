@@ -135,19 +135,22 @@ def test_link_batch_files_delivers_tranches(spark, tmp_path):
 
 def test_shared_events_log_equals_per_consumer_slicing(spark, sf_dir):
     """The claim the 8-consumer sharing rests on: reading the staged
-    5-column superset log through a consumer's narrower file_stream
-    schema yields EXACTLY the rows that consumer's own per-query
-    write produced before (the batch octile is a pure function of ts,
-    so slicing is consumer-independent; parquet projects by name)."""
+    5-column superset log through a consumer's narrower
+    ``_events_stream`` schema yields EXACTLY the rows that consumer's
+    own per-query write produced before (the batch octile is a pure
+    function of ts, so slicing is consumer-independent; parquet
+    projects by name)."""
     from pyspark.sql import functions as F
 
     from eye_of_sauron_spark.sources import load_table
-    from eye_of_sauron_spark.streaming.replay import (
-        _staged_events_log,
-        _time_sliced,
-    )
+    from eye_of_sauron_spark.streaming.harness import run_to_memory
+    from eye_of_sauron_spark.streaming.replay import _events_stream, _time_sliced
 
-    staged = _staged_events_log(spark, sf_dir)
+    schema = "user_id BIGINT, ts TIMESTAMP, value DOUBLE"
+    stream = _events_stream(spark, sf_dir, schema)
+    assert stream.columns == ["user_id", "ts", "value"]
+    # the log the stream reads, under its unchanged staging key
+    staged, _ = _STAGED_LOGS[("events_sliced", os.path.realpath(sf_dir), 8)]
     # the session-window consumer's subset, derived per-batch-file so
     # the BATCH ASSIGNMENT is compared, not just the overall multiset
     ev = load_table(spark, sf_dir, "events").select("user_id", "ts", "value")
@@ -160,16 +163,12 @@ def test_shared_events_log_equals_per_consumer_slicing(spark, sf_dir):
     for i in range(8):
         p = f"{staged}/batch_{i:04d}.parquet"
         if os.path.exists(p):
-            df = spark.read.schema(
-                "user_id BIGINT, ts TIMESTAMP, value DOUBLE"
-            ).parquet(p)
+            df = spark.read.schema(schema).parquet(p)
             got[i] = df.count()
             assert df.columns == ["user_id", "ts", "value"]
     assert got == want
-    # and the projected multiset matches exactly (checksum over rows)
-    sub = spark.read.schema(
-        "user_id BIGINT, ts TIMESTAMP, value DOUBLE"
-    ).parquet(f"{staged}/*.parquet")
+    # and the rows the stream delivers match exactly (checksum over rows)
+    sub = run_to_memory(stream)
     chk = lambda df: df.agg(  # noqa: E731
         F.sum(F.crc32(F.concat_ws("|", "user_id", "ts", "value"))).alias("c"),
         F.count("*").alias("n"),

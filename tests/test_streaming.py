@@ -476,3 +476,20 @@ def test_drain_stream_is_the_only_stream_start():
                 if n:
                     hits.append((os.path.relpath(path, root), n))
     assert hits == [(os.path.join("streaming", "harness.py"), 1)]
+
+
+def test_replays_open_their_logs_through_one_feed():
+    """Every replay opens its staged micro-batch log through
+    replay._log_stream, or through replay._stop_and_resume for the two
+    phased replays: each stages and opens a log exactly once, and no
+    replay reaches for the staged directory itself."""
+    import eye_of_sauron_spark.streaming.replay as replay
+
+    with open(replay.__file__, encoding="utf-8") as fh:
+        src = fh.read()
+    assert src.count("staged_microbatch_log(") == 2
+    assert src.count("file_stream(") == 2
+    assert src.count("_staged_events_log") == 0
+    for helper in ("_log_stream", "_stop_and_resume"):
+        body = src.split(f"def {helper}(", 1)[1].split("\ndef ", 1)[0]
+        assert "staged_microbatch_log(" in body and "file_stream(" in body

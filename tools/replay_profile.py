@@ -35,26 +35,16 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-REPLAY_QUERIES = [
-    "reorder_replay",
-    "stream_reorder_overflow_replay",
-    "stream_change_detect_replay",
-    "stream_join_replay",
-    "stream_dedup_replay",
-    "stream_static_match_replay",
-    "stream_rebroadcast_replay",
-    "kafka_decode_replay",
-    "stream_restart_replay",
-    "stream_left_join_replay",
-    "stream_window_replay",
-    "stream_late_drop_replay",
-    "stream_update_mode_replay",
-    "stream_session_replay",
-    "stream_cdc_apply_replay",
-    "stream_funnel_replay",
-    "stream_funnel_bucketed_replay",
-    "stream_observe_metrics_replay",
-]
+REPLAY_MODULE = "eye_of_sauron_spark.streaming.replay"
+
+
+def replay_queries() -> list[str]:
+    """Every registered replay (a query defined in streaming/replay.py),
+    in registration order."""
+    from eye_of_sauron_spark import plans
+
+    queries = plans.all_queries()
+    return [n for n, fn in queries.items() if fn.__module__ == REPLAY_MODULE]
 
 
 def _forks() -> int | None:
@@ -148,7 +138,7 @@ def main() -> None:
         # in harness
         H.ephemeral_checkpoint = capped
 
-    names = [n for n in args.queries.split(",") if n] or REPLAY_QUERIES
+    names = [n for n in args.queries.split(",") if n] or replay_queries()
     spark = get_spark(extra_conf=shm_conf or None)
     listener = BatchListener()
     spark.streams.addListener(listener)
