@@ -36,6 +36,20 @@ def hex32_duck(expr: str) -> str:
     )
 
 
+def keyed_hex32_spark(salt: str, key: Column | str) -> Column:
+    """:func:`hex32_spark` of ``'<salt>:' || CAST(key AS STRING)`` —
+    the salted per-row hash every deterministic route (splits, samples,
+    mixtures, eval holdouts, late drops) draws from. The salt keeps
+    the routes independent of each other for the same key."""
+    key = F.col(key) if isinstance(key, str) else key
+    return hex32_spark(F.concat(F.lit(f"{salt}:"), key.cast("string")))
+
+
+def keyed_hex32_duck(salt: str, expr: str) -> str:
+    """DuckDB SQL twin of :func:`keyed_hex32_spark`."""
+    return hex32_duck(f"'{salt}:' || CAST({expr} AS VARCHAR)")
+
+
 def hex32_at_spark(md5_hex: Column, offset: int) -> Column:
     """32 bits of an md5 hex string, starting at 1-based hex-char
     ``offset``, as a non-negative BIGINT (0..2^32-1).

@@ -1,4 +1,5 @@
-"""Tokenization and shingling builders (Spark Column + DuckDB SQL).
+"""Tokenization, shingling and token-statistics builders (Spark
+Column + DuckDB SQL twins).
 
 The ``documents.text`` fixture is whitespace-tokenizable by
 construction (FIXTURES.md); shingles are n-token windows joined by a
@@ -19,6 +20,51 @@ def tokens_spark(text: Column) -> Column:
 
 def tokens_duck(expr: str) -> str:
     return f"string_split({expr}, ' ')"
+
+
+# The stopword list every quality statistic counts against.
+STOPWORDS = ("the", "a")
+
+
+def marker_count_spark(toks: Column, markers: tuple[str, ...]) -> Column:
+    """How many elements of the token array ``toks`` are in ``markers``
+    (occurrence-weighted), as BIGINT."""
+    return F.aggregate(
+        F.transform(toks, lambda t: F.when(t.isin(*markers), 1).otherwise(0)),
+        F.lit(0).cast("bigint"),
+        lambda acc, v: acc + v,
+    )
+
+
+def marker_count_duck(toks: str, markers: tuple[str, ...]) -> str:
+    """DuckDB SQL twin of :func:`marker_count_spark`."""
+    inlist = ", ".join(f"'{m}'" for m in markers)
+    return (
+        f"list_sum(list_transform({toks}, "
+        f"t -> CASE WHEN t IN ({inlist}) THEN 1 ELSE 0 END))"
+    )
+
+
+def token_stats_spark(text: Column) -> tuple[Column, Column, Column]:
+    """``(n_tok, n_distinct, n_stop)`` of ``text``'s whitespace tokens:
+    token count, distinct-token count and :data:`STOPWORDS` count, the
+    per-document statistics the quality scores and gates read."""
+    toks = tokens_spark(text)
+    return (
+        F.size(toks),
+        F.size(F.array_distinct(toks)),
+        marker_count_spark(toks, STOPWORDS),
+    )
+
+
+def token_stats_duck(expr: str) -> tuple[str, str, str]:
+    """DuckDB SQL twin of :func:`token_stats_spark`."""
+    toks = tokens_duck(expr)
+    return (
+        f"len({toks})",
+        f"len(list_distinct({toks}))",
+        marker_count_duck(toks, STOPWORDS),
+    )
 
 
 def shingles_spark(text: Column, n: int = 3) -> Column:

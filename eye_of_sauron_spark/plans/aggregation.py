@@ -20,12 +20,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.hashing import hex32_duck, hex32_spark
-from ..sources import load_table
+from ..sources import load_table, top_k
 from .registry import query
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
 
 
 @query(
@@ -42,7 +38,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 )
 def cube_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE over two dims with grouping() indicators."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.cube("l_returnflag", "l_linestatus").agg(
         F.grouping("l_returnflag").cast("int").alias("g_flag"),
         F.grouping("l_linestatus").cast("int").alias("g_status"),
@@ -66,7 +62,7 @@ def cube_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def rollup_orders_by_month(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP on a derived (year, month) hierarchy."""
-    orders = _t(spark, sf_dir, "orders").select(
+    orders = load_table(spark, sf_dir, "orders").select(
         F.year("o_orderdate").cast("int").alias("yr"),
         F.month("o_orderdate").cast("int").alias("mon"),
         "o_totalprice",
@@ -90,7 +86,7 @@ def rollup_orders_by_month(spark: SparkSession, sf_dir: str) -> DataFrame:
 def grouping_sets_mixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUPING SETS with disjoint key sets (SQL surface — the
     DataFrame API has no grouping-sets builder)."""
-    _t(spark, sf_dir, "customer").createOrReplaceTempView("gs_customer")
+    load_table(spark, sf_dir, "customer").createOrReplaceTempView("gs_customer")
     return spark.sql(
         """
         SELECT c_mktsegment, c_nationkey,
@@ -116,8 +112,8 @@ def grouping_sets_mixed(spark: SparkSession, sf_dir: str) -> DataFrame:
 def multi_distinct_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multiple COUNT(DISTINCT) in one aggregate (Catalyst expands to
     a two-phase plan; at scale this is the expensive-but-exact path)."""
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey", "l_suppkey")
+    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey", "l_suppkey")
     return (
         orders.join(li, orders.o_orderkey == li.l_orderkey)
         .groupBy("o_orderpriority")
@@ -168,7 +164,7 @@ def approx_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     estimate, as feeding every event row. Measured interleaved at
     sf0.1: 2.36 -> 1.16 s median (guide §2.3: aggregate before you
     shuffle; shuffle bytes drop from sketch arrays to plain counts)."""
-    events = _t(spark, sf_dir, "events")
+    events = load_table(spark, sf_dir, "events")
     pairs = events.groupBy("event_type", "user_id").agg(
         F.count("*").alias("c")
     )
@@ -207,7 +203,7 @@ def approx_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stats_acctbal_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Moment statistics per group (stddev/variance)."""
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     return c.groupBy("c_nationkey").agg(
         F.count("*").alias("n"),
         F.round(F.avg("c_acctbal"), 4).alias("mean_bal"),
@@ -234,7 +230,7 @@ def median_percentiles_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     distribution analysis (prediction_producer.py:229-238 CSV ->
     graphs) as a first-class aggregate. At 100 TB swap for
     percentile_approx (t-digest-style sketch, bounded memory)."""
-    events = _t(spark, sf_dir, "events")
+    events = load_table(spark, sf_dir, "events")
     return events.groupBy("event_type").agg(
         F.round(F.percentile("value", F.lit(0.5)), 4).alias("p50"),
         F.round(F.percentile("value", F.lit(0.9)), 4).alias("p90"),
@@ -256,7 +252,7 @@ def median_percentiles_value(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def conditional_agg_event_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conditional aggregation (pivot-by-hand) — one pass, no join."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     is_purchase = F.col("event_type") == "purchase"
     return e.groupBy("user_id").agg(
         F.sum(F.when(is_purchase, 1).otherwise(0)).cast("bigint").alias("n_purchase"),
@@ -286,7 +282,7 @@ def conditional_agg_event_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 def pivot_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PIVOT with an explicit value list (explicit list = no extra
     distinct-values job; required discipline at scale)."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     kinds = ["click", "error", "purchase", "signup", "view"]
     out = (
         e.groupBy("user_id")
@@ -312,7 +308,7 @@ def pivot_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def histogram_value_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Numeric bucketing histogram (width 50)."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     return (
         e.withColumn("bucket", F.floor(F.col("value") / 50.0).cast("int"))
         .groupBy("bucket")
@@ -346,7 +342,7 @@ def sketch_quantiles_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     percentiles exist only to evaluate the sketch at test scale — at
     100 TB you'd ship the sketch alone. tests/test_aggregates.py
     additionally checks the raw rank error."""
-    events = _t(spark, sf_dir, "events")
+    events = load_table(spark, sf_dir, "events")
     qs = [0.5, 0.9, 0.99]
     exact_qs = [0.49, 0.51, 0.89, 0.91, 0.98, 1.0]
     sketched = events.groupBy("event_type").agg(
@@ -471,7 +467,7 @@ def market_basket_part_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     basket aggregate is localCheckpointed (O(distinct order-part
     pairs) rows, 2 columns — far smaller than the fact table), and
     tot/singles/pairs all ride the materialized partitions."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     # pinned with the returned result (drain_session releases it once
     # the result is consumed), like the ladder shared passes
     baskets = li.groupBy("l_orderkey").agg(
@@ -504,22 +500,13 @@ def market_basket_part_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("lift_ppm"),
         )
     )
-    from pyspark.sql.window import Window as W
-
     # TakeOrdered cut FIRST (never a global sort of the pair relation);
     # the rank window then runs on the 20-row result, where its
     # single-partition execution is the point, not a bottleneck
-    top = scored.orderBy(
-        F.col("pair_cnt").desc(), F.col("pa"), F.col("pb")
-    ).limit(_MB_TOPK)
-    ranked = top.withColumn(
+    order = [F.col("pair_cnt").desc(), F.col("pa"), F.col("pb")]
+    cols = ["pa", "pb", "pair_cnt", "support_ppm", "lift_ppm"]
+    return top_k(scored, _MB_TOPK, order, *cols).select(
         "rank",
-        F.row_number().over(
-            W.orderBy(F.col("pair_cnt").desc(), F.col("pa"), F.col("pb"))
-        ),
-    )
-    return ranked.select(
-        F.col("rank").cast("int").alias("rank"),
         F.col("pa").alias("part_a"),
         F.col("pb").alias("part_b"),
         "pair_cnt",

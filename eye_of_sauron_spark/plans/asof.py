@@ -29,10 +29,6 @@ from ..sources import load_table
 from .registry import query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 @query(
     "asof_join_click_before_purchase",
     oracle="""
@@ -57,7 +53,7 @@ def asof_join_click_before_purchase(spark: SparkSession, sf_dir: str) -> DataFra
     at 100 TB this beats a join-then-max_by (no intermediate
     purchase x click expansion) and is the standard Spark as-of.
     """
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     clicks = e.filter(F.col("event_type") == "click").select(
         "user_id",
         "ts",
@@ -122,7 +118,7 @@ def interval_join_activity_before_error(spark: SparkSession, sf_dir: str) -> Dat
     in the trailing 60 s window. The user_id equi key keeps Catalyst
     on a partitioned join with the time bounds as post-join predicates
     — the range never degenerates to a nested-loop over the corpus."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     errors = e.filter(F.col("event_type") == "error").select(
         F.col("event_id").alias("error_id"),
         F.col("user_id").alias("e_user"),
@@ -184,7 +180,7 @@ def range_join_time_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     same join as a direct theta join — tractable for DuckDB at
     fixture scale, which is exactly the asymmetry the banded plan
     exists to fix."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     bucket = F.floor(F.unix_micros("ts") / (_RJ_WINDOW_S * 1_000_000))
     errors = ev.filter(F.col("event_type") == "error").select(
         F.col("event_id").alias("a_id"),

@@ -26,14 +26,20 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from ..functions.hashing import hex32_duck, hex32_spark
-from ..functions.text import tokens_duck, tokens_spark
-from ..sources import load_table, spread
+from ..functions.hashing import (
+    hex32_duck,
+    hex32_spark,
+    keyed_hex32_duck,
+    keyed_hex32_spark,
+)
+from ..functions.text import (
+    token_stats_duck,
+    token_stats_spark,
+    tokens_duck,
+    tokens_spark,
+)
+from ..sources import load_table, spread, top_k, top_k_per
 from .registry import query
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
 
 
 # ---------------------------------------------------------------- split
@@ -41,8 +47,29 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 _TRAIN_PCT = 80
 _VAL_PCT = 10  # val bucket: [80, 90); test: [90, 100)
 
-_SPLIT_KEY_DUCK = "'split:' || CAST(doc_id AS VARCHAR)"
-_SPLIT_BUCKET_DUCK = f"{hex32_duck(_SPLIT_KEY_DUCK)} % 100"
+
+
+def _split_of(key: Column | str) -> Column:
+    """The 80/10/10 route of ``key``: 'train', 'val' or 'test' by its
+    ``split``-salted hash bucket (md5('split:'||key) % 100)."""
+    b = keyed_hex32_spark("split", key) % 100
+    return (
+        F.when(b < _TRAIN_PCT, "train")
+        .when(b < _TRAIN_PCT + _VAL_PCT, "val")
+        .otherwise("test")
+    )
+
+
+def _split_case_duck(key: str, *first: str) -> str:
+    """DuckDB SQL twin of :func:`_split_of`; ``first`` are CASE
+    branches tried before the route."""
+    b = f"{keyed_hex32_duck('split', key)} % 100"
+    return f"""CASE
+                   {" ".join(first)}
+                   WHEN {b} < {_TRAIN_PCT} THEN 'train'
+                   WHEN {b} < {_TRAIN_PCT + _VAL_PCT} THEN 'val'
+                   ELSE 'test'
+               END"""
 
 
 @query(
@@ -50,11 +77,7 @@ _SPLIT_BUCKET_DUCK = f"{hex32_duck(_SPLIT_KEY_DUCK)} % 100"
     oracle=f"""
     WITH routed AS (
         SELECT lang, n_chars, {tokens_duck('text')} AS ts,
-               CASE
-                   WHEN {_SPLIT_BUCKET_DUCK} < {_TRAIN_PCT} THEN 'train'
-                   WHEN {_SPLIT_BUCKET_DUCK} < {_TRAIN_PCT + _VAL_PCT} THEN 'val'
-                   ELSE 'test'
-               END AS split
+               {_split_case_duck('doc_id')} AS split
         FROM documents
     )
     SELECT split, lang,
@@ -73,17 +96,14 @@ def split_train_val_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     can never leak between splits on re-ingest. The route column is a
     narrow expression: at 100 TB this is a free rider on any scan,
     and writing the three splits is one partitioned write."""
-    d = _t(spark, sf_dir, "documents")
-    bucket = (
-        hex32_spark(F.concat(F.lit("split:"), F.col("doc_id").cast("string"))) % 100
-    )
-    split = (
-        F.when(bucket < _TRAIN_PCT, "train")
-        .when(bucket < _TRAIN_PCT + _VAL_PCT, "val")
-        .otherwise("test")
-    )
+    d = load_table(spark, sf_dir, "documents")
     return (
-        d.select(split.alias("split"), "lang", "n_chars", tokens_spark(F.col("text")).alias("ts"))
+        d.select(
+            _split_of("doc_id").alias("split"),
+            "lang",
+            "n_chars",
+            tokens_spark(F.col("text")).alias("ts"),
+        )
         .groupBy("split", "lang")
         .agg(
             F.count("*").alias("n_docs"),
@@ -143,7 +163,7 @@ def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     the measured corpus ratio or swap textual._TOKEN_RX into the
     n_tok expression — one expression change, identical plan shape
     (SCALE.md 'Tokenizer fidelity')."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     toks = d.select(
         "doc_id", "lang", F.size(tokens_spark(F.col("text"))).alias("n_tok")
     )
@@ -175,14 +195,16 @@ def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _REP_KEEP_MAX = 0.8  # Gopher-style gate: drop docs with > 80% repeated tokens
 
+_N_TOK_DUCK, _N_DISTINCT_DUCK, _N_STOP_DUCK = token_stats_duck("text")
+
 
 @query(
     "text_repetition_score",
     oracle=f"""
     WITH scored AS (
         SELECT doc_id,
-               len({tokens_duck('text')}) AS n_tokens,
-               len(list_distinct({tokens_duck('text')})) AS n_distinct
+               {_N_TOK_DUCK} AS n_tokens,
+               {_N_DISTINCT_DUCK} AS n_distinct
         FROM documents
     )
     SELECT doc_id,
@@ -200,10 +222,8 @@ def text_repetition_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     narrow map over the corpus — array_distinct/size stay inside
     codegen, nothing shuffles — so at scale the gate fuses into the
     same stage as the scan it filters."""
-    d = _t(spark, sf_dir, "documents")
-    ts = tokens_spark(F.col("text"))
-    n = F.size(ts)
-    nd = F.size(F.array_distinct(ts))
+    d = load_table(spark, sf_dir, "documents")
+    n, nd, _ = token_stats_spark(F.col("text"))
     rep = 1.0 - nd * F.lit(1.0) / n
     return d.select(
         "doc_id",
@@ -260,7 +280,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``F.broadcast`` would OOM the driver — AQE broadcasts it at
     runtime when its measured size is under the threshold and falls
     back to shuffle-hash otherwise (VERDICT r05 #2)."""
-    d = _t(spark, sf_dir, "documents").filter(F.col("n_chars") > 0)
+    d = load_table(spark, sf_dir, "documents").filter(F.col("n_chars") > 0)
     toks = d.select("doc_id", F.explode(tokens_spark(F.col("text"))).alias("term"))
     toks = spread(toks, "doc_id")
     tf = toks.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
@@ -277,16 +297,16 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    w = W.partitionBy("doc_id").orderBy(F.col("raw").desc(), F.col("term").asc())
-    return (
-        scored.select(
-            "doc_id",
-            F.row_number().over(w).alias("rank"),
-            "term",
-            F.round("raw", 6).alias("tfidf"),
-        )
-        .filter(F.col("rank") <= _TFIDF_TOPK)
+    top = top_k_per(
+        scored,
+        _TFIDF_TOPK,
+        "doc_id",
+        [F.col("raw").desc(), F.col("term").asc()],
+        "doc_id",
+        "term",
+        F.round("raw", 6).alias("tfidf"),
     )
+    return top.select("doc_id", "rank", "term", "tfidf")
 
 
 # ------------------------------------------------------------- mixture
@@ -295,7 +315,7 @@ _MIX_CAP = 100       # max docs kept per source
 _MIX_MARGIN = 4      # pre-filter over-sampling factor (see docstring)
 _HASH_SPACE = 1 << 32
 
-_MIX_KEY_DUCK = "'mix:' || CAST(doc_id AS VARCHAR)"
+_MIX_HASH_DUCK = keyed_hex32_duck("mix", "doc_id")
 
 
 @query(
@@ -304,7 +324,7 @@ _MIX_KEY_DUCK = "'mix:' || CAST(doc_id AS VARCHAR)"
     WITH h AS (
         SELECT source, lang, doc_id,
                len({tokens_duck('text')}) AS n_tok,
-               {hex32_duck(_MIX_KEY_DUCK)} AS hv
+               {_MIX_HASH_DUCK} AS hv
         FROM documents
     ),
     r AS (
@@ -345,15 +365,13 @@ def mixture_cap_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Chernoff on Bin(count, 4*cap/count) < cap); the oracle windows
     over the full table, so any loss would surface as a red driver
     row, not silence."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     h = d.select(
         "source",
         "lang",
         "doc_id",
         F.size(tokens_spark(F.col("text"))).alias("n_tok"),
-        hex32_spark(
-            F.concat(F.lit("mix:"), F.col("doc_id").cast("string"))
-        ).alias("hv"),
+        keyed_hex32_spark("mix", "doc_id").alias("hv"),
     )
     counts = h.groupBy("source").agg(F.count("*").alias("n_src"))
     cutoff = counts.select(
@@ -364,10 +382,8 @@ def mixture_cap_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("cut"),
     )
     survivors = h.join(F.broadcast(cutoff), "source").filter(F.col("hv") < F.col("cut"))
-    w = W.partitionBy("source").orderBy(F.col("hv").asc(), F.col("doc_id").asc())
-    kept = survivors.select(
-        "source", "lang", "n_tok", F.row_number().over(w).alias("rk")
-    ).filter(F.col("rk") <= _MIX_CAP)
+    order = [F.col("hv").asc(), F.col("doc_id").asc()]
+    kept = top_k_per(survivors, _MIX_CAP, "source", order, "source", "lang", "n_tok")
     return kept.groupBy("source", "lang").agg(
         F.count("*").alias("n_kept"),
         F.sum("n_tok").cast("bigint").alias("tokens_kept"),
@@ -388,8 +404,7 @@ _QF_MAX_TOKENS = 100_000
 _QF_MAX_REP = 0.65         # duplicate-token fraction (Gopher)
 _QF_WORDLEN_LO = 2.0       # mean token length bounds (C4-ish)
 _QF_WORDLEN_HI = 5.0
-_QF_MIN_STOPWORDS = 1      # must contain >= 1 stopword token
-_QF_STOPWORDS = ("the", "a")
+_QF_MIN_STOPWORDS = 1      # must contain >= 1 stopword token (text.STOPWORDS)
 
 # The gate CASE, shared verbatim by quality_filter_pipeline and the
 # end-to-end curation pipeline — one definition, no rule drift.
@@ -405,26 +420,20 @@ _QF_GATE_DUCK = f"""CASE
                    ELSE 'pass'
                END"""
 
-_QF_STATS_DUCK = f"""len({tokens_duck('text')}) AS n_tok,
-               len(list_distinct({tokens_duck('text')})) AS n_distinct,
+_QF_STATS_DUCK = f"""{_N_TOK_DUCK} AS n_tok,
+               {_N_DISTINCT_DUCK} AS n_distinct,
                n_chars,
-               list_sum(list_transform({tokens_duck('text')},
-                   t -> CASE WHEN t IN ('the', 'a') THEN 1 ELSE 0 END))
-                   AS n_stop"""
+               {_N_STOP_DUCK} AS n_stop"""
 
 
 def _qf_stats_cols() -> list:
     """The per-doc token statistics the gate reads (one tokenize)."""
-    ts = tokens_spark(F.col("text"))
+    n_tok, n_distinct, n_stop = token_stats_spark(F.col("text"))
     return [
         F.col("n_chars"),
-        F.size(ts).alias("n_tok"),
-        F.size(F.array_distinct(ts)).alias("n_distinct"),
-        F.aggregate(
-            F.transform(ts, lambda t: t.isin(*_QF_STOPWORDS).cast("int")),
-            F.lit(0).cast("bigint"),
-            lambda acc, v: acc + v,
-        ).alias("n_stop"),
+        n_tok.alias("n_tok"),
+        n_distinct.alias("n_distinct"),
+        n_stop.alias("n_stop"),
     ]
 
 
@@ -481,7 +490,7 @@ def quality_filter_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     attrition report is a free groupBy(first_fail) away. The gate
     ORDER is part of the operator contract so attrition counts are
     comparable across runs."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     base = d.select("doc_id", "source", *_qf_stats_cols())
     first_fail = _qf_first_fail_col()
     return base.select(
@@ -554,7 +563,7 @@ def quality_classifier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape per fasttext (Joulin et al. 2016) / DCLM-style quality
     classifiers."""
     d = (
-        _t(spark, sf_dir, "documents")
+        load_table(spark, sf_dir, "documents")
         .filter(F.col("n_chars") > 0)
         .select("doc_id", tokens_spark(F.col("text")).alias("toks"))
     )
@@ -604,8 +613,6 @@ def quality_classifier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 # docstring), so the rates hash bit-identically.
 _MIX_BUDGET_PCT = 50  # sample down to ~50% of the corpus
 
-_MIX_KEY_DUCK = "'mix:' || CAST(doc_id AS VARCHAR)"
-
 
 @query(
     "mixture_temperature_sample",
@@ -633,7 +640,7 @@ _MIX_KEY_DUCK = "'mix:' || CAST(doc_id AS VARCHAR)"
     SELECT d.source,
            CAST(r.n_docs AS BIGINT) AS n_docs,
            r.rate_ppm,
-           CAST(sum(CASE WHEN {hex32_duck(_MIX_KEY_DUCK)} % 1000000 < r.rate_ppm
+           CAST(sum(CASE WHEN {_MIX_HASH_DUCK} % 1000000 < r.rate_ppm
                          THEN 1 ELSE 0 END) AS BIGINT) AS n_kept
     FROM documents d JOIN rates r ON r.source = d.source
     GROUP BY d.source, r.n_docs, r.rate_ppm
@@ -666,7 +673,7 @@ def mixture_temperature_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     (broadcast); the gate is a narrow expression on the scan —
     sampling 100 TB is a free rider on any pass over the data, no
     shuffle beyond the per-source count."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     per_source = d.groupBy("source").agg(
         F.count("*").alias("n_docs"),
         F.floor(F.sqrt(F.count("*")) * 1000000).cast("bigint").alias("sqrtm"),
@@ -688,11 +695,7 @@ def mixture_temperature_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(1000000).cast("bigint"),
         ).alias("rate_ppm"),
     )
-    kept = (
-        hex32_spark(F.concat(F.lit("mix:"), F.col("doc_id").cast("string")))
-        % 1000000
-        < F.col("rate_ppm")
-    )
+    kept = keyed_hex32_spark("mix", "doc_id") % 1000000 < F.col("rate_ppm")
     return (
         d.join(F.broadcast(rates), "source")
         .groupBy("source", F.col("n_docs").cast("bigint").alias("n_docs"), "rate_ppm")
@@ -723,13 +726,11 @@ def mixture_temperature_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     routed AS (
         SELECT n_tok,
-               CASE
-                   WHEN NOT is_keeper THEN 'dropped_duplicate'
-                   WHEN first_fail <> 'pass' THEN 'dropped_' || first_fail
-                   WHEN {_SPLIT_BUCKET_DUCK} < {_TRAIN_PCT} THEN 'train'
-                   WHEN {_SPLIT_BUCKET_DUCK} < {_TRAIN_PCT + _VAL_PCT} THEN 'val'
-                   ELSE 'test'
-               END AS status
+               {_split_case_duck(
+                   'doc_id',
+                   "WHEN NOT is_keeper THEN 'dropped_duplicate'",
+                   "WHEN first_fail <> 'pass' THEN 'dropped_' || first_fail",
+               )} AS status
         FROM gated
     )
     SELECT status,
@@ -757,7 +758,7 @@ def curation_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     composed pipeline costs no more than exact dedup alone; that IS
     the argument for running curation as one Spark job over 100 TB
     instead of materializing between stages."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     base = d.select(
         "doc_id",
         "lang",
@@ -765,15 +766,10 @@ def curation_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         *_qf_stats_cols(),
     )
     is_keeper = F.col("doc_id") == F.min("doc_id").over(W.partitionBy("h"))
-    bucket = (
-        hex32_spark(F.concat(F.lit("split:"), F.col("doc_id").cast("string"))) % 100
-    )
     status = (
         F.when(~F.col("is_keeper"), "dropped_duplicate")
         .when(F.col("first_fail") != "pass", F.concat(F.lit("dropped_"), "first_fail"))
-        .when(bucket < _TRAIN_PCT, "train")
-        .when(bucket < _TRAIN_PCT + _VAL_PCT, "val")
-        .otherwise("test")
+        .otherwise(_split_of("doc_id"))
     )
     return (
         base.withColumn("is_keeper", is_keeper)
@@ -792,7 +788,7 @@ def curation_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 _WRS_K = 64
 _WRS_KEY_DUCK = (
     "CAST(round(-ln(("
-    + hex32_duck("'wrs:' || CAST(doc_id AS VARCHAR)")
+    + keyed_hex32_duck("wrs", "doc_id")
     + " + 1) / 4294967296.0) / n_chars * 1000000000) AS BIGINT)"
 )
 
@@ -838,31 +834,14 @@ def sample_weighted_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
     reservoir. Reference analog: none (the reference samples frames
     by fixed stride, src/frame_producer.py:110); this is the
     LLM-pipeline generalization."""
-    d = _t(spark, sf_dir, "documents").filter(F.col("n_chars") > 0)
-    u = (
-        hex32_spark(F.concat(F.lit("wrs:"), F.col("doc_id").cast("string"))) + 1
-    ) / F.lit(4294967296.0)
+    d = load_table(spark, sf_dir, "documents").filter(F.col("n_chars") > 0)
+    u = (keyed_hex32_spark("wrs", "doc_id") + 1) / F.lit(4294967296.0)
     wkey = F.round(-F.log(u) / F.col("n_chars") * 1e9, 0).cast("bigint")
-    sampled = (
-        d.select(
-            "doc_id",
-            "source",
-            F.col("n_chars").alias("weight"),
-            wkey.alias("wkey_e9"),
-        )
-        .orderBy(F.col("wkey_e9").asc(), F.col("doc_id").asc())
-        .limit(_WRS_K)
+    scored = d.select(
+        "doc_id", "source", F.col("n_chars").alias("weight"), wkey.alias("wkey_e9")
     )
-    # rank window is unpartitioned BY DESIGN: it runs over the k rows
-    # that survive the limit, never over the corpus
-    w = W.orderBy(F.col("wkey_e9").asc(), F.col("doc_id").asc())
-    return sampled.select(
-        F.row_number().over(w).cast("int").alias("rank"),
-        "doc_id",
-        "source",
-        "weight",
-        "wkey_e9",
-    )
+    order = [F.col("wkey_e9").asc(), F.col("doc_id").asc()]
+    return top_k(scored, _WRS_K, order, "doc_id", "source", "weight", "wkey_e9")
 
 
 # -------------------------------------------------- split-integrity audit
@@ -876,11 +855,7 @@ _LEAKAGE_SQL = f"""
     ),
     routed AS (
         SELECT component,
-               CASE
-                   WHEN {_SPLIT_BUCKET_DUCK} < {_TRAIN_PCT} THEN 'train'
-                   WHEN {_SPLIT_BUCKET_DUCK} < {_TRAIN_PCT + _VAL_PCT} THEN 'val'
-                   ELSE 'test'
-               END AS split
+               {_split_case_duck('doc_id')} AS split
         FROM comp
     )
     SELECT component,
@@ -924,16 +899,8 @@ def split_leakage_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     validates.
     """
     comps = dedup_cluster_components(spark, sf_dir).select("doc_id", "component")
-    bucket = (
-        hex32_spark(F.concat(F.lit("split:"), F.col("doc_id").cast("string"))) % 100
-    )
-    split = (
-        F.when(bucket < _TRAIN_PCT, "train")
-        .when(bucket < _TRAIN_PCT + _VAL_PCT, "val")
-        .otherwise("test")
-    )
     return (
-        comps.select("component", split.alias("split"))
+        comps.select("component", _split_of("doc_id").alias("split"))
         .groupBy("component")
         .agg(
             F.count("*").cast("bigint").alias("n_docs"),
@@ -954,9 +921,6 @@ def split_leakage_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------- group-routed (leakage-proof) split
 
-_GK_KEY_DUCK = "'split:' || CAST(gk AS VARCHAR)"
-_GK_BUCKET_DUCK = f"{hex32_duck(_GK_KEY_DUCK)} % 100"
-
 _GROUP_ROUTED_SQL = f"""
     WITH RECURSIVE {_CC_CTES},
     comp AS (
@@ -970,16 +934,8 @@ _GROUP_ROUTED_SQL = f"""
     ),
     labeled AS (
         SELECT doc_id, n_chars, gk, clustered,
-               CASE
-                   WHEN {_GK_BUCKET_DUCK} < {_TRAIN_PCT} THEN 'train'
-                   WHEN {_GK_BUCKET_DUCK} < {_TRAIN_PCT + _VAL_PCT} THEN 'val'
-                   ELSE 'test'
-               END AS gsplit,
-               CASE
-                   WHEN {_SPLIT_BUCKET_DUCK} < {_TRAIN_PCT} THEN 'train'
-                   WHEN {_SPLIT_BUCKET_DUCK} < {_TRAIN_PCT + _VAL_PCT} THEN 'val'
-                   ELSE 'test'
-               END AS osplit
+               {_split_case_duck('gk')} AS gsplit,
+               {_split_case_duck('doc_id')} AS osplit
         FROM routed
     ),
     audit AS (
@@ -1018,10 +974,10 @@ def split_group_routed(spark: SparkSession, sf_dir: str) -> DataFrame:
     Emits one row per split with group/doc/char accounting plus
     ``leaking_components``, which must be 0. Honest scope (ADVICE
     r13): on the Spark side this column is recomputed from the
-    component relation as ``_route(component)`` — a pure function of
+    component relation as ``_split_of(component)`` — a pure function of
     the group key — so ``countDistinct(gsplit) >= 2`` is
     unsatisfiable BY CONSTRUCTION and the column certifies nothing
-    beyond determinism of ``_route``; a future edit that routes
+    beyond determinism of ``_split_of``; a future edit that routes
     clustered docs by anything doc-dependent would leave it at 0. It
     is deliberately NOT derived from the labeled output (that drags a
     second corpus pass through the audit branch — SCALE.md 'round
@@ -1044,7 +1000,7 @@ def split_group_routed(spark: SparkSession, sf_dir: str) -> DataFrame:
     key-routing of frames to per-camera topics (src/utils.py:213-244)
     lifted to content-group routing of documents into splits."""
     comps = dedup_cluster_components(spark, sf_dir).select("doc_id", "component")
-    d = _t(spark, sf_dir, "documents").select("doc_id", "n_chars")
+    d = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
     routed = (
         d.join(comps.withColumnRenamed("doc_id", "cid"),
                d.doc_id == F.col("cid"), "left")
@@ -1056,21 +1012,13 @@ def split_group_routed(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    def _route(key: Column) -> Column:
-        b = hex32_spark(F.concat(F.lit("split:"), key.cast("string"))) % 100
-        return (
-            F.when(b < _TRAIN_PCT, "train")
-            .when(b < _TRAIN_PCT + _VAL_PCT, "val")
-            .otherwise("test")
-        )
-
     labeled = routed.select(
         "doc_id",
         "n_chars",
         "gk",
         "clustered",
-        _route(F.col("gk")).alias("gsplit"),
-        _route(F.col("doc_id")).alias("osplit"),
+        _split_of("gk").alias("gsplit"),
+        _split_of("doc_id").alias("osplit"),
     )
     # the re-audit needs only the (tiny, checkpointed) component
     # relation — clustered docs' group key IS their component and the
@@ -1079,7 +1027,7 @@ def split_group_routed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dragging a second corpus scan + join through the audit branch
     audit = (
         comps.select(F.col("component").alias("gk"),
-                     _route(F.col("component")).alias("gsplit"))
+                     _split_of("component").alias("gsplit"))
         .groupBy("gk")
         .agg(F.countDistinct("gsplit").alias("ns"))
         .filter(F.col("ns") >= 2)
@@ -1176,7 +1124,7 @@ def mixture_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row normalizer broadcast, then narrow integer arithmetic on a
     sources-sized relation. No shuffle beyond the per-source combine.
     """
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     per_source = d.groupBy("source").agg(
         F.count("*").cast("bigint").alias("n_docs"),
         F.sum(F.size(tokens_spark(F.col("text")))).cast("bigint").alias(

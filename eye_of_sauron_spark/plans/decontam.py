@@ -27,16 +27,12 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from ..functions.hashing import hex32_duck, hex32_spark
+from ..functions.hashing import keyed_hex32_duck, keyed_hex32_spark
 from ..functions.text import shingles_duck, shingles_spark, tokens_spark
 from ..functions.vector import cosine_duck, cosine_normed, l2_spark
 from ..sources import load_table, spread
 from .dedup import _COSINE_NEARDUP, _DRIFT_DUCK, _EMB_COPY_OFFSET, _emb_corpus
 from .registry import query
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
 
 
 # ------------------------------------------------------ decontamination
@@ -47,13 +43,11 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 _EVAL_MOD = 50
 _SPAN_N = 8
 
-_EVAL_KEY_DUCK = "'eval:' || CAST(doc_id AS VARCHAR)"
-_IS_EVAL_DUCK = f"{hex32_duck(_EVAL_KEY_DUCK)} % {_EVAL_MOD} = 0"
+_IS_EVAL_DUCK = f"{keyed_hex32_duck('eval', 'doc_id')} % {_EVAL_MOD} = 0"
 
 
 def _is_eval_spark() -> Column:
-    key = F.concat(F.lit("eval:"), F.col("doc_id").cast("string"))
-    return (hex32_spark(key) % _EVAL_MOD) == 0
+    return (keyed_hex32_spark("eval", "doc_id") % _EVAL_MOD) == 0
 
 
 @query(
@@ -96,7 +90,7 @@ def decontaminate_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc count's partial aggregation all fuse into the scan stage,
     and the only exchange is on doc_id for the final count merge.
     """
-    d = spread(_t(spark, sf_dir, "documents"), "doc_id")
+    d = spread(load_table(spark, sf_dir, "documents"), "doc_id")
     spans = d.select(
         "doc_id",
         "lang",
@@ -176,7 +170,7 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     emitted — per-span cost is O(df), not O(df^2) — so stop-spans are
     merely hot keys, handled by AQE skew splitting, not a blowup.
     """
-    d = spread(_t(spark, sf_dir, "documents"), "doc_id")
+    d = spread(load_table(spark, sf_dir, "documents"), "doc_id")
     # explode_outer + isnotnull: see decontaminate_ngram_overlap — keeps
     # the inferred size/notnull constraint (and with it the whole
     # shingle expression) from being pushed below the spread exchange
@@ -238,7 +232,7 @@ def decontam_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFram
     with 20 sources the cap never binds on the fixture, and at real
     scale it turns boilerplate spans into a bounded cost instead of a
     quadratic one."""
-    d = spread(_t(spark, sf_dir, "documents"), "doc_id")
+    d = spread(load_table(spark, sf_dir, "documents"), "doc_id")
     sp = (
         d.select(
             "source",
@@ -356,7 +350,7 @@ def dedup_span_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine- and partitioning-identical. Measured 10x worst-case probe
     (50k docs, 100% dup density, 1x-comparable wall): SCALE.md
     "Span-coverage probe"."""
-    d = spread(_t(spark, sf_dir, "documents"), "doc_id")
+    d = spread(load_table(spark, sf_dir, "documents"), "doc_id")
     d_occ = _dup_span_occurrences(d).select("doc_id", "pos")
     cov = _merged_islands(d_occ).groupBy("doc_id").agg(
         F.sum("n").alias("covered")
@@ -535,7 +529,7 @@ def dedup_span_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB the cleaned corpus is a straight partitioned write of this
     frame. Measured 10x worst-case probe (90% removal density,
     closed-form removal count): SCALE.md "Span-coverage probe"."""
-    d = spread(_t(spark, sf_dir, "documents"), "doc_id")
+    d = spread(load_table(spark, sf_dir, "documents"), "doc_id")
     rem_occ = (
         _dup_span_occurrences(d)
         .filter(F.col("doc_id") != F.col("keeper"))
@@ -581,8 +575,7 @@ def dedup_span_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 5th vector), so original/copy pairs straddling the split provide a
 # guaranteed, deterministic planted-contamination signal.
 _SEM_EVAL_MOD = 8  # ~1/8 of the corpus plays the held-out eval suite
-_SEM_EVAL_KEY_DUCK = "'sev:' || CAST(vec_id AS VARCHAR)"
-_SEM_EVAL_DUCK = f"{hex32_duck(_SEM_EVAL_KEY_DUCK)} % {_SEM_EVAL_MOD} = 0"
+_SEM_EVAL_DUCK = f"{keyed_hex32_duck('sev', 'vec_id')} % {_SEM_EVAL_MOD} = 0"
 
 _SEM_DECONTAM_SQL = f"""
     WITH corpus AS (
@@ -647,12 +640,8 @@ def decontam_semantic_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     (src/prediction_producer.py:314-325) repurposed as a train-vs-eval
     contamination gate.
     """
-    corpus = _emb_corpus(_t(spark, sf_dir, "embeddings"))
-    is_eval = (
-        hex32_spark(F.concat(F.lit("sev:"), F.col("vec_id").cast("string")))
-        % _SEM_EVAL_MOD
-        == 0
-    )
+    corpus = _emb_corpus(load_table(spark, sf_dir, "embeddings"))
+    is_eval = keyed_hex32_spark("sev", "vec_id") % _SEM_EVAL_MOD == 0
     # each side's l2 norm is computed ONCE (eval norms ride the
     # broadcast structs, the train norm is a sibling projection) —
     # the same fold over the same vector yields the same bits, so

@@ -28,6 +28,8 @@ from ..functions.hashing import (
     hex32_at_spark,
     hex32_duck,
     hex32_spark,
+    keyed_hex32_duck,
+    keyed_hex32_spark,
     minhash_u_spark,
 )
 from ..functions import materialize
@@ -1519,14 +1521,13 @@ def dedup_cluster_multimodal(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Deterministic ingest split: ~80% of documents play the role of the
 # already-indexed corpus, the rest arrive as the "new shard". Hash
 # routing (not doc_id ranges) so the straddle pattern is unbiased.
-_INC_KEY_DUCK = "'inc:' || CAST(doc_id AS VARCHAR)"
 _INC_CORPUS_BUCKETS = 8  # corpus: bucket 0-7 of 10; batch: 8-9
 _INC_RECRAWL_MOD = 13    # every 13th corpus doc re-arrives in the shard
 _INC_RECRAWL_OFFSET = 1_000_000  # ...under a fresh doc_id (a re-crawl)
 
 _INC_ORACLE = f"""
     WITH b AS (
-        SELECT *, {hex32_duck(_INC_KEY_DUCK)} % 10 AS bkt FROM documents
+        SELECT *, {keyed_hex32_duck("inc", "doc_id")} % 10 AS bkt FROM documents
     ),
     corpus AS (SELECT * FROM b WHERE bkt < {_INC_CORPUS_BUCKETS}),
     batch AS (
@@ -1623,9 +1624,7 @@ def dedup_incremental_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "documents").select("doc_id", "text", "lang"),
         "doc_id",
     )
-    bkt = (
-        hex32_spark(F.concat(F.lit("inc:"), F.col("doc_id").cast("string"))) % 10
-    )
+    bkt = keyed_hex32_spark("inc", "doc_id") % 10
     # ONE parquet pass materializes the bucket-tagged corpus WITH its
     # derived index columns — content hash, shingle array and banded
     # MinHash signatures, so no consumer re-derives them from the text

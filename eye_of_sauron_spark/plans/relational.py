@@ -26,10 +26,6 @@ from ..sources import load_table
 from .registry import query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # --------------------------------------------------------------------------
 # Flagship: the reference's standing query restated on the driver tables —
 # filter (match predicate) -> broadcast dim join (target broadcast, A5/A6)
@@ -57,9 +53,9 @@ def flagship_purchases_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     faces A5; agg = latency stats A8). Dims broadcast: the events
     fact never shuffles.
     """
-    events = _t(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
-    customer = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    nation = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    events = load_table(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
+    customer = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    nation = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     return (
         events.join(F.broadcast(customer), events.user_id == customer.c_custkey)
         .join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
@@ -96,7 +92,7 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     Partial (map-side) aggregation then final — 2-row-per-partition
     shuffle regardless of input size; the canonical scale-safe agg.
     """
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         li.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
@@ -132,8 +128,8 @@ def join_revenue_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     l_orderkey; AQE splits skewed partitions at runtime. No
     broadcast hint on purpose — this is the shuffle-join exemplar.
     """
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
-    li = _t(spark, sf_dir, "lineitem").select(
+    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
+    li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_extendedprice", "l_discount"
     )
     return (
@@ -162,8 +158,8 @@ def join_revenue_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def semi_join_active_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LEFT SEMI join (EXISTS): customers with at least one 'F' order."""
-    customer = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders").filter(
+    customer = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderstatus") == "F"
     ).select("o_custkey")
     return (
@@ -184,8 +180,8 @@ def semi_join_active_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def anti_join_silent_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LEFT ANTI join (NOT EXISTS): customers with no events at all."""
-    customer = _t(spark, sf_dir, "customer")
-    users = _t(spark, sf_dir, "events").select("user_id")
+    customer = load_table(spark, sf_dir, "customer")
+    users = load_table(spark, sf_dir, "events").select("user_id")
     return (
         customer.join(users, customer.c_custkey == users.user_id, "left_anti")
         .groupBy("c_mktsegment")
@@ -209,8 +205,8 @@ def anti_join_silent_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 def outer_join_order_count_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LEFT OUTER join preserving customers with zero orders, then a
     distribution over per-customer order counts."""
-    customer = _t(spark, sf_dir, "customer").select("c_custkey")
-    orders = _t(spark, sf_dir, "orders").select("o_custkey", "o_orderkey")
+    customer = load_table(spark, sf_dir, "customer").select("c_custkey")
+    orders = load_table(spark, sf_dir, "orders").select("o_custkey", "o_orderkey")
     per_cust = (
         customer.join(orders, customer.c_custkey == orders.o_custkey, "left")
         .groupBy("c_custkey")
@@ -236,8 +232,8 @@ def theta_join_acctbal_dominance(spark: SparkSession, sf_dir: str) -> DataFrame:
     (prediction_producer.py:317). The equi component keeps this a
     partitioned join at scale — never a full cross product.
     """
-    supplier = _t(spark, sf_dir, "supplier")
-    customer = _t(spark, sf_dir, "customer")
+    supplier = load_table(spark, sf_dir, "supplier")
+    customer = load_table(spark, sf_dir, "customer")
     cond = (supplier.s_nationkey == customer.c_nationkey) & (
         supplier.s_acctbal < customer.c_acctbal
     )
@@ -258,8 +254,8 @@ def theta_join_acctbal_dominance(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def cross_join_region_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross join (broadcast nested loop) of a small dim with itself."""
-    a = _t(spark, sf_dir, "region").select(F.col("r_name").alias("r1"))
-    b = _t(spark, sf_dir, "region").select(F.col("r_name").alias("r2"))
+    a = load_table(spark, sf_dir, "region").select(F.col("r_name").alias("r1"))
+    b = load_table(spark, sf_dir, "region").select(F.col("r_name").alias("r2"))
     return a.crossJoin(F.broadcast(b)).filter(F.col("r1") < F.col("r2"))
 
 
@@ -273,8 +269,8 @@ def cross_join_region_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def setop_union_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UNION (distinct) of two key sets."""
-    c = _t(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
-    s = _t(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
+    c = load_table(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
+    s = load_table(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
     return c.union(s).distinct()
 
 
@@ -288,8 +284,8 @@ def setop_union_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def setop_intersect_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INTERSECT (distinct)."""
-    c = _t(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
-    s = _t(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
+    c = load_table(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
+    s = load_table(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
     return c.intersect(s)
 
 
@@ -308,8 +304,8 @@ def setop_except_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     draw from a small user_id range; a supplier/customer nation EXCEPT
     would be vacuously empty and prove nothing.)
     """
-    c = _t(spark, sf_dir, "customer").select(F.col("c_custkey").alias("custkey"))
-    e = _t(spark, sf_dir, "events").select(F.col("user_id").alias("custkey"))
+    c = load_table(spark, sf_dir, "customer").select(F.col("c_custkey").alias("custkey"))
+    e = load_table(spark, sf_dir, "events").select(F.col("user_id").alias("custkey"))
     return c.subtract(e)
 
 
@@ -325,7 +321,7 @@ def setop_except_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 def topk_orders_by_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global top-k: orderBy + limit compiles to TakeOrderedAndProject
     (per-partition heap, driver merges k rows — no global sort)."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     return (
         orders.orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey").asc())
         .limit(10)
@@ -351,7 +347,7 @@ def topk_orders_by_price(spark: SparkSession, sf_dir: str) -> DataFrame:
 def topk_per_group_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k per group via ranking window (the reference's first-match
     top-1, prediction_producer.py:321-323, generalized to k=3)."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     w = W.partitionBy("o_orderpriority").orderBy(
         F.col("o_totalprice").desc(), F.col("o_orderkey").asc()
     )
@@ -400,7 +396,7 @@ def minmax_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     max_by can't order by a struct, so the oracle states the same
     semantics with row_number windows.
     """
-    customer = _t(spark, sf_dir, "customer")
+    customer = load_table(spark, sf_dir, "customer")
     return customer.groupBy("c_mktsegment").agg(
         F.max_by("c_name", F.struct("c_acctbal", "c_name")).alias("richest"),
         F.min_by("c_name", F.struct("c_acctbal", "c_name")).alias("poorest"),
@@ -434,7 +430,7 @@ def filter_projection_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines at x.xx5 boundaries — 5 rows at sf0.1 (none at sf0.01),
     found by the full-registry sf0.1 oracle pass.
     """
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     price = F.col("l_extendedprice").cast("decimal(12,2)")
     disc = F.col("l_discount").cast("decimal(12,2)")
     return (
@@ -468,7 +464,7 @@ def unpivot_part_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     pivot_event_counts: one output row per (part, metric). Spark's
     native unpivot keeps this a narrow projection — the oracle
     restates it as the classic UNION ALL."""
-    p = _t(spark, sf_dir, "part").select(
+    p = load_table(spark, sf_dir, "part").select(
         "p_partkey",
         F.col("p_size").cast("double").alias("size"),
         F.round("p_retailprice", 2).alias("retailprice"),

@@ -25,10 +25,6 @@ from ..sources import load_table
 from .registry import query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 @query(
     "json_extract_props",
     oracle="""
@@ -47,7 +43,7 @@ def json_extract_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     version of the reference's per-message json.loads
     (src/utils.py:24-28). Schema is declared, so Catalyst evaluates one
     Jackson parse per row inside codegen; no Python."""
-    e = _t(spark, sf_dir, "events").withColumn(
+    e = load_table(spark, sf_dir, "events").withColumn(
         "k", F.from_json("props", "k INT").getField("k")
     )
     return e.groupBy("event_type").agg(
@@ -74,7 +70,7 @@ def json_map_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
     then ``explode`` to (key, value) rows — how the engine treats the
     reference's open-ended message dicts (§1.2) when the key set is not
     known up front."""
-    e = _t(spark, sf_dir, "events").select(
+    e = load_table(spark, sf_dir, "events").select(
         F.explode(F.from_json("props", "map<string,int>")).alias("key", "value")
     )
     return e.groupBy("key").agg(
@@ -103,7 +99,7 @@ def string_filename_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     title-case it): ``substring_index`` + ``initcap`` + concat over part
     names. DuckDB has no initcap, so the oracle title-cases word-by-word
     with a list lambda."""
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, sf_dir, "part")
     return p.select(
         "p_partkey",
         F.substring_index("p_name", " ", 1).alias("stem"),
@@ -130,7 +126,7 @@ def datetime_bucketing(spark: SparkSession, sf_dir: str) -> DataFrame:
     timestamping surface of the reference (float unix seconds,
     src/prediction_producer.py:355-361) done with typed timestamps.
     Spark's weekday() is Monday=0; ISO dow is Monday=1, hence the +1."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     return (
         e.select(
             F.date_trunc("week", "ts").alias("week"),
@@ -168,7 +164,7 @@ def array_vector_scalars(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``element_at``. All evaluate JVM-side per row; this is the
     built-in-function path that replaces the reference's numpy-per-row
     vector math (src/prediction_producer.py:314-325)."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     dbl = lambda c: c.cast("double")  # noqa: E731
     return emb.select(
         "vec_id",
@@ -216,7 +212,7 @@ def binary_base64_codec(spark: SparkSession, sf_dir: str) -> DataFrame:
     string -> binary -> base64 -> binary -> string round-trip, plus
     md5/sha256 content digests (the exact-dedup keys). Aggregated per
     lang so the check also pins digest portability across engines."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     bin_text = F.encode("text", "UTF-8")
     roundtrip = F.decode(F.unbase64(F.base64(bin_text)), "UTF-8")
     # Spark's base64 may emit RFC-2045 MIME chunking (CRLF every 76
@@ -260,7 +256,7 @@ def json_serialize_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     utils.py:24-28) on typed columns: to_json(struct(...)) produces
     byte-identical wire text in both engines, then fields are
     extracted back out of the string. Narrow expression work."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     msg = e.select(
         "event_id",
         F.to_json(F.struct("event_id", "event_type", "user_id")).alias("payload"),

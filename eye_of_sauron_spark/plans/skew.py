@@ -28,10 +28,6 @@ from ..sources import load_table
 from .registry import query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 _N_SALT = 8
 
 
@@ -87,10 +83,10 @@ def join_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale (Catalyst would broadcast the 1.5k-row dim and no salt
     would be needed); at 100 TB the dim that *can't* broadcast is
     precisely the case salting exists for."""
-    ev = _t(spark, sf_dir, "events").select(
+    ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
+    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     joined = salted_join(
         ev, cust, "user_id", "c_custkey", spread_on=F.col("event_id")
     )

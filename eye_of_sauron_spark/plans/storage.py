@@ -37,10 +37,6 @@ from ..sources import load_table
 from .registry import query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # -------------------------------------------------------- JSONL ingest
 
 _JSONL_ORACLE = f"""
@@ -72,7 +68,7 @@ def jsonl_roundtrip_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     supports predicate pushdown on line-level short-circuit parse.
     The aggregate itself is the usual partial/final pair.
     """
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     with tempfile.TemporaryDirectory(
         prefix="jsonl_ingest_", ignore_cleanup_errors=True
     ) as work:
@@ -123,7 +119,7 @@ def csv_roundtrip_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     The JSON props column rides along as an opaque quoted string —
     proving the quote/escape path on data that embeds the delimiter
     and quote characters themselves."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
     with tempfile.TemporaryDirectory(
         prefix="csv_ingest_", ignore_cleanup_errors=True
@@ -205,10 +201,10 @@ def _bucketed_tables(spark: SparkSession, sf_dir: str):
     warehouse path, orders hinted to a merge join. Both tables are
     dropped from the catalog and their files deleted when the block
     exits, also on an exception."""
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_extendedprice", "l_discount"
     )
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
+    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
     with tempfile.TemporaryDirectory(
         prefix="bucketed_join_", ignore_cleanup_errors=True
     ) as work:
@@ -331,7 +327,7 @@ def zorder_cluster_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     is repartitionByRange(zvalue) + sortWithinPartitions(zvalue) +
     write, and the z-value itself is pure bit arithmetic inside
     codegen (no UDF), so the clustering pass is scan-speed."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     dims = ev.select(
         (F.col("user_id") % 256).cast("bigint").alias("ub"),
         ((F.dayofmonth("ts") - 1) * 8 + F.floor(F.hour("ts") / 3))
@@ -382,7 +378,7 @@ def compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     the rewrite runs per partition-directory so it parallelizes and
     commits independently; the plan shape — scan, one round-robin
     exchange, write — is the same."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     with tempfile.TemporaryDirectory(
         prefix="compact_", ignore_cleanup_errors=True
     ) as work:
@@ -453,7 +449,7 @@ def schema_evolution_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     of files), so production tables pin the merged schema in a
     catalog/manifest instead — the read semantics (NULL-fill, by-name
     resolution) are identical, which is what this checks."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     with tempfile.TemporaryDirectory(
         prefix="schema_evo_", ignore_cleanup_errors=True
     ) as work:
@@ -525,7 +521,7 @@ def routed_sink_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     is its own partition's bytes, independent of total table size."""
     from ..operators.sinks import write_partitioned
 
-    ev = _t(spark, sf_dir, "events").withColumn(
+    ev = load_table(spark, sf_dir, "events").withColumn(
         "camera", (F.col("user_id") % _ROUTE_CAMERAS).cast("bigint")
     )
     with tempfile.TemporaryDirectory(
@@ -584,7 +580,7 @@ def orc_roundtrip_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     stay format-agnostic. Reference analog: the JSON wire codec
     (src/utils.py:248-264) — the batch-columnar counterpart of that
     serialization boundary, driver-checked."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     with tempfile.TemporaryDirectory(
         prefix="orc_ingest_", ignore_cleanup_errors=True
     ) as work:

@@ -13,19 +13,28 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from ..functions.hashing import hex32_duck, hex32_spark
+from ..functions.hashing import (
+    hex32_duck,
+    hex32_spark,
+    keyed_hex32_duck,
+    keyed_hex32_spark,
+)
 from ..functions.text import (
+    STOPWORDS,
     bigrams_duck_from,
     bigrams_spark,
+    marker_count_duck,
+    marker_count_spark,
+    token_stats_spark,
     tokens_duck,
     tokens_spark,
 )
 from ..functions.vector import cosine_duck, cosine_spark
-from ..sources import load_table, spread
+from ..sources import load_table, spread, top_k, top_k_per
 from .registry import query
 
 # Disjoint marker-token sets per language for the n-gram-frequency
@@ -40,30 +49,17 @@ _LANG_MARKERS = {
     "fr": ("join", "merge", "query"),
     "zh": ("hash", "stream", "filter"),
 }
-_STOPWORDS = ("the", "a")
 _QUALITY_KEEP = 0.7
 
 _FP_MOD = 10**17  # fold modulus: _FP_MOD * 31 + 2^32 stays under 2^63
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
-def _marker_score_spark(toks: Column, markers: tuple[str, ...]) -> Column:
-    return F.aggregate(
-        F.transform(toks, lambda t: F.when(t.isin(*markers), 1).otherwise(0)),
-        F.lit(0).cast("bigint"),
-        lambda acc, v: acc + v,
-    )
-
-
-def _marker_score_duck(toks: str, markers: tuple[str, ...]) -> str:
-    inlist = ", ".join(f"'{m}'" for m in markers)
-    return (
-        f"list_sum(list_transform({toks}, "
-        f"t -> CASE WHEN t IN ({inlist}) THEN 1 ELSE 0 END))"
-    )
+def _bigram_rows(d: DataFrame, *keys: str) -> DataFrame:
+    """One row per token bigram of ``d.text``: ``keys`` plus (w1, w2),
+    exploded from :func:`bigrams_spark` (a narrow per-document zip, no
+    positional self-join)."""
+    p = F.explode(bigrams_spark(F.col("text"))).alias("p")
+    return d.select(*keys, p).select(*keys, "p.w1", "p.w2")
 
 
 @query(
@@ -87,7 +83,7 @@ def text_term_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus term statistics: tokenize -> explode -> tf/df/share,
     top-20 terms. The shuffle carries (term, partial counts) only;
     the top-k is TakeOrdered, not a global sort."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", F.explode(tokens_spark(F.col("text"))).alias("term"))
     total = toks.groupBy().agg(F.count("*").alias("n"))
     return (
@@ -106,7 +102,7 @@ def text_term_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _LANG_ORACLE_SCORES = ",\n               ".join(
-    f"{_marker_score_duck('toks', m)} AS s_{lang}"
+    f"{marker_count_duck('toks', m)} AS s_{lang}"
     for lang, m in sorted(_LANG_MARKERS.items())
 )
 _LANG_ORACLE_MAX = "greatest(" + ", ".join(
@@ -139,12 +135,12 @@ def text_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     marker-token lists (occurrence-weighted), predict the argmax
     (alphabetical tie-break), and cross-tab predictions against the
     labeled lang — the confusion-matrix shape of a corpus lang filter."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     toks = tokens_spark(F.col("text"))
     scored = docs.select(
         "lang",
         *[
-            _marker_score_spark(toks, m).alias(f"s_{lang}")
+            marker_count_spark(toks, m).alias(f"s_{lang}")
             for lang, m in sorted(_LANG_MARKERS.items())
         ],
     )
@@ -171,10 +167,10 @@ def text_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     q AS (
         SELECT doc_id, source,
                len(toks) AS n_tok,
-               {_marker_score_duck('toks', _STOPWORDS)} * 1.0 / len(toks) AS stop_ratio,
+               {marker_count_duck('toks', STOPWORDS)} * 1.0 / len(toks) AS stop_ratio,
                len(list_distinct(toks)) * 1.0 / len(toks) AS diversity,
                0.35 * least(len(toks) / 60.0, 1.0)
-                 + 0.35 * (1 - {_marker_score_duck('toks', _STOPWORDS)} * 1.0 / len(toks))
+                 + 0.35 * (1 - {marker_count_duck('toks', STOPWORDS)} * 1.0 / len(toks))
                  + 0.3 * (len(list_distinct(toks)) * 1.0 / len(toks)) AS quality
         FROM m
     )
@@ -192,11 +188,10 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heuristic document quality score (length saturation, stopword
     ratio, lexical diversity) with a keep/drop threshold — the quality
     filter stage of a training-data pipeline, aggregated per source."""
-    docs = _t(spark, sf_dir, "documents")
-    toks = tokens_spark(F.col("text"))
-    n_tok = F.size(toks)
-    stop_ratio = _marker_score_spark(toks, _STOPWORDS) * 1.0 / n_tok
-    diversity = F.size(F.array_distinct(toks)) * 1.0 / n_tok
+    docs = load_table(spark, sf_dir, "documents")
+    n_tok, n_distinct, n_stop = token_stats_spark(F.col("text"))
+    stop_ratio = n_stop * 1.0 / n_tok
+    diversity = n_distinct * 1.0 / n_tok
     quality = (
         0.35 * F.least(n_tok / 60.0, F.lit(1.0))
         + 0.35 * (1 - stop_ratio)
@@ -237,7 +232,7 @@ def text_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting two ways — whitespace split and a BPE-ish regex
     lexer (letter runs | digit runs | single symbols) — the
     token-budget accounting stage of a data pipeline."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     ws = F.size(tokens_spark(F.col("text")))
     re_toks = F.size(F.regexp_extract_all("text", F.lit(_TOKEN_RX), F.lit(0)))
     return docs.groupBy("lang").agg(
@@ -275,7 +270,7 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle/jaccard operators this is sequence-aware — re-ordered
     tokens produce different fingerprints, equal texts collide.
     One 8-byte state per doc regardless of doc length."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     toks = tokens_spark(F.col("text"))
     fp = F.aggregate(
         F.transform(toks, hex32_spark),
@@ -332,7 +327,7 @@ def text_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH rated AS (
         SELECT *,
                CASE WHEN lang IN ('en', 'de') THEN 20 ELSE 5 END AS pct,
-               {hex32_duck("'smpl:' || CAST(doc_id AS VARCHAR)")} % 100 AS bucket
+               {keyed_hex32_duck("smpl", "doc_id")} % 100 AS bucket
         FROM documents
     )
     SELECT doc_id, lang, source, CAST(n_chars AS BIGINT) AS n_chars
@@ -348,7 +343,7 @@ def deterministic_sample_documents(spark: SparkSession, sf_dir: str) -> DataFram
     downstream operator."""
     d = load_table(spark, sf_dir, "documents")
     pct = F.when(F.col("lang").isin("en", "de"), 20).otherwise(5)
-    bucket = hex32_spark(F.concat(F.lit("smpl:"), F.col("doc_id").cast("string"))) % 100
+    bucket = keyed_hex32_spark("smpl", "doc_id") % 100
     return d.filter(bucket < pct).select(
         "doc_id", "lang", "source", F.col("n_chars").cast("bigint").alias("n_chars")
     )
@@ -468,28 +463,15 @@ def text_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     formatted plan: exactly 2 exchanges). The conditional probability
     is pure integer arithmetic (``* 1000000 div``), so both engines
     compute bit-identical ppm with no float division in the hash."""
-    d = _t(spark, sf_dir, "documents")
-    bigrams = bigrams_spark(F.col("text"))
-    pairs = d.select("lang", F.explode(bigrams).alias("p")).select(
-        "lang", "p.w1", "p.w2"
-    )
+    pairs = _bigram_rows(load_table(spark, sf_dir, "documents"), "lang")
     counts = pairs.groupBy("lang", "w1", "w2").agg(F.count("*").alias("n_pair"))
     counts = counts.withColumn(
         "n_first", F.sum("n_pair").over(W.partitionBy("lang", "w1"))
-    )
-    ranked = counts.withColumn(
-        "cond_ppm", F.expr("(n_pair * 1000000) div n_first")
-    ).withColumn(
-        "rank",
-        F.row_number().over(
-            W.partitionBy("lang").orderBy(
-                F.col("n_pair").desc(), F.col("w1"), F.col("w2")
-            )
-        ),
-    )
-    return ranked.filter(F.col("rank") <= _BIGRAM_TOPK).select(
-        "lang", "rank", "w1", "w2", "n_pair", "n_first", "cond_ppm"
-    )
+    ).withColumn("cond_ppm", F.expr("(n_pair * 1000000) div n_first"))
+    order = [F.col("n_pair").desc(), F.col("w1"), F.col("w2")]
+    cols = ["lang", "w1", "w2", "n_pair", "n_first", "cond_ppm"]
+    ranked = top_k_per(counts, _BIGRAM_TOPK, "lang", order, *cols)
+    return ranked.select("lang", "rank", "w1", "w2", "n_pair", "n_first", "cond_ppm")
 
 
 # ------------------------------------------------ TextRank keywords
@@ -603,11 +585,7 @@ def textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate — two bounded shuffles per round on the DISTINCT-bigram
     relation, never the raw token stream, with lineage cut per round
     exactly like the CC pointer-jumping loop (plans/dedup.py)."""
-    d = _t(spark, sf_dir, "documents")
-    bigrams = bigrams_spark(F.col("text"))
-    pairs = d.select("lang", F.explode(bigrams).alias("p")).select(
-        "lang", "p.w1", "p.w2"
-    )
+    pairs = _bigram_rows(load_table(spark, sf_dir, "documents"), "lang")
     from ..functions.materialize import iterate, transient
 
     # the returned ranking reads only the final ranks round; the graph
@@ -684,15 +662,9 @@ def textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
         ranks = iterate(ranks, step, _TR_ITERS)
-    ranked = ranks.withColumn(
-        "rank",
-        F.row_number().over(
-            W.partitionBy("lang").orderBy(F.col("m").desc(), F.col("token"))
-        ),
-    )
-    return ranked.filter(F.col("rank") <= _TR_TOPK).select(
-        "lang", "rank", "token", "m"
-    )
+    order = [F.col("m").desc(), F.col("token")]
+    ranked = top_k_per(ranks, _TR_TOPK, "lang", order, "lang", "token", "m")
+    return ranked.select("lang", "rank", "token", "m")
 
 
 # --------------------------------------- LM-based document scoring
@@ -738,11 +710,7 @@ def text_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     AQE broadcasts the model iff it measures small (the
     tfidf-vocabulary lesson: a web-scale bigram table is GBs), then
     one partial-aggregating mean per doc."""
-    d = _t(spark, sf_dir, "documents")
-    bigrams = bigrams_spark(F.col("text"))
-    pairs = d.select("doc_id", "lang", F.explode(bigrams).alias("p")).select(
-        "doc_id", "lang", "p.w1", "p.w2"
-    )
+    pairs = _bigram_rows(load_table(spark, sf_dir, "documents"), "doc_id", "lang")
     lm = (
         pairs.groupBy("lang", "w1", "w2")
         .agg(F.count("*").alias("n_pair"))
@@ -778,6 +746,17 @@ def text_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------- triangle census
 
 _TRI_DEG_CAP = 64
+
+
+def _degrees(edges: DataFrame) -> DataFrame:
+    """(lang, node, deg): each node's degree in the undirected (lang,
+    a, b) edge list."""
+    return (
+        edges.select("lang", F.col("a").alias("node"))
+        .unionAll(edges.select("lang", F.col("b").alias("node")))
+        .groupBy("lang", "node")
+        .agg(F.count("*").alias("deg"))
+    )
 
 
 @query(
@@ -856,10 +835,7 @@ def graph_triangle_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     the closing equi-join cannot double-count. Both joins are plain
     equi-joins on (lang, node) keys — shuffled, AQE-skew-handled,
     never a cartesian."""
-    d = _t(spark, sf_dir, "documents")
-    pairs = d.select("lang", F.explode(bigrams_spark(F.col("text"))).alias("p")).select(
-        "lang", "p.w1", "p.w2"
-    )
+    pairs = _bigram_rows(load_table(spark, sf_dir, "documents"), "lang")
     # the canonical edge list feeds THREE consumers (both degree
     # branches and the cap join's probe side); materialize the
     # explode-bigrams -> distinct pass once so the cap-join
@@ -875,12 +851,7 @@ def graph_triangle_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     ).localCheckpoint(eager=True)
-    deg = (
-        und.select("lang", F.col("a").alias("node"))
-        .unionAll(und.select("lang", F.col("b").alias("node")))
-        .groupBy("lang", "node")
-        .agg(F.count("*").alias("deg"))
-    )
+    deg = _degrees(und)
     da = deg.select(
         F.col("lang").alias("la"), F.col("node").alias("a"), F.col("deg").alias("dg_a")
     )
@@ -913,14 +884,8 @@ def graph_triangle_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("lang")
         .agg(F.count("*").alias("n_triangles"))
     )
-    kdeg = (
-        kept.select("lang", F.col("a").alias("node"))
-        .unionAll(kept.select("lang", F.col("b").alias("node")))
-        .groupBy("lang", "node")
-        .agg(F.count("*").alias("d"))
-    )
-    wcount = kdeg.groupBy("lang").agg(
-        F.expr("sum(d * (d - 1) div 2)").cast("bigint").alias("n_wedges")
+    wcount = _degrees(kept).groupBy("lang").agg(
+        F.expr("sum(deg * (deg - 1) div 2)").cast("bigint").alias("n_wedges")
     )
     ecount = kept.groupBy("lang").agg(F.count("*").cast("bigint").alias("n_edges"))
     return (
@@ -1070,7 +1035,7 @@ def _bm25_per_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
     search_bm25_topk's docstring and pinned in
     tests/test_round10_ops.py."""
     d = (
-        _t(spark, sf_dir, "documents")
+        load_table(spark, sf_dir, "documents")
         .filter(F.col("n_chars") > 0)
         .select("doc_id", tokens_spark(F.col("text")).alias("toks"))
     )
@@ -1156,14 +1121,10 @@ def search_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-query cost is the seek, not the scan. Reference analog: none
     — the reference has no text retrieval; modeled on Lucene/ES BM25
     semantics."""
-    per_doc = _bm25_per_doc(spark, sf_dir)
-    top = per_doc.orderBy(F.col("score_e6").desc(), F.col("doc_id").asc()).limit(
-        _BM25_TOPK
-    )
-    # rank window runs over the k surviving rows only (post-limit)
-    w = W.orderBy(F.col("score_e6").desc(), F.col("doc_id").asc())
-    return top.select(
-        F.row_number().over(w).cast("int").alias("rank"),
+    return top_k(
+        _bm25_per_doc(spark, sf_dir),
+        _BM25_TOPK,
+        [F.col("score_e6").desc(), F.col("doc_id").asc()],
         "doc_id",
         "n_terms",
         "score_e6",
@@ -1246,17 +1207,13 @@ def search_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     shifts a rank and breaks the fused hash. Reference analog: none —
     modeled on RRF (Cormack/Clarke/Buettcher, SIGIR'09) and
     Lucene-style hybrid retrieval."""
-    per_doc = _bm25_per_doc(spark, sf_dir)
-    w_lex = W.orderBy(F.col("score_e6").desc(), F.col("doc_id").asc())
-    lex = (
-        per_doc.orderBy(F.col("score_e6").desc(), F.col("doc_id").asc())
-        .limit(_RRF_DEPTH)
-        .select(
-            "doc_id",
-            F.row_number().over(w_lex).cast("int").alias("lex_rank"),
-        )
-    )
-    emb = _t(spark, sf_dir, "embeddings")
+    lex = top_k(
+        _bm25_per_doc(spark, sf_dir),
+        _RRF_DEPTH,
+        [F.col("score_e6").desc(), F.col("doc_id").asc()],
+        "doc_id",
+    ).select("doc_id", F.col("rank").alias("lex_rank"))
+    emb = load_table(spark, sf_dir, "embeddings")
     qv = emb.filter(F.col("vec_id") == _RRF_QVEC).select(
         F.col("embedding").alias("qe")
     )
@@ -1267,15 +1224,12 @@ def search_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id", cosine_spark(F.col("qe"), F.col("embedding")).alias("cos")
         )
     )
-    w_vec = W.orderBy(F.col("cos").desc(), F.col("vec_id").asc())
-    vec = (
-        vscored.orderBy(F.col("cos").desc(), F.col("vec_id").asc())
-        .limit(_RRF_DEPTH)
-        .select(
-            F.col("vec_id").alias("doc_id"),
-            F.row_number().over(w_vec).cast("int").alias("vec_rank"),
-        )
-    )
+    vec = top_k(
+        vscored,
+        _RRF_DEPTH,
+        [F.col("cos").desc(), F.col("vec_id").asc()],
+        F.col("vec_id").alias("doc_id"),
+    ).select("doc_id", F.col("rank").alias("vec_rank"))
     rrf = (
         F.coalesce(
             F.expr(f"1000000000 DIV ({_RRF_K0} + lex_rank)"), F.lit(0)
@@ -1287,14 +1241,5 @@ def search_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     fused = lex.join(vec, "doc_id", "full_outer").select(
         "doc_id", "lex_rank", "vec_rank", rrf.alias("rrf_ppb")
     )
-    top = fused.orderBy(F.col("rrf_ppb").desc(), F.col("doc_id").asc()).limit(
-        _RRF_TOPK
-    )
-    w_out = W.orderBy(F.col("rrf_ppb").desc(), F.col("doc_id").asc())
-    return top.select(
-        F.row_number().over(w_out).cast("int").alias("rank"),
-        "doc_id",
-        "lex_rank",
-        "vec_rank",
-        "rrf_ppb",
-    )
+    order = [F.col("rrf_ppb").desc(), F.col("doc_id").asc()]
+    return top_k(fused, _RRF_TOPK, order, "doc_id", "lex_rank", "vec_rank", "rrf_ppb")

@@ -28,10 +28,6 @@ from ..sources import load_table
 from .registry import query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 @query(
     "timeseries_gap_fill",
     oracle=f"""
@@ -73,7 +69,7 @@ def timeseries_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     exploded) rather than joined against a calendar table, and the
     fill as one ``last(ignorenulls)`` window per user. Money stays in
     integer cents (shared helper) so the fill hashes exactly."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     hourly = (
         ev.groupBy("user_id", F.date_trunc("hour", "ts").alias("h"))
         .agg(

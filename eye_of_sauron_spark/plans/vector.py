@@ -61,10 +61,6 @@ def _plane(p: int) -> list[int]:
     return [((p * 31 + j * 17 + (p + j) * (p + j) * 7) % 97) - 48 for j in range(_DIM)]
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ------------------------------------------- the one retrieval tail
 #
 # Every top-k below is built from these: a query side and a corpus
@@ -220,7 +216,7 @@ def similarity_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact brute-force top-k cosine: broadcast query set x corpus
     scan, per-query ranking window. The corpus never shuffles until
     rows are already down to O(queries x k)."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     q = _side(emb.filter(F.expr(_QUERY_FILTER)), "q")
     return _rank_topk(_pairs(_side(spread(emb, "vec_id"), "c"), q), _TOPK)
 
@@ -263,7 +259,7 @@ _LSH_ORACLE = _lsh_oracle_sql(_N_PLANES)
 def _lsh_sigs(spark: SparkSession, sf_dir: str, planes: int) -> DataFrame:
     """The narrow signature pass of the LSH plan: (vec_id, embedding,
     sig) at the given plane count, spread across cores."""
-    emb = _t(spark, sf_dir, "embeddings").filter(F.col("embedding").isNotNull())
+    emb = load_table(spark, sf_dir, "embeddings").filter(F.col("embedding").isNotNull())
     # the signature is a JOIN KEY below, and Catalyst infers an
     # isnotnull(sig) filter on both join sides — with sig's WHOLE
     # 64-plane fold inlined — and pushes it beneath the spread
@@ -434,7 +430,7 @@ def _ivf_ranked_cells(p: str) -> F.Column:
 def _ivf_topk(spark: SparkSession, sf_dir: str, nprobe: int) -> DataFrame:
     """The IVF plan parameterized by ``nprobe`` (see
     :func:`similarity_topk_ivf` for the full shape discussion)."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     cent_row = F.broadcast(_ivf_cent_row(emb))
     c = _side(spread(emb, "vec_id"), "c").crossJoin(cent_row)
     q = _side(emb.filter(F.expr(_QUERY_FILTER)), "q").crossJoin(cent_row)
@@ -676,7 +672,7 @@ def similarity_ivf_nprobe_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast-sized. At 100 TB the three rungs are three passes over
     the same cell-partitioned candidate layout, not three corpus
     shuffles — and now also ONE assignment pass, not six."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     max_np = _IVF_LADDER_NPROBES[-1]
     c = _side(spread(emb, "vec_id"), "c").crossJoin(F.broadcast(_ivf_cent_row(emb)))
     shared = c.select(
@@ -814,7 +810,7 @@ def embedding_int8_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     (same discipline as functions/vector.py). round-half-up is spelled
     floor(x + 0.5) explicitly because the engines' native round()
     disagree on ties (banker's vs away-from-zero)."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     scale = (
         F.array_max(F.transform("embedding", lambda x: F.abs(x.cast("double"))))
         / _Q_LEVELS
@@ -924,7 +920,7 @@ def similarity_topk_sq8_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the expensive arithmetic moves from |corpus| to |shortlist|.
     Approximation quality is visible in-row: approx_cosine sits
     beside the exact cosine in the output."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     scale = (
         F.array_max(F.transform("embedding", lambda x: F.abs(x.cast("double"))))
         / _Q_LEVELS
@@ -1174,7 +1170,7 @@ def similarity_topk_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     per subspace — same plan, better centroids.
     Reference tie: A6's tolerance match generalized; the
     compressed-index shape FAISS IVFPQ runs at billion scale."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     return _pq_topk(
         emb,
         _pq_seeds_row(emb),
@@ -1406,7 +1402,7 @@ def similarity_topk_pq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall_exact_topk memo; drain_session releases it."""
     from ..functions.materialize import memo_checkpoint
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     cb = memo_checkpoint(
         spark,
         ("pq_trained_codebook", os.path.realpath(sf_dir)),
@@ -1501,7 +1497,7 @@ def similarity_topk_mrl_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     row's prefix norm and full norm are folded once; broadcast-queries
     x corpus scan whose rows carry the full vector into the shortlist;
     exact folds only on O(queries x 32) shortlist rows."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
 
     def prefix(p):
         t = F.slice("embedding", 1, _MRL_DIM)
@@ -1592,7 +1588,7 @@ def mine_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB the bucket count scales with the corpus (more planes), the
     per-bucket quadratic stays capped, and the output is O(corpus) —
     one training pair per anchor."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     return _mine_hard_negatives(emb, _HN_PLANES)
 
 
@@ -1618,15 +1614,11 @@ def _mine_hard_negatives(emb: DataFrame, n_planes: int) -> DataFrame:
         hyperplane_sig_spark(F.col("embedding"), range(n_planes)).alias("sig"),
     ).localCheckpoint(eager=True)
     sigs = spread(sigs, "sig")
-    a = sigs.select(
-        F.col("vec_id").alias("va"), F.col("embedding").alias("ea"),
-        F.col("n").alias("na"), F.col("sig").alias("sa"),
+    from .dedup import _bucket_pairs  # dedup imports this module
+
+    cos = cosine_normed(
+        F.col("embedding_a"), F.col("n_a"), F.col("embedding_b"), F.col("n_b")
     )
-    b = sigs.select(
-        F.col("vec_id").alias("vb"), F.col("embedding").alias("eb"),
-        F.col("n").alias("nb"), F.col("sig").alias("sb"),
-    )
-    cos = cosine_normed(F.col("ea"), F.col("na"), F.col("eb"), F.col("nb"))
     cm = F.floor(cos * 1000000000).cast("bigint")
     # 0-or-1-element thresholded array behind a Generate barrier — a
     # plain filter on a projected cm would merge into the join
@@ -1635,13 +1627,14 @@ def _mine_hard_negatives(emb: DataFrame, n_planes: int) -> DataFrame:
         F.array(F.struct(cm.alias("cm"))), lambda c: c["cm"] < _HN_DUP_CM
     )
     negs = (
-        a.join(b, (a.sa == b.sb) & (a.va != b.vb))
-        .select("va", "vb", F.explode_outer(hit).alias("h"))
+        _bucket_pairs(sigs, sigs, ["sig"])
+        .filter(F.col("vec_id_a") != F.col("vec_id_b"))
+        .select("vec_id_a", "vec_id_b", F.explode_outer(hit).alias("h"))
         .filter(F.col("h").isNotNull())
-        .select("va", "vb", F.col("h.cm").alias("cm"))
+        .select("vec_id_a", F.col("vec_id_b").alias("vb"), F.col("h.cm").alias("cm"))
     )
     return (
-        negs.groupBy("va")
+        negs.groupBy("vec_id_a")
         .agg(
             F.max_by(
                 F.struct("vb", "cm"),
@@ -1651,7 +1644,7 @@ def _mine_hard_negatives(emb: DataFrame, n_planes: int) -> DataFrame:
             F.count("*").cast("bigint").alias("n_candidates"),
         )
         .select(
-            F.col("va").alias("vec_id"),
+            F.col("vec_id_a").alias("vec_id"),
             F.col("m.vb").alias("neg_id"),
             F.col("m.cm").alias("hard_cos_e9"),
             "n_candidates",
@@ -1742,7 +1735,7 @@ def embedding_centroid_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     would sum in partition order, and Spark-vs-DuckDB ULP drift at a
     rounding boundary would flake the value hash (~640 dice rolls
     per run)."""
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     cent = _micro_centroid(e, "label")
     norm_micro = _micro(l2_spark(F.col("embedding")))
     stats = (
@@ -1836,7 +1829,7 @@ def kmeans_lloyd_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     ride on cross-engine float ULPs). Inertia stays in BIGINT to
     ~9e12 distance units — per-CLUSTER, so sharding the sum never
     overflows before the cluster itself is absurd."""
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     seeds = e.filter(F.col("vec_id") < _KM_K).select(
         F.col("vec_id").alias("seed_id"), F.col("embedding").alias("se")
     )
@@ -1963,7 +1956,7 @@ def pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     CC and TextRank loops."""
     from ..functions.materialize import iterate, transient
 
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     # the returned relation reads only the final v round; the quantized
     # corpus has no reader past the block
     with transient(spark) as pin:

@@ -34,14 +34,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.hashing import hex32_duck, hex32_spark
+from ..functions.hashing import keyed_hex32_duck, keyed_hex32_spark
 from ..functions.money import cents_duck, cents_spark
 from ..sources import load_table
 from .registry import query
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
 
 
 _cents = cents_spark
@@ -94,7 +90,7 @@ def cdc_latest_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-partition on the group key and spillable — still no global
     sort, and the partial side still combines map-side, which is
     what the plan test pins.)"""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     last = ev.groupBy("user_id").agg(
         F.max_by(
             F.struct("event_type", "value", "ts"), F.struct("ts", "event_id")
@@ -122,8 +118,7 @@ def cdc_latest_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SCD2_WINDOW_DAYS = 90
 _INSERT_OFFSET = 10_000_000
 
-_INS_EXPR_DUCK = "'ins:' || CAST(o_custkey AS VARCHAR)"
-_INS_KEY_DUCK = f"{hex32_duck(_INS_EXPR_DUCK)} % 10 = 0"
+_INS_KEY_DUCK = f"{keyed_hex32_duck('ins', 'o_custkey')} % 10 = 0"
 
 
 @query(
@@ -178,15 +173,12 @@ def scd2_merge_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     customers; an md5-routed ~10% re-keyed to +10M so the insert arm
     fires) — cutoff comes from a 1-row broadcast aggregate, never a
     driver-side collect."""
-    dim = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
+    dim = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
     cutoff = orders.agg(
         (F.max("o_orderdate") - F.expr(f"INTERVAL {_SCD2_WINDOW_DAYS} DAYS")).alias("c")
     )
-    is_ins = (
-        hex32_spark(F.concat(F.lit("ins:"), F.col("o_custkey").cast("string"))) % 10
-        == 0
-    )
+    is_ins = keyed_hex32_spark("ins", "o_custkey") % 10 == 0
     chg = (
         orders.join(F.broadcast(cutoff))
         .filter(F.col("o_orderdate") >= F.col("c"))
@@ -276,7 +268,7 @@ def cohort_retention_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     standard two-phase distinct aggregate. Month arithmetic is
     integer months between first-of-month dates — exact on both
     engines, nothing floats."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     from pyspark.sql.window import Window as W
 
     cohort = F.date_trunc("month", F.min("o_orderdate").over(W.partitionBy("o_custkey")))
@@ -309,15 +301,11 @@ _DIFF_ADD_OFFSET = 5_000_000
 
 
 def _diff_gate_duck(prefix: str, mod: int) -> str:
-    return (
-        f"{hex32_duck(chr(39) + prefix + ':' + chr(39) + ' || CAST(doc_id AS VARCHAR)')}"
-        f" % {mod} = 0"
-    )
+    return f"{keyed_hex32_duck(prefix, 'doc_id')} % {mod} = 0"
 
 
 def _diff_gate_spark(prefix: str, mod: int) -> F.Column:
-    key = F.concat(F.lit(f"{prefix}:"), F.col("doc_id").cast("string"))
-    return (hex32_spark(key) % mod) == 0
+    return (keyed_hex32_spark(prefix, "doc_id") % mod) == 0
 
 
 @query(
@@ -368,7 +356,7 @@ def dataset_diff_snapshots(spark: SparkSession, sf_dir: str) -> DataFrame:
     second generation here derives deterministically from the fixture
     (~5% deleted, ~10% edited, ~4% added under md5-routed gates) so
     all four classes provably fire on any engine."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     a = d.select("doc_id", "lang", F.md5("text").alias("h"))
     b_kept = d.filter(~_diff_gate_spark("del", _DIFF_DEL_MOD)).select(
         "doc_id",

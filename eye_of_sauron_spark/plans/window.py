@@ -25,10 +25,6 @@ from ..sources import load_table
 from .registry import query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 @query(
     "window_rank_customers",
     oracle="""
@@ -43,7 +39,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 )
 def window_rank_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """rank / dense_rank / percent_rank, top-3 per nation."""
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     w = W.partitionBy("c_nationkey").orderBy(
         F.col("c_acctbal").desc(), F.col("c_custkey").asc()
     )
@@ -73,7 +69,7 @@ def window_rank_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def window_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Running (cumulative) sum per customer over order history."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     w = (
         W.partitionBy("o_custkey")
         .orderBy(F.col("o_orderdate").asc(), F.col("o_orderkey").asc())
@@ -107,7 +103,7 @@ def window_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
 def window_lag_event_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """lag(): inter-event gap statistics per user — the engine's
     version of the reference's per-frame latency series (A8)."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy(F.col("ts").asc(), F.col("event_id").asc())
     gaps = e.select(
         "user_id",
@@ -134,7 +130,7 @@ def window_lag_event_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def window_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Moving average over a 3-row frame per user."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     w = (
         W.partitionBy("user_id")
         .orderBy(F.col("ts").asc(), F.col("event_id").asc())
@@ -164,7 +160,7 @@ def window_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def window_lead_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """lead(): event-type transition matrix (Markov counts)."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy(F.col("ts").asc(), F.col("event_id").asc())
     return (
         e.select(
@@ -208,8 +204,8 @@ def window_ntile_spend_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     Every stage is parallel; the only driver-sized data is the offsets
     table. The oracle states the same result with a plain ntile(4).
     """
-    c = _t(spark, sf_dir, "customer").select("c_custkey")
-    o = _t(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
+    c = load_table(spark, sf_dir, "customer").select("c_custkey")
+    o = load_table(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
     spend = (
         c.join(o, c.c_custkey == o.o_custkey, "left")
         .groupBy("c_custkey")
@@ -276,7 +272,7 @@ def window_first_match_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries a full tie-break (linenumber, partkey, price) — a bare
     min_by would be nondeterministic across engines.
     """
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     w = W.partitionBy("l_orderkey").orderBy(
         F.col("l_linenumber").asc(),
         F.col("l_partkey").asc(),
@@ -352,7 +348,7 @@ def funnel_view_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     analog is the first-match state machine of the matcher
     (src/prediction_producer.py:321-323) generalized to a multi-stage
     ordered-reachability check."""
-    ev = _t(spark, sf_dir, "events").select("user_id", "ts", "event_id", "event_type")
+    ev = load_table(spark, sf_dir, "events").select("user_id", "ts", "event_id", "event_type")
     return funnel_counts(ev)
 
 
@@ -438,7 +434,7 @@ def window_time_range_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
     One shuffle on user_id; in-partition sort by time; Spark evaluates
     the range frame with two moving pointers over the sorted run —
     O(n) per partition, no per-row rescan."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = (
         W.partitionBy("user_id")
         .orderBy(F.unix_micros("ts"))

@@ -12,9 +12,10 @@ pruning) is identical.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.window import Window as W
 
 TABLES = (
     "region",
@@ -77,6 +78,29 @@ def spread(df: DataFrame, *keys: str) -> DataFrame:
     scan and also evens out skewed input file sizes."""
     n = df.sparkSession.sparkContext.defaultParallelism
     return df.repartition(n, *keys)
+
+
+def top_k(df: DataFrame, k: int, order: list[Column], *cols: Column | str) -> DataFrame:
+    """``(rank, *cols)`` of the ``k`` first rows of ``df`` under
+    ``order``, ranked from 1. The cut is orderBy + limit
+    (TakeOrderedAndProject: per-partition k-heaps, never a global sort)
+    and the unpartitioned rank window runs over the k surviving rows
+    only. ``order`` must end in a unique key, so the rank is
+    deterministic. The rank is cast to INT, the type every ranked
+    oracle declares (a no-op on ``row_number``)."""
+    rank = F.row_number().over(W.orderBy(*order)).cast("int")
+    return df.orderBy(*order).limit(k).select(rank.alias("rank"), *cols)
+
+
+def top_k_per(
+    df: DataFrame, k: int, by: str, order: list[Column], *cols: Column | str
+) -> DataFrame:
+    """``(rank, *cols)`` of the ``k`` first rows of every ``by`` group
+    under ``order``, ranked from 1 within the group: one ``row_number``
+    window and a ``rank <= k`` filter (which the optimizer may push
+    ahead of the window as a per-partition WindowGroupLimit)."""
+    rank = F.row_number().over(W.partitionBy(by).orderBy(*order))
+    return df.select(rank.alias("rank"), *cols).filter(F.col("rank") <= k)
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

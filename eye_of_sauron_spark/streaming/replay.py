@@ -23,7 +23,12 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from ..functions.hashing import hex32_duck, hex32_spark
+from ..functions.hashing import (
+    hex32_duck,
+    hex32_spark,
+    keyed_hex32_duck,
+    keyed_hex32_spark,
+)
 from ..functions.money import cents_duck, cents_spark
 from ..plans.registry import query
 from ..sources import load_table, spread
@@ -1009,8 +1014,7 @@ _LATE_MAX_ORIGIN = 4  # plant only from octiles 0..4 (margin argument)
 
 _LATE_BATCH_DUCK = _batch_duck(_LATE_BATCHES)
 
-_LATE_KEY_DUCK = hex32_duck("'late:' || CAST(event_id AS VARCHAR)")
-_LATE_FLAG_DUCK = f"{_LATE_KEY_DUCK} % {_LATE_MOD} = 0"
+_LATE_FLAG_DUCK = f"{keyed_hex32_duck('late', 'event_id')} % {_LATE_MOD} = 0"
 
 _LATE_ORACLE = f"""
     WITH flagged AS (
@@ -1068,9 +1072,7 @@ def stream_late_drop_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         sliced = _time_sliced(ev, _LATE_BATCHES)
         is_late = (
-            hex32_spark(F.concat(F.lit("late:"), F.col("event_id").cast("string")))
-            % _LATE_MOD
-            == 0
+            keyed_hex32_spark("late", "event_id") % _LATE_MOD == 0
         ) & (F.col("batch") <= _LATE_MAX_ORIGIN)
         routed = sliced.withColumn(
             "arrival",

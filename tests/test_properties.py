@@ -674,6 +674,42 @@ def test_hyperplane_sig_spark_matches_python_replica(spark_global):
 # follow from key-equivalence for free.
 
 
+@given(
+    salt=st.from_regex(r"[a-z0-9_]{1,8}", fullmatch=True),
+    ids=st.lists(st.integers(0, 2**63 - 1), min_size=1, max_size=16, unique=True),
+)
+@settings(max_examples=5, deadline=None)
+def test_keyed_hex32_twins_agree_with_md5(spark_global, salt, ids):
+    """The salted route hash is engine-independent: keyed_hex32_spark,
+    keyed_hex32_duck run in DuckDB, and the first 8 hex digits of a
+    plain md5 of '<salt>:<id>' give the same value for every id."""
+    import hashlib
+
+    import duckdb
+
+    from eye_of_sauron_spark.functions.hashing import (
+        keyed_hex32_duck,
+        keyed_hex32_spark,
+    )
+
+    want = {
+        i: int(hashlib.md5(f"{salt}:{i}".encode()).hexdigest()[:8], 16) for i in ids
+    }
+    df = spark_global.createDataFrame([(i,) for i in ids], "id LONG")
+    got_spark = {
+        r["id"]: r["h"]
+        for r in df.select("id", keyed_hex32_spark(salt, "id").alias("h")).collect()
+    }
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (id BIGINT)")
+    con.executemany("INSERT INTO t VALUES (?)", [(i,) for i in ids])
+    got_duck = dict(
+        con.execute(f"SELECT id, {keyed_hex32_duck(salt, 'id')} FROM t").fetchall()
+    )
+    assert got_spark == want
+    assert got_duck == want
+
+
 def test_ivf_cell_order_sorts_exactly_by_its_documented_key(spark_global):
     import random
 

@@ -164,6 +164,29 @@ def _plans_source(name: str) -> str:
         return fh.read()
 
 
+def _package_hits(pattern: str, skip: tuple[str, ...] = ()) -> dict[str, int]:
+    """``{package-relative path: count}`` of the regex ``pattern`` over
+    the package's .py files, leaving out the paths in ``skip``."""
+    import os
+    import re
+
+    import eye_of_sauron_spark
+
+    root = os.path.dirname(eye_of_sauron_spark.__file__)
+    hits = {}
+    for dirpath, _, files in os.walk(root):
+        for f in files:
+            path = os.path.join(dirpath, f)
+            rel = os.path.relpath(path, root).replace(os.sep, "/")
+            if not f.endswith(".py") or rel in skip:
+                continue
+            with open(path, encoding="utf-8") as fh:
+                n = len(re.findall(pattern, fh.read()))
+            if n:
+                hits[rel] = n
+    return hits
+
+
 def test_vector_plans_share_one_retrieval_tail():
     """plans/vector.py builds every top-k from one ranking tail and
     every two-stage tier from one shortlist-and-rerank, and scores
@@ -193,6 +216,26 @@ def test_dedup_plans_share_one_candidate_pipeline():
         "df_cap",
     ):
         assert gone not in src, gone
+
+
+def test_text_plans_share_one_toolkit():
+    """The text plans draw every shared stage from one owner: one
+    bigram explode in textual.py (``_bigram_rows``), no hand-written
+    ``row_number`` ranking in textual, curation or aggregation (they
+    call ``sources.top_k``/``top_k_per``), no salted-hash key spelled
+    out for either engine outside functions/hashing.py (they call
+    ``keyed_hex32_spark``/``keyed_hex32_duck``), and no ``_t`` table
+    wrapper anywhere in the package."""
+    assert _plans_source("textual.py").count("F.explode(bigrams") == 1
+    for name in ("textual.py", "curation.py", "aggregation.py"):
+        assert "F.row_number()" not in _plans_source(name), name
+    hashing = ("functions/hashing.py",)
+    # Spark: F.lit("<salt>:") ahead of a cast key
+    assert _package_hits(r'F\.lit\(f?"[^"]+:"\)', hashing) == {}
+    # DuckDB: '<salt>:' || CAST(key AS VARCHAR) as the whole key
+    assert _package_hits(r"'[a-z]+:' \|\| CAST\([^)]*\)(?! \|\|)", hashing) == {}
+    assert "chr(39)" not in _plans_source("warehouse.py")
+    assert _package_hits(r"def _t\(") == {}
 
 
 def test_pq_shortlist_and_output_shape(spark, sf_dir):

@@ -7,6 +7,11 @@ restructured query must prove result-identity before it ships).
 
 Default sf dirs: /root/testdata/sf0.01 and /root/testdata/sf0.1 —
 the r17 optimization round's per-change proof points.
+
+After each query the session is drained; the line reports how many
+RDDs the drain released, how many streams are still active and how
+many RDDs are still persistent. The exit status is non-zero if any
+query fails its oracle or leaves a stream active or an RDD pinned.
 """
 
 from __future__ import annotations
@@ -54,14 +59,22 @@ def main() -> int:
         con = duckdb_con(sf_dir)
         for name in names:
             t0 = time.time()
+            verdict, detail = "OK  ", ""
             try:
                 compare(queries[name](spark, sf_dir), con, oracles[name])
-                print(f"OK   {name} @ {sf_dir} ({time.time() - t0:.1f}s)",
-                      flush=True)
             except Exception as exc:  # noqa: BLE001 — report every failure
+                verdict, detail = "FAIL", f": {exc}"
+            released = drain_session(spark)
+            active = len(spark.streams.active)
+            pinned = spark.sparkContext._jsc.getPersistentRDDs().size()
+            if verdict == "FAIL" or active or pinned:
                 rc = 1
-                print(f"FAIL {name} @ {sf_dir}: {exc}", flush=True)
-            drain_session(spark)
+            print(
+                f"{verdict} {name} @ {sf_dir} ({time.time() - t0:.1f}s; "
+                f"released {released} RDDs, {active} active streams, "
+                f"{pinned} pinned){detail}",
+                flush=True,
+            )
     return rc
 
 
