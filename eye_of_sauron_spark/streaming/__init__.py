@@ -21,11 +21,18 @@ semantics onto Structured Streaming:
   micro-batch log through ``_log_stream`` (the events-log consumers
   through its ``_events_stream`` form); the restart and re-broadcast
   replays share the stop-and-resume driver ``_stop_and_resume``.
+- ``keyed``    : the one keyed state machine. ``keyed_fold`` folds a
+  stream per key through a pure ``step(key, state, rows)`` and makes
+  the package's one grouped-map-with-state call; ``keyed_fn`` is the
+  per-group callable it wraps. The three custom stateful operators
+  below are steps:
 - ``reorder``  : the reference's per-camera ordered-reassembly buffer
   (src/utils.py:139-191) as a bounded stateful operator with
   state eviction (the reference's version leaks, utils.py:50,168).
-- ``change_detect`` : the reference's "smart" frame skip as a keyed
-  ``applyInPandasWithState`` operator (last emitted hash per camera).
+- ``change_detect`` : the reference's "smart" frame skip (last emitted
+  hash per camera).
+- ``funnel``   : ordered view -> click -> purchase first-reach per
+  user, keyed by user_id or by user-id bucket.
 - ``pipeline`` : the face-pipeline analog — stream-static broadcast
   join (A5), per-key topic routing (A9), checkpointed exactly-once
   file sink (A10).

@@ -1,5 +1,6 @@
 """Stateful streaming funnel: per-user ordered view -> click ->
-purchase progress as an ``applyInPandasWithState`` operator.
+purchase progress as a step of the package's one keyed state machine
+(``keyed.keyed_fold``).
 
 The batch funnel (plans/window.py::funnel_counts) computes ordered
 reachability with chained cumulative windows; streaming cannot window
@@ -9,176 +10,97 @@ first-match state (src/prediction_producer.py:321-323): a stage
 completion is emitted exactly once, the first time the ordered
 subsequence reaches it.
 
-Scale: state is 3 ints per user, shuffled once on user_id, and NEVER
-grows with stream length; emission is at most 3 rows per user ever.
+One machine serves both keyings. State is a ``{user_id: mask}`` dict
+held as parallel arrays in the group's state row, and the grouping
+key is the only setting:
+
+- keyed by ``user_id``, each group holds one user (arrays of length
+  1): state never grows with stream length, but the grouped-map call
+  pays a fixed pandas/Arrow cost PER GROUP PER MICRO-BATCH (state row
+  decode, DataFrame assembly, generator step) once per active user;
+- keyed by ``user_id % n_buckets``, that cost is paid ~n_buckets
+  times and amortized across users. The trade: the WHOLE bucket's
+  state deserializes/reserializes every batch the bucket is touched,
+  so cost shifts from O(active users) to O(users in touched buckets)
+  — right when most users are active each batch (replay/backfill),
+  wrong for sparse activity over a huge keyspace. Measured comparison
+  in SCALE.md ("Bucketed-funnel probe", round 9).
+
+Emission is at most 3 rows per user ever.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql import functions as F
+
+from .keyed import keyed_fold
 
 OUTPUT_SCHEMA = "user_id LONG, stage STRING"
-STATE_SCHEMA = "seen_view INT, seen_click INT, seen_purchase INT"
-
-
-def funnel_progress(
-    key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Advance one user's funnel over a micro-batch (rows may arrive
-    unsorted WITHIN the batch — sorted here on (ts, event_id), the
-    same total order the batch funnel's windows use)."""
-    (user_id,) = key
-    v, c, p = state.get if state.exists else (0, 0, 0)
-    out: list[str] = []
-    batches = list(pdfs)
-    if batches:
-        # this callback runs once per ACTIVE USER per micro-batch, so
-        # its constant factor is the operator's hot path: skip the
-        # concat when Arrow delivered one chunk (the common case) and
-        # the sort when the group has a single row; iterate the plain
-        # list, not the Series (same total order either way)
-        rows = batches[0] if len(batches) == 1 else pd.concat(batches)
-        if len(rows) > 1:
-            rows = rows.sort_values(["ts", "event_id"])
-        for et in rows["event_type"].tolist():
-            if et == "view" and not v:
-                v = 1
-                out.append("1_view")
-            elif et == "click" and v and not c:
-                c = 1
-                out.append("2_click")
-            elif et == "purchase" and c and not p:
-                p = 1
-                out.append("3_purchase")
-    state.update((v, c, p))
-    if out:
-        yield pd.DataFrame({"user_id": user_id, "stage": out})
-
-
+MASK_STATE_SCHEMA = "users ARRAY<LONG>, masks ARRAY<INT>"
 FUNNEL_EVENT_TYPES = ("view", "click", "purchase")
+# the (ts, event_id) total order the batch funnel's windows use; a
+# bucket-wide sort keeps every user's ordered subsequence
+ORDER = ["ts", "event_id"]
+# event type -> (prerequisite bits, own bit, emitted stage)
+_STAGES = {
+    "view": (0, 1, "1_view"),
+    "click": (1, 2, "2_click"),
+    "purchase": (2, 4, "3_purchase"),
+}
 
 
-def funnel_stream(events: DataFrame) -> DataFrame:
+def funnel_step(
+    key: tuple[Any, ...], state: Any, rows: pd.DataFrame
+) -> tuple[tuple, pd.DataFrame | None]:
+    """Advance every user of one group over a micro-batch and emit
+    each stage the first time a user's ordered subsequence reaches it.
+    Event types outside the funnel are no-ops."""
+    masks = dict(zip(*state)) if state else {}
+    users: list[int] = []
+    stages: list[str] = []
+    for uid, et in zip(rows["user_id"].tolist(), rows["event_type"].tolist()):
+        need, bit, stage = _STAGES.get(et, (0, 0, None))
+        m = masks.get(uid, 0)
+        if bit and m & need == need and not m & bit:
+            masks[uid] = m | bit
+            users.append(uid)
+            stages.append(stage)
+    out = pd.DataFrame({"user_id": users, "stage": stages}) if users else None
+    return (list(masks), list(masks.values())), out
+
+
+def funnel_stream(events: DataFrame, n_buckets: int | None = None) -> DataFrame:
     """Apply the funnel state machine to a streaming DataFrame with
     columns (user_id LONG, ts TIMESTAMP, event_id LONG,
-    event_type STRING). NULL user_ids are excluded — a funnel over
-    the NULL key would conflate every anonymous event into one state
-    machine; both funnel forms and the replay oracle share this
-    rule, keeping them row-for-row equivalent under NULLs.
+    event_type STRING), keyed by ``user_id`` or, with ``n_buckets``,
+    by ``user_id % n_buckets`` (pick a few buckets per core: enough to
+    parallelize and keep state rows bounded, few enough to amortize
+    the per-group cost).
+
+    NULL user_ids are excluded: a funnel over the NULL key would
+    conflate every anonymous event into one state machine, and a NULL
+    would coerce the pandas user_id column to float64 and corrupt the
+    ARRAY<LONG> state keys; the replay oracle shares this rule.
 
     Event types outside the funnel's three stages are filtered BEFORE
-    the stateful operator: they are no-ops in the state machine (the
-    per-row dispatch ignores them, and a group call carrying only
-    no-op rows rewrites the state it read), so pushing the predicate
-    below the shuffle is output-identical while cutting the rows that
-    cross the Arrow boundary — on the events fixture that is ~40% of
-    the stream (signup/error). The same pushdown-through-state move a
-    relational optimizer makes through a filter-invariant operator."""
-    from pyspark.sql import functions as F
-
+    the stateful operator: they are no-ops in the state machine, so
+    pushing the predicate below the shuffle is output-identical while
+    cutting the rows that cross the Arrow boundary — on the events
+    fixture that is ~40% of the stream (signup/error). The same
+    pushdown-through-state move a relational optimizer makes through a
+    filter-invariant operator."""
     events = events.filter(
         F.col("user_id").isNotNull()
         & F.col("event_type").isin(*FUNNEL_EVENT_TYPES)
     )
-    return events.groupBy("user_id").applyInPandasWithState(
-        funnel_progress,
-        OUTPUT_SCHEMA,
-        STATE_SCHEMA,
-        "append",
-        GroupStateTimeout.NoTimeout,
-    )
-
-
-# ------------------------- bucketed-key variant (per-group-tax probe)
-
-BUCKET_STATE_SCHEMA = "users ARRAY<LONG>, masks ARRAY<INT>"
-
-
-def funnel_progress_bucketed(
-    key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """One state-store group per user BUCKET: the per-user 3-bit masks
-    live as parallel arrays inside the bucket's state row, and the
-    per-user machines run in a dict inside one pandas pass. Semantics
-    identical to funnel_progress — the bucket-wide (ts, event_id) sort
-    preserves every user's ordered subsequence.
-
-    Why this exists: applyInPandasWithState pays a fixed pandas/Arrow
-    tax PER GROUP PER MICRO-BATCH (state row decode, DataFrame
-    assembly, generator step), so with K active users per batch the
-    per-user keying pays it K times; bucketing pays it ~n_buckets
-    times and amortizes the rest across users (SCALE.md funnel probe).
-    The trade: the WHOLE bucket's state deserializes/reserializes
-    every batch the bucket is touched, so cost shifts from
-    O(active users) to O(users in touched buckets) — right when most
-    users are active each batch (replay/backfill), wrong for sparse
-    activity over a huge keyspace. Measured comparison in SCALE.md
-    ("Bucketed-funnel probe", round 9)."""
-    st: dict[int, int] = {}
-    if state.exists:
-        users, masks = state.get
-        st = dict(zip(users, masks))
-    out_users: list[int] = []
-    out_stages: list[str] = []
-    batches = list(pdfs)
-    if batches:
-        rows = batches[0] if len(batches) == 1 else pd.concat(batches)
-        if len(rows) > 1:
-            rows = rows.sort_values(["ts", "event_id"])
-        # .tolist(), not .to_numpy(): the uids feed the state tuple,
-        # and numpy scalars do not survive the state pickler
-        for uid, et in zip(
-            rows["user_id"].tolist(), rows["event_type"].tolist()
-        ):
-            m = st.get(uid, 0)
-            if et == "view" and not m & 1:
-                m |= 1
-                out_users.append(uid)
-                out_stages.append("1_view")
-            elif et == "click" and m & 1 and not m & 2:
-                m |= 2
-                out_users.append(uid)
-                out_stages.append("2_click")
-            elif et == "purchase" and m & 2 and not m & 4:
-                m |= 4
-                out_users.append(uid)
-                out_stages.append("3_purchase")
-            st[uid] = m
-    state.update((list(st.keys()), list(st.values())))
-    if out_users:
-        yield pd.DataFrame({"user_id": out_users, "stage": out_stages})
-
-
-def funnel_stream_bucketed(events: DataFrame, n_buckets: int = 64) -> DataFrame:
-    """funnel_stream with bucketed state keys (user_id % n_buckets).
-    Pick n_buckets ~ a few per core: large enough to parallelize and
-    keep per-bucket state rows bounded, small enough to amortize the
-    per-group tax."""
-    from pyspark.sql import functions as F
-
-    # NULL user_ids are excluded in BOTH funnel forms (see
-    # funnel_stream) — here it additionally matters mechanically: a
-    # NULL would coerce the pandas user_id column to float64 and
-    # corrupt the ARRAY<LONG> state keys
-    return (
-        events.filter(
-            F.col("user_id").isNotNull()
-            # no-op event types pushed below the shuffle, exactly as in
-            # funnel_stream — output-identical, ~40% fewer Arrow rows
-            & F.col("event_type").isin(*FUNNEL_EVENT_TYPES)
-        )
-        .withColumn("bucket", F.pmod(F.col("user_id"), F.lit(n_buckets)))
-        .groupBy("bucket")
-        .applyInPandasWithState(
-            funnel_progress_bucketed,
-            OUTPUT_SCHEMA,
-            BUCKET_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.NoTimeout,
-        )
+    key = "user_id"
+    if n_buckets is not None:
+        key = "bucket"
+        events = events.withColumn(key, F.pmod(F.col("user_id"), F.lit(n_buckets)))
+    return keyed_fold(
+        events, key, funnel_step, MASK_STATE_SCHEMA, OUTPUT_SCHEMA, ORDER
     )

@@ -7,8 +7,8 @@ dict per camera, popped once the buffer fills (src/utils.py:139-191,
 (utils.py:50, 168 — an unbounded leak) and paces emission with
 wall-clock sleeps.
 
-Here the same semantics are a keyed stateful streaming operator via
-``applyInPandasWithState``:
+Here the same semantics are a step of the package's one keyed state
+machine (``keyed.keyed_fold``), folded in arrival order:
 
 - state per camera = (next expected frame, pending out-of-order
   frames); entries are REMOVED on emit — state size is bounded by the
@@ -28,12 +28,13 @@ Here the same semantics are a keyed stateful streaming operator via
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from functools import partial
 from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from .keyed import keyed_fn, keyed_fold
 
 OUTPUT_SCHEMA = "camera INT, frame_num INT, payload STRING"
 STATE_SCHEMA = (
@@ -41,67 +42,60 @@ STATE_SCHEMA = (
 )
 
 
-def make_reorder_fn(buffer_size: int = 64):
-    """Build the per-group stateful function (picklable closure)."""
+def _reorder_step(
+    buffer_size: int, key: tuple[Any, ...], state: Any, rows: pd.DataFrame
+) -> tuple[tuple, pd.DataFrame | None]:
+    """Buffer one camera's micro-batch and emit every frame that is
+    now next in order."""
+    next_expected, pending = (
+        (state[0], dict(zip(state[1], state[2]))) if state else (0, {})
+    )
+    for frame_num, payload in zip(
+        rows["frame_num"].tolist(), rows["payload"].tolist()
+    ):
+        # frames behind the emit point are STALE (we already skipped
+        # past them on overflow) — drop them, like watermark late
+        # data: emitted order stays strictly increasing and state
+        # cannot resurrect old frames
+        if frame_num >= next_expected:
+            pending[frame_num] = payload
 
-    def reorder(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (camera,) = key
-        if state.exists:
-            next_expected, nums, payloads = state.get
-            pending = dict(zip(nums, payloads))
-        else:
-            next_expected, pending = 0, {}
+    out_nums: list[int] = []
+    out_payloads: list[str] = []
 
-        for pdf in pdfs:
-            for frame_num, payload in zip(pdf["frame_num"], pdf["payload"]):
-                # frames behind the emit point are STALE (we already
-                # skipped past them on overflow) — drop them, like
-                # watermark late-data: emitted order stays strictly
-                # increasing and state cannot resurrect old frames
-                if int(frame_num) >= next_expected:
-                    pending[int(frame_num)] = payload
+    def drain(n: int) -> int:
+        while n in pending:
+            out_nums.append(n)
+            out_payloads.append(pending.pop(n))  # evict on emit
+            n += 1
+        return n
 
-        out_nums: list[int] = []
-        out_payloads: list[str] = []
+    next_expected = drain(next_expected)
+    while len(pending) > buffer_size:
+        # buffer overflow: skip the gap to the smallest buffered frame,
+        # like the reference's bounded heap under frame loss
+        next_expected = drain(min(pending))
 
-        def drain(start: int) -> int:
-            n = start
-            while n in pending:
-                out_nums.append(n)
-                out_payloads.append(pending.pop(n))  # evict on emit
-                n += 1
-            return n
-
-        next_expected = drain(next_expected)
-        while len(pending) > buffer_size:
-            # buffer overflow: skip the gap to the smallest buffered
-            # frame, like the reference's bounded heap under frame loss
-            next_expected = drain(min(pending))
-
-        state.update(
-            (next_expected, list(pending.keys()), list(pending.values()))
+    out = None
+    if out_nums:
+        out = pd.DataFrame(
+            {"camera": key[0], "frame_num": out_nums, "payload": out_payloads}
         )
-        if out_nums:
-            yield pd.DataFrame(
-                {
-                    "camera": camera,
-                    "frame_num": out_nums,
-                    "payload": out_payloads,
-                }
-            )
+    return (next_expected, list(pending), list(pending.values())), out
 
-    return reorder
+
+def make_reorder_fn(buffer_size: int = 64):
+    """The per-group stateful function (picklable closure)."""
+    return keyed_fn(partial(_reorder_step, buffer_size))
 
 
 def reorder_stream(frames: DataFrame, buffer_size: int = 64) -> DataFrame:
     """Apply the reorder buffer to a streaming DataFrame with columns
     (camera INT, frame_num INT, payload STRING)."""
-    return frames.groupBy("camera").applyInPandasWithState(
-        make_reorder_fn(buffer_size),
-        OUTPUT_SCHEMA,
+    return keyed_fold(
+        frames,
+        "camera",
+        partial(_reorder_step, buffer_size),
         STATE_SCHEMA,
-        "append",
-        GroupStateTimeout.NoTimeout,
+        OUTPUT_SCHEMA,
     )

@@ -1470,23 +1470,21 @@ _FUN_SHUFFLE = 16
 
 
 def _funnel_replay(
-    spark: SparkSession,
-    sf_dir: str,
-    build: Callable[[DataFrame], DataFrame],
-    width: int,
+    spark: SparkSession, sf_dir: str, n_buckets: int | None, width: int
 ) -> DataFrame:
-    """Drain the shared events log through the funnel operator
-    ``build`` and count its (user_id, stage) completions per stage —
-    the body both funnel replays share. Every stage is listed, with 0
-    when no user reached it."""
+    """Drain the shared events log through the funnel machine keyed
+    by user_id (``n_buckets`` None) or by user-id bucket, and count
+    its (user_id, stage) completions per stage — the body both funnel
+    replays share. Every stage is listed, with 0 when no user reached
+    it."""
+    from .funnel import funnel_stream
+
     stream = _events_stream(
         spark,
         sf_dir,
         "user_id BIGINT, ts TIMESTAMP, event_id BIGINT, event_type STRING",
     )
-    emitted = run_to_memory(build(stream), width=width).localCheckpoint(
-        eager=True
-    )
+    emitted = run_to_memory(funnel_stream(stream, n_buckets), width=width)
     stages = spark.createDataFrame(
         [("1_view",), ("2_click",), ("3_purchase",)], "stage STRING"
     )
@@ -1538,8 +1536,8 @@ _FUNNEL_REPLAY_ORACLE = """
 @query("stream_funnel_replay", oracle=_FUNNEL_REPLAY_ORACLE)
 def stream_funnel_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The conversion funnel through REAL streaming state: events
-    replay as 8 ordered micro-batches into a per-user 3-bit
-    applyInPandasWithState machine that emits each stage completion
+    replay as 8 ordered micro-batches into the funnel state machine
+    keyed by user_id, which emits each stage completion
     exactly once, the first time the user's ordered subsequence
     reaches it — and the per-stage emission counts must equal the
     batch funnel's chained-window reach sums (the oracle). What this
@@ -1550,36 +1548,27 @@ def stream_funnel_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     the in-batch (ts, event_id) sort inside the operator reproduces
     the windows' total order.
 
-    Scale shape: 3 ints of state per user forever (no growth with
-    stream length), one shuffle on user_id, <= 3 output rows per user
-    ever — the cheapest possible stateful operator, and the streaming
-    form of the reference's first-match state machine
-    (src/prediction_producer.py:321-323)."""
-    from .funnel import funnel_stream
-
-    return _funnel_replay(spark, sf_dir, funnel_stream, _FUN_SHUFFLE)
+    Scale shape: the funnel machine keyed by user_id, so each state
+    row holds one user's 3-bit mask (length-1 arrays) forever (no
+    growth with stream length), one shuffle on user_id, <= 3 output
+    rows per user ever — the streaming form of the reference's
+    first-match state machine (src/prediction_producer.py:321-323)."""
+    return _funnel_replay(spark, sf_dir, None, _FUN_SHUFFLE)
 
 
 @query("stream_funnel_bucketed_replay", oracle=_FUNNEL_REPLAY_ORACLE)
 def stream_funnel_bucketed_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """stream_funnel_replay's exact semantics through the BUCKETED
-    state layout (streaming/funnel.py::funnel_stream_bucketed): one
-    state-store group per user-id bucket, per-user 3-bit masks as
-    parallel arrays inside the bucket row. Same oracle, same
-    per-stage emission counts — what this adds is driver proof that
-    the per-group-tax mitigation is output-equivalent to the per-user
-    form (applyInPandasWithState pays a fixed pandas/Arrow cost PER
-    GROUP PER MICRO-BATCH; bucketing pays it n_buckets times instead
-    of active-users times — measured 10x comparison in SCALE.md,
-    "Bucketed-funnel probe")."""
-    from .funnel import funnel_stream_bucketed
-
-    return _funnel_replay(
-        spark,
-        sf_dir,
-        lambda stream: funnel_stream_bucketed(stream, n_buckets=64),
-        _FUN_BATCHES,
-    )
+    """stream_funnel_replay's exact semantics through the same funnel
+    machine keyed by user-id BUCKET (streaming/funnel.py::funnel_stream
+    with n_buckets=64): one state-store group per bucket, per-user
+    3-bit masks as parallel arrays inside the bucket row. Same oracle,
+    same per-stage emission counts — what this adds is oracle-checked
+    proof that the per-group-tax mitigation is output-equivalent to
+    the per-user keying (the grouped-map-with-state call pays a fixed
+    pandas/Arrow cost PER GROUP PER MICRO-BATCH; bucketing pays it
+    n_buckets times instead of active-users times — measured 10x
+    comparison in SCALE.md, "Bucketed-funnel probe")."""
+    return _funnel_replay(spark, sf_dir, 64, _FUN_BATCHES)
 
 
 # ------------------------------------- A8 observe()-metrics replay

@@ -24,7 +24,16 @@ def spark():
         "spark.sql.shuffle.partitions": "8",
     })
     yield spark
-    spark.stop()
+    # session-end leak guard: once every result is consumed, a drain
+    # must leave no persistent RDD and no stream running
+    from eye_of_sauron_spark.functions.materialize import drain_session
+
+    try:
+        drain_session(spark)
+        assert spark.sparkContext._jsc.getPersistentRDDs().size() == 0
+        assert spark.streams.active == []
+    finally:
+        spark.stop()
 
 
 @pytest.fixture(scope="session")

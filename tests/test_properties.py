@@ -139,6 +139,78 @@ def test_change_detector_collapses_runs(hs, splits, seed):
     assert out == expect
 
 
+def _drive_funnel(batches, group_of) -> list[tuple[int, str]]:
+    """Feed each micro-batch of (user_id, event_type, t) events through
+    the funnel machine, one call per group (``group_of(user_id)``) with
+    a persistent stub state per group; return every emitted row."""
+    from eye_of_sauron_spark.streaming.funnel import ORDER, funnel_step
+    from eye_of_sauron_spark.streaming.keyed import keyed_fn
+
+    fn = keyed_fn(funnel_step, ORDER)
+    states: dict[int, _StubState] = {}
+    out: list[tuple[int, str]] = []
+    for batch in batches:
+        for g in sorted({group_of(u) for u, _, _ in batch}):
+            rows = [e for e in batch if group_of(e[0]) == g]
+            pdf = pd.DataFrame(
+                {
+                    "user_id": [u for u, _, _ in rows],
+                    "ts": [t for _, _, t in rows],
+                    "event_id": [t for _, _, t in rows],
+                    "event_type": [et for _, et, _ in rows],
+                }
+            )
+            for res in fn((g,), iter([pdf]), states.setdefault(g, _StubState())):
+                out.extend(zip(res["user_id"].tolist(), res["stage"].tolist()))
+    return out
+
+
+@given(
+    events=st.lists(
+        st.tuples(st.integers(0, 4), st.sampled_from(["view", "click", "purchase"])),
+        max_size=60,
+    ),
+    splits=st.lists(st.integers(0, 60), max_size=5),
+    seed=st.integers(0, 2**32 - 1),
+)
+@settings(max_examples=200, deadline=None)
+def test_funnel_keyings_emit_first_reach_once(events, splits, seed):
+    """streaming/funnel.py: for ANY event sequence over a few users,
+    ANY micro-batch split and ANY within-batch arrival shuffle, the
+    funnel machine keyed per user and keyed per ``user_id % 3`` bucket
+    emit the same (user_id, stage) rows, each at most once, and they
+    are exactly the stages each user's ordered subsequence reaches
+    (view, then click after a view, then purchase after such a
+    click)."""
+    n = len(events)
+    bounds = [0, *sorted({min(s, n) for s in splits}), n]
+    rng = np.random.default_rng(seed)
+    batches = []
+    for a, b in zip(bounds, bounds[1:]):
+        batch = [(u, et, t) for t, (u, et) in enumerate(events[a:b], start=a)]
+        rng.shuffle(batch)  # within-batch arrival order must not matter
+        if batch:
+            batches.append(batch)
+    per_user = _drive_funnel(batches, lambda u: u)
+    bucketed = _drive_funnel(batches, lambda u: u % 3)
+    reach: dict[int, int] = {}
+    expect = set()
+    for u, et in events:
+        m = reach.get(u, 0)
+        if et == "view" and m == 0:
+            reach[u], stage = 1, "1_view"
+        elif et == "click" and m == 1:
+            reach[u], stage = 2, "2_click"
+        elif et == "purchase" and m == 2:
+            reach[u], stage = 3, "3_purchase"
+        else:
+            continue
+        expect.add((u, stage))
+    assert len(per_user) == len(set(per_user))
+    assert len(bucketed) == len(set(bucketed))
+    assert set(per_user) == set(bucketed) == expect
+
+
 @given(payload=st.binary(min_size=0, max_size=200))
 @settings(max_examples=300, deadline=None)
 def test_stub_models_total_and_deterministic(payload):

@@ -11,7 +11,11 @@ Covers
 
 from __future__ import annotations
 
+import re
+
 import pytest
+
+from tests._scan import package_hits
 
 
 def _n_persist(spark) -> int:
@@ -356,40 +360,22 @@ def test_textrank_graph_checkpoint_failure_frees_prior(
     )
 
 
-def _package_hits(needles, skip=()):
-    """(module, needle) for every needle found in a package source
-    file, the files named in ``skip`` (package-relative) excepted."""
-    import os
-
-    import eye_of_sauron_spark
-
-    root = os.path.dirname(eye_of_sauron_spark.__file__)
-    hits = []
-    for dirpath, _, files in os.walk(root):
-        for f in sorted(files):
-            rel = os.path.relpath(os.path.join(dirpath, f), root)
-            if not f.endswith(".py") or rel in skip:
-                continue
-            with open(os.path.join(dirpath, f), encoding="utf-8") as fh:
-                text = fh.read()
-            hits += [(rel, n) for n in needles if n in text]
-    return hits
+def _any_of(needles) -> str:
+    return "|".join(re.escape(n) for n in needles)
 
 
 def test_checkpoint_lifetimes_have_one_owner():
     """functions/materialize.py is the only code that frees checkpoint
     blocks: no plan tracks ids, frees them, or hand-writes a failure
     path of its own."""
-    import os
-
     needles = (
         "checkpoint_tracked",
         "unpersist_ids(",
         "except BaseException",
         "register_drain_hook",
     )
-    owner = os.path.join("functions", "materialize.py")
-    assert _package_hits(needles, skip={owner}) == []
+    owner = ("functions/materialize.py",)
+    assert package_hits(_any_of(needles), skip=owner) == {}
 
 
 def test_no_dormant_forks_or_test_only_helpers():
@@ -397,8 +383,6 @@ def test_no_dormant_forks_or_test_only_helpers():
     no transformWithState or PIL fork, no session state-store knob, no
     rate source, no hand-rotated verification list, no per-batch
     micro-batch writer and no second bucketed-table writer."""
-    import os
-
     needles = (
         "transformWithStateInPandas",
         "_has_protobuf",
@@ -409,6 +393,6 @@ def test_no_dormant_forks_or_test_only_helpers():
         "_VERIFY_FIRST",
         "write_microbatch_files(",
     )
-    assert _package_hits(needles) == []
-    storage = os.path.join("plans", "storage.py")
-    assert _package_hits(("def write_bucketed",), skip={storage}) == []
+    assert package_hits(_any_of(needles)) == {}
+    storage = ("plans/storage.py",)
+    assert package_hits("def write_bucketed", skip=storage) == {}

@@ -19,6 +19,8 @@ import math
 
 from pyspark.sql import functions as F
 
+from tests._scan import package_hits, package_source
+
 
 # ------------------------------------------------ split_group_routed
 
@@ -154,45 +156,12 @@ def test_pq_plan_no_unbroadcast_cartesian(spark, sf_dir):
     assert plan.count("BroadcastNestedLoopJoin") == 2, plan
 
 
-def _plans_source(name: str) -> str:
-    import os
-
-    import eye_of_sauron_spark
-
-    path = os.path.join(os.path.dirname(eye_of_sauron_spark.__file__), "plans", name)
-    with open(path, encoding="utf-8") as fh:
-        return fh.read()
-
-
-def _package_hits(pattern: str, skip: tuple[str, ...] = ()) -> dict[str, int]:
-    """``{package-relative path: count}`` of the regex ``pattern`` over
-    the package's .py files, leaving out the paths in ``skip``."""
-    import os
-    import re
-
-    import eye_of_sauron_spark
-
-    root = os.path.dirname(eye_of_sauron_spark.__file__)
-    hits = {}
-    for dirpath, _, files in os.walk(root):
-        for f in files:
-            path = os.path.join(dirpath, f)
-            rel = os.path.relpath(path, root).replace(os.sep, "/")
-            if not f.endswith(".py") or rel in skip:
-                continue
-            with open(path, encoding="utf-8") as fh:
-                n = len(re.findall(pattern, fh.read()))
-            if n:
-                hits[rel] = n
-    return hits
-
-
 def test_vector_plans_share_one_retrieval_tail():
     """plans/vector.py builds every top-k from one ranking tail and
     every two-stage tier from one shortlist-and-rerank, and scores
     pairs from per-row norms only: no per-pair ``cosine_spark(``, one
     ``cos`` ranking window, one ``acos`` shortlist window."""
-    src = _plans_source("vector.py")
+    src = package_source("plans/vector.py")
     assert src.count("cosine_spark(") == 0
     assert src.count('F.col("cos").desc()') == 1
     assert src.count('F.col("acos").desc()') == 1
@@ -205,7 +174,7 @@ def test_dedup_plans_share_one_candidate_pipeline():
     ``array_intersect(``, one ``"minhash_exact_pairs"`` key, no
     per-pair ``cosine_spark(``, and none of the folded-away helpers
     or the unused ``df_cap`` parameter."""
-    src = _plans_source("dedup.py")
+    src = package_source("plans/dedup.py")
     assert src.count("array_intersect(") == 1
     assert src.count('"minhash_exact_pairs"') == 1
     assert src.count("cosine_spark(") == 0
@@ -226,16 +195,16 @@ def test_text_plans_share_one_toolkit():
     out for either engine outside functions/hashing.py (they call
     ``keyed_hex32_spark``/``keyed_hex32_duck``), and no ``_t`` table
     wrapper anywhere in the package."""
-    assert _plans_source("textual.py").count("F.explode(bigrams") == 1
+    assert package_source("plans/textual.py").count("F.explode(bigrams") == 1
     for name in ("textual.py", "curation.py", "aggregation.py"):
-        assert "F.row_number()" not in _plans_source(name), name
+        assert "F.row_number()" not in package_source(f"plans/{name}"), name
     hashing = ("functions/hashing.py",)
     # Spark: F.lit("<salt>:") ahead of a cast key
-    assert _package_hits(r'F\.lit\(f?"[^"]+:"\)', hashing) == {}
+    assert package_hits(r'F\.lit\(f?"[^"]+:"\)', hashing) == {}
     # DuckDB: '<salt>:' || CAST(key AS VARCHAR) as the whole key
-    assert _package_hits(r"'[a-z]+:' \|\| CAST\([^)]*\)(?! \|\|)", hashing) == {}
-    assert "chr(39)" not in _plans_source("warehouse.py")
-    assert _package_hits(r"def _t\(") == {}
+    assert package_hits(r"'[a-z]+:' \|\| CAST\([^)]*\)(?! \|\|)", hashing) == {}
+    assert "chr(39)" not in package_source("plans/warehouse.py")
+    assert package_hits(r"def _t\(") == {}
 
 
 def test_pq_shortlist_and_output_shape(spark, sf_dir):

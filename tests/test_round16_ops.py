@@ -43,6 +43,8 @@ from eye_of_sauron_spark.plans.vector import (
     similarity_lsh_recall,
 )
 
+from tests._scan import unique_rows
+
 # (ladder_fn, rungs, dial_col, registered_rung, registered_contract_fn,
 #  pool_grows_with_dial)
 _LADDERS = {
@@ -71,17 +73,15 @@ def ladder(request):
 
 
 def _rows(ladder_fn, dial_col, spark, sf_dir):
-    # collect to a LIST first and pin key uniqueness explicitly — a
-    # dict comprehension would silently collapse a rung emitting the
-    # same (dial, query_id) twice, and the downstream shape assertion
-    # could not see it (ADVICE r16)
-    collected = [
-        ((r[dial_col], r["query_id"]), (r["n_hits"], r["recall"]))
-        for r in ladder_fn(spark, sf_dir).collect()
-    ]
-    keys = [k for k, _ in collected]
-    assert len(keys) == len(set(keys)), "duplicate (dial, query_id) rows"
-    return dict(collected)
+    # pin key uniqueness explicitly: a rung emitting the same
+    # (dial, query_id) twice would otherwise collapse unseen
+    return unique_rows(
+        (
+            ((r[dial_col], r["query_id"]), (r["n_hits"], r["recall"]))
+            for r in ladder_fn(spark, sf_dir).collect()
+        ),
+        "(dial, query_id)",
+    )
 
 
 def test_ladder_shape_and_monotone_recall(spark, sf_dir, ladder):

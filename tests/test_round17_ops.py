@@ -36,15 +36,17 @@ from eye_of_sauron_spark.plans.dedup import (
     dedup_minhash_recall,
 )
 
+from tests._scan import unique_rows
+
 
 def _rows(spark, sf_dir):
-    collected = [
-        ((r["n_bands"], r["doc_a"], r["doc_b"]), (r["jaccard"], r["in_candidates"]))
-        for r in dedup_minhash_band_ladder(spark, sf_dir).collect()
-    ]
-    keys = [k for k, _ in collected]
-    assert len(keys) == len(set(keys)), "duplicate (n_bands, pair) rows"
-    return dict(collected)
+    return unique_rows(
+        (
+            ((r["n_bands"], r["doc_a"], r["doc_b"]), (r["jaccard"], r["in_candidates"]))
+            for r in dedup_minhash_band_ladder(spark, sf_dir).collect()
+        ),
+        "(n_bands, pair)",
+    )
 
 
 def test_band_ladder_shape_and_monotone_candidates(spark, sf_dir):

@@ -65,14 +65,11 @@ def test_funnel_bucketed_matches_per_user_rowwise(spark, sf_dir, tmp_path):
     the per-user form — not just equal per-stage counts (which the
     shared driver oracle already pins): every (user_id, stage)
     completion, each exactly once, surviving micro-batch boundaries."""
-    from eye_of_sauron_spark.streaming.funnel import (
-        funnel_stream,
-        funnel_stream_bucketed,
-    )
+    from eye_of_sauron_spark.streaming.funnel import funnel_stream
 
     per_user = _run_funnel(spark, sf_dir, tmp_path, funnel_stream, "user")
     bucketed = _run_funnel(
-        spark, sf_dir, tmp_path, lambda s: funnel_stream_bucketed(s, 16), "bucket"
+        spark, sf_dir, tmp_path, lambda s: funnel_stream(s, 16), "bucket"
     )
     assert per_user == bucketed
     assert len(per_user) > 0

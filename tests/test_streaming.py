@@ -27,6 +27,8 @@ from eye_of_sauron_spark.streaming.harness import (
 from eye_of_sauron_spark.streaming.pipeline import match_stream
 from eye_of_sauron_spark.streaming.reorder import reorder_stream
 
+from tests._scan import package_hits
+
 
 def _sorted_rows(df, cols):
     return [tuple(r) for r in df.select(*cols).orderBy(*cols).collect()]
@@ -463,19 +465,7 @@ def test_drain_stream_is_the_only_stream_start():
     """Every stream start goes through harness.drain_stream, and so
     enters the ephemeral_checkpoint conf scope: ``writeStream`` occurs
     in the package exactly once, in streaming/harness.py."""
-    import eye_of_sauron_spark
-
-    root = os.path.dirname(eye_of_sauron_spark.__file__)
-    hits = []
-    for dirpath, _, files in os.walk(root):
-        for f in sorted(files):
-            if f.endswith(".py"):
-                path = os.path.join(dirpath, f)
-                with open(path, encoding="utf-8") as fh:
-                    n = fh.read().count("writeStream")
-                if n:
-                    hits.append((os.path.relpath(path, root), n))
-    assert hits == [(os.path.join("streaming", "harness.py"), 1)]
+    assert package_hits("writeStream") == {"streaming/harness.py": 1}
 
 
 def test_replays_open_their_logs_through_one_feed():
@@ -493,3 +483,15 @@ def test_replays_open_their_logs_through_one_feed():
     for helper in ("_log_stream", "_stop_and_resume"):
         body = src.split(f"def {helper}(", 1)[1].split("\ndef ", 1)[0]
         assert "staged_microbatch_log(" in body and "file_stream(" in body
+
+
+def test_stateful_streams_share_one_keyed_fold():
+    """Every custom stateful stream (reorder buffer, change detector,
+    both funnel keyings) is a step folded through keyed.keyed_fold:
+    the grouped-map-with-state call is made once in the package, one
+    module imports its timeout, and the per-user funnel has no machine
+    of its own."""
+    assert package_hits(r"\.applyInPandasWithState\(") == {"streaming/keyed.py": 1}
+    timeout_import = r"(?m)^from \S+ import .*\bGroupStateTimeout\b"
+    assert package_hits(timeout_import) == {"streaming/keyed.py": 1}
+    assert package_hits(r"def funnel_progress\(") == {}

@@ -3,23 +3,39 @@
 
 Usage::
 
-    python tools/capture_plans.py <out_dir> [<suffix>] [query ...]
+    python tools/capture_plans.py <out_dir> [<suffix>] [query ...] [--streams]
+
+Evidence for one change lives in its own directory,
+``plans/r<N>/<change>/`` (round, then a short change name), so a later
+change cannot overwrite an earlier change's dumps. Capture ``before``
+on the parent tree and ``after`` on the change tree into the same
+directory.
 
 Writes ``<out_dir>/<query>_<suffix>.txt`` (suffix default "before")
 for each named query (default: all). Plans are captured at
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) — plan SHAPE
 (join strategy, Exchange count, PushedFilters) is what the files pin.
+Every dump writes that directory as ``<SPARK_GRAFT_SF_DIR>``, and a
+replay's staged micro-batch log as ``<staged_log>``, so dumps from two
+trees or hosts diff clean and commit as written.
+
+With ``--streams`` the dump holds, instead of the query's final plan,
+the plan of every streaming DataFrame the query drains, taken just
+before the drain starts (a replay's final plan reads the drained
+rows, not the stateful operator).
+
 The final action is never run, but queries built on a materialized
-shared pass (an eager localCheckpoint, a memo_checkpoint slot or an
-iterate loop) DO execute that pass at plan-construction time, so the
-session is drained after each query to keep a full sweep's executor
-storage flat.
+shared pass (an eager localCheckpoint, a memo_checkpoint slot, an
+iterate loop or a replay's drain) DO execute that pass at
+plan-construction time, so the session is drained after each query to
+keep a full sweep's executor storage flat.
 """
 
 from __future__ import annotations
 
 import io
 import os
+import re
 import sys
 from contextlib import redirect_stdout
 
@@ -29,28 +45,61 @@ from eye_of_sauron_spark import plans  # noqa: E402
 from eye_of_sauron_spark.session import get_spark  # noqa: E402
 
 
+def _explain_streams(buf: io.StringIO) -> None:
+    """Make every stream drain print its plan into ``buf`` first: each
+    loaded package module's ``drain_stream`` binding is replaced."""
+    from eye_of_sauron_spark.streaming import harness
+
+    drain = harness.drain_stream
+
+    def explained(stream_df, *args, **kwargs):
+        with redirect_stdout(buf):
+            stream_df.explain("formatted")
+        return drain(stream_df, *args, **kwargs)
+
+    for name, mod in list(sys.modules.items()):
+        if name.startswith("eye_of_sauron_spark."):
+            if getattr(mod, "drain_stream", None) is drain:
+                mod.drain_stream = explained
+
+
 def main() -> None:
-    out_dir = sys.argv[1] if len(sys.argv) > 1 else "plans/r17"
-    suffix = sys.argv[2] if len(sys.argv) > 2 else "before"
-    names = sys.argv[3:]
+    streams = "--streams" in sys.argv[1:]
+    args = [a for a in sys.argv[1:] if a != "--streams"]
+    if not args:
+        raise SystemExit(
+            "usage: capture_plans.py <out_dir> [<suffix>] [query ...] [--streams]"
+        )
+    out_dir = args[0]
+    suffix = args[1] if len(args) > 1 else "before"
+    names = args[2:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("capture_plans")
     from eye_of_sauron_spark.functions.materialize import drain_session
 
+    buf = io.StringIO()
     registry = plans.all_queries()
+    if streams:
+        _explain_streams(buf)
     todo = names or sorted(registry)
     for name in todo:
-        buf = io.StringIO()
+        buf.seek(0)
+        buf.truncate()
         try:
             df = registry[name](spark, sf_dir)
-            with redirect_stdout(buf):
-                df.explain("formatted")
+            if not streams:
+                with redirect_stdout(buf):
+                    df.explain("formatted")
         except Exception as exc:  # noqa: BLE001 — record, keep going
             buf.write(f"\nEXPLAIN FAILED: {type(exc).__name__}: {exc}\n")
+        text = buf.getvalue().replace(
+            os.path.realpath(sf_dir), "<SPARK_GRAFT_SF_DIR>"
+        ).replace(sf_dir.rstrip("/"), "<SPARK_GRAFT_SF_DIR>")
+        text = re.sub(r"[^\s\[,]*/staged_log_\w+", "<staged_log>", text)
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:
-            f.write(buf.getvalue())
+            f.write(text)
         print(f"wrote {path}")
         drain_session(spark)
 
