@@ -8,15 +8,13 @@ hash-checkable against the oracle: every hash/fold below is portable
 arithmetic or md5, bit-for-bit identical across engines.
 """
 
-from .hashing import hex32_duck, hex32_spark, minhash_seed_duck, minhash_seed_spark
+from .hashing import hex32_duck, hex32_spark
 from .text import shingles_duck, shingles_spark, tokens_duck, tokens_spark
 from .vector import cosine_duck, cosine_spark, dot_duck, dot_spark, l2_duck, l2_spark
 
 __all__ = [
     "hex32_spark",
     "hex32_duck",
-    "minhash_seed_spark",
-    "minhash_seed_duck",
     "tokens_spark",
     "tokens_duck",
     "shingles_spark",

@@ -75,22 +75,6 @@ def hex32_at_duck(hex_expr: str, offset: int) -> str:
     )
 
 
-def minhash_seed_spark(seed: Column, value: Column) -> Column:
-    """Seeded portable hash for MinHash: md5('{seed}:{value}') as hex.
-
-    Min over a set of these hex strings (lexicographic) is a valid
-    min-wise hash; k independent functions come from k seeds. Both
-    engines produce identical lowercase hex, so signatures match
-    bit-for-bit.
-    """
-    return F.md5(F.concat(seed.cast("string"), F.lit(":"), value))
-
-
-def minhash_seed_duck(seed_expr: str, value_expr: str) -> str:
-    """DuckDB SQL twin of :func:`minhash_seed_spark`."""
-    return f"md5(CAST({seed_expr} AS VARCHAR) || ':' || {value_expr})"
-
-
 # Universal-hash MinHash family: ONE md5 per shingle (via hex32), then
 # k independent functions h_i(x) = (a_i * x + b_i) mod P by integer
 # arithmetic — 16x less hashing than seeded-md5 per function, which is
@@ -109,8 +93,3 @@ def minhash_affine(seed: int) -> tuple[int, int]:
 def minhash_u_spark(seed: int, h32: Column) -> Column:
     a, b = minhash_affine(seed)
     return (F.lit(a) * h32 + F.lit(b)) % F.lit(MINHASH_P)
-
-
-def minhash_u_duck(seed: int, h32_expr: str) -> str:
-    a, b = minhash_affine(seed)
-    return f"(({a} * {h32_expr} + {b}) % {MINHASH_P})"

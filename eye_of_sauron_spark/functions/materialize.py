@@ -15,6 +15,13 @@ for state their result still reads, :func:`memo_checkpoint` for state
 shared across queries, and the two primitives for everything else —
 no plan frees blocks itself.
 
+The same rule covers local files: :func:`scratch` is the package's
+one owner of a directory that lives for one call. The directory is
+deleted when its ``with`` block exits, normally or by an exception,
+and a result that reads files under it is pinned with the ``keep``
+it yields, so it outlives the files and lives until
+:func:`drain_session` like every other result checkpoint.
+
 Not thread-safe (two concurrent checkpoints would cross-attribute new
 RDD ids) — matches the engine's single-threaded driver/bench execution
 model; misattribution degrades to blocks freed later, never to wrong
@@ -23,6 +30,7 @@ results, because unpersist only ever touches *persisted* RDDs.
 
 from __future__ import annotations
 
+import tempfile
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
@@ -71,6 +79,20 @@ def transient(spark: SparkSession):
         yield lambda df: _pin(df, ids)
     finally:
         unpersist_ids(spark, ids)
+
+
+@contextmanager
+def scratch(prefix: str):
+    """Yield ``(work, keep)``: ``work`` is a fresh local directory
+    under the temp root, named ``{prefix}...`` and deleted when the
+    ``with`` block exits, also on an exception; ``keep(df)`` is the
+    eager localCheckpoint a result reading files under ``work`` needs
+    to outlive it. Kept results stay pinned until
+    :func:`drain_session`."""
+    with tempfile.TemporaryDirectory(
+        prefix=prefix, ignore_cleanup_errors=True
+    ) as work:
+        yield work, lambda df: df.localCheckpoint(eager=True)
 
 
 def iterate(state: DataFrame, step, rounds: int, until=None) -> DataFrame:

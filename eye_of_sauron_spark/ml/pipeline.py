@@ -205,13 +205,14 @@ def _name_targets(faces_k: DataFrame) -> DataFrame:
     )
 
 
-def first_faces_targets(frames: DataFrame, k: int = _PIPE_TARGETS) -> DataFrame:
-    """The "upload set": the first k detected faces of the stream in
-    (frame_num, face_idx) order, as a k-row broadcastable DataFrame
-    (target_idx, te, tname) — no driver collect. Embedding happens
-    AFTER the limit, so it costs k embed calls, not one per face."""
+def first_faces_targets(frames: DataFrame) -> DataFrame:
+    """The "upload set": the first k = ``_PIPE_TARGETS`` detected
+    faces of the stream in (frame_num, face_idx) order, as a k-row
+    broadcastable DataFrame (target_idx, te, tname) — no driver
+    collect. Embedding happens AFTER the limit, so it costs k embed
+    calls, not one per face."""
     return _name_targets(
-        _first_k_faces(_explode_boxes(frames), k).withColumn(
+        _first_k_faces(_explode_boxes(frames), _PIPE_TARGETS).withColumn(
             "emb", _embed_one_udf("payload", "box")
         )
     )

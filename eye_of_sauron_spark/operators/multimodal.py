@@ -121,10 +121,10 @@ def multimodal_image_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return image_stats(encode_images(load_table(spark, sf_dir, "documents")))
 
 
-def resize_images(images: DataFrame, factor: int = 2) -> DataFrame:
+def resize_images(images: DataFrame) -> DataFrame:
     """Binary -> binary ``mapInPandas``: decode each IMG1 container,
-    halve its dimensions and subsample the payload (every
-    ``factor``-th byte — the fake codec's nearest-neighbor), and
+    halve its dimensions and subsample the payload (every second
+    byte — the fake codec's nearest-neighbor), and
     re-encode a valid IMG1 container. The output column is BinaryType
     again, so the stage composes with any other decoder — which is
     exactly how the oracle checks it (resize -> image_stats chain)."""
@@ -137,10 +137,10 @@ def resize_images(images: DataFrame, factor: int = 2) -> DataFrame:
                 assert b[:4] == _MAGIC, "bad magic"
                 w, h = struct.unpack(">HH", b[4:8])
                 ch = b[8]
-                payload = b[9:][::factor]
+                payload = b[9:][::2]
                 out = (
                     _MAGIC
-                    + struct.pack(">HH", max(1, w // factor), max(1, h // factor))
+                    + struct.pack(">HH", max(1, w // 2), max(1, h // 2))
                     + bytes([ch])
                     + payload
                 )
@@ -236,19 +236,19 @@ def sample_frames(videos: DataFrame, step: int = _FRAME_STEP) -> DataFrame:
     )
 
 
-def extract_frame_features(videos: DataFrame, step: int = _FRAME_STEP) -> DataFrame:
-    """1->N ``mapInPandas`` feature extractor: every ``step``-th frame
-    yields a (mean, min, max) byte-intensity feature row — the stub
-    stand-in for a real per-frame CNN/audio feature pass. Same Arrow
-    batch shape a real extractor would use; swap the body, keep the
-    plan."""
+def extract_frame_features(videos: DataFrame) -> DataFrame:
+    """1->N ``mapInPandas`` feature extractor: every
+    ``_FRAME_STEP``-th frame yields a (mean, min, max) byte-intensity
+    feature row — the stub stand-in for a real per-frame CNN/audio
+    feature pass. Same Arrow batch shape a real extractor would use;
+    swap the body, keep the plan."""
 
     def extractor(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, idxs, means, mins, maxs = [], [], [], [], []
             for event_id, blob in zip(pdf["event_id"], pdf["video"]):
                 b = bytes(blob)
-                for i in range(0, len(b) // _FRAME_BYTES, step):
+                for i in range(0, len(b) // _FRAME_BYTES, _FRAME_STEP):
                     fr = b[i * _FRAME_BYTES : (i + 1) * _FRAME_BYTES]
                     ids.append(int(event_id))
                     idxs.append(i)

@@ -20,11 +20,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def write_partitioned(
-    df: DataFrame, path: str, keys: list[str], mode: str = "overwrite"
-) -> None:
+def write_partitioned(df: DataFrame, path: str, keys: list[str]) -> None:
     """Key-partitioned parquet layout (one dir per key value), with a
     pre-shuffle on the keys so each output partition is written by
     one task — bounded file counts at any executor count."""
-    df.repartition(*keys).write.mode(mode).partitionBy(*keys).parquet(path)
+    df.repartition(*keys).write.mode("overwrite").partitionBy(*keys).parquet(path)
 

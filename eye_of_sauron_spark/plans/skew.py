@@ -37,22 +37,21 @@ def salted_join(
     big_key: str,
     dim_key: str,
     spread_on: Column,
-    n_salt: int = _N_SALT,
 ) -> DataFrame:
     """Inner-join ``big`` ⋈ ``dim`` on ``big_key = dim_key`` with the
-    hot-key population of ``big`` spread over ``n_salt`` sub-keys.
+    hot-key population of ``big`` spread over ``_N_SALT`` sub-keys.
 
     ``spread_on`` must be a deterministic per-row expression of the
     big side (e.g. a row id) — each big row lands on exactly one salt,
     so the salted join emits exactly the rows the plain join would.
-    The dim side is replicated ``n_salt``× via an in-plan explode (no
+    The dim side is replicated ``_N_SALT``× via an in-plan explode (no
     driver loop, no second scan) and the join keys become
     (key, salt) — a plain equi shuffle join whose reducer load is
-    bounded by max_key_rows / n_salt instead of max_key_rows.
+    bounded by max_key_rows / _N_SALT instead of max_key_rows.
     """
-    salted_big = big.withColumn("_salt", F.pmod(F.hash(spread_on), n_salt))
+    salted_big = big.withColumn("_salt", F.pmod(F.hash(spread_on), _N_SALT))
     salted_dim = dim.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1)))
+        "_salt", F.explode(F.sequence(F.lit(0), F.lit(_N_SALT - 1)))
     )
     return salted_big.join(
         salted_dim.hint("shuffle_hash"),

@@ -19,22 +19,35 @@ queries never exercise:
    performs the bucketed write + join end-to-end per invocation; the
    no-Exchange/no-Sort plan shape is pinned by tests/test_plans.py.
 
-Temp dirs live under the system tmp root and are removed after the
-results are materialized (localCheckpoint pins the rows).
+Every query's files live in a ``functions.materialize.scratch``
+directory under the system tmp root, deleted when the query returns;
+the result is pinned with that scratch's ``keep`` before its files go.
 """
 
 from __future__ import annotations
 
 import os
-import tempfile
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.materialize import scratch
 from ..functions.text import tokens_duck, tokens_spark
 from ..sources import load_table
 from .registry import query
+
+
+def _reread(
+    df: DataFrame, path: str, fmt: str, schema: str | None = None, **options
+) -> DataFrame:
+    """Write ``df`` to ``path`` as ``fmt`` and read it back, with the
+    same ``options`` on both sides (a writer and reader that disagree
+    on an option such as a timestamp format lose data silently);
+    ``schema`` projects the read instead of inferring it."""
+    df.write.mode("overwrite").format(fmt).options(**options).save(path)
+    reader = df.sparkSession.read.format(fmt).options(**options)
+    return (reader.schema(schema) if schema else reader).load(path)
 
 
 # -------------------------------------------------------- JSONL ingest
@@ -69,16 +82,15 @@ def jsonl_roundtrip_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     The aggregate itself is the usual partial/final pair.
     """
     d = load_table(spark, sf_dir, "documents")
-    with tempfile.TemporaryDirectory(
-        prefix="jsonl_ingest_", ignore_cleanup_errors=True
-    ) as work:
-        d.write.mode("overwrite").json(f"{work}/docs")
-        back = spark.read.schema(
-            "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT"
-        ).json(f"{work}/docs")
-        out = (
-            back.groupBy("lang", "source")
-            .agg(
+    with scratch("jsonl_ingest_") as (work, keep):
+        back = _reread(
+            d,
+            f"{work}/docs",
+            "json",
+            "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT",
+        )
+        return keep(
+            back.groupBy("lang", "source").agg(
                 F.count("*").alias("n_docs"),
                 F.sum("n_chars").cast("bigint").alias("total_chars"),
                 F.sum(F.size(tokens_spark(F.col("text"))))
@@ -87,9 +99,7 @@ def jsonl_roundtrip_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.min("doc_id").alias("min_doc"),
                 F.max("doc_id").alias("max_doc"),
             )
-            .localCheckpoint(eager=True)
         )
-    return out
 
 
 # ---------------------------------------------------------- CSV ingest
@@ -110,8 +120,9 @@ _CSV_ORACLE = """
 def csv_roundtrip_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CSV ingest path with the two lossy traps handled explicitly:
     timestamps carry an explicit microsecond format (the default
-    second-precision format silently truncates), and doubles rely on
-    the writer's shortest-round-trip rendering. The events table
+    second-precision format silently truncates; :func:`_reread` gives
+    the writer and the reader the same one), and doubles rely on the
+    writer's shortest-round-trip rendering. The events table
     round-trips through real CSV files and the per-type aggregate
     (counts, sums, min/max timestamps, distinct users) must match the
     parquet-derived oracle bit-for-bit.
@@ -120,34 +131,25 @@ def csv_roundtrip_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     proving the quote/escape path on data that embeds the delimiter
     and quote characters themselves."""
     ev = load_table(spark, sf_dir, "events")
-    fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
-    with tempfile.TemporaryDirectory(
-        prefix="csv_ingest_", ignore_cleanup_errors=True
-    ) as work:
-        ev.write.mode("overwrite").option("header", "true").option(
-            "timestampFormat", fmt
-        ).csv(f"{work}/events")
-        back = (
-            spark.read.schema(
-                "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, "
-                "event_type STRING, value DOUBLE, props STRING"
-            )
-            .option("header", "true")
-            .option("timestampFormat", fmt)
-            .csv(f"{work}/events")
+    with scratch("csv_ingest_") as (work, keep):
+        back = _reread(
+            ev,
+            f"{work}/events",
+            "csv",
+            "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, "
+            "event_type STRING, value DOUBLE, props STRING",
+            header="true",
+            timestampFormat="yyyy-MM-dd HH:mm:ss.SSSSSS",
         )
-        out = (
-            back.groupBy("event_type")
-            .agg(
+        return keep(
+            back.groupBy("event_type").agg(
                 F.count("*").alias("n_events"),
                 F.round(F.sum("value"), 4).alias("total_value"),
                 F.min("ts").alias("first_ts"),
                 F.max("ts").alias("last_ts"),
                 F.countDistinct("user_id").alias("n_users"),
             )
-            .localCheckpoint(eager=True)
         )
-    return out
 
 
 # ------------------------------------------------------ bucketed join
@@ -196,24 +198,22 @@ def write_bucketed(
 
 @contextmanager
 def _bucketed_tables(spark: SparkSession, sf_dir: str):
-    """Yield ``(lb, ob)``: lineitem and orders written as bucketed
-    tables on the order key (:func:`write_bucketed`) into a temp
-    warehouse path, orders hinted to a merge join. Both tables are
-    dropped from the catalog and their files deleted when the block
-    exits, also on an exception."""
+    """Yield ``(lb, ob, keep)``: lineitem and orders written as
+    bucketed tables on the order key (:func:`write_bucketed`) into a
+    scratch warehouse path, orders hinted to a merge join, and the
+    scratch's ``keep`` for a result that must outlive the files. Both
+    tables are dropped from the catalog and their files deleted when
+    the block exits, also on an exception."""
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_extendedprice", "l_discount"
     )
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
-    with tempfile.TemporaryDirectory(
-        prefix="bucketed_join_", ignore_cleanup_errors=True
-    ) as work:
+    with scratch("bucketed_join_") as (work, keep):
         try:
             write_bucketed(li, "li_bucketed", "l_orderkey", work)
             write_bucketed(orders, "orders_bucketed", "o_orderkey", work)
-            yield spark.table("li_bucketed"), spark.table("orders_bucketed").hint(
-                "merge"
-            )
+            lb = spark.table("li_bucketed")
+            yield lb, spark.table("orders_bucketed").hint("merge"), keep
         finally:
             spark.sql("DROP TABLE IF EXISTS li_bucketed")
             spark.sql("DROP TABLE IF EXISTS orders_bucketed")
@@ -240,8 +240,8 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     warehouse path (this is a correctness query, not a benchmark of
     the cached layout); results are pinned before the temp dir is
     dropped, and the catalog entries are removed."""
-    with _bucketed_tables(spark, sf_dir) as (lb, ob):
-        return (
+    with _bucketed_tables(spark, sf_dir) as (lb, ob, keep):
+        return keep(
             lb.join(ob, lb.l_orderkey == ob.o_orderkey)
             .groupBy("o_orderpriority")
             .agg(
@@ -250,7 +250,6 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
                 ).alias("revenue"),
             )
-            .localCheckpoint(eager=True)
         )
 
 
@@ -258,7 +257,7 @@ def bucketed_join_plan(spark: SparkSession, sf_dir: str) -> str:
     """The executed join plan BEFORE aggregation, for the plan-shape
     test: builds the same bucketed tables, returns the join's plan
     string, cleans up."""
-    with _bucketed_tables(spark, sf_dir) as (lb, ob):
+    with _bucketed_tables(spark, sf_dir) as (lb, ob, _):
         joined = lb.join(ob, lb.l_orderkey == ob.o_orderkey)
         return joined._jdf.queryExecution().executedPlan().toString()
 
@@ -351,6 +350,10 @@ _COMPACT_SMALL_FILES = 64  # simulated small-file ingest
 _COMPACT_TARGET_FILES = 4
 
 
+def _n_parquet(path: str) -> int:
+    return sum(f.endswith(".parquet") for f in os.listdir(path))
+
+
 @query(
     "compact_small_files",
     oracle=f"""
@@ -379,41 +382,28 @@ def compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     commits independently; the plan shape — scan, one round-robin
     exchange, write — is the same."""
     d = load_table(spark, sf_dir, "documents")
-    with tempfile.TemporaryDirectory(
-        prefix="compact_", ignore_cleanup_errors=True
-    ) as work:
-        d.repartition(_COMPACT_SMALL_FILES).write.mode("overwrite").parquet(
-            f"{work}/small"
+    with scratch("compact_") as (work, keep):
+        small = _reread(
+            d.repartition(_COMPACT_SMALL_FILES), f"{work}/small", "parquet"
         )
-        small = spark.read.parquet(f"{work}/small")
-        n_before = len(
-            [f for f in os.listdir(f"{work}/small") if f.endswith(".parquet")]
+        compact = _reread(
+            small.repartition(_COMPACT_TARGET_FILES), f"{work}/compact", "parquet"
         )
-        small.repartition(_COMPACT_TARGET_FILES).write.mode("overwrite").parquet(
-            f"{work}/compact"
-        )
-        n_after = len(
-            [f for f in os.listdir(f"{work}/compact") if f.endswith(".parquet")]
-        )
-        out = (
-            spark.read.parquet(f"{work}/compact")
-            .agg(
+        return keep(
+            compact.agg(
                 F.count("*").alias("n_rows"),
                 F.sum("n_chars").cast("bigint").alias("total_chars"),
                 F.min("doc_id").alias("min_doc"),
                 F.max("doc_id").alias("max_doc"),
-            )
-            .select(
-                F.lit(n_before).alias("n_files_before"),
-                F.lit(n_after).alias("n_files_after"),
+            ).select(
+                F.lit(_n_parquet(f"{work}/small")).alias("n_files_before"),
+                F.lit(_n_parquet(f"{work}/compact")).alias("n_files_after"),
                 "n_rows",
                 "total_chars",
                 "min_doc",
                 "max_doc",
             )
-            .localCheckpoint(eager=True)
         )
-    return out
 
 
 # -------------------------------------------------- schema evolution
@@ -450,9 +440,7 @@ def schema_evolution_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     catalog/manifest instead — the read semantics (NULL-fill, by-name
     resolution) are identical, which is what this checks."""
     d = load_table(spark, sf_dir, "documents")
-    with tempfile.TemporaryDirectory(
-        prefix="schema_evo_", ignore_cleanup_errors=True
-    ) as work:
+    with scratch("schema_evo_") as (work, keep):
         old = d.filter(F.col("doc_id") % _EVO_SPLIT_MOD != 0).select(
             "doc_id", "lang", "n_chars"
         )
@@ -467,9 +455,8 @@ def schema_evolution_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         merged = spark.read.option("mergeSchema", "true").parquet(
             f"{work}/t/gen=0", f"{work}/t/gen=1"
         )
-        out = (
-            merged.groupBy("lang")
-            .agg(
+        return keep(
+            merged.groupBy("lang").agg(
                 F.count("*").alias("n_docs"),
                 F.sum(F.col("quality_chars").isNotNull().cast("int"))
                 .cast("bigint")
@@ -478,9 +465,7 @@ def schema_evolution_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .cast("bigint")
                 .alias("quality_chars"),
             )
-            .localCheckpoint(eager=True)
         )
-    return out
 
 
 # ------------------------------------------------ routed sink + pruning
@@ -524,11 +509,9 @@ def routed_sink_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").withColumn(
         "camera", (F.col("user_id") % _ROUTE_CAMERAS).cast("bigint")
     )
-    with tempfile.TemporaryDirectory(
-        prefix="routed_sink_", ignore_cleanup_errors=True
-    ) as work:
+    with scratch("routed_sink_") as (work, keep):
         write_partitioned(ev, f"{work}/routed", ["camera"])
-        out = (
+        return keep(
             spark.read.parquet(f"{work}/routed")
             .filter(F.col("camera") == _ROUTE_READ_CAM)
             .groupBy("event_type")
@@ -536,9 +519,7 @@ def routed_sink_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.count("*").alias("n_events"),
                 F.countDistinct("user_id").cast("bigint").alias("n_users"),
             )
-            .localCheckpoint(eager=True)
         )
-    return out
 
 
 # --------------------------------------------------------- ORC ingest
@@ -581,11 +562,8 @@ def orc_roundtrip_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     (src/utils.py:248-264) — the batch-columnar counterpart of that
     serialization boundary, driver-checked."""
     emb = load_table(spark, sf_dir, "embeddings")
-    with tempfile.TemporaryDirectory(
-        prefix="orc_ingest_", ignore_cleanup_errors=True
-    ) as work:
-        emb.write.mode("overwrite").orc(f"{work}/embeddings")
-        back = spark.read.orc(f"{work}/embeddings")
+    with scratch("orc_ingest_") as (work, keep):
+        back = _reread(emb, f"{work}/embeddings", "orc")
         checksum = F.aggregate(
             F.transform(
                 "embedding",
@@ -596,9 +574,8 @@ def orc_roundtrip_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(0).cast("bigint"),
             lambda acc, v: acc + v,
         )
-        out = (
-            back.groupBy("label")
-            .agg(
+        return keep(
+            back.groupBy("label").agg(
                 F.count("*").cast("bigint").alias("n_vecs"),
                 F.sum(checksum).cast("bigint").alias("checksum_micro"),
                 F.min(F.size("embedding")).cast("int").alias("min_dims"),
@@ -606,6 +583,4 @@ def orc_roundtrip_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.min("vec_id").alias("min_vec"),
                 F.max("vec_id").alias("max_vec"),
             )
-            .localCheckpoint(eager=True)
         )
-    return out

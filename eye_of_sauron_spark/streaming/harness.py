@@ -16,7 +16,8 @@ transformation downstream is source-agnostic.
 throwaway local checkpoint (why the checkpoint manager is swapped
 there: see its docstring), and drains with an availableNow trigger
 into the sink its caller picks. :func:`run_to_memory` is the memory-sink
-form; it owns its checkpoint dir, sink name and temp view.
+form; it owns its sink name and temp view, and takes its checkpoint dir
+from ``functions.materialize.scratch``.
 
 The replays (``streaming/replay.py``) stage their logs with
 :func:`staged_microbatch_log` and open them with :func:`file_stream`
@@ -40,6 +41,8 @@ from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import DataStreamWriter
+
+from ..functions.materialize import scratch
 
 _CKPT_CHECKSUM_KEY = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
 _CKPT_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
@@ -249,16 +252,15 @@ def run_to_memory(
 ) -> DataFrame:
     """Drain the stream into a memory sink (:func:`drain_stream`) and
     return the sink's rows as a DataFrame. The checkpoint lives in a
-    temp dir deleted after the drain, and the sink name is unique per
+    :func:`~eye_of_sauron_spark.functions.materialize.scratch` dir
+    deleted after the drain, and the sink name is unique per
     call; its temp view is dropped before returning, so no call leaves
     a view (and the driver-held rows behind it) in the session catalog.
     The returned DataFrame keeps the sink's rows readable."""
     spark = stream_df.sparkSession
     name = f"memory_sink_{uuid.uuid4().hex[:8]}"
     try:
-        with tempfile.TemporaryDirectory(
-            prefix="memory_sink_", ignore_cleanup_errors=True
-        ) as work:
+        with scratch("memory_sink_") as (work, _):
             drain_stream(
                 stream_df,
                 lambda w: w.format("memory").queryName(name),

@@ -21,12 +21,23 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def clicks_to_errors_stream_join(
-    clicks: DataFrame, errors: DataFrame, delay: str = "2 hours"
+def clicks_to_errors_join(
+    clicks: DataFrame, errors: DataFrame, how: str, delay: str
 ) -> DataFrame:
-    """Inner stream-stream join: each click pairs with the same
-    user's errors at click.ts <= error.ts < click.ts + 1 h. Both
-    inputs must be streaming DataFrames with an event-time ``ts``."""
+    """Stream-stream join of each click to the same user's errors at
+    click.ts <= error.ts < click.ts + 1 h, both sides watermarked by
+    ``delay`` on their event-time ``ts``; both inputs must be
+    streaming DataFrames.
+
+    ``how="inner"`` emits each pair as it forms. ``how="left_outer"``
+    is the semantically hardest streaming operator: matched pairs
+    emit as they form, but a click with NO error can only emit its
+    NULL-extended row once the watermark proves no future error could
+    still match it (i.e. watermark >= click.ts + join window). Until
+    then the row sits in state; a query that stops earlier simply
+    never emits it. Both behaviors are pinned by the
+    stream_left_join_replay oracle, which models the emission rule in
+    closed form."""
     c = clicks.withWatermark("ts", delay).select(
         F.col("user_id").alias("c_user"),
         F.col("event_id").alias("click_id"),
@@ -42,42 +53,7 @@ def clicks_to_errors_stream_join(
         & (e.e_ts >= c.c_ts)
         & (e.e_ts < c.c_ts + F.expr("INTERVAL 1 HOUR"))
     )
-    return c.join(e, cond, "inner").select(
-        F.col("c_user").alias("user_id"),
-        "click_id",
-        "error_id",
-        F.col("c_ts").alias("click_ts"),
-        F.col("e_ts").alias("error_ts"),
-    )
-
-
-def clicks_to_errors_left_join(
-    clicks: DataFrame, errors: DataFrame, delay: str = "59 minutes"
-) -> DataFrame:
-    """LEFT OUTER stream-stream join — the semantically hardest
-    streaming operator: matched pairs emit as they form, but a click
-    with NO error can only emit its NULL-extended row once the
-    watermark proves no future error could still match it (i.e.
-    watermark >= click.ts + join window). Until then the row sits in
-    state; a query that stops earlier simply never emits it. Both
-    behaviors are pinned by the stream_left_join_replay oracle, which
-    models the emission rule in closed form."""
-    c = clicks.withWatermark("ts", delay).select(
-        F.col("user_id").alias("c_user"),
-        F.col("event_id").alias("click_id"),
-        F.col("ts").alias("c_ts"),
-    )
-    e = errors.withWatermark("ts", delay).select(
-        F.col("user_id").alias("e_user"),
-        F.col("event_id").alias("error_id"),
-        F.col("ts").alias("e_ts"),
-    )
-    cond = (
-        (c.c_user == e.e_user)
-        & (e.e_ts >= c.c_ts)
-        & (e.e_ts < c.c_ts + F.expr("INTERVAL 1 HOUR"))
-    )
-    return c.join(e, cond, "left_outer").select(
+    return c.join(e, cond, how).select(
         F.col("c_user").alias("user_id"),
         "click_id",
         "error_id",

@@ -29,8 +29,8 @@ def latency_col(ts: Column) -> Column:
     return F.unix_millis(F.current_timestamp()) - F.unix_millis(ts)
 
 
-def with_latency(df: DataFrame, ts_col: str = "ts") -> DataFrame:
-    return df.withColumn("latency_ms", latency_col(F.col(ts_col)))
+def with_latency(df: DataFrame) -> DataFrame:
+    return df.withColumn("latency_ms", latency_col(F.col("ts")))
 
 
 def observed(df: DataFrame) -> DataFrame:

@@ -15,7 +15,6 @@ is covered by the property tests in tests/test_properties.py.
 from __future__ import annotations
 
 import os
-import tempfile
 from collections.abc import Callable
 from functools import reduce
 
@@ -29,6 +28,7 @@ from ..functions.hashing import (
     keyed_hex32_duck,
     keyed_hex32_spark,
 )
+from ..functions.materialize import scratch
 from ..functions.money import cents_duck, cents_spark
 from ..plans.registry import query
 from ..sources import load_table, spread
@@ -39,7 +39,7 @@ from .harness import (
     run_to_memory,
     staged_microbatch_log,
 )
-from .joins import clicks_to_errors_stream_join
+from .joins import clicks_to_errors_join
 from .pipeline import match_stream, run_match_rebroadcast_stream
 from .reorder import reorder_stream
 
@@ -361,12 +361,11 @@ def _events_stream(spark: SparkSession, sf_dir: str, schema: str) -> DataFrame:
 
 
 def _click_error_replay(
-    spark: SparkSession,
-    sf_dir: str,
-    join: Callable[[DataFrame, DataFrame], DataFrame],
+    spark: SparkSession, sf_dir: str, how: str, delay: str
 ) -> DataFrame:
-    """Drain ``join(clicks, errors)`` over the click/error side logs
-    and return its (user_id, click_id, error_id, click_ts, error_ts)
+    """Drain the ``how`` click-to-error join (``delay`` watermarks,
+    :func:`~.joins.clicks_to_errors_join`) over the click/error side
+    logs and return its (user_id, click_id, error_id, click_ts, error_ts)
     rows — the body both stream-stream join replays share. The side
     logs are staged once per session (4 octile micro-batches each,
     sliced over each side's own ts range — exactly what both join
@@ -389,7 +388,8 @@ def _click_error_replay(
     # dominant fixed cost of the replay; 4 ordered slices exercise the
     # same incremental semantics as 8 at half the wall time
     emitted = run_to_memory(
-        join(_side("click"), _side("error")), width=_SS_BATCHES
+        clicks_to_errors_join(_side("click"), _side("error"), how, delay),
+        width=_SS_BATCHES,
     )
     return emitted.select(
         "user_id", "click_id", "error_id", "click_ts", "error_ts"
@@ -423,7 +423,7 @@ def stream_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     pytest-pinned in tests/test_streaming.py. Scale shape: both sides
     shuffle once on user_id; watermark-bounded state is the fix for
     the reference's unbounded pairing dict (src/utils.py:50,168)."""
-    return _click_error_replay(spark, sf_dir, clicks_to_errors_stream_join)
+    return _click_error_replay(spark, sf_dir, "inner", "2 hours")
 
 
 # ---------------------------------------------------- streaming dedup
@@ -582,18 +582,15 @@ def _stop_and_resume(
     ``run(stream, work, 1)`` drains them from the same checkpoint. Each
     phase's ``run`` writes its parquet sink to ``{work}/out`` under the
     checkpoint ``{work}/ckpt``. Returns the sink's rows projected to
-    ``cols``, read through the sink's commit manifest and pinned with
-    ``localCheckpoint`` so they outlive the work dir."""
+    ``cols``, read through the sink's commit manifest and kept so they
+    outlive the work dir."""
     half = n // 2
     log = staged_microbatch_log((name, os.path.realpath(sf_dir), n), n, build)
-    with tempfile.TemporaryDirectory(
-        prefix=f"{name}_", ignore_cleanup_errors=True
-    ) as work:
+    with scratch(f"{name}_") as (work, keep):
         for phase, (lo, hi) in enumerate(((0, half), (half, n))):
             link_batch_files(log, f"{work}/in", lo, hi)
             run(file_stream(spark, f"{work}/in", schema), work, phase)
-        out = spark.read.parquet(f"{work}/out").select(*cols)
-        return out.localCheckpoint(eager=True)
+        return keep(spark.read.parquet(f"{work}/out").select(*cols))
 
 
 def _write_targets(ev: DataFrame, thresh: float, version: int, path: str) -> None:
@@ -901,18 +898,11 @@ def stream_left_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     emitted set and fails the hash compare. Scale shape: identical to
     the inner join — one shuffle per side on user_id, state bounded
     by watermark, NULL emission adds no state of its own."""
-    from .joins import clicks_to_errors_left_join
-
-    return _click_error_replay(
-        spark,
-        sf_dir,
-        lambda cs, es: clicks_to_errors_left_join(cs, es, delay=_LEFT_JOIN_DELAY),
-    )
+    return _click_error_replay(spark, sf_dir, "left_outer", _LEFT_JOIN_DELAY)
 
 
 # ------------------------------------- watermarked window aggregation
 
-_WAGG_BATCHES = 8
 _WAGG_DELAY = "2 hours"
 # State width of the window, late-drop and update-mode replays: their
 # state is a handful of (day, event_type) keys, and each extra state
@@ -1429,9 +1419,7 @@ def stream_cdc_apply_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     # latest-path pointer — so an at-least-once epoch re-delivery
     # re-reads the pre-epoch generation (see _cdc_read_gen)
     bucket_hist: dict[int, list[tuple[int, str]]] = {}
-    with tempfile.TemporaryDirectory(
-        prefix="cdc_apply_", ignore_cleanup_errors=True
-    ) as work:
+    with scratch("cdc_apply_") as (work, keep):
         _apply = make_cdc_apply(work, bucket_hist)
         drain_stream(
             stream,
@@ -1443,15 +1431,13 @@ def stream_cdc_apply_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             DataFrame.unionByName,
             [spark.read.parquet(hist[-1][1]) for hist in bucket_hist.values()],
         )
-        return (
-            snap.filter(F.col("event_type") != _CDC_TOMBSTONE)
-            .select(
+        return keep(
+            snap.filter(F.col("event_type") != _CDC_TOMBSTONE).select(
                 "user_id",
                 cents_spark(F.col("value")).alias("last_cents"),
                 F.col("ts").alias("last_ts"),
                 "n_ops",
             )
-            .localCheckpoint(eager=True)
         )
 
 
@@ -1635,9 +1621,7 @@ def stream_observe_metrics_replay(spark: SparkSession, sf_dir: str) -> DataFrame
     listener = MetricsListener(_OBS_NAME)
     spark.streams.addListener(listener)
     try:
-        with tempfile.TemporaryDirectory(
-            prefix="obs_replay_", ignore_cleanup_errors=True
-        ) as work:
+        with scratch("obs_replay_") as (work, _):
             drain_stream(observed, lambda w: w.format("noop"), f"{work}/ckpt")
         # listener delivery is asynchronous to query termination:
         # drain the bus until every input row has been accounted for

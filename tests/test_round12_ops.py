@@ -7,10 +7,13 @@ Covers
 - plans/dedup.py / plans/textual.py / plans/vector.py: the
   checkpoints of an iterative query are freed when a downstream step
   raises (r11 ADVICE), by functions/materialize.py alone.
+- functions/materialize.py::scratch: the one owner of a call-lifetime
+  local directory, and of the pin a result needs to outlive it.
 """
 
 from __future__ import annotations
 
+import os
 import re
 
 import pytest
@@ -376,6 +379,49 @@ def test_checkpoint_lifetimes_have_one_owner():
     )
     owner = ("functions/materialize.py",)
     assert package_hits(_any_of(needles), skip=owner) == {}
+
+
+def test_scratch_directories_have_one_owner():
+    """functions/materialize.py::scratch is the package's one owner of
+    a directory that lives for one call; the process-lifetime staged
+    micro-batch log is the one other temp directory."""
+    assert package_hits(r"TemporaryDirectory\(") == {"functions/materialize.py": 1}
+    assert package_hits(r"mkdtemp\(") == {"streaming/harness.py": 1}
+    owners = ("functions/materialize.py", "streaming/harness.py")
+    assert package_hits(r"import tempfile", skip=owners) == {}
+
+
+def test_scratch_removes_its_directory_on_a_fault(spark):
+    """An exception inside ``scratch`` still deletes the directory, and
+    the result kept before it is released by the drain."""
+    from eye_of_sauron_spark.functions.materialize import drain_session, scratch
+
+    drain_session(spark)
+    with pytest.raises(RuntimeError, match="planted fault"):
+        with scratch("scratch_fault_") as (work, keep):
+            spark.range(10).write.parquet(f"{work}/t")
+            keep(spark.read.parquet(f"{work}/t"))
+            raise RuntimeError("planted fault")
+    assert not os.path.exists(work)
+    assert _n_persist(spark) == 1
+    drain_session(spark)
+    assert _n_persist(spark) == 0
+
+
+def test_kept_result_outlives_its_scratch(spark):
+    """A ``keep``-ed aggregate over scratch files still collects the
+    right rows after the directory is gone."""
+    from pyspark.sql import functions as F
+
+    from eye_of_sauron_spark.functions.materialize import drain_session, scratch
+
+    with scratch("scratch_keep_") as (work, keep):
+        spark.range(100).withColumn("k", F.col("id") % 7).write.parquet(f"{work}/t")
+        out = keep(spark.read.parquet(f"{work}/t").groupBy("k").count())
+    assert not os.path.exists(work)
+    got = {r["k"]: r["count"] for r in out.collect()}
+    assert got == {k: len(range(k, 100, 7)) for k in range(7)}
+    drain_session(spark)
 
 
 def test_no_dormant_forks_or_test_only_helpers():

@@ -259,7 +259,7 @@ def test_stream_stream_join_matches_batch(spark, sf_dir, tmp_path):
     """Stream-stream equi join with time bound and watermarks on both
     sides: clicks x same-user errors within the following hour,
     replayed as micro-batch streams, equals the batch join."""
-    from eye_of_sauron_spark.streaming.joins import clicks_to_errors_stream_join
+    from eye_of_sauron_spark.streaming.joins import clicks_to_errors_join
 
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type"
@@ -279,8 +279,9 @@ def test_stream_stream_join_matches_batch(spark, sf_dir, tmp_path):
         )
         return file_stream(spark, src, df.schema)
 
-    joined = clicks_to_errors_stream_join(
-        as_stream(clicks_b, "clicks"), as_stream(errors_b, "errors")
+    joined = clicks_to_errors_join(
+        as_stream(clicks_b, "clicks"), as_stream(errors_b, "errors"),
+        "inner", "2 hours",
     )
     got = run_to_memory(joined, mode="append")
 
